@@ -532,10 +532,11 @@ def q_corpus_clean(spark, sf_dir):
 
 
 def q_stl_decompose_events(spark, sf_dir):
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_df
+    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
-    series = _events_gapfilled(spark, sf_dir)
-    out = stl_decompose_df(series, period=24, seasonal_width=35, robust=False, partitions=32)
+    out = stl_decompose_sparse_df(
+        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False, partitions=32
+    )
     return _fmt_ts(out).select(
         "url",
         "ts",
@@ -546,33 +547,29 @@ def q_stl_decompose_events(spark, sf_dir):
     )
 
 
-def q_stl_tier_1d(spark, sf_dir):
-    from stl_decomp_4j_spark.operators.rollup import build_tiers
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_df
-
-    decomposed = stl_decompose_df(_events_gapfilled(spark, sf_dir), period=24, seasonal_width=35, partitions=32)
-    t1d = build_tiers(decomposed)["1d"]
-    cols = ["url", "ts"] + [c for c in t1d.columns if c.startswith(("sum_", "min_", "max_"))] + ["cnt"]
-    out = t1d.select(*[F.round(c, 6).alias(c) if c.startswith(("sum_", "min_", "max_")) else c for c in cols])
-    return _fmt_ts(out)
-
-
-def q_stl_tier_1d_fused(spark, sf_dir):
-    """Same 1d tier as q_stl_tier_1d but through the pipeline's fused
-    gap-fill+STL kernel (stl_decompose_sparse_df): only observed buckets
-    cross the Arrow boundary, the dense grid is built in-kernel.  Result is
-    row-for-row identical to the distributed path."""
-    from stl_decomp_4j_spark.operators.bucketize import bucketize
+def _stl_tier_1d(buckets):
     from stl_decomp_4j_spark.operators.rollup import build_tiers
     from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
-    events = spark.read.parquet(_t(sf_dir, "events"))
-    buckets = bucketize(events, key_col="event_type", ts_col="ts", granularity="hour")
     decomposed = stl_decompose_sparse_df(buckets, period=24, seasonal_width=35, partitions=32)
     t1d = build_tiers(decomposed)["1d"]
     cols = ["url", "ts"] + [c for c in t1d.columns if c.startswith(("sum_", "min_", "max_"))] + ["cnt"]
     out = t1d.select(*[F.round(c, 6).alias(c) if c.startswith(("sum_", "min_", "max_")) else c for c in cols])
     return _fmt_ts(out)
+
+
+def q_stl_tier_1d(spark, sf_dir):
+    """Unfused twin of q_stl_tier_1d_fused: the distributed gapfill() grid
+    enters the STL kernel with every slot observed (value renamed to cnt),
+    so the in-kernel gap-fill is the identity."""
+    return _stl_tier_1d(_events_gapfilled(spark, sf_dir).withColumnRenamed("value", "cnt"))
+
+
+def q_stl_tier_1d_fused(spark, sf_dir):
+    """Same 1d tier as q_stl_tier_1d, but only observed buckets cross the
+    Arrow boundary and the STL kernel builds the dense grid itself.  Both
+    queries hash-match the same oracle, so in-kernel gap-fill == gapfill()."""
+    return _stl_tier_1d(_events_hourly(spark, sf_dir))
 
 
 def q_gorilla_roundtrip(spark, sf_dir):
@@ -724,11 +721,11 @@ def q_stl_periodic(spark, sf_dir):
     """A23: diagnostic strictly-periodic decomposition (periodic seasonal,
     ni=1, no=0 — ref SeasonalTrendLoess.performPeriodicDecomposition,
     main/stl/SeasonalTrendLoess.java:494-516)."""
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_df
+    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
-    series = _events_gapfilled(spark, sf_dir)
-    out = stl_decompose_df(
-        series, period=24, periodic=True, inner_iterations=1, outer_iterations=0, partitions=32
+    out = stl_decompose_sparse_df(
+        _events_hourly(spark, sf_dir), period=24, periodic=True, inner_iterations=1,
+        outer_iterations=0, partitions=32,
     )
     return _fmt_ts(out).select(
         "url",
@@ -741,11 +738,11 @@ def q_stl_periodic(spark, sf_dir):
 def q_stl_robust_periodic(spark, sf_dir):
     """A23: robust periodic diagnostic (ni=1, no=1 — ref
     performRobustPeriodicDecomposition, main/stl/SeasonalTrendLoess.java:523-545)."""
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_df
+    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
-    series = _events_gapfilled(spark, sf_dir)
-    out = stl_decompose_df(
-        series, period=24, periodic=True, inner_iterations=1, outer_iterations=1, partitions=32
+    out = stl_decompose_sparse_df(
+        _events_hourly(spark, sf_dir), period=24, periodic=True, inner_iterations=1,
+        outer_iterations=1, partitions=32,
     )
     return _fmt_ts(out).select(
         "url",
@@ -871,10 +868,10 @@ def q_multimodal_resize(spark, sf_dir):
 
 def _stl_tiers(spark, sf_dir):
     from stl_decomp_4j_spark.operators.rollup import build_tiers
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_df
+    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
-    decomposed = stl_decompose_df(
-        _events_gapfilled(spark, sf_dir), period=24, seasonal_width=35, partitions=32
+    decomposed = stl_decompose_sparse_df(
+        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, partitions=32
     )
     return build_tiers(decomposed)
 
@@ -925,10 +922,10 @@ def q_stl_anomalies(spark, sf_dir):
     url's residual stddev.  The oracle recomputes scale + z + filter in SQL
     over the Java-reference fixture's residuals."""
     from stl_decomp_4j_spark.operators.anomaly import residual_anomalies
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_df
+    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
-    decomposed = stl_decompose_df(
-        _events_gapfilled(spark, sf_dir), period=24, seasonal_width=35, robust=False, partitions=32
+    decomposed = stl_decompose_sparse_df(
+        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False, partitions=32
     )
     out = residual_anomalies(decomposed, k=2.5, sigma="std")
     return _fmt_ts(out).select(
@@ -946,10 +943,10 @@ def q_stl_forecast(spark, sf_dir):
     window = one period).  The oracle recomputes the identical deterministic
     rule in SQL over the Java-reference fixture's trend/seasonal columns."""
     from stl_decomp_4j_spark.operators.forecast import stl_forecast
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_df
+    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
-    decomposed = stl_decompose_df(
-        _events_gapfilled(spark, sf_dir), period=24, seasonal_width=35, robust=False, partitions=32
+    decomposed = stl_decompose_sparse_df(
+        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False, partitions=32
     )
     out = stl_forecast(decomposed, period=24, horizon=48, trend_window=24)
     return _fmt_ts(out).select(
@@ -983,7 +980,7 @@ def q_stl_backtest(spark, sf_dir):
     truncated series (stl_backtest fixture) and recomputes the metrics in
     SQL against the independently gap-filled actuals."""
     from stl_decomp_4j_spark.operators.forecast import forecast_backtest, stl_forecast
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_df
+    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
     series = _events_gapfilled(spark, sf_dir)
     last = series.groupBy("url").agg(F.max("ts").alias("t_last"))
@@ -991,7 +988,9 @@ def q_stl_backtest(spark, sf_dir):
     cutoff = F.col("t_last") - F.expr("INTERVAL 48 HOURS")
     trunc = tagged.filter(F.col("ts") <= cutoff).select("url", "ts", "value")
     actuals = tagged.filter(F.col("ts") > cutoff).select("url", "ts", "value")
-    dec = stl_decompose_df(trunc, period=24, seasonal_width=35, robust=False, partitions=32)
+    dec = stl_decompose_sparse_df(
+        trunc.withColumnRenamed("value", "cnt"), period=24, seasonal_width=35, robust=False, partitions=32
+    )
     fc = stl_forecast(dec, period=24, horizon=48, trend_window=24)
     out = forecast_backtest(fc, actuals, trunc, period=24)
     return out.select(
@@ -1034,10 +1033,10 @@ def q_stl_strength(spark, sf_dir):
     recomputes the variance-ratio formulas in SQL over the Java-reference
     fixture's trend/seasonal/residual columns."""
     from stl_decomp_4j_spark.operators.diagnostics import seasonal_strength
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_df
+    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
-    decomposed = stl_decompose_df(
-        _events_gapfilled(spark, sf_dir), period=24, seasonal_width=35, robust=False, partitions=32
+    decomposed = stl_decompose_sparse_df(
+        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False, partitions=32
     )
     out = seasonal_strength(decomposed)
     return out.select(
@@ -1055,10 +1054,10 @@ def q_stl_changepoints(spark, sf_dir):
     oracle recomputes moments + ordered cumsum + argmax in SQL over the
     Java-reference fixture's residuals."""
     from stl_decomp_4j_spark.operators.diagnostics import cusum_changepoints
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_df
+    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
-    decomposed = stl_decompose_df(
-        _events_gapfilled(spark, sf_dir), period=24, seasonal_width=35, robust=False, partitions=32
+    decomposed = stl_decompose_sparse_df(
+        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False, partitions=32
     )
     out = cusum_changepoints(decomposed, k=3.0)
     return _fmt_ts(out).select(

@@ -22,7 +22,8 @@ buckets (LSH) or nprobe nearest cluster partitions (IVF) — partition
 pruning, no full-table re-hash/re-assign per lookup (see
 operators/similarity.py and the PLANS.md PartitionFilters checks).  The
 query vector comes from --vec-id (looked up in --input) or --vector (a JSON
-float list).  Prints ONE JSON line; --output also writes the result rows.
+float list).  Prints ONE JSON line; --output also writes the result rows of
+every queried method, with a ``method`` column (lsh / ivf).
 """
 from __future__ import annotations
 
@@ -55,6 +56,7 @@ def main() -> None:
     if (args.build or args.extend) and not args.input:
         ap.error("--build/--extend require --input")
 
+    import pyspark.sql.functions as F
     from pyspark.sql import SparkSession
 
     from stl_decomp_4j_spark.operators.similarity import (
@@ -100,8 +102,6 @@ def main() -> None:
         if args.vector is not None:
             q = [float(x) for x in json.loads(args.vector)]
         elif args.vec_id is not None and args.input:
-            import pyspark.sql.functions as F
-
             row = (
                 spark.read.parquet(args.input)
                 .filter(F.col(args.id_col) == args.vec_id)
@@ -113,22 +113,21 @@ def main() -> None:
             q = [float(x) for x in row[args.vec_col]]
         else:
             ap.error("--query requires --vector, or --vec-id with --input")
-        results = {}
-        out_df = None
+        frames = {}
         if args.kind in ("lsh", "both"):
-            df = lsh_index_topk(
+            frames["lsh"] = lsh_index_topk(
                 spark, args.index + "/lsh", q, k=args.k,
                 multiprobe_bits=args.multiprobe_bits,
             )
-            results["lsh"] = [r.asDict() for r in df.collect()]
-            out_df = df
         if args.kind in ("ivf", "both"):
-            df = ivf_index_topk(
+            frames["ivf"] = ivf_index_topk(
                 spark, args.index + "/ivf", q, k=args.k, nprobe=args.nprobe
             )
-            results["ivf"] = [r.asDict() for r in df.collect()]
-            out_df = df if out_df is None else out_df
-        if args.output and out_df is not None:
+        results = {m: [r.asDict() for r in df.collect()] for m, df in frames.items()}
+        if args.output:
+            # one row set per method, told apart by the `method` column
+            tagged = [df.withColumn("method", F.lit(m)) for m, df in frames.items()]
+            out_df = tagged[0] if len(tagged) == 1 else tagged[0].unionByName(tagged[1])
             out_df.write.mode("overwrite").parquet(args.output)
         print(json.dumps({"index": args.index, "k": args.k, "results": results}))
     if pre_existing is None:

@@ -275,9 +275,11 @@ def dedup_corpus_incremental(
             shingle_hash_rows(out, text_col, id_col, minhash_k)
             .groupBy("doc_id")
             .agg(F.collect_set("h").alias("sh"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
+        # persisted only when the caller can unpersist it (cache_handle);
+        # otherwise every call would leak one cached table into the session
         if cache_handle is not None:
+            new_sets = new_sets.persist(StorageLevel.MEMORY_AND_DISK)
             cache_handle.append(new_sets)
         new_signed = minhash_signatures_from_hashes(
             new_sets.select("doc_id", F.explode("sh").alias("h")), num_perm

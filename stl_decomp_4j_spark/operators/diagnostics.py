@@ -32,7 +32,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-_STEP_SECONDS = {"hour": 3600, "day": 86400, "week": 604800}
+from .gapfill import STEP_SECONDS
 
 
 def seasonal_strength(decomposed: DataFrame) -> DataFrame:
@@ -113,7 +113,7 @@ def detect_outages(
     gapfill).  Runs on the *sparse* buckets via a lag window — never builds
     the dense grid.
     """
-    step = _STEP_SECONDS[granularity]
+    step = STEP_SECONDS[granularity]
     w = Window.partitionBy("url").orderBy("ts")
     lagged = buckets.withColumn("_prev", F.lag("ts").over(w)).filter(F.col("_prev").isNotNull())
     missing = ((F.col("ts").cast("long") - F.col("_prev").cast("long")) / step - 1).cast("long")
@@ -138,7 +138,7 @@ def outage_summary(buckets: DataFrame, granularity: str = "hour") -> DataFrame:
     worst_gap_start = start of the EARLIEST longest gap (ties broken by
     time, deterministically).
     """
-    step = _STEP_SECONDS[granularity]
+    step = STEP_SECONDS[granularity]
     w = Window.partitionBy("url").orderBy("ts")
     lagged = buckets.withColumn("_prev", F.lag("ts").over(w))
     missing = ((F.col("ts").cast("long") - F.col("_prev").cast("long")) / step - 1).cast("long")

@@ -5,7 +5,9 @@ The STL core requires equally spaced data with no missing values
 decomposition UDF.  The dense grid is built per key from its own [min, max]
 bucket range with sequence+explode (distributed — no driver-side expansion),
 then left-joined back to the observed buckets with missing values filled with
-0 (no crawls observed that hour).
+0 (no crawls observed that hour).  ``dense_grid`` is the same rule for one
+url's buckets in NumPy; the fused STL kernel and the streaming gap-fill both
+call it.
 
 Scale notes: grid size per url is bounded by the time range (e.g. 90 days of
 hourly grid = 2160 rows) regardless of raw crawl count, so per-group state in
@@ -14,10 +16,36 @@ between two url-partitioned children; AQE handles post-shuffle coalescing.
 """
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 _INTERVALS = {"hour": "interval 1 hour", "day": "interval 1 day", "week": "interval 7 days"}
+STEP_SECONDS = {"hour": 3600, "day": 86400, "week": 604800}
+
+
+def dense_grid(ts, cnt, step: int, fill_value: float = 0.0, t0=None):
+    """One url's gap-fill in NumPy: the in-process twin of ``gapfill``.
+
+    ``ts`` holds the url's bucket starts as int64 epoch seconds and ``cnt``
+    their observed values.  Returns ``(grid, y)``: the ``step``-spaced grid
+    from ``t0`` (default: the first bucket) to the last bucket, and y = cnt
+    where observed else ``fill_value``.  Buckets before ``t0`` are dropped.
+    A bucket off the grid raises instead of landing, by floor division, in
+    a wrong or shared slot."""
+    if t0 is None:
+        t0 = ts.min()
+    off = ts - t0
+    if (off % step).any():
+        raise ValueError(
+            f"bucket timestamps are not aligned to the {step}s grid "
+            f"(granularity mismatch between bucketize and the gap-fill step)"
+        )
+    grid = np.arange(t0, ts.max() + 1, step)
+    y = np.full(len(grid), float(fill_value))
+    keep = off >= 0
+    y[off[keep] // step] = cnt[keep]
+    return grid, y
 
 
 def gapfill(

@@ -7,6 +7,12 @@ Spark owns all distribution.  Rows arrive as Arrow batches -> contiguous
 NumPy arrays, so the Java inner loops are NumPy vector ops with no model
 impedance.
 
+There is one per-url kernel, ``make_sparse_stl_fn``: it gap-fills the url's
+observed buckets to its dense grid and decomposes it.  Every STL caller —
+the pipeline, the driver queries, the tools — goes through it via
+``stl_decompose_sparse_df``; a caller holding an already dense grid passes
+it with the value column named ``cnt``.
+
 Grouping/partitioning: the group key is the bare url (a url's series must
 never split).  applyInPandas hash-partitions by the key, which distributes
 url groups uniformly; per-group work is bounded by grid length (gap-filled),
@@ -15,12 +21,12 @@ not raw crawl count, so group-size skew is structurally bounded upstream.
 from __future__ import annotations
 
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType, TimestampType
 
 from ..stl.core import stl_decompose
 from ..stl.settings import build_stl_config
+from .gapfill import STEP_SECONDS, dense_grid
 
 STL_SCHEMA = StructType(
     [
@@ -35,76 +41,30 @@ STL_SCHEMA = StructType(
 )
 
 
-def make_stl_fn(period: int, **config_kwargs):
-    """Build the per-group pandas function.  Series shorter than 2*period
-    (the reference's validity floor) degrade to trend=value, seasonal=0."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..plans.malloc import tune_malloc
-
-        tune_malloc()  # once per worker process; no-op afterwards
-        pdf = pdf.sort_values("ts")
-        y = pdf["value"].to_numpy(dtype=float)
-        n = len(y)
-        if n >= 2 * period:
-            config = build_stl_config(n, period, **config_kwargs)
-            d = stl_decompose(y, config)
-            trend, seasonal, residual, weight = d.trend, d.seasonal, d.residual, d.weights
-        else:
-            trend, seasonal, residual, weight = y, 0.0 * y, 0.0 * y, 1.0 + 0.0 * y
-        return pd.DataFrame(
-            {
-                "url": pdf["url"].to_numpy(),
-                "ts": pdf["ts"].to_numpy(),
-                "value": y,
-                "trend": trend,
-                "seasonal": seasonal,
-                "residual": residual,
-                "weight": weight,
-            }
-        )
-
-    return fn
-
-
-_STEP_SECONDS = {"hour": 3600, "day": 86400, "week": 604800}
-
-
 def make_sparse_stl_fn(period: int, granularity: str, fill_value: float, **config_kwargs):
-    """Fused gap-fill + STL per-group kernel.
+    """The per-url STL kernel: gap-fill + decomposition in one grouped map.
 
-    The distributed gap-fill (operators/gapfill.py) EXPANDS sparse observed
-    buckets ~grid-length-fold before the UDF: an extra shuffle, an
-    explode+join over the full dense grid, and a dense-grid-sized Arrow
-    transfer into Python.  But the UDF already receives every bucket of a url
-    in one group, and building the dense grid from them is a trivial NumPy
-    reindex — so the pipeline fuses gap-fill into the kernel and ships only
-    observed rows across the Arrow boundary (e.g. 400k rows in, 11.5M grid
-    points computed in-kernel on the 8000-url/60-day workload).  Semantics
-    are identical to gapfill(): per-url [min ts, max ts] grid, observed cnt
-    else fill_value."""
-    step = _STEP_SECONDS[granularity]
+    Input rows are one url's observed buckets (url, ts, cnt).  The url's
+    dense grid is built in-kernel by ``dense_grid`` (operators/gapfill.py),
+    with the same semantics as the distributed ``gapfill()``: per-url
+    [min ts, max ts] grid, observed cnt else fill_value.  Only observed rows
+    cross the shuffle and the Arrow boundary (e.g. 400k rows in, 11.5M grid
+    points computed in-kernel on the 8000-url/60-day workload).  A dense
+    series is the case where every slot is observed, so it goes through the
+    same kernel with its value column named ``cnt``.
+
+    Series shorter than 2*period (the reference's validity floor) degrade to
+    trend=value, seasonal=0."""
+    step = STEP_SECONDS[granularity]
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         from ..plans.malloc import tune_malloc
 
-        tune_malloc()
+        tune_malloc()  # once per worker process; no-op afterwards
         ts = pdf["ts"].to_numpy().astype("datetime64[s]").astype(np.int64)
-        cnt = pdf["cnt"].to_numpy(dtype=float)
-        t0 = ts.min()
-        grid = np.arange(t0, ts.max() + 1, step)
-        y = np.full(len(grid), float(fill_value))
-        off = ts - t0
-        if (off % step).any():
-            # a bucketize granularity that disagrees with `granularity` would
-            # silently land counts in wrong/shared slots — fail loudly instead
-            raise ValueError(
-                f"bucket timestamps are not aligned to the {step}s grid "
-                f"(granularity mismatch between bucketize and the STL kernel)"
-            )
-        y[off // step] = cnt
+        grid, y = dense_grid(ts, pdf["cnt"].to_numpy(dtype=float), step, fill_value)
         n = len(y)
         if n >= 2 * period:
             config = build_stl_config(n, period, **config_kwargs)
@@ -159,23 +119,17 @@ def stl_decompose_sparse_df(
     partitions: int | None = None,
     **config_kwargs,
 ) -> DataFrame:
-    """bucketize() output (url, ts, cnt) -> decomposed dense grid, with the
-    gap-fill fused into the grouped-map kernel (see make_sparse_stl_fn)."""
+    """(url, ts, cnt) buckets -> decomposed dense grid
+    (url, ts, value, trend, seasonal, residual, weight).
+
+    The input is bucketize() output, or an already dense (url, ts, value)
+    grid with value renamed to cnt.  The gap-fill runs inside the
+    grouped-map kernel (see make_sparse_stl_fn).  The stage's parallelism
+    is pinned by pinned_grouped_apply, not left to AQE's byte-based
+    coalescing."""
     return pinned_grouped_apply(
         buckets,
         make_sparse_stl_fn(period, granularity, fill_value, **config_kwargs),
         STL_SCHEMA,
         partitions=partitions,
-    )
-
-
-def stl_decompose_df(series: DataFrame, period: int, partitions: int | None = None, **config_kwargs) -> DataFrame:
-    """(url, ts, value) dense series -> + (trend, seasonal, residual, weight).
-
-    The decomposition is CPU-bound per group, so the stage's parallelism must
-    not be byte-based: AQE happily coalesces a few-MB shuffle into one
-    partition, serializing hours of NumPy onto one core.  See
-    pinned_grouped_apply."""
-    return pinned_grouped_apply(
-        series, make_stl_fn(period, **config_kwargs), STL_SCHEMA, partitions=partitions
     )

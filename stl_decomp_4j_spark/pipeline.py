@@ -1,12 +1,16 @@
-"""The north-rule pipeline: pages -> bucketize -> gap-fill -> STL ->
+"""The north-rule pipeline: pages -> bucketize -> gap-fill + STL ->
 1h/1d/1w retention tiers -> Gorilla-compressed sink, with checkpoint/resume,
 per-bucket lineage + metrics, and the per-url text byte-identity invariant.
 
 Physical shape (SURVEY.md §3.4): Iceberg/parquet scan (column-pruned to
-url+warc_ts) -> hash agg bucketize (partial+final) -> per-url dense-grid
-join -> applyInPandas STL (the one JVM<->Python Arrow boundary) -> tier
-rollup aggs (each tier from the previous, exact) -> Gorilla encode UDF ->
-partitioned sink.
+url+warc_ts) -> hash agg bucketize (partial+final) -> numbered url
+repartition -> applyInPandas STL kernel that gap-fills each url's observed
+buckets to its dense grid in NumPy and decomposes it (the one
+JVM<->Python Arrow boundary) -> tier rollup aggs (each tier from the
+previous, exact) -> Gorilla encode UDF -> partitioned sink.
+
+This is the one pipeline body: jobs/rollup_job.py, perfbench and
+tools/scaling_bench.py all call ``run_pipeline``.
 """
 from __future__ import annotations
 
@@ -18,8 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .operators.bucketize import bucketize
 from .operators.compress import compress_tier
-from .operators.gapfill import gapfill
-from .operators.rollup import build_tiers
+from .operators.rollup import hourly_tier, rollup_tier
 from .operators.stl_udf import stl_decompose_sparse_df
 from .plans.checkpoint import Manifest, new_run_id
 from .sources.catalog import write_table
@@ -59,9 +62,9 @@ class PipelineResult:
 def decompose_pages(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """pages -> decomposed dense hourly series (no sink).
 
-    Uses the fused gap-fill + STL kernel: only observed buckets cross the
-    shuffle and the Arrow boundary; the dense grid is built in-kernel
-    (identical semantics to gapfill() — asserted by test_fused_gapfill_stl)."""
+    Uses the STL kernel's in-kernel gap-fill: only observed buckets cross
+    the shuffle and the Arrow boundary (identical semantics to gapfill() —
+    asserted bit-for-bit by test_stl_kernel_matches_gapfill_and_local_stl)."""
     return stl_decompose_sparse_df(
         bucketize(pages, granularity=cfg.granularity),
         cfg.period,
@@ -153,8 +156,6 @@ def run_pipeline(
         # coarser tiers read the already-reduced previous tier (the
         # continuous-aggregate pattern; recomputing the chain per tier
         # tripled the dominant UDF cost)
-        from .operators.rollup import hourly_tier, rollup_tier
-
         n_points = 0
         tier_df = hourly_tier(decomposed)
         # second partition level for retention: slab = calendar slab of the

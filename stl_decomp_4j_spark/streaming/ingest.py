@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..operators.gapfill import dense_grid
+
 PAGES_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -87,8 +89,8 @@ def stream_gapfill_stateful(bucket_rows: DataFrame, step_seconds: int = 3600) ->
     0.0 gap) — it is DROPPED, mirroring append-mode watermark finalization
     upstream; re-emitting would duplicate the slot downstream.  Misaligned
     timestamps (not on the step grid) raise instead of silently colliding
-    into floor-divided slots — same loud-failure rule as the batch twin
-    (operators/stl_udf.py make_sparse_stl_fn).
+    into floor-divided slots.  The grid itself is built by the same helper
+    as the batch STL kernel (operators/gapfill.py dense_grid).
 
     This is the engine's arbitrary-stateful-streaming surface; the built-in
     watermarked aggregation (stream_bucketize) stays the ingestion path and
@@ -115,26 +117,16 @@ def stream_gapfill_stateful(bucket_rows: DataFrame, step_seconds: int = 3600) ->
         parts = [pdf for pdf in pdf_iter if len(pdf)]
         if not parts:
             return
-        pdf = pd.concat(parts).sort_values("ts")
+        pdf = pd.concat(parts)
         ts = pdf["ts"].to_numpy().astype("datetime64[s]").astype(np.int64)
-        cnt = pdf["cnt"].to_numpy(dtype=float)
         (last,) = state.get if state.exists else (None,)
         t0 = ts.min() if last is None else last + step_seconds
         t1 = ts.max()
         if t1 < t0:  # stale replay entirely behind the state: emit nothing
             return
-        if ((ts - t0) % step_seconds).any():
-            # misaligned buckets would floor-divide into wrong/shared grid
-            # slots — fail loudly (mirror of the batch kernel's check)
-            raise ValueError(
-                f"bucket timestamps for url={url!r} are not aligned to the "
-                f"{step_seconds}s grid (granularity mismatch between the "
-                f"bucket stream and the gap-fill step)"
-            )
-        grid = np.arange(t0, t1 + 1, step_seconds)
-        vals = np.zeros(len(grid))
-        keep = ts >= t0
-        vals[(ts[keep] - t0) // step_seconds] = cnt[keep]
+        # the grid resumes one slot after the state; late buckets behind it
+        # are dropped, misaligned ones raise (same rule as the batch kernel)
+        grid, vals = dense_grid(ts, pdf["cnt"].to_numpy(dtype=float), step_seconds, t0=t0)
         state.update((int(t1),))
         yield pd.DataFrame(
             {"url": url, "ts": grid.astype("datetime64[s]"), "value": vals}

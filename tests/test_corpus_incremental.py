@@ -91,3 +91,17 @@ def test_update_store_feeds_next_batch(spark, store):
     ]
     out2 = _run(spark, store, batch2)
     assert sorted(r["doc_id"] for r in out2.collect()) == [21]
+
+
+def test_no_cache_handle_persists_nothing(spark, store):
+    """Without a cache_handle the caller cannot unpersist anything, so the
+    call must leave the session's persisted RDDs exactly as it found them."""
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    out = _run(spark, store, NEW)
+    assert sorted(r["doc_id"] for r in out.collect()) == [11, 15, 17]
+    assert persisted() == before

@@ -11,7 +11,7 @@ from stl_decomp_4j_spark.operators.bucketize import bucketize
 from stl_decomp_4j_spark.operators.compress import compress_tier, decompress_chunks
 from stl_decomp_4j_spark.operators.gapfill import gapfill
 from stl_decomp_4j_spark.operators.rollup import build_tiers
-from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_df
+from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 from stl_decomp_4j_spark.pipeline import PipelineConfig, run_pipeline
 from stl_decomp_4j_spark.sources.pages import generate_pages, text_digests
 
@@ -54,46 +54,48 @@ def test_bucketize_and_gapfill_dense(spark, pages):
     assert pdf["value"].sum() == pages.count()
 
 
-def test_stl_matches_local_reference_exactly(spark, pages):
-    series = gapfill(bucketize(pages))
-    out = stl_decompose_df(series, period=24, seasonal_width=35, robust=False)
-    got = out.toPandas().sort_values(["url", "ts"]).reset_index(drop=True)
-
+@pytest.mark.parametrize("robust", [False, True], ids=["nonrobust", "robust"])
+@pytest.mark.parametrize(
+    "granularity,period,width", [("hour", 24, 35), ("day", 7, 7), ("week", 4, 7)],
+    ids=["hour", "day", "week"],
+)
+def test_stl_kernel_matches_gapfill_and_local_stl(spark, pages, granularity, period, width, robust):
+    """The one STL kernel gap-fills inside the grouped map.  Bit for bit, its
+    (url, ts, value) grid is gapfill()'s, and its components are in-process
+    decompose() of that grid per url.  The week grid (at most 4 slots) is
+    shorter than 2*period, so that case pins the degrade rule: trend=value,
+    seasonal=residual=0, weight=1."""
     from stl_decomp_4j_spark.stl import decompose
 
-    local = series.toPandas().sort_values(["url", "ts"])
-    for url, g in local.groupby("url"):
+    buckets = bucketize(pages, granularity=granularity)
+    grid = (
+        gapfill(buckets, granularity=granularity)
+        .toPandas().sort_values(["url", "ts"]).reset_index(drop=True)
+    )
+    got = (
+        stl_decompose_sparse_df(
+            buckets, period=period, granularity=granularity, seasonal_width=width, robust=robust
+        )
+        .toPandas().sort_values(["url", "ts"]).reset_index(drop=True)
+    )
+    assert len(got) == len(grid) > 0
+    assert (got["url"] == grid["url"]).all()
+    assert (got["ts"] == grid["ts"]).all()
+    assert np.array_equal(got["value"].to_numpy(), grid["value"].to_numpy())
+    for url, g in grid.groupby("url"):
         y = g["value"].to_numpy(dtype=float)
-        d = decompose(y, 24, seasonal_width=35, robust=False)
-        sub = got[got["url"] == url]
-        assert np.array_equal(sub["trend"].to_numpy(), d.trend), url
-        assert np.array_equal(sub["seasonal"].to_numpy(), d.seasonal), url
-        assert np.array_equal(sub["residual"].to_numpy(), d.residual), url
-
-
-def test_fused_gapfill_stl_equals_distributed(spark, pages):
-    """The fused kernel (gap-fill inside the grouped map) must be row-for-row
-    bit-identical to the distributed gapfill() -> stl_decompose_df() path."""
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
-
-    buckets = bucketize(pages)
-    dist = (
-        stl_decompose_df(gapfill(buckets), period=24, seasonal_width=35, robust=True)
-        .toPandas().sort_values(["url", "ts"]).reset_index(drop=True)
-    )
-    fused = (
-        stl_decompose_sparse_df(buckets, period=24, seasonal_width=35, robust=True)
-        .toPandas().sort_values(["url", "ts"]).reset_index(drop=True)
-    )
-    assert len(dist) == len(fused)
-    assert (dist["url"] == fused["url"]).all()
-    assert (dist["ts"] == fused["ts"]).all()
-    for col in ("value", "trend", "seasonal", "residual", "weight"):
-        assert np.array_equal(dist[col].to_numpy(), fused[col].to_numpy()), col
+        if len(y) >= 2 * period:
+            d = decompose(y, period, seasonal_width=width, robust=robust)
+            want = {"trend": d.trend, "seasonal": d.seasonal, "residual": d.residual, "weight": d.weights}
+        else:
+            want = {"trend": y, "seasonal": 0.0 * y, "residual": 0.0 * y, "weight": 1.0 + 0.0 * y}
+        sub = got.loc[g.index]
+        for col, w in want.items():
+            assert np.array_equal(sub[col].to_numpy(), w), (url, col)
 
 
 def test_tiers_exact_vs_pandas(spark, pages):
-    decomposed = stl_decompose_df(gapfill(bucketize(pages)), period=24, seasonal_width=35)
+    decomposed = stl_decompose_sparse_df(bucketize(pages), period=24, seasonal_width=35)
     tiers = build_tiers(decomposed)
     t1d = tiers["1d"].toPandas().sort_values(["url", "ts"]).reset_index(drop=True)
     pdf = decomposed.toPandas()
@@ -113,7 +115,7 @@ def test_tiers_exact_vs_pandas(spark, pages):
 
 
 def test_gorilla_chunks_roundtrip_via_spark(spark, pages):
-    decomposed = stl_decompose_df(gapfill(bucketize(pages)), period=24, seasonal_width=35)
+    decomposed = stl_decompose_sparse_df(bucketize(pages), period=24, seasonal_width=35)
     tier = build_tiers(decomposed)["1h"].select("url", "ts", "value", "trend")
     chunks = compress_tier(tier)
     back = decompress_chunks(chunks).toPandas()
@@ -128,7 +130,7 @@ def test_compress_presorted_matches_shuffled_path(spark, pages, tmp_path):
     """presorted=True (no repartition+sort — valid on the materialized 1h
     tier, which preserves the STL stage's url grouping and grid order) must
     decode to exactly the same rows as the shuffling path."""
-    decomposed = stl_decompose_df(gapfill(bucketize(pages)), period=24, seasonal_width=35)
+    decomposed = stl_decompose_sparse_df(bucketize(pages), period=24, seasonal_width=35)
     path = str(tmp_path / "t1h")
     build_tiers(decomposed)["1h"].write.parquet(path)
     mat = spark.read.parquet(path).select("url", "ts", "value", "trend")
@@ -239,27 +241,6 @@ def test_full_pipeline_with_resume(spark, pages, tmp_path):
         spark.read.parquet(f"{out}/tier_1h").filter(F.col("url") == url0).count()
     )
     assert q["rows"] == want_rows > 0
-
-
-@pytest.mark.parametrize("granularity,period", [("day", 7), ("week", 4)])
-def test_fused_gapfill_other_granularities(spark, pages, granularity, period):
-    """Fused kernel grid construction must match the distributed gapfill at
-    day and week granularity too (rollup_job exposes --granularity)."""
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
-
-    buckets = bucketize(pages, granularity=granularity)
-    dist = (
-        stl_decompose_df(gapfill(buckets, granularity=granularity), period=period, seasonal_width=7)
-        .toPandas().sort_values(["url", "ts"]).reset_index(drop=True)
-    )
-    fused = (
-        stl_decompose_sparse_df(buckets, period=period, granularity=granularity, seasonal_width=7)
-        .toPandas().sort_values(["url", "ts"]).reset_index(drop=True)
-    )
-    assert len(dist) == len(fused) and len(dist) > 0
-    assert (dist["ts"] == fused["ts"]).all()
-    for col in ("value", "trend", "seasonal", "residual"):
-        assert np.array_equal(dist[col].to_numpy(), fused[col].to_numpy()), col
 
 
 def test_incremental_recompute_only_touched_buckets(spark, pages, tmp_path):

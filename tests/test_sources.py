@@ -1,5 +1,8 @@
 """CSV source/sink parity (reference A24) — reading the reference's own CSV
 files and reproducing its 17-digit dump format."""
+import json
+from pathlib import Path
+
 import numpy as np
 
 from stl_decomp_4j_spark.sources.timeseries import (
@@ -9,12 +12,20 @@ from stl_decomp_4j_spark.sources.timeseries import (
 )
 from stl_decomp_4j_spark.stl import decompose
 
-CO2 = "/root/reference/examples/StlDemoRestServer/co2.csv"
-GOLDEN = "/root/reference/examples/StlPerfTest/output.csv"
+# the reference's co2.csv values and its StlPerfTest/output.csv 17-digit dump
+FIXTURE = Path(__file__).parent / "fixtures" / "co2_golden.json"
 
 
 def test_read_co2_and_roundtrip_17_digits(spark, tmp_path):
-    df = read_co2_csv(spark, CO2)
+    fx = json.loads(FIXTURE.read_text())
+    co2 = tmp_path / "co2.csv"
+    # co2.csv layout; time_years is not read by the test, monthly steps
+    # from 1959 stand in for it
+    co2.write_text(
+        "row,time_years,interpolated\n"
+        + "".join(f"{i},{1959 + i / 12!r},{v!r}\n" for i, v in enumerate(fx["data"]))
+    )
+    df = read_co2_csv(spark, str(co2))
     pdf = df.orderBy("idx").toPandas()
     assert len(pdf) == 708
     data = pdf["value"].to_numpy()
@@ -24,16 +35,13 @@ def test_read_co2_and_roundtrip_17_digits(spark, tmp_path):
     write_decomposition_csv(d, str(out))
 
     ours = out.read_text().strip().splitlines()
-    golden = open(GOLDEN).read().strip().splitlines()
+    golden = fx["golden"]
     assert len(ours) == len(golden)
-    for line_a, line_b in zip(ours, golden):
+    for line_a, vb in zip(ours, golden):
         va = [float(x) for x in line_a.split(",")]
-        vb = [float(x) for x in line_b.split(",")]
         assert np.max(np.abs(np.array(va) - np.array(vb))) < 1.0e-11
 
     js = decomposition_to_json(d)
-    import json
-
     parsed = json.loads(js)
     assert set(parsed) == {"time", "value", "seasonal", "trend", "residual", "weight"}
     assert len(parsed["value"]) == 708

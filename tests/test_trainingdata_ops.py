@@ -243,12 +243,20 @@ def test_ann_job_build_and_query(spark, embeddings, tmp_path, monkeypatch, capsy
     built = run(["--build", "--input", emb_path, "--index", idx])
     assert built == {"index": idx, "built": ["lsh", "ivf"]}
 
-    out = run(["--query", "--index", idx, "--vec-id", "1", "--input", emb_path, "--k", "5"])
+    res_path = str(tmp_path / "res")
+    out = run(["--query", "--index", idx, "--vec-id", "1", "--input", emb_path, "--k", "5",
+               "--output", res_path])
     q = [float(x) for x in embeddings.filter(F.col("vec_id") == 1).first()["embedding"]]
     want_lsh = [r.asDict() for r in lsh_index_topk(spark, idx + "/lsh", q, k=5).collect()]
     want_ivf = [r.asDict() for r in ivf_index_topk(spark, idx + "/ivf", q, k=5).collect()]
     assert out["results"]["lsh"] == want_lsh
     assert out["results"]["ivf"] == want_ivf
+
+    # --kind both --output writes both result sets, tagged by method
+    written = spark.read.parquet(res_path)
+    for method, want in (("lsh", want_lsh), ("ivf", want_ivf)):
+        rows = [r.asDict() for r in written.filter(F.col("method") == method).drop("method").collect()]
+        assert sorted(rows, key=lambda r: r["rank"]) == sorted(want, key=lambda r: r["rank"])
 
 
 def test_embedding_near_dup_pairs(spark, embeddings):

@@ -28,7 +28,7 @@ def main():
     from stl_decomp_4j_spark.operators.bucketize import bucketize
     from stl_decomp_4j_spark.operators.gapfill import gapfill
     from stl_decomp_4j_spark.operators.rollup import build_tiers
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_df
+    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
     from stl_decomp_4j_spark.plans.session import build_session
     from stl_decomp_4j_spark.sources.pages import generate_pages
 
@@ -49,14 +49,9 @@ def main():
     filled = gapfill(buckets)
     sections["gap-fill: per-url grid join"] = plan_of(filled)
 
-    decomposed = stl_decompose_df(filled, period=24, seasonal_width=35)
-    t1d = build_tiers(decomposed)["1d"]
-    sections["stl + 1d tier"] = plan_of(t1d)
-
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
-
-    fused = stl_decompose_sparse_df(buckets, period=24, seasonal_width=35)
-    sections["fused gap-fill + stl (pipeline path)"] = plan_of(fused)
+    decomposed = stl_decompose_sparse_df(buckets, period=24, seasonal_width=35)
+    sections["fused gap-fill + stl (pipeline path)"] = plan_of(decomposed)
+    sections["stl + 1d tier"] = plan_of(build_tiers(decomposed)["1d"])
 
     # round-2 shapes ------------------------------------------------------
     from stl_decomp_4j_spark.operators.compress import compress_tier

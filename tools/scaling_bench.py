@@ -1,15 +1,18 @@
 #!/usr/bin/env python3
 """Two-cluster-size scaling evidence for the north rule.
 
-Runs the identical north-rule pipeline job (synthetic pages -> bucketize ->
-gap-fill -> STL -> 1h/1d/1w tiers) on the same deterministic input at two
-parallelism levels (default local[8] and local[32] = N and 4N cores — the
-sandbox stand-in for N and 4N executors) and reports rolled-up points/sec at
-each plus the scaling efficiency  thr_4N / (4 * thr_N).
+Runs the production pipeline body (``run_pipeline``: synthetic pages ->
+bucketize -> gap-fill + STL -> 1h/1d/1w tiers [-> Gorilla sink], robust,
+one bucket) on the same deterministic input at two parallelism levels
+(default local[8] and local[32] = N and 4N cores — the sandbox stand-in for
+N and 4N executors) and reports rolled-up points/sec at each plus the
+scaling efficiency  thr_4N / (4 * thr_N).
 
 Measurement hygiene: same fixed-seed input both runs; input materialized to
 parquet once (generation excluded); per-run fresh JVM; a warmup job excludes
-one-time planning/codegen; wall time covers decompose+rollup+write only.
+one-time planning/codegen; wall time is ``run_pipeline``'s own wall.
+Per-layer numbers (stage task time, shuffle bytes, kernel time) come from
+``perfbench/run.py --trace 1``, not from this tool.
 
 Usage: python tools/scaling_bench.py [--urls 4000] [--days 60]
 """
@@ -21,19 +24,16 @@ import os
 import subprocess
 import sys
 import tempfile
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 
 WORKER = r"""
-import json, sys, time
+import json, shutil, sys
 sys.path.insert(0, {repo!r})
 import pyspark.sql.functions as F
+from stl_decomp_4j_spark.pipeline import PipelineConfig, run_pipeline
 from stl_decomp_4j_spark.plans.session import build_session
-from stl_decomp_4j_spark.operators.bucketize import bucketize
-from stl_decomp_4j_spark.operators.rollup import build_tiers
-from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
 cores = int(sys.argv[1]); pages_path = sys.argv[2]; out = sys.argv[3]
 mode = sys.argv[4] if len(sys.argv) > 4 else "threads"
@@ -67,9 +67,6 @@ if mode == "executors":
               # them all and over-threads itself N_executors-fold
               "spark.executor.extraJavaOptions":
                   f"-XX:ActiveProcessorCount={{cores_per_exec}}",
-              # status REST API for shuffle-bytes accounting (UI is off in
-              # the default session to keep test startup light)
-              "spark.ui.enabled": "true",
               "spark.executorEnv.PYTHONPATH": {repo!r}}}
 else:
     master = f"local[{{cores}}]"
@@ -89,56 +86,13 @@ def _warm(pdf):
 spark.range(0, 4 * cores, 1, 4 * cores).groupBy("id").applyInPandas(
     _warm, StructType([StructField("id", LongType())])).count()
 
-pages = spark.read.parquet(pages_path)
-
-t0 = time.time()
-decomposed = stl_decompose_sparse_df(bucketize(pages), period=24, seasonal_width=35, robust=True)
-from stl_decomp_4j_spark.operators.rollup import hourly_tier, rollup_tier
-points = 0
-phases = {{}}
-tier = hourly_tier(decomposed)
-for name, nxt in (("1h", "day"), ("1d", "week"), ("1w", None)):
-    tp = time.time()
-    tier.write.mode("overwrite").parquet(f"{{out}}/tier_{{name}}_{{cores}}")
-    phases[f"write_{{name}}"] = round(time.time() - tp, 1)
-    tp = time.time()
-    materialized = spark.read.parquet(f"{{out}}/tier_{{name}}_{{cores}}")
-    points += materialized.count()
-    if nxt:
-        tier = rollup_tier(materialized, nxt)
-    phases[f"derive_{{name}}"] = round(time.time() - tp, 1)
-    if compress:
-        # the Gorilla-compressed sink is part of the production pipeline
-        # (pipeline.py cfg.compress=True); include its cost in the wall
-        tp = time.time()
-        from stl_decomp_4j_spark.operators.compress import compress_tier
-        comps = ["value", "trend", "seasonal", "residual"]
-        cols = comps if name == "1h" else [f"sum_{{c}}" for c in comps]
-        # 1h tier parquet preserves the STL stage's url grouping/order, so
-        # its sink skips the repartition+sort (see compress_tier presorted)
-        compress_tier(materialized.select("url", "ts", *cols),
-                      presorted=(name == "1h")).write.mode(
-            "overwrite").parquet(f"{{out}}/gorilla_{{name}}_{{cores}}")
-        phases[f"gorilla_{{name}}"] = round(time.time() - tp, 1)
-wall = time.time() - t0
-res = {{"cores": cores, "points": points, "wall_s": wall,
-        "points_per_sec": points / wall, "phases": phases}}
-try:
-    # shuffle-bytes accounting from the status REST API: quantifies how much
-    # data actually crosses executors (the single-box-vs-cluster residual)
-    import urllib.request
-    base = spark.sparkContext.uiWebUrl
-    apps = json.load(urllib.request.urlopen(f"{{base}}/api/v1/applications", timeout=10))
-    app_id = apps[0]["id"]
-    stages = json.load(urllib.request.urlopen(
-        f"{{base}}/api/v1/applications/{{app_id}}/stages?status=complete", timeout=10))
-    res["shuffle_read_mb"] = round(sum(s.get("shuffleReadBytes", 0) for s in stages) / 1e6, 1)
-    res["shuffle_write_mb"] = round(sum(s.get("shuffleWriteBytes", 0) for s in stages) / 1e6, 1)
-    res["executor_run_s"] = round(sum(s.get("executorRunTime", 0) for s in stages) / 1e3, 1)
-    res["input_mb"] = round(sum(s.get("inputBytes", 0) for s in stages) / 1e6, 1)
-except Exception as ex:  # UI disabled or port taken — accounting is optional
-    res["metrics_err"] = str(ex)[:200]
-print(json.dumps(res))
+store = f"{{out}}/store_{{cores}}"
+shutil.rmtree(store, ignore_errors=True)
+res = run_pipeline(spark, spark.read.parquet(pages_path), store,
+                   PipelineConfig(robust=True, n_buckets=1, compress=compress))
+points = sum(res.rows_per_tier.values())
+print(json.dumps({{"cores": cores, "points": points, "wall_s": res.wall_s,
+                  "points_per_sec": points / res.wall_s}}))
 spark.stop()
 """
 
@@ -178,7 +132,7 @@ def main() -> None:
     ap.add_argument("--cores-per-executor", type=int, default=4,
                     help="executors mode: cores per executor JVM; pick < --small so BOTH pair sizes are multi-executor")
     ap.add_argument("--compress", action="store_true",
-                    help="include the Gorilla-compressed tier sink in the timed job")
+                    help="include the Gorilla-compressed tier sink in the timed pipeline")
     args = ap.parse_args()
 
     out = args.out or tempfile.mkdtemp(prefix="scaling_bench_", dir="/dev/shm")

@@ -5,6 +5,9 @@ periodic-by-hand widths/jumps) so our per-iteration cost is directly
 comparable to the numbers the reference harness prints.
 
 Usage: python tools/stl_micro_bench.py [--timed 100] [--warmup 10] [--hourly]
+
+--hourly needs the reference checkout's hourly CSV; without it the hourly
+workload prints a skip line and the tool still exits 0.
 """
 from __future__ import annotations
 
@@ -63,4 +66,10 @@ def main():
 
 
 if __name__ == "__main__":
-    main()
+    try:
+        main()
+    except FileNotFoundError as ex:
+        # the hourly series ships only with the reference checkout
+        if not str(ex.filename).endswith("hourly_stl_test.csv"):
+            raise
+        print(json.dumps({"workload": "hourly", "skipped": f"{ex.filename} not found"}))
