@@ -1275,19 +1275,16 @@ def q_corpus_clean_incremental(spark, sf_dir):
     index splits pairs into cross and in-batch by id alone)."""
     import tempfile
 
-    from stl_decomp_4j_spark.operators.corpus import (
-        build_fingerprint_store,
-        dedup_corpus_incremental,
-    )
+    from stl_decomp_4j_spark.operators.corpus import build_fingerprint_store, dedup_corpus
 
     docs = spark.read.parquet(_t(sf_dir, "documents"))
     lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
     split = (int(lo) + int(hi)) // 2
     store = tempfile.mkdtemp(prefix="fpstore_")
     build_fingerprint_store(docs.filter(F.col("doc_id") <= split), store, snapshot_key="source")
-    return dedup_corpus_incremental(
+    return dedup_corpus(
         docs.filter(F.col("doc_id") > split),
-        store,
+        store=store,
         snapshot_key="source",
         snapshot_max_hamming=4,
         minhash_threshold=0.5,

@@ -18,21 +18,23 @@ and is the cheapest path for very large corpora).
 
 Incremental operation (each new crawl deduped against the accumulated
 corpus WITHOUT re-reading history text — operators/corpus.py
-dedup_corpus_incremental):
+dedup_corpus in store mode):
 
     # once: fingerprint the accumulated corpus
     ... dedup_job.py --input history.parquet --build-store /warehouse/fpstore \
         [--snapshot-key source]
-    # per batch: clean the new crawl against the store, fold survivors in
+    # per batch: clean the new crawl against the store, then fold it in
     ... dedup_job.py --input batch.parquet --output cleaned --store \
         /warehouse/fpstore --update-store [--snapshot-key source]
 
 --store reads the fingerprint tables only (digests / band hashes / shingle
-hash sets / per-key last snapshots; linear in corpus size, no history text);
---update-store appends the survivors' fingerprints so the next batch dedups
-against history + this batch.  --strip-spans-k is batch-scope only in this
-mode (spans are stripped within the new batch, matching
-dedup_corpus_incremental's documented semantics).
+hash sets / per-key last snapshots; linear in corpus size, no history text)
+and refuses a store built with another --minhash-k or --snapshot-key;
+--update-store, after the cleaned corpus is written, adds the fingerprints
+of EVERY (pre-filtered) input document — dropped ones too, as --build-store
+would — so the next batch dedups against history + this batch.
+--strip-spans-k is batch-scope in this mode (spans are stripped within the
+new batch).
 """
 from __future__ import annotations
 
@@ -62,7 +64,7 @@ def main() -> None:
     ap.add_argument("--store", default=None, metavar="PATH",
                     help="incremental mode: dedup --input against the fingerprint store at PATH")
     ap.add_argument("--update-store", action="store_true",
-                    help="with --store: append survivors' fingerprints for the next batch")
+                    help="with --store: add the input's fingerprints once the output is written")
     args = ap.parse_args()
     if args.build_store and args.store:
         ap.error("--build-store and --store are mutually exclusive")
@@ -74,7 +76,7 @@ def main() -> None:
     from stl_decomp_4j_spark.operators.corpus import (
         build_fingerprint_store,
         dedup_corpus,
-        dedup_corpus_incremental,
+        extend_fingerprint_store,
     )
     from stl_decomp_4j_spark.plans.session import build_session
 
@@ -113,53 +115,27 @@ def main() -> None:
     stats: dict | None = None if args.no_stats else {}
     handle: list = []
     threshold = None if args.minhash_threshold < 0 else args.minhash_threshold
-    if args.store:
-        cleaned = dedup_corpus_incremental(
-            docs,
-            args.store,
-            text_col=args.text_col,
-            id_col=args.id_col,
-            snapshot_key=args.snapshot_key,
-            snapshot_max_hamming=args.snapshot_max_hamming,
-            minhash_threshold=threshold,
-            minhash_k=args.minhash_k,
-            max_bucket=args.max_bucket,
-            update_store=args.update_store,
-            stats=stats,
-            cache_handle=handle,
-        )
-        if args.strip_spans_k is not None:
-            # batch-scope span strip on the survivors (incremental semantics:
-            # the store carries no span index — see dedup_corpus_incremental)
-            import pyspark.sql.functions as F
-
-            from stl_decomp_4j_spark.operators.dedup import strip_duplicate_spans
-
-            in_cols = list(cleaned.columns)
-            stripped = strip_duplicate_spans(
-                cleaned, args.text_col, args.id_col, k=args.strip_spans_k
-            ).select(
-                F.col("doc_id").alias(args.id_col),
-                F.col("clean_text").alias(args.text_col),
-            )
-            cleaned = cleaned.drop(args.text_col).join(stripped, args.id_col).select(*in_cols)
-    else:
-        cleaned = dedup_corpus(
-            docs,
-            text_col=args.text_col,
-            id_col=args.id_col,
-            snapshot_key=args.snapshot_key,
-            snapshot_max_hamming=args.snapshot_max_hamming,
-            minhash_threshold=threshold,
-            minhash_k=args.minhash_k,
-            max_bucket=args.max_bucket,
-            strip_spans_k=args.strip_spans_k,
-            stats=stats,
-            cache_handle=handle,
-        )
+    cleaned = dedup_corpus(
+        docs,
+        text_col=args.text_col,
+        id_col=args.id_col,
+        snapshot_key=args.snapshot_key,
+        snapshot_max_hamming=args.snapshot_max_hamming,
+        minhash_threshold=threshold,
+        minhash_k=args.minhash_k,
+        max_bucket=args.max_bucket,
+        strip_spans_k=args.strip_spans_k,
+        store=args.store,
+        stats=stats,
+        cache_handle=handle,
+    )
     cleaned.write.mode("overwrite").parquet(args.output)
     for df in handle:
         df.unpersist()
+    # only now: the cleaned plan reads the store, so extending it first would
+    # dedup the batch against its own fingerprints
+    if args.store and args.update_store:
+        extend_fingerprint_store(docs, args.store, text_col=args.text_col, id_col=args.id_col)
     print(json.dumps({"input": args.input, "output": args.output, "store": args.store, "stages": stats}))
     if pre_existing is None:
         spark.stop()

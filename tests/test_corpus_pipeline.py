@@ -32,36 +32,77 @@ def corpus(spark):
     return df
 
 
-def test_dedup_corpus_stages(spark, corpus):
+@pytest.fixture()
+def empty_store(spark, corpus, tmp_path):
+    """A fingerprint store built from an empty documents table."""
+    from stl_decomp_4j_spark.operators.corpus import build_fingerprint_store
+
+    path = str(tmp_path / "empty_store")
+    build_fingerprint_store(spark.createDataFrame([], corpus.schema), path, snapshot_key="source")
+    return path
+
+
+def test_dedup_corpus_stages(spark, corpus, empty_store):
+    """Batch mode, and the same pass against an EMPTY store: one body, so the
+    store run keeps the same survivors, texts and stats (plus its history
+    near-dup stage, which drops nothing)."""
     from stl_decomp_4j_spark.operators.corpus import dedup_corpus
 
-    stats, handle = {}, []
-    out = dedup_corpus(
-        corpus,
-        snapshot_key="source",
-        minhash_threshold=0.8,
-        strip_spans_k=5,
-        stats=stats,
-        cache_handle=handle,
-    ).toPandas()
-    for df in handle:
-        df.unpersist()
-
-    assert stats == {
+    want_stats = {
         "input": 7,
         "after_exact": 6,
         "after_snapshot": 5,
         "after_neardup": 4,
         "after_span_strip": 4,
     }
-    got = out.set_index("doc_id")
-    assert sorted(got.index) == [1, 4, 6, 7]
-    # untouched survivors keep their text verbatim
-    assert got.loc[1, "text"] == A and got.loc[4, "text"] == B
-    # the shared 10-word boilerplate span is stripped from BOTH docs
-    assert got.loc[6, "text"] == U6 and got.loc[7, "text"] == U7
-    # schema preserved
-    assert list(out.columns) == ["doc_id", "text", "source"]
+    for store in (None, empty_store):
+        stats, handle = {}, []
+        out = dedup_corpus(
+            corpus,
+            snapshot_key="source",
+            minhash_threshold=0.8,
+            strip_spans_k=5,
+            store=store,
+            stats=stats,
+            cache_handle=handle,
+        ).toPandas()
+        for df in handle:
+            df.unpersist()
+
+        assert stats == (want_stats if store is None else {**want_stats, "after_neardup_hist": 5})
+        got = out.set_index("doc_id")
+        assert sorted(got.index) == [1, 4, 6, 7]
+        # untouched survivors keep their text verbatim
+        assert got.loc[1, "text"] == A and got.loc[4, "text"] == B
+        # the shared 10-word boilerplate span is stripped from BOTH docs
+        assert got.loc[6, "text"] == U6 and got.loc[7, "text"] == U7
+        # schema preserved
+        assert list(out.columns) == ["doc_id", "text", "source"]
+
+
+@pytest.mark.parametrize("mode", ["batch", "store"])
+def test_corpus_composition_plan(spark, corpus, empty_store, mode):
+    """The composed pass adds no Python anywhere (scalar, Arrow or
+    grouped-map) and stitches its stages with doc_id anti-joins: snapshot +
+    near-dup stitches + span strip's internal (doc_id, pos) anti-join = at
+    least 3 LeftAnti joins."""
+    import io
+    from contextlib import redirect_stdout
+
+    from stl_decomp_4j_spark.operators.corpus import dedup_corpus
+
+    df = dedup_corpus(
+        corpus,
+        snapshot_key="source",
+        strip_spans_k=5,
+        store=empty_store if mode == "store" else None,
+    )
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    plan = buf.getvalue()
+    assert "EvalPython" not in plan and "InPandas" not in plan
+    assert plan.count("LeftAnti") >= 3
 
 
 def test_dedup_corpus_stage_toggles(spark, corpus):
