@@ -470,19 +470,19 @@ def q_ann_topk(spark, sf_dir):
 
 
 def q_ann_lsh(spark, sf_dir):
-    from stl_decomp_4j_spark.operators.similarity import ann_lsh_topk
+    from stl_decomp_4j_spark.operators.similarity import ann_topk
 
     emb = spark.read.parquet(_t(sf_dir, "embeddings"))
     q = [float(x) for x in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    return ann_lsh_topk(emb, q, k=10, multiprobe_bits=2).select("vec_id", "rank")
+    return ann_topk(emb, q, "lsh", k=10, probe=2).select("vec_id", "rank")
 
 
 def q_ann_ivf(spark, sf_dir):
-    from stl_decomp_4j_spark.operators.similarity import ann_ivf_topk
+    from stl_decomp_4j_spark.operators.similarity import ann_topk
 
     emb = spark.read.parquet(_t(sf_dir, "embeddings"))
     q = [float(x) for x in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    return ann_ivf_topk(emb, q, k=10, n_clusters=16, nprobe=4).select("vec_id", "rank")
+    return ann_topk(emb, q, "ivf", k=10, n_cells=16, probe=4).select("vec_id", "rank")
 
 
 def q_embedding_near_dup_lsh(spark, sf_dir):
@@ -1176,24 +1176,24 @@ def ann_index_setup(spark, sf_dir, idx_dir):
     indexes once so bench.py can time index-build (setup) separately from
     the partition-pruned lookups — an index is written once and queried many
     times.  Returns the query vector."""
-    from stl_decomp_4j_spark.operators.similarity import build_ivf_index, build_lsh_index
+    from stl_decomp_4j_spark.operators.similarity import build_ann_index
 
     emb = spark.read.parquet(_t(sf_dir, "embeddings"))
     q = [float(x) for x in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    build_lsh_index(emb, idx_dir + "/lsh", n_planes=8)
-    build_ivf_index(emb, idx_dir + "/ivf", n_clusters=16)
+    build_ann_index(emb, idx_dir + "/lsh", "lsh", n_cells=8)
+    build_ann_index(emb, idx_dir + "/ivf", "ivf", n_cells=16)
     return q
 
 
 def ann_indexed_from_store(spark, idx_dir, q):
     """The pruned lookups against a materialized ANN index: only the probed
     bucket / cluster partitions are read (PartitionFilters)."""
-    from stl_decomp_4j_spark.operators.similarity import ivf_index_topk, lsh_index_topk
+    from stl_decomp_4j_spark.operators.similarity import ann_index_topk
 
-    lsh = lsh_index_topk(spark, idx_dir + "/lsh", q, k=10, multiprobe_bits=2).select(
+    lsh = ann_index_topk(spark, idx_dir + "/lsh", q, k=10, probe=2).select(
         F.lit("lsh").alias("method"), "vec_id", "rank"
     )
-    ivf = ivf_index_topk(spark, idx_dir + "/ivf", q, k=10, nprobe=4).select(
+    ivf = ann_index_topk(spark, idx_dir + "/ivf", q, k=10, probe=4).select(
         F.lit("ivf").alias("method"), "vec_id", "rank"
     )
     return lsh.unionByName(ivf)

@@ -2,13 +2,15 @@
 """ANN serving-index job, launched via spark-submit:
 
     # once: materialize the serving indexes (vectors written partitioned by
-    # LSH bucket / IVF cluster, planes/centroids as side tables)
+    # cell — LSH bucket / IVF cluster — with the planes / centroids as a
+    # side table and params.json at <index>/<kind>)
     spark-submit --py-files dist/stl_decomp_4j_spark.zip jobs/ann_job.py \
         --build --input /path/to/embeddings.parquet --index /warehouse/ann \
         [--kind lsh|ivf|both] [--n-planes 8] [--n-clusters 16]
 
     # per crawl: append new vectors (stored planes/centroids assign them —
-    # no rebuild, no re-read of the existing corpus)
+    # no rebuild, no re-read of the existing corpus; every requested kind's
+    # params.json is checked before anything is appended)
     ... ann_job.py --extend --input /path/to/new_embeddings.parquet \
         --index /warehouse/ann [--kind lsh|ivf|both]
 
@@ -20,7 +22,7 @@
 Build is write-once; each query then reads ONLY its Hamming-ball probe
 buckets (LSH) or nprobe nearest cluster partitions (IVF) — partition
 pruning, no full-table re-hash/re-assign per lookup (see
-operators/similarity.py and the PLANS.md PartitionFilters checks).  The
+operators/similarity.py and the PartitionFilters plan test).  The
 query vector comes from --vec-id (looked up in --input) or --vector (a JSON
 float list).  Prints ONE JSON line; --output also writes the result rows of
 every queried method, with a ``method`` column (lsh / ivf).
@@ -56,48 +58,39 @@ def main() -> None:
     if (args.build or args.extend) and not args.input:
         ap.error("--build/--extend require --input")
 
+    from stl_decomp_4j_spark.operators.similarity import ann_index_topk, build_ann_index, extend_ann_index
+    from stl_decomp_4j_spark.plans.checkpoint import check_params
+
+    kinds = ["lsh", "ivf"] if args.kind == "both" else [args.kind]
+    paths = {kind: f"{args.index}/{kind}" for kind in kinds}
+    if not args.build:
+        # every requested index must exist before anything is appended or read
+        for kind in kinds:
+            try:
+                check_params(paths[kind], "ANN index")
+            except ValueError as e:
+                raise SystemExit(f"ann_job: --kind {kind}: {e}")
+
     import pyspark.sql.functions as F
     from pyspark.sql import SparkSession
 
-    from stl_decomp_4j_spark.operators.similarity import (
-        build_ivf_index,
-        build_lsh_index,
-        extend_ivf_index,
-        extend_lsh_index,
-        ivf_index_topk,
-        lsh_index_topk,
-    )
     from stl_decomp_4j_spark.plans.session import build_session
 
     pre_existing = SparkSession.getActiveSession()
     spark = pre_existing or build_session(app_name="stl-ann-index")
+    cols = {"id_col": args.id_col, "vec_col": args.vec_col}
 
     if args.build:
         emb = spark.read.parquet(args.input)
-        built = []
-        if args.kind in ("lsh", "both"):
-            build_lsh_index(
-                emb, args.index + "/lsh", n_planes=args.n_planes,
-                id_col=args.id_col, vec_col=args.vec_col,
-            )
-            built.append("lsh")
-        if args.kind in ("ivf", "both"):
-            build_ivf_index(
-                emb, args.index + "/ivf", n_clusters=args.n_clusters,
-                id_col=args.id_col, vec_col=args.vec_col,
-            )
-            built.append("ivf")
-        print(json.dumps({"index": args.index, "built": built}))
+        n_cells = {"lsh": args.n_planes, "ivf": args.n_clusters}
+        for kind in kinds:
+            build_ann_index(emb, paths[kind], kind, n_cells[kind], **cols)
+        print(json.dumps({"index": args.index, "built": kinds}))
     elif args.extend:
         emb = spark.read.parquet(args.input)
-        extended = []
-        if args.kind in ("lsh", "both"):
-            extend_lsh_index(emb, args.index + "/lsh", id_col=args.id_col, vec_col=args.vec_col)
-            extended.append("lsh")
-        if args.kind in ("ivf", "both"):
-            extend_ivf_index(emb, args.index + "/ivf", id_col=args.id_col, vec_col=args.vec_col)
-            extended.append("ivf")
-        print(json.dumps({"index": args.index, "extended": extended}))
+        for kind in kinds:
+            extend_ann_index(emb, paths[kind], **cols)
+        print(json.dumps({"index": args.index, "extended": kinds}))
     else:
         if args.vector is not None:
             q = [float(x) for x in json.loads(args.vector)]
@@ -113,16 +106,8 @@ def main() -> None:
             q = [float(x) for x in row[args.vec_col]]
         else:
             ap.error("--query requires --vector, or --vec-id with --input")
-        frames = {}
-        if args.kind in ("lsh", "both"):
-            frames["lsh"] = lsh_index_topk(
-                spark, args.index + "/lsh", q, k=args.k,
-                multiprobe_bits=args.multiprobe_bits,
-            )
-        if args.kind in ("ivf", "both"):
-            frames["ivf"] = ivf_index_topk(
-                spark, args.index + "/ivf", q, k=args.k, nprobe=args.nprobe
-            )
+        probe = {"lsh": args.multiprobe_bits, "ivf": args.nprobe}
+        frames = {kind: ann_index_topk(spark, paths[kind], q, k=args.k, probe=probe[kind]) for kind in kinds}
         results = {m: [r.asDict() for r in df.collect()] for m, df in frames.items()}
         if args.output:
             # one row set per method, told apart by the `method` column

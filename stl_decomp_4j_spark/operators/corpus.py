@@ -33,13 +33,11 @@ leaves nothing persisted.
 """
 from __future__ import annotations
 
-import json
-from pathlib import Path
-
 import pyspark.sql.functions as F
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 
+from ..plans.checkpoint import check_params, write_params
 from .components import connected_components
 from .dedup import (
     band_rows,
@@ -54,6 +52,7 @@ from .dedup import (
 # (recorded in the store's params.json; a store written with another
 # geometry is refused, its band hashes would silently match nothing)
 NUM_PERM, BANDS, ROWS_PER_BAND = 64, 32, 2
+_GEOMETRY = {"num_perm": NUM_PERM, "bands": BANDS, "rows_per_band": ROWS_PER_BAND}
 
 
 def _shingle_sets(docs: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
@@ -113,21 +112,6 @@ def _history_near_dups(sets_: DataFrame, store: str, max_bucket: int | None, thr
     )
 
 
-def _store_params(path: str, **want) -> dict:
-    """The store's recorded parameters, checked against the module's LSH
-    geometry and ``want``; raises ValueError on any mismatch."""
-    f = Path(path) / "params.json"
-    params = json.loads(f.read_text()) if f.exists() else {}
-    want = {"num_perm": NUM_PERM, "bands": BANDS, "rows_per_band": ROWS_PER_BAND, **want}
-    bad = sorted(k for k, v in want.items() if k not in params or params[k] != v)
-    if bad:
-        raise ValueError(
-            f"fingerprint store {path} was written with {params or 'no params.json'}; "
-            f"this call needs {want} (mismatch on {', '.join(bad)})"
-        )
-    return params
-
-
 def dedup_corpus(
     docs: DataFrame,
     text_col: str = "text",
@@ -172,7 +156,7 @@ def dedup_corpus(
     spark = docs.sparkSession
     in_cols = list(docs.columns)
     if store is not None:
-        _store_params(store, minhash_k=minhash_k, snapshot_key=snapshot_key)
+        check_params(store, "fingerprint store", **_GEOMETRY, minhash_k=minhash_k, snapshot_key=snapshot_key)
 
     def history(table: str) -> DataFrame:
         return spark.read.parquet(f"{store}/{table}")
@@ -294,7 +278,7 @@ def _write_store(docs: DataFrame, path: str, text_col: str, id_col: str, params:
             last.write.mode("overwrite").parquet(path + "/snapshots_stage")
             last = spark.read.parquet(path + "/snapshots_stage")
         last.write.mode("overwrite").parquet(path + "/snapshots")
-    (Path(path) / "params.json").write_text(json.dumps(params))
+    write_params(path, params)
 
 
 def build_fingerprint_store(
@@ -322,13 +306,7 @@ def build_fingerprint_store(
     new-batch candidate generation; shingles is touched only for candidate
     docs (semi-join pruned), so a quiet batch reads almost none of it.
     """
-    params = {
-        "minhash_k": minhash_k,
-        "num_perm": NUM_PERM,
-        "bands": BANDS,
-        "rows_per_band": ROWS_PER_BAND,
-        "snapshot_key": snapshot_key,
-    }
+    params = {"minhash_k": minhash_k, **_GEOMETRY, "snapshot_key": snapshot_key}
     _write_store(docs, path, text_col, id_col, params, "overwrite")
 
 
@@ -339,5 +317,5 @@ def extend_fingerprint_store(docs: DataFrame, path: str, text_col: str = "text",
     as a build would record them — and the last-snapshot table is merged.
     So build(A) then extend(B) leaves the same tables as build(A ∪ B), and
     the next batch's lag-1 seed matches a one-shot run.  Mirrors
-    similarity.extend_lsh_index."""
-    _write_store(docs, path, text_col, id_col, _store_params(path), "append")
+    similarity.extend_ann_index."""
+    _write_store(docs, path, text_col, id_col, check_params(path, "fingerprint store", **_GEOMETRY), "append")

@@ -3,20 +3,23 @@
 - brute-force cosine top-k: exact baseline; the query vector is closed over
   (broadcast with the serialized UDF), scores computed as one NumPy matmul
   per Arrow batch in a vectorized pandas UDF.
-- LSH-bucketed ANN: random-hyperplane signs bucket the vectors; candidates
-  exact-reranked.  The scale path: bucket filter replaces the full scan, with
-  multi-probe (search neighboring buckets by flipping bits) as the recall
-  knob.
+- ANN top-k: one partitioned path with a pluggable cell function.  ``kind``
+  picks the quantizer — "lsh" (random hyperplanes; cell = the sign bits) or
+  "ivf" (k-means centroids trained on a bounded sample; cell = the nearest
+  centroid).  Every ANN path runs the same steps: assign each vector its
+  cell, compute the query's probe cells driver-side (the Hamming ball of
+  radius ``probe`` for LSH, the ``probe`` nearest centroids for IVF), keep
+  the vectors in those cells, exact-cosine rerank.  ``ann_topk`` runs them
+  over a table in one batch pass.
+- persisted ANN index: ``build_ann_index`` writes the vectors once,
+  PARTITIONED BY cell, with the quantizer as a tiny side table and a
+  ``params.json`` (kind, n_cells, dim); ``ann_index_topk`` then answers each
+  query by reading only the probed partitions (partition pruning — no
+  full-table re-assign per lookup), with the same rows as ``ann_topk`` by
+  construction.  ``extend_ann_index`` appends a new batch via the STORED
+  quantizer (per-crawl maintenance — never re-reads or rebuilds the index).
 - embedding near-dup pairs: all pairs with cosine >= threshold, candidates
-  from the same hyperplane LSH, exact-verified.
-- persisted ANN index (round 5): build_lsh_index / build_ivf_index write the
-  vectors once, PARTITIONED BY bucket / cluster, with the plane matrix /
-  centroids as tiny side tables; lsh_index_topk / ivf_index_topk then answer
-  each query by reading only the probed partitions (partition pruning — no
-  full-table re-hash/re-assign per lookup).  The serving twin of the batch
-  ann_*_topk paths, same results by construction.  extend_lsh_index /
-  extend_ivf_index append new batches via the STORED planes / centroids
-  (per-crawl maintenance — never re-reads or rebuilds the existing index).
+  from the same hyperplane LSH cells, exact-verified.
 
 Scale shape: all vector math runs in Arrow-batched pandas UDFs (one
 float64 matmul / einsum per batch) — Catalyst higher-order-function lambdas
@@ -31,6 +34,12 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+
+from ..plans.checkpoint import check_params, write_params
+
+SEED = 7  # hyperplane RNG and k-means initialisation
+TRAIN_SAMPLE = 4096  # IVF k-means trains on the first rows in id order
+_DEFAULTS = {"lsh": (8, 1), "ivf": (16, 4)}  # kind -> (n_cells, probe)
 
 
 def _stack(series: pd.Series) -> np.ndarray:
@@ -136,64 +145,17 @@ def all_pairs_cosine(
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim))
+def _defaults(kind: str) -> tuple[int, int]:
+    if kind not in _DEFAULTS:
+        raise ValueError(f"kind must be one of {sorted(_DEFAULTS)}, got {kind!r}")
+    return _DEFAULTS[kind]
 
 
-def lsh_bucket_udf(planes: np.ndarray):
-    """Random-hyperplane signature as a vectorized pandas UDF: one
-    (batch x dim) @ (dim x planes) matmul per Arrow batch; bit p =
-    sign(dot(v, plane_p))."""
-    pt = np.ascontiguousarray(planes.T, dtype=np.float64)
-    pow2 = (1 << np.arange(planes.shape[0], dtype=np.uint64)).astype(np.uint64)
-
-    @F.pandas_udf("long")
-    def bucket(v: pd.Series) -> pd.Series:
-        mat = _stack(v)
-        signs = (mat @ pt) > 0
-        return pd.Series((signs.astype(np.uint64) @ pow2).astype(np.int64))
-
-    return bucket
+def _hyperplanes(dim: int, n_planes: int) -> np.ndarray:
+    return np.random.default_rng(SEED).standard_normal((n_planes, dim))
 
 
-def _query_signature(query: np.ndarray, planes: np.ndarray) -> int:
-    sig = 0
-    for p, plane in enumerate(planes):
-        if float(query @ plane) > 0:
-            sig |= 1 << p
-    return sig
-
-
-def ann_lsh_topk(
-    embeddings: DataFrame,
-    query: list[float],
-    k: int = 10,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    multiprobe_bits: int = 1,
-) -> DataFrame:
-    """Approximate top-k: score only vectors whose LSH bucket is within
-    ``multiprobe_bits`` bit-flips (Hamming distance) of the query's bucket."""
-    qv = np.asarray(query, dtype=np.float64)
-    planes = _hyperplanes(len(query), n_planes)
-    bucket = lsh_bucket_udf(planes)
-    qsig = _query_signature(qv, planes)
-    df = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        bucket(F.col(vec_col)).alias("bucket"),
-    )
-    cands = df.filter(
-        F.bit_count(F.col("bucket").bitwiseXOR(F.lit(qsig).cast("long"))) <= multiprobe_bits
-    )
-    cos = cosine_vs_query_udf(query)
-    scored = cands.select("vec_id", F.round(cos(F.col("v")), 6).alias("cos"))
-    return _ranked_topk(scored, k)
-
-
-def kmeans_centroids(mat: np.ndarray, k: int, iters: int = 10, seed: int = 7) -> np.ndarray:
+def kmeans_centroids(mat: np.ndarray, k: int, iters: int = 10, seed: int = SEED) -> np.ndarray:
     """Deterministic Lloyd k-means (NumPy, fixed seed/iterations) for the IVF
     coarse quantizer.  Runs on a bounded driver-side TRAINING SAMPLE only —
     the full table is never collected; assignment is distributed."""
@@ -210,58 +172,47 @@ def kmeans_centroids(mat: np.ndarray, k: int, iters: int = 10, seed: int = 7) ->
     return cent
 
 
-def ivf_assign_udf(centroids: np.ndarray):
-    """Vectorized pandas UDF: nearest-centroid id per vector (one matmul per
-    Arrow batch; argmin over ||v||^2 - 2 v.c + ||c||^2, the ||v||^2 term
-    dropped as assignment-invariant)."""
-    ct = np.ascontiguousarray(centroids.T, dtype=np.float64)
-    half_cc = 0.5 * np.einsum("ij,ij->i", centroids, centroids)
+def _quantizer(
+    embeddings: DataFrame, kind: str, n_cells: int | None, dim: int, id_col: str, vec_col: str
+) -> np.ndarray:
+    """The plane matrix (LSH) or the centroids (IVF), one row per plane /
+    cell; ``n_cells`` None takes the kind's default.  IVF trains on a
+    bounded driver-side sample; the full table is never collected."""
+    default_cells, _ = _defaults(kind)
+    n_cells = n_cells or default_cells
+    if kind == "lsh":
+        return _hyperplanes(dim, n_cells)
+    sample = embeddings.select(vec_col).orderBy(id_col).limit(TRAIN_SAMPLE).collect()
+    return kmeans_centroids(np.array([list(map(float, r[vec_col])) for r in sample]), n_cells)
 
-    @F.pandas_udf("int")
-    def assign(v: pd.Series) -> pd.Series:
-        mat = _stack(v)
-        return pd.Series((half_cc[None, :] - mat @ ct).argmin(axis=1).astype(np.int32))
 
-    return assign
+def _cell_udf(kind: str, mat: np.ndarray):
+    """Each vector's cell as a vectorized pandas UDF, one matmul per Arrow
+    batch.  LSH: bit p = sign(dot(v, plane_p)).  IVF: the nearest centroid,
+    argmin over ||c||^2/2 - v.c (||v||^2 dropped as assignment-invariant)."""
+    mt = np.ascontiguousarray(mat.T, dtype=np.float64)
+    if kind == "lsh":
+        pow2 = (1 << np.arange(mat.shape[0], dtype=np.uint64)).astype(np.uint64)
 
+        def cells(m: np.ndarray) -> np.ndarray:
+            return ((m @ mt) > 0).astype(np.uint64) @ pow2
 
-def ann_ivf_topk(
-    embeddings: DataFrame,
-    query: list[float],
-    k: int = 10,
-    n_clusters: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_train_sample: int = 4096,
-    centroids: np.ndarray | None = None,
-) -> DataFrame:
-    """IVF approximate top-k: a k-means coarse quantizer buckets the vectors;
-    only the ``nprobe`` clusters nearest to the query are scanned, then
-    exact-cosine reranked.  The 100-TB shape: centroids train on a bounded
-    sample and broadcast with the UDF; assignment, probe filtering and
-    rerank are fully distributed (no driver loop over data)."""
-    qv = np.asarray(query, dtype=np.float64)
-    if centroids is None:
-        sample = embeddings.select(vec_col).orderBy(id_col).limit(max_train_sample).collect()
-        mat = np.array([list(map(float, r[vec_col])) for r in sample])
-        centroids = kmeans_centroids(mat, n_clusters)
-    qd = ((centroids - qv[None, :]) ** 2).sum(1)
-    probes = [int(c) for c in np.argsort(qd)[:nprobe]]
-    assign = ivf_assign_udf(centroids)
-    cands = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        assign(F.col(vec_col)).alias("cluster"),
-    ).filter(F.col("cluster").isin(probes))
-    cos = cosine_vs_query_udf(query)
-    scored = cands.select("vec_id", F.round(cos(F.col("v")), 6).alias("cos"))
-    return _ranked_topk(scored, k)
+    else:
+        half_cc = 0.5 * np.einsum("ij,ij->i", mat, mat)
+
+        def cells(m: np.ndarray) -> np.ndarray:
+            return (half_cc[None, :] - m @ mt).argmin(axis=1)
+
+    @F.pandas_udf("long")
+    def cell(v: pd.Series) -> pd.Series:
+        return pd.Series(cells(_stack(v)).astype(np.int64))
+
+    return cell
 
 
 def _hamming_ball(center: int, n_bits: int, radius: int) -> list[int]:
     """All n_bits-wide signatures within Hamming distance <= radius of
-    ``center`` — the static probe set for an indexed LSH lookup.  Size is
+    ``center`` — the static probe set for an LSH lookup.  Size is
     sum_{i<=radius} C(n_bits, i) (37 for 8 planes / radius 2), enumerated
     driver-side; a radius large enough to blow this up is past the point
     where LSH pruning helps at all."""
@@ -277,171 +228,132 @@ def _hamming_ball(center: int, n_bits: int, radius: int) -> list[int]:
     return sorted(out)
 
 
-def build_lsh_index(
+def _probes(kind: str, mat: np.ndarray, q: np.ndarray, probe: int) -> list[int]:
+    """The query's probe cells: its signature's Hamming ball of radius
+    ``probe`` (LSH) or its ``probe`` nearest centroids (IVF)."""
+    if kind == "lsh":
+        sig = sum(1 << p for p, plane in enumerate(mat) if float(q @ plane) > 0)
+        return _hamming_ball(sig, len(mat), probe)
+    return [int(c) for c in np.argsort(((mat - q) ** 2).sum(1))[:probe]]
+
+
+def _assign(embeddings: DataFrame, kind: str, mat: np.ndarray, id_col: str, vec_col: str) -> DataFrame:
+    """(vec_id, v, cell): every vector with its cell under ``mat``."""
+    return embeddings.select(
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).alias("v"),
+        _cell_udf(kind, mat)(F.col(vec_col)).alias("cell"),
+    )
+
+
+def _probe_topk(cells: DataFrame, kind: str, mat: np.ndarray, query: list[float], k: int, probe: int) -> DataFrame:
+    """Exact-cosine top-k over the (vec_id, v, cell) rows in the query's
+    probe cells — a static IN list on ``cell``, so against the index it
+    prunes partitions and scoring runs on the candidates alone."""
+    probes = _probes(kind, mat, np.asarray(query, dtype=np.float64), probe)
+    cos = cosine_vs_query_udf(query)
+    scored = cells.filter(F.col("cell").isin(probes)).select("vec_id", F.round(cos(F.col("v")), 6).alias("cos"))
+    return _ranked_topk(scored, k)
+
+
+def ann_topk(
+    embeddings: DataFrame,
+    query: list[float],
+    kind: str,
+    k: int = 10,
+    n_cells: int | None = None,
+    probe: int | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Approximate top-k in one batch pass: quantize (``n_cells`` hyperplanes
+    for "lsh", ``n_cells`` k-means centroids for "ivf"), assign every vector
+    its cell, score only the query's probe cells exactly.  ``probe`` is the
+    recall knob: Hamming radius (LSH, default 1) or number of nearest
+    clusters (IVF, default 4); ``n_cells`` defaults to 8 planes / 16
+    clusters.  Output: (vec_id, cos, rank)."""
+    mat = _quantizer(embeddings, kind, n_cells, len(query), id_col, vec_col)
+    cells = _assign(embeddings, kind, mat, id_col, vec_col)
+    return _probe_topk(cells, kind, mat, query, k, _defaults(kind)[1] if probe is None else probe)
+
+
+def _write_vectors(embeddings: DataFrame, path: str, kind: str, mat: np.ndarray, id_col: str, vec_col: str, mode: str) -> None:
+    _assign(embeddings, kind, mat, id_col, vec_col).write.mode(mode).partitionBy("cell").parquet(path + "/vectors")
+
+
+def _open_index(spark, path: str) -> tuple[dict, np.ndarray]:
+    """The index's checked params and its quantizer matrix."""
+    params = check_params(path, "ANN index")
+    rows = spark.read.parquet(path + "/quantizer").orderBy("i").collect()
+    return params, np.array([r["row"] for r in rows], dtype=np.float64)
+
+
+def build_ann_index(
     embeddings: DataFrame,
     path: str,
-    n_planes: int = 8,
-    seed: int = 7,
+    kind: str,
+    n_cells: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Materialize a serving LSH index: the vectors written ONCE to parquet
-    PARTITIONED BY their hyperplane bucket, plus the plane matrix as a tiny
-    side table.  This is the 100-TB serving shape: `ann_lsh_topk` re-hashes
-    the whole table on every query (fine for one batch pass, wrong for
-    repeated lookups); a query against this index enumerates its Hamming-ball
-    probe buckets driver-side and reads ONLY those partitions — partition
-    pruning, no full scan, no per-query UDF pass over the table.  Same move
-    as the Gorilla chunk store's metadata-pruned range read."""
-    sample = embeddings.limit(1).collect()
-    dim = len(sample[0][vec_col]) if sample else 0
-    planes = _hyperplanes(dim, n_planes, seed)
-    bucket = lsh_bucket_udf(planes)
-    spark = embeddings.sparkSession
-    (
-        embeddings.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("v"),
-            bucket(F.col(vec_col)).alias("bucket"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path + "/vectors")
-    )
-    rows = [(p, [float(x) for x in planes[p]]) for p in range(n_planes)]
-    spark.createDataFrame(rows, "p int, plane array<double>").coalesce(1).write.mode(
+    """Materialize a serving ANN index at ``path``:
+
+    - ``vectors/``    (vec_id, v) PARTITIONED BY cell, written once
+    - ``quantizer/``  (i, row: array<double>) planes or centroids
+    - ``params.json`` kind, n_cells, dim — checked by every extend / lookup
+
+    ``ann_topk`` re-assigns the whole table on every query (fine for one
+    batch pass, wrong for repeated lookups); a lookup against this index
+    reads ONLY its probe-cell partitions — partition pruning, no full scan,
+    no per-query UDF pass over the table.  Same move as the Gorilla chunk
+    store's metadata-pruned range read.  Raises ValueError on an empty
+    input, before anything is written."""
+    first = embeddings.select(vec_col).first()
+    if first is None:
+        raise ValueError(f"build_ann_index: empty input, nothing to index at {path}")
+    dim = len(first[vec_col])
+    mat = _quantizer(embeddings, kind, n_cells, dim, id_col, vec_col)
+    _write_vectors(embeddings, path, kind, mat, id_col, vec_col, "overwrite")
+    rows = [(i, [float(x) for x in r]) for i, r in enumerate(mat)]
+    embeddings.sparkSession.createDataFrame(rows, "i int, row array<double>").coalesce(1).write.mode(
         "overwrite"
-    ).parquet(path + "/planes")
+    ).parquet(path + "/quantizer")
+    write_params(path, {"kind": kind, "n_cells": len(mat), "dim": dim})
 
 
-def extend_lsh_index(
+def extend_ann_index(
     new_embeddings: DataFrame,
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Append a new batch to a `build_lsh_index` store WITHOUT rebuilding:
-    the stored plane matrix (tiny side table) hashes the new vectors, which
-    append to their bucket partitions.  At 100 TB an index is written once
-    and extended per crawl — rebuilding would re-read the full corpus for
-    every batch.  Bucketing stays identical to a from-scratch build because
-    the planes are fixed at build time."""
-    spark = new_embeddings.sparkSession
-    prows = spark.read.parquet(path + "/planes").orderBy("p").collect()
-    planes = np.array([r["plane"] for r in prows], dtype=np.float64)
-    bucket = lsh_bucket_udf(planes)
-    (
-        new_embeddings.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("v"),
-            bucket(F.col(vec_col)).alias("bucket"),
-        )
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(path + "/vectors")
-    )
+    """Append a new batch to a ``build_ann_index`` store WITHOUT rebuilding:
+    the STORED quantizer assigns the new vectors, which append to their cell
+    partitions.  The cells stay those of a from-scratch build with the same
+    quantizer (planes / centroids are fixed at build time — the standard
+    IVF maintenance contract).  Raises ValueError, before anything is
+    written, if the store has no params.json or a new vector's length is
+    not the index's dim."""
+    params, mat = _open_index(new_embeddings.sparkSession, path)
+    bad = new_embeddings.filter(F.size(vec_col) != params["dim"]).select(F.size(vec_col)).first()
+    if bad is not None:
+        raise ValueError(f"ANN index {path} holds dim-{params['dim']} vectors; a new vector has length {bad[0]}")
+    _write_vectors(new_embeddings, path, params["kind"], mat, id_col, vec_col, "append")
 
 
-def extend_ivf_index(
-    new_embeddings: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Append a new batch to a `build_ivf_index` store: the STORED centroids
-    assign the new vectors (no re-training — cluster geometry is fixed at
-    build time, the standard IVF maintenance contract), which append to
-    their cluster partitions."""
-    spark = new_embeddings.sparkSession
-    crows = spark.read.parquet(path + "/centroids").orderBy("cluster").collect()
-    centroids = np.array([r["centroid"] for r in crows], dtype=np.float64)
-    assign = ivf_assign_udf(centroids)
-    (
-        new_embeddings.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("v"),
-            assign(F.col(vec_col)).alias("cluster"),
-        )
-        .write.mode("append")
-        .partitionBy("cluster")
-        .parquet(path + "/vectors")
-    )
-
-
-def lsh_index_topk(
-    spark, path: str, query: list[float], k: int = 10, multiprobe_bits: int = 1
-) -> DataFrame:
-    """Approximate top-k against a `build_lsh_index` store.  The query's
-    bucket and its <=multiprobe_bits Hamming neighbors become a static IN
-    list on the partition column, so the scan touches only the probed bucket
-    directories (PartitionFilters — verified in PLANS.md); scoring runs on
-    the candidates alone.  Results are identical to `ann_lsh_topk` with the
-    same planes/seed."""
-    prows = spark.read.parquet(path + "/planes").orderBy("p").collect()
-    planes = np.array([r["plane"] for r in prows], dtype=np.float64)
-    qv = np.asarray(query, dtype=np.float64)
-    qsig = _query_signature(qv, planes)
-    probes = _hamming_ball(qsig, len(prows), multiprobe_bits)
-    cands = spark.read.parquet(path + "/vectors").filter(F.col("bucket").isin(probes))
-    cos = cosine_vs_query_udf(query)
-    scored = cands.select("vec_id", F.round(cos(F.col("v")), 6).alias("cos"))
-    return _ranked_topk(scored, k)
-
-
-def build_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    n_clusters: int = 16,
-    max_train_sample: int = 4096,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: np.ndarray | None = None,
-) -> None:
-    """Materialize a serving IVF index: centroids trained once on a bounded
-    sample, every vector assigned once and written PARTITIONED BY cluster,
-    centroids stored beside the vectors.  A query then reads only its nprobe
-    nearest clusters (partition pruning) instead of re-training + re-assigning
-    the whole table per lookup, which is what `ann_ivf_topk` does."""
-    if centroids is None:
-        sample = (
-            embeddings.select(vec_col).orderBy(id_col).limit(max_train_sample).collect()
-        )
-        mat = np.array([list(map(float, r[vec_col])) for r in sample])
-        centroids = kmeans_centroids(mat, n_clusters)
-    assign = ivf_assign_udf(centroids)
-    spark = embeddings.sparkSession
-    (
-        embeddings.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("v"),
-            assign(F.col(vec_col)).alias("cluster"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(path + "/vectors")
-    )
-    rows = [(int(c), [float(x) for x in centroids[c]]) for c in range(len(centroids))]
-    spark.createDataFrame(rows, "cluster int, centroid array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(path + "/centroids")
-
-
-def ivf_index_topk(
-    spark, path: str, query: list[float], k: int = 10, nprobe: int = 4
-) -> DataFrame:
-    """Approximate top-k against a `build_ivf_index` store: rank the stored
-    centroids driver-side (n_clusters rows — bounded metadata), read only the
-    nprobe nearest cluster partitions, exact-cosine rerank.  Identical
-    results to `ann_ivf_topk` with the same centroids."""
-    crows = spark.read.parquet(path + "/centroids").orderBy("cluster").collect()
-    centroids = np.array([r["centroid"] for r in crows], dtype=np.float64)
-    qv = np.asarray(query, dtype=np.float64)
-    qd = ((centroids - qv[None, :]) ** 2).sum(1)
-    probes = [int(crows[i]["cluster"]) for i in np.argsort(qd)[:nprobe]]
-    cands = spark.read.parquet(path + "/vectors").filter(F.col("cluster").isin(probes))
-    cos = cosine_vs_query_udf(query)
-    scored = cands.select("vec_id", F.round(cos(F.col("v")), 6).alias("cos"))
-    return _ranked_topk(scored, k)
+def ann_index_topk(spark, path: str, query: list[float], k: int = 10, probe: int | None = None) -> DataFrame:
+    """Approximate top-k against a ``build_ann_index`` store.  The query's
+    probe cells (driver-side, from the stored quantizer) become a static IN
+    list on the partition column, so the scan touches only those cell
+    directories (PartitionFilters — pinned in the plan tests); scoring runs
+    on the candidates alone.  Results are identical to ``ann_topk`` with
+    the same quantizer."""
+    params, mat = _open_index(spark, path)
+    if len(query) != params["dim"]:
+        raise ValueError(f"ANN index {path} holds dim-{params['dim']} vectors; the query has length {len(query)}")
+    kind = params["kind"]
+    vectors = spark.read.parquet(path + "/vectors")
+    return _probe_topk(vectors, kind, mat, query, k, _defaults(kind)[1] if probe is None else probe)
 
 
 def embedding_near_dup_pairs(
@@ -461,20 +373,14 @@ def embedding_near_dup_pairs(
     shuffle-bounded equi-join, not an all-pairs filter."""
     sample = embeddings.limit(1).collect()
     dim = len(sample[0][vec_col]) if sample else 0
-    planes = _hyperplanes(dim, n_planes)
-    bucket = lsh_bucket_udf(planes)
-    base = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        bucket(F.col(vec_col)).alias("bucket"),
-    )
+    base = _assign(embeddings, "lsh", _hyperplanes(dim, n_planes), id_col, vec_col)
     probed = base.select(
         "vec_id",
         F.explode(
-            F.array(F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << p).cast("long")) for p in range(n_planes)])
+            F.array(F.col("cell"), *[F.col("cell").bitwiseXOR(F.lit(1 << p).cast("long")) for p in range(n_planes)])
         ).alias("probe"),
     )
-    anchored = base.select("vec_id", F.col("bucket").alias("probe"))
+    anchored = base.select("vec_id", F.col("cell").alias("probe"))
     cands = (
         probed.alias("a")
         .join(anchored.alias("b"), "probe")

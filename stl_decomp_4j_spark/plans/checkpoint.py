@@ -6,11 +6,15 @@ wall seconds); a resumed run plans only buckets without a 'done' row and
 rewrites their output partitions idempotently (dynamic partition overwrite /
 Iceberg overwritePartitions).  Lineage: every output row carries run_id and
 bucket.
+
+The persisted stores that are not bucket-sliced (the dedup fingerprint store,
+the ANN index) describe themselves with a ``params.json`` at their root:
+``write_params`` records it at build, ``check_params`` validates it on every
+later read or extend.
 """
 from __future__ import annotations
 
 import json
-import os
 import time
 import uuid
 from pathlib import Path
@@ -61,6 +65,26 @@ class Manifest:
                 if row["status"] == "done":
                     rows[row["bucket"]] = row
         return rows
+
+
+def write_params(path: str, params: dict) -> None:
+    """Record a store's parameters as ``<path>/params.json``."""
+    (Path(path) / "params.json").write_text(json.dumps(params))
+
+
+def check_params(path: str, label: str, **want) -> dict:
+    """The recorded parameters of the ``label`` store at ``path``; raises
+    ValueError if it has no params.json or any ``want`` value differs."""
+    f = Path(path) / "params.json"
+    if not f.exists():
+        raise ValueError(f"{label} {path} has no params.json")
+    params = json.loads(f.read_text())
+    bad = sorted(k for k, v in want.items() if k not in params or params[k] != v)
+    if bad:
+        raise ValueError(
+            f"{label} {path} was written with {params}; this call needs {want} (mismatch on {', '.join(bad)})"
+        )
+    return params
 
 
 def new_run_id() -> str:

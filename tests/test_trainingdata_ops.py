@@ -15,9 +15,12 @@ from stl_decomp_4j_spark.operators.dedup import (
 )
 from stl_decomp_4j_spark.operators.multimodal import attach_media, extract_features, frame_sample
 from stl_decomp_4j_spark.operators.similarity import (
-    ann_lsh_topk,
+    ann_index_topk,
+    ann_topk,
     brute_force_topk,
+    build_ann_index,
     embedding_near_dup_pairs,
+    extend_ann_index,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -134,7 +137,7 @@ def test_ann_lsh_recall(spark, embeddings):
     mat = np.stack(pdf["embedding"].to_numpy()).astype(float)
     q = mat[1]
     exact = brute_force_topk(embeddings, list(map(float, q)), k=10).toPandas()
-    approx = ann_lsh_topk(embeddings, list(map(float, q)), k=10, multiprobe_bits=2).toPandas()
+    approx = ann_topk(embeddings, list(map(float, q)), "lsh", k=10, probe=2).toPandas()
     # random 64-d embeddings have only weakly-similar "neighbors" (cos ~0.4),
     # where hyperplane-LSH collision probability is structurally low — recall
     # is a knob (planes/probes); correctness properties: some overlap, the
@@ -148,77 +151,110 @@ def test_ann_lsh_recall(spark, embeddings):
         assert abs(truth[r.vec_id] - r.cos) < 1e-9
 
 
-def test_indexed_ann_matches_batch_paths(spark, embeddings, tmp_path):
-    """The persisted-index query paths must return exactly the batch paths'
-    results (same planes/centroids by construction), and the indexed scans
-    must touch only the probed partitions (partition pruning on the bucket /
-    cluster directory column, not a full scan + filter)."""
-    from stl_decomp_4j_spark.operators.similarity import (
-        ann_ivf_topk,
-        ann_lsh_topk,
-        build_ivf_index,
-        build_lsh_index,
-        ivf_index_topk,
-        lsh_index_topk,
-    )
+# probe per kind in the index tests: Hamming radius 2 (LSH), 3 nearest of 8
+# clusters (IVF)
+PROBE = {"lsh": 2, "ivf": 3}
 
+
+@pytest.fixture(scope="module")
+def ann_index(embeddings, tmp_path_factory):
+    """kind -> path of an 8-cell index over the sf0.001 embeddings."""
+    root = tmp_path_factory.mktemp("ann_index")
+    paths = {kind: str(root / kind) for kind in PROBE}
+    for kind, path in paths.items():
+        build_ann_index(embeddings, path, kind, n_cells=8)
+    return paths
+
+
+def _plan(df) -> str:
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf"])
+def test_indexed_ann_matches_batch_paths(spark, embeddings, ann_index, kind):
+    """The persisted-index query path must return exactly the batch path's
+    results (same planes/centroids by construction), and the indexed scan
+    must touch only the probed partitions (partition pruning on the cell
+    directory column, not a full scan + filter)."""
     q = [float(x) for x in embeddings.first()["embedding"]]
-
-    lsh_dir = str(tmp_path / "lsh")
-    build_lsh_index(embeddings, lsh_dir, n_planes=8)
-    got = lsh_index_topk(spark, lsh_dir, q, k=5, multiprobe_bits=2)
-    want = ann_lsh_topk(embeddings, q, k=5, multiprobe_bits=2)
+    got = ann_index_topk(spark, ann_index[kind], q, k=5, probe=PROBE[kind])
+    want = ann_topk(embeddings, q, kind, k=5, n_cells=8, probe=PROBE[kind])
     assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
     plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [bucket" in plan  # pruned scan, not full read
-
-    ivf_dir = str(tmp_path / "ivf")
-    build_ivf_index(embeddings, ivf_dir, n_clusters=8)
-    got = ivf_index_topk(spark, ivf_dir, q, k=5, nprobe=3)
-    want = ann_ivf_topk(embeddings, q, k=5, n_clusters=8, nprobe=3)
-    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [cluster" in plan
+    assert "PartitionFilters: [cell" in plan  # pruned scan, not full read
 
 
-def test_extend_index_equals_full_build(spark, embeddings, tmp_path):
-    """Appending a batch to an existing index must give the same lookups as
-    building from the union: LSH planes are seed-deterministic, IVF extends
-    with the STORED centroids (compared against a union build seeded with
-    those same centroids)."""
-    from stl_decomp_4j_spark.operators.similarity import (
-        build_ivf_index,
-        build_lsh_index,
-        extend_ivf_index,
-        extend_lsh_index,
-        ivf_index_topk,
-        lsh_index_topk,
-    )
+@pytest.mark.parametrize("kind", ["lsh", "ivf"])
+def test_ann_index_plan(spark, embeddings, ann_index, kind):
+    """Indexed lookup plan: the scan prunes to the probe-cell partitions
+    (PartitionFilters on the partition column) and exactly one Arrow pass
+    scores the candidates — no full-table re-hash / re-assign."""
+    q = [float(x) for x in embeddings.filter(F.col("vec_id") == 0).first()["embedding"]]
+    plan = _plan(ann_index_topk(spark, ann_index[kind], q, k=10))
+    assert "PartitionFilters" in plan
+    assert "cell" in plan.split("PartitionFilters", 1)[1][:200]
+    # node headers (") ArrowEvalPython"), not tree lines
+    assert plan.count(") ArrowEvalPython") == 1
 
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf"])
+def test_extend_index_equals_full_build(spark, embeddings, tmp_path, kind):
+    """Appending a batch assigns it with the STORED quantizer: every stored
+    (vec_id, cell) is the NumPy cell of that vector under the stored planes
+    (sign bits) / centroids (nearest), and the index holds exactly the union
+    of both halves.  LSH planes are seed-deterministic, so there the lookups
+    also equal those of a build from the union."""
     half1 = embeddings.filter(F.col("vec_id") % 2 == 0)
     half2 = embeddings.filter(F.col("vec_id") % 2 == 1)
-    q = [float(x) for x in embeddings.first()["embedding"]]
+    inc = str(tmp_path / "inc")
+    build_ann_index(half1, inc, kind, n_cells=8)
+    extend_ann_index(half2, inc)
 
-    inc = str(tmp_path / "lsh_inc")
-    full = str(tmp_path / "lsh_full")
-    build_lsh_index(half1, inc)
-    extend_lsh_index(half2, inc)
-    build_lsh_index(embeddings, full)
-    got = [tuple(r) for r in lsh_index_topk(spark, inc, q, k=5, multiprobe_bits=2).collect()]
-    want = [tuple(r) for r in lsh_index_topk(spark, full, q, k=5, multiprobe_bits=2).collect()]
-    assert got == want
+    mat = np.array([r["row"] for r in spark.read.parquet(inc + "/quantizer").orderBy("i").collect()])
+    stored = spark.read.parquet(inc + "/vectors").select("vec_id", "cell").collect()
+    vecs = {r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64) for r in embeddings.collect()}
+    assert sorted(r["vec_id"] for r in stored) == sorted(vecs)
+    for r in stored:
+        v = vecs[r["vec_id"]]
+        if kind == "lsh":
+            want = sum(1 << p for p, plane in enumerate(mat) if v @ plane > 0)
+        else:
+            want = int(np.argmin(((mat - v) ** 2).sum(1)))
+        assert r["cell"] == want, r
 
-    inc = str(tmp_path / "ivf_inc")
-    full = str(tmp_path / "ivf_full")
-    build_ivf_index(half1, inc, n_clusters=8)
-    extend_ivf_index(half2, inc)
-    cent = np.array(
-        [r["centroid"] for r in spark.read.parquet(inc + "/centroids").orderBy("cluster").collect()]
-    )
-    build_ivf_index(embeddings, full, n_clusters=8, centroids=cent)
-    got = [tuple(r) for r in ivf_index_topk(spark, inc, q, k=5, nprobe=3).collect()]
-    want = [tuple(r) for r in ivf_index_topk(spark, full, q, k=5, nprobe=3).collect()]
-    assert got == want
+    if kind == "lsh":
+        full = str(tmp_path / "full")
+        build_ann_index(embeddings, full, kind, n_cells=8)
+        q = [float(x) for x in embeddings.first()["embedding"]]
+        got = [tuple(r) for r in ann_index_topk(spark, inc, q, k=5, probe=2).collect()]
+        want = [tuple(r) for r in ann_index_topk(spark, full, q, k=5, probe=2).collect()]
+        assert got == want
+
+
+def test_ann_index_refuses_mismatched_dim(spark, embeddings, tmp_path):
+    """The index records its dim: extending a dim-64 index with dim-32
+    vectors, or querying it with a dim-32 vector, raises before anything is
+    written or read; so does a path without params.json."""
+    path = str(tmp_path / "idx")
+    build_ann_index(embeddings, path, "lsh")
+    rows = spark.read.parquet(path + "/vectors").count()
+    short = embeddings.select("vec_id", F.slice("embedding", 1, 32).alias("embedding"))
+    with pytest.raises(ValueError, match="dim-64"):
+        extend_ann_index(short, path)
+    assert spark.read.parquet(path + "/vectors").count() == rows
+    with pytest.raises(ValueError, match="dim-64"):
+        ann_index_topk(spark, path, [1.0] * 32)
+    with pytest.raises(ValueError, match="no params.json"):
+        extend_ann_index(embeddings, str(tmp_path / "missing"))
+    with pytest.raises(ValueError, match="empty input"):
+        build_ann_index(embeddings.limit(0), str(tmp_path / "empty"), "ivf")
+    assert not (tmp_path / "empty").exists()
 
 
 def test_ann_job_build_and_query(spark, embeddings, tmp_path, monkeypatch, capsys):
@@ -228,7 +264,6 @@ def test_ann_job_build_and_query(spark, embeddings, tmp_path, monkeypatch, capsy
     import json as _json
 
     import jobs.ann_job as aj
-    from stl_decomp_4j_spark.operators.similarity import ivf_index_topk, lsh_index_topk
 
     emb_path = str(tmp_path / "emb")
     embeddings.write.parquet(emb_path)
@@ -247,8 +282,8 @@ def test_ann_job_build_and_query(spark, embeddings, tmp_path, monkeypatch, capsy
     out = run(["--query", "--index", idx, "--vec-id", "1", "--input", emb_path, "--k", "5",
                "--output", res_path])
     q = [float(x) for x in embeddings.filter(F.col("vec_id") == 1).first()["embedding"]]
-    want_lsh = [r.asDict() for r in lsh_index_topk(spark, idx + "/lsh", q, k=5).collect()]
-    want_ivf = [r.asDict() for r in ivf_index_topk(spark, idx + "/ivf", q, k=5).collect()]
+    want_lsh = [r.asDict() for r in ann_index_topk(spark, idx + "/lsh", q, k=5).collect()]
+    want_ivf = [r.asDict() for r in ann_index_topk(spark, idx + "/ivf", q, k=5).collect()]
     assert out["results"]["lsh"] == want_lsh
     assert out["results"]["ivf"] == want_ivf
 
@@ -257,6 +292,26 @@ def test_ann_job_build_and_query(spark, embeddings, tmp_path, monkeypatch, capsy
     for method, want in (("lsh", want_lsh), ("ivf", want_ivf)):
         rows = [r.asDict() for r in written.filter(F.col("method") == method).drop("method").collect()]
         assert sorted(rows, key=lambda r: r["rank"]) == sorted(want, key=lambda r: r["rank"])
+
+
+def test_ann_job_extend_checks_every_kind_first(spark, embeddings, tmp_path, monkeypatch):
+    """--extend --kind both against an index root holding only lsh/ stops
+    with an error naming the missing kind, before any vector is appended."""
+    import jobs.ann_job as aj
+
+    emb_path = str(tmp_path / "emb")
+    embeddings.write.parquet(emb_path)
+    idx = str(tmp_path / "idx")
+    monkeypatch.setattr("sys.argv", ["ann_job.py", "--build", "--kind", "lsh", "--input", emb_path, "--index", idx])
+    aj.main()
+    rows = spark.read.parquet(idx + "/lsh/vectors").count()
+
+    monkeypatch.setattr("sys.argv", ["ann_job.py", "--extend", "--kind", "both", "--input", emb_path, "--index", idx])
+    with pytest.raises(SystemExit) as exc:
+        aj.main()
+    assert exc.value.code not in (0, None)
+    assert "ivf" in str(exc.value.code)
+    assert spark.read.parquet(idx + "/lsh/vectors").count() == rows
 
 
 def test_embedding_near_dup_pairs(spark, embeddings):
@@ -309,13 +364,11 @@ def test_multimodal_resize_and_frame_sample(spark, docs):
 
 
 def test_ann_ivf_recall_and_exact_scores(spark, embeddings):
-    from stl_decomp_4j_spark.operators.similarity import ann_ivf_topk
-
     pdf = embeddings.toPandas()
     mat = np.stack(pdf["embedding"].to_numpy()).astype(float)
     q = mat[1]
     exact = brute_force_topk(embeddings, list(map(float, q)), k=10).toPandas()
-    approx = ann_ivf_topk(embeddings, list(map(float, q)), k=10, n_clusters=16, nprobe=4).toPandas()
+    approx = ann_topk(embeddings, list(map(float, q)), "ivf", k=10, n_cells=16, probe=4).toPandas()
     # nprobe=4 of 16 clusters scans ~1/4 of the data; with weakly-clustered
     # random embeddings recall is a knob, but the query's own nearest
     # neighborhood concentrates in the probed clusters

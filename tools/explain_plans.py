@@ -68,26 +68,6 @@ def main():
         brute_force_topk(emb, q, k=10)
     )
 
-    # round-5: persisted ANN serving indexes — the query path must prune to
-    # the probed bucket/cluster PARTITIONS (PartitionFilters on the partition
-    # column, scan reads only those directories); scoring runs on candidates
-    # alone, never a full-table re-hash/re-assign pass
-    from stl_decomp_4j_spark.operators.similarity import (
-        build_ivf_index,
-        build_lsh_index,
-        ivf_index_topk,
-        lsh_index_topk,
-    )
-
-    build_lsh_index(emb, "/tmp/explain_lsh_idx")
-    sections["LSH-indexed ANN read (partition-pruned probe buckets)"] = plan_of(
-        lsh_index_topk(spark, "/tmp/explain_lsh_idx", q, k=10)
-    )
-    build_ivf_index(emb, "/tmp/explain_ivf_idx", n_clusters=4)
-    sections["IVF-indexed ANN read (partition-pruned nprobe clusters)"] = plan_of(
-        ivf_index_topk(spark, "/tmp/explain_ivf_idx", q, k=10, nprobe=2)
-    )
-
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     sections["minhash LSH dedup (lambda-free shingling, int64 verify)"] = plan_of(
         dedup_minhash_lsh(docs, threshold=0.6)
@@ -388,26 +368,6 @@ def main():
     checks.append(
         ("ann plan has no interpreted cast lambda feeding the UDF",
          "lambdafunction" not in t_plan.lower())
-    )
-    li_plan = sections["LSH-indexed ANN read (partition-pruned probe buckets)"]
-    checks.append(
-        ("LSH index read prunes to probe-bucket partitions (PartitionFilters)",
-         "PartitionFilters" in li_plan and "bucket" in li_plan.split("PartitionFilters", 1)[1][:200])
-    )
-    checks.append(
-        # node headers (") ArrowEvalPython"), not tree lines — exactly one
-        # Arrow pass, running AFTER the pruned scan
-        ("LSH index read scores candidates via Arrow (no full-table re-hash)",
-         li_plan.count(") ArrowEvalPython") == 1)
-    )
-    ii_plan = sections["IVF-indexed ANN read (partition-pruned nprobe clusters)"]
-    checks.append(
-        ("IVF index read prunes to nprobe cluster partitions (PartitionFilters)",
-         "PartitionFilters" in ii_plan and "cluster" in ii_plan.split("PartitionFilters", 1)[1][:200])
-    )
-    checks.append(
-        ("IVF index read scores candidates via Arrow (no full-table re-assign)",
-         ii_plan.count(") ArrowEvalPython") == 1)
     )
     c_plan = sections["gorilla chunk store: metadata-pruned range read"]
     checks.append(

@@ -3,7 +3,7 @@
 
 The centroids are DERIVED TRAINING PARAMETERS (deterministic NumPy k-means,
 fixed seed, trained on the vec_id-ordered sample — exactly what
-ann_ivf_topk trains at query time), shared with the oracle as config; the
+ann_topk(kind="ivf") trains at query time), shared with the oracle as config; the
 oracle then independently recomputes assignment (arg_min over centroid
 distances), probe selection, exact cosines, and the top-k in DuckDB SQL.
 The training itself is cross-checked by the recall test against brute force.
