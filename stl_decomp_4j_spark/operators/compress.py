@@ -94,6 +94,20 @@ def _encode_block(
     return pd.DataFrame(out)
 
 
+def last_run_start(*keys: np.ndarray) -> int:
+    """Start of the last run of equal key tuples in a non-empty batch.
+
+    The streaming map stages (compress_tier, compact_chunks, the STL kernel)
+    read key-sorted partitions whose batches arrive in order, so only a
+    batch's LAST run may continue into the next batch: rows [start:] are
+    held back and prepended to the next one."""
+    differs = np.zeros(len(keys[0]), dtype=bool)
+    for k in keys:
+        differs |= k != k[-1]
+    idx = np.flatnonzero(differs)
+    return int(idx[-1]) + 1 if len(idx) else 0
+
+
 def compress_tier(
     tier: DataFrame,
     columns: list[str] | None = None,
@@ -121,8 +135,9 @@ def compress_tier(
     slabs so retention can drop whole expired slabs without touching any
     chunk's bytes (see _encode_block)."""
     columns = columns or [c for c in tier.columns if c not in ("url", "ts")]
-    spark = tier.sparkSession
-    partitions = partitions or spark.sparkContext.defaultParallelism * 4
+    # one task per core: encoding is ~0.25 ms per series, so a Python task's
+    # fixed start-up cost (CLAUDE.md) dominates any finer split
+    partitions = partitions or tier.sparkSession.sparkContext.defaultParallelism
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pending: pd.DataFrame | None = None
@@ -131,12 +146,7 @@ def compress_tier(
                 pdf = pd.concat([pending, pdf], ignore_index=True)
             if not len(pdf):
                 continue
-            urls = pdf["url"].to_numpy()
-            # rows are (url, ts)-sorted within the partition and batches
-            # arrive in order, so only the LAST url run may continue into
-            # the next batch — hold it back (equal urls are contiguous, so
-            # the run length is just the count of the last url)
-            cut = len(urls) - int((urls == urls[-1]).sum())
+            cut = last_run_start(pdf["url"].to_numpy())
             pending = pdf.iloc[cut:]
             ready = pdf.iloc[:cut]
             if len(ready):
@@ -244,8 +254,8 @@ def compact_chunks(
     import pyspark.sql.functions as F
 
     carry_cols = list(carry_cols or [])
-    spark = chunks.sparkSession
-    partitions = partitions or spark.sparkContext.defaultParallelism * 4
+    # one task per core, like compress_tier
+    partitions = partitions or chunks.sparkSession.sparkContext.defaultParallelism
     out_cols = [f.name for f in CHUNK_SCHEMA.fields] + carry_cols
 
     keys = ["url", "column"]
@@ -280,11 +290,7 @@ def compact_chunks(
                 pdf = pd.concat([pending, pdf], ignore_index=True)
             if not len(pdf):
                 continue
-            urls = pdf["url"].to_numpy()
-            cols = pdf["column"].to_numpy()
-            # only the LAST (url, column) run may continue into the next batch
-            diff = np.flatnonzero((urls != urls[-1]) | (cols != cols[-1]))
-            cut = int(diff[-1]) + 1 if len(diff) else 0
+            cut = last_run_start(pdf["url"].to_numpy(), pdf["column"].to_numpy())
             pending = pdf.iloc[cut:]
             ready = pdf.iloc[:cut]
             if len(ready):

@@ -25,7 +25,7 @@ per-url-tiny — the tail is ``max(trend_window, period)+1`` rows per url, the
 state one row per url, and the future grid ``horizon`` rows per url — so the
 slope/phase joins are broadcast hash joins and the whole forecast costs no
 big-table shuffle and no Python.  If the input is an *unmaterialized*
-decomposition (a live FlatMapGroupsInPandas), persist it first or pass
+decomposition (a live STL MapInArrow), persist it first or pass
 ``cache_handle`` — otherwise the STL kernel recomputes once per scan.
 """
 from __future__ import annotations

@@ -4,10 +4,12 @@ per-bucket lineage + metrics, and the per-url text byte-identity invariant.
 
 Physical shape (SURVEY.md §3.4): Iceberg/parquet scan (column-pruned to
 url+warc_ts) -> hash agg bucketize (partial+final) -> numbered url
-repartition -> applyInPandas STL kernel that gap-fills each url's observed
+repartition (one task per core) + sort within partitions by (url, ts) ->
+mapInArrow STL kernel that walks url runs, gap-fills each url's observed
 buckets to its dense grid in NumPy and decomposes it (the one
 JVM<->Python Arrow boundary) -> tier rollup aggs (each tier from the
-previous, exact) -> Gorilla encode UDF -> partitioned sink.
+previous, exact) -> Gorilla encode (one task per core) -> partitioned sink.
+Each tier's row count is an Observation on its write, not an extra job.
 
 This is the one pipeline body: jobs/rollup_job.py, perfbench and
 tools/scaling_bench.py all call ``run_pipeline``.
@@ -18,7 +20,7 @@ import time
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from .operators.bucketize import bucketize
 from .operators.compress import compress_tier
@@ -171,8 +173,12 @@ def run_pipeline(
 
         for tier_name, next_granularity in (("1h", "day"), ("1d", "week"), ("1w", None)):
             out = tier_df.withColumn("run_id", F.lit(run_id)).withColumn("bucket", F.lit(bucket))
-            write_table(_with_slab(out, "ts"), f"{out_root}/tier_{tier_name}",
+            # the write's row count rides on the write job itself
+            rows = Observation(f"tier_{tier_name}_rows")
+            out = _with_slab(out, "ts").observe(rows, F.count(F.lit(1)).alias("n"))
+            write_table(out, f"{out_root}/tier_{tier_name}",
                         partition_by=part_cols, mode="overwrite_partitions")
+            n_points += rows.get["n"]
             materialized = (
                 spark.read.parquet(f"{out_root}/tier_{tier_name}")
                 .filter(F.col("bucket") == bucket)
@@ -193,7 +199,6 @@ def run_pipeline(
                 chunks = chunks.withColumn("run_id", F.lit(run_id)).withColumn("bucket", F.lit(bucket))
                 write_table(_with_slab(chunks, "t0"), f"{out_root}/gorilla_{tier_name}",
                             partition_by=part_cols, mode="overwrite_partitions")
-            n_points += materialized.count()
             if next_granularity:
                 tier_df = rollup_tier(materialized, next_granularity)
         wall = time.time() - t0

@@ -5,7 +5,7 @@ allocation and munmap'd on free, so every large temporary pays first-touch
 page-fault cost again — on micro-VM hosts with slow on-demand paging this is
 a 10-100x slowdown of the loess kernels.  Raising M_MMAP_THRESHOLD makes
 glibc serve large blocks from the reusable heap.  Called once per process:
-driver, benchmarks, and inside every pandas-UDF worker (see stl_udf.py).
+driver, benchmarks, and inside every Python UDF worker (see stl_udf.py).
 """
 from __future__ import annotations
 

@@ -40,7 +40,7 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         # AQE partition coalescing stays ON session-wide (relational queries
         # want it at scale).  It decides by shuffle BYTES, the wrong signal
-        # for the CPU-heavy STL grouped-map stage (a few MB of series data,
+        # for the CPU-heavy STL stage (a few MB of series data,
         # hours of NumPy CPU) — but that stage protects itself with explicit
         # numbered repartition(n, "url") pins (operators/stl_udf.py,
         # operators/gapfill.py): AQE never coalesces a user-specified

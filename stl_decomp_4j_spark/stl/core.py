@@ -2,8 +2,8 @@
 bisquare robustness reweighting.
 (ref: main/stl/SeasonalTrendLoess.java:635-862)
 
-This is pure NumPy and runs per-series; Spark distributes it across url
-groups via ``applyInPandas`` (see operators/stl_udf.py).
+This is pure NumPy and runs per-series; Spark distributes it across urls
+via one sorted ``mapInArrow`` kernel (see operators/stl_udf.py).
 """
 from __future__ import annotations
 

@@ -94,6 +94,45 @@ def test_stl_kernel_matches_gapfill_and_local_stl(spark, pages, granularity, per
             assert np.array_equal(sub[col].to_numpy(), w), (url, col)
 
 
+def test_stl_kernel_carries_url_runs_across_arrow_batches(spark, pages):
+    """With 7-row Arrow batches every url spans several batches, so the
+    kernel's held-back last run is exercised on every batch: the output
+    must still equal in-process decompose() bit for bit, with no url
+    decomposed twice."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        test_stl_kernel_matches_gapfill_and_local_stl(spark, pages, "hour", 24, 35, True)
+        got = stl_decompose_sparse_df(bucketize(pages), period=24, seasonal_width=35)
+        assert got.groupBy("url", "ts").count().filter(F.col("count") > 1).count() == 0
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_stl_kernel_plan(spark, pages):
+    """The STL stage is one sorted Arrow map: a numbered url repartition
+    (REPARTITION_BY_NUM, which AQE never coalesces) at one task per core,
+    then a (url, ts) sort, then MapInArrow.  Exactly two exchanges: the
+    bucketize shuffle carries partial-aggregated rows, the url repartition
+    only the reduced buckets.  The gap-fill runs in the kernel, so there is
+    no grid explode and no join."""
+    import io
+    import re
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        stl_decompose_sparse_df(bucketize(pages), period=24, seasonal_width=35).explain("formatted")
+    plan = buf.getvalue()
+    n = spark.sparkContext.defaultParallelism
+    assert ") MapInArrow" in plan and "FlatMapGroupsInPandas" not in plan
+    assert re.search(rf"hashpartitioning\(url#\d+, {n}\), REPARTITION_BY_NUM", plan)
+    assert re.search(r"Arguments: \[url#\d+ ASC NULLS FIRST, ts#\d+ ASC NULLS FIRST\]", plan)
+    assert plan.count(") Exchange") == 2  # node headers, not tree lines
+    assert "Generate" not in plan and "Join" not in plan
+
+
 def test_tiers_exact_vs_pandas(spark, pages):
     decomposed = stl_decompose_sparse_df(bucketize(pages), period=24, seasonal_width=35)
     tiers = build_tiers(decomposed)
@@ -315,3 +354,35 @@ def test_incremental_recompute_only_touched_buckets(spark, pages, tmp_path):
     assert marks[target_bucket] == int(
         pages2.filter(F.col("url") == url0).agg(F.max(F.unix_timestamp("warc_ts"))).first()[0]
     )
+
+
+def test_pipeline_points_and_1h_sink_order(spark, pages, tmp_path):
+    """The manifest's ``points`` (observed on the tier writes) equals the
+    bucket's written 1h+1d+1w rows.  Each tier_1h file holds contiguous url
+    runs with strictly increasing ts — the order the presorted 1h Gorilla
+    sink relies on — so it writes exactly one chunk per (url, column, slab)."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    out = tmp_path / "rollup_order"
+    run_pipeline(spark, pages, str(out), PipelineConfig(n_buckets=2))
+    done = [json.loads(l) for l in (out / "manifest.jsonl").read_text().splitlines()]
+    for r in done:
+        written = sum(
+            spark.read.parquet(str(out / f"tier_{t}")).filter(F.col("bucket") == r["bucket"]).count()
+            for t in ("1h", "1d", "1w")
+        )
+        assert r["points"] == written > 0
+
+    files = sorted((out / "tier_1h").rglob("*.parquet"))
+    assert files
+    for f in files:
+        t = pq.read_table(f, columns=["url", "ts"]).to_pandas()
+        urls = t["url"].to_numpy()
+        starts = np.flatnonzero(np.r_[True, urls[1:] != urls[:-1]])
+        assert len(starts) == len(set(urls)), f"url runs not contiguous in {f}"
+        same_url = urls[1:] == urls[:-1]
+        assert (t["ts"].diff().dt.total_seconds().to_numpy()[1:][same_url] > 0).all(), f
+    chunks = spark.read.parquet(str(out / "gorilla_1h"))
+    assert chunks.count() == chunks.select("url", "column", "slab").distinct().count()
