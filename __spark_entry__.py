@@ -356,40 +356,6 @@ def q_top_customers(spark, sf_dir):
     return top.withColumn("rank", F.row_number().over(w))
 
 
-def q_text_token_stats(spark, sf_dir):
-    from stl_decomp_4j_spark.functions.text import punct_count, token_count, word_count
-
-    docs = spark.read.parquet(_t(sf_dir, "documents"))
-    return docs.select(
-        "doc_id",
-        token_count(F.col("text")).alias("n_tokens"),
-        word_count(F.col("text")).alias("n_words"),
-        punct_count(F.col("text")).alias("n_punct"),
-        F.length("text").alias("n_chars_measured"),
-    )
-
-
-def q_text_quality(spark, sf_dir):
-    from stl_decomp_4j_spark.functions.text import quality_score
-
-    docs = spark.read.parquet(_t(sf_dir, "documents"))
-    return docs.select("doc_id", quality_score(F.col("text")).alias("quality"))
-
-
-def q_lang_guess(spark, sf_dir):
-    from stl_decomp_4j_spark.functions.text import lang_guess
-
-    docs = spark.read.parquet(_t(sf_dir, "documents"))
-    return docs.select("doc_id", lang_guess(F.col("text")).alias("lang_guess"))
-
-
-def q_doc_fingerprint(spark, sf_dir):
-    from stl_decomp_4j_spark.functions.text import fingerprint
-
-    docs = spark.read.parquet(_t(sf_dir, "documents"))
-    return docs.select("doc_id", fingerprint(F.col("text")).alias("fp"))
-
-
 def q_dedup_exact(spark, sf_dir):
     from stl_decomp_4j_spark.operators.dedup import dedup_exact
 
@@ -535,7 +501,7 @@ def q_stl_decompose_events(spark, sf_dir):
     from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
     out = stl_decompose_sparse_df(
-        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False, partitions=32
+        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False
     )
     return _fmt_ts(out).select(
         "url",
@@ -547,29 +513,12 @@ def q_stl_decompose_events(spark, sf_dir):
     )
 
 
-def _stl_tier_1d(buckets):
-    from stl_decomp_4j_spark.operators.rollup import build_tiers
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
-
-    decomposed = stl_decompose_sparse_df(buckets, period=24, seasonal_width=35, partitions=32)
-    t1d = build_tiers(decomposed)["1d"]
-    cols = ["url", "ts"] + [c for c in t1d.columns if c.startswith(("sum_", "min_", "max_"))] + ["cnt"]
-    out = t1d.select(*[F.round(c, 6).alias(c) if c.startswith(("sum_", "min_", "max_")) else c for c in cols])
-    return _fmt_ts(out)
-
-
-def q_stl_tier_1d(spark, sf_dir):
-    """Unfused twin of q_stl_tier_1d_fused: the distributed gapfill() grid
-    enters the STL kernel with every slot observed (value renamed to cnt),
-    so the in-kernel gap-fill is the identity."""
-    return _stl_tier_1d(_events_gapfilled(spark, sf_dir).withColumnRenamed("value", "cnt"))
-
-
 def q_stl_tier_1d_fused(spark, sf_dir):
-    """Same 1d tier as q_stl_tier_1d, but only observed buckets cross the
-    Arrow boundary and the STL kernel builds the dense grid itself.  Both
-    queries hash-match the same oracle, so in-kernel gap-fill == gapfill()."""
-    return _stl_tier_1d(_events_hourly(spark, sf_dir))
+    """1d tier of the production path: only observed buckets cross the Arrow
+    boundary and the STL kernel builds the dense grid itself (its output
+    equals the distributed gapfill() grid bit for bit, pinned by
+    tests/test_pipeline_spark.py::test_stl_kernel_matches_gapfill_and_local_stl)."""
+    return _round_tier(_stl_tiers(spark, sf_dir)["1d"])
 
 
 def q_gorilla_roundtrip(spark, sf_dir):
@@ -725,7 +674,7 @@ def q_stl_periodic(spark, sf_dir):
 
     out = stl_decompose_sparse_df(
         _events_hourly(spark, sf_dir), period=24, periodic=True, inner_iterations=1,
-        outer_iterations=0, partitions=32,
+        outer_iterations=0,
     )
     return _fmt_ts(out).select(
         "url",
@@ -742,7 +691,7 @@ def q_stl_robust_periodic(spark, sf_dir):
 
     out = stl_decompose_sparse_df(
         _events_hourly(spark, sf_dir), period=24, periodic=True, inner_iterations=1,
-        outer_iterations=1, partitions=32,
+        outer_iterations=1,
     )
     return _fmt_ts(out).select(
         "url",
@@ -871,7 +820,7 @@ def _stl_tiers(spark, sf_dir):
     from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
     decomposed = stl_decompose_sparse_df(
-        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, partitions=32
+        _events_hourly(spark, sf_dir), period=24, seasonal_width=35
     )
     return build_tiers(decomposed)
 
@@ -883,40 +832,6 @@ def _round_tier(out):
     )
 
 
-def q_tier_route_month(spark, sf_dir):
-    """Tier-routed continuous-aggregate read: a month request with a url
-    subset routes to the 1d tier (NOT 1w — ISO weeks straddle month
-    boundaries) and re-aggregates exactly.  The oracle aggregates the
-    reference fixture's raw hourly grid straight to months, so the
-    hash-match proves serve-from-tier == aggregate-from-raw."""
-    from stl_decomp_4j_spark.operators.serve import serve_rollup
-
-    out = serve_rollup(_stl_tiers(spark, sf_dir), "month", urls=["click", "error", "purchase"])
-    return _round_tier(out)
-
-
-def q_tier_route_week(spark, sf_dir):
-    """Tier-routed read with time-range pruning: a 3-week window routes to
-    the 1w tier; the ts bounds prune week buckets before re-aggregation
-    (PushedFilters when the tier is parquet-backed)."""
-    import datetime as dt
-
-    from stl_decomp_4j_spark.operators.serve import serve_rollup
-
-    wk0 = (
-        spark.read.parquet(_t(sf_dir, "events"))
-        .agg(F.date_trunc("week", F.min("ts")))
-        .first()[0]
-    )
-    out = serve_rollup(
-        _stl_tiers(spark, sf_dir),
-        "week",
-        ts_min=wk0 + dt.timedelta(days=7),
-        ts_max=wk0 + dt.timedelta(days=21),
-    )
-    return _round_tier(out)
-
-
 def q_stl_anomalies(spark, sf_dir):
     """Residual anomaly detection: rows whose STL residual exceeds 2.5x the
     url's residual stddev.  The oracle recomputes scale + z + filter in SQL
@@ -925,7 +840,7 @@ def q_stl_anomalies(spark, sf_dir):
     from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
     decomposed = stl_decompose_sparse_df(
-        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False, partitions=32
+        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False
     )
     out = residual_anomalies(decomposed, k=2.5, sigma="std")
     return _fmt_ts(out).select(
@@ -946,7 +861,7 @@ def q_stl_forecast(spark, sf_dir):
     from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
     decomposed = stl_decompose_sparse_df(
-        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False, partitions=32
+        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False
     )
     out = stl_forecast(decomposed, period=24, horizon=48, trend_window=24)
     return _fmt_ts(out).select(
@@ -989,7 +904,7 @@ def q_stl_backtest(spark, sf_dir):
     trunc = tagged.filter(F.col("ts") <= cutoff).select("url", "ts", "value")
     actuals = tagged.filter(F.col("ts") > cutoff).select("url", "ts", "value")
     dec = stl_decompose_sparse_df(
-        trunc.withColumnRenamed("value", "cnt"), period=24, seasonal_width=35, robust=False, partitions=32
+        trunc.withColumnRenamed("value", "cnt"), period=24, seasonal_width=35, robust=False
     )
     fc = stl_forecast(dec, period=24, horizon=48, trend_window=24)
     out = forecast_backtest(fc, actuals, trunc, period=24)
@@ -1036,7 +951,7 @@ def q_stl_strength(spark, sf_dir):
     from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
     decomposed = stl_decompose_sparse_df(
-        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False, partitions=32
+        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False
     )
     out = seasonal_strength(decomposed)
     return out.select(
@@ -1057,7 +972,7 @@ def q_stl_changepoints(spark, sf_dir):
     from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
     decomposed = stl_decompose_sparse_df(
-        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False, partitions=32
+        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False
     )
     out = cusum_changepoints(decomposed, k=3.0)
     return _fmt_ts(out).select(
@@ -1331,8 +1246,8 @@ def q_snapshot_stream(spark, sf_dir):
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: events -> bucketize -> fused gap-fill+STL -> 1d tier
-    (the pipeline's production kernel; row-identical to the distributed
-    gapfill -> stl path, see q_stl_tier_1d)."""
+    (the pipeline's production kernel; its grid equals the distributed
+    gapfill() grid, see test_stl_kernel_matches_gapfill_and_local_stl)."""
     return q_stl_tier_1d_fused(spark, "/root/testdata/sf0.001")
 
 
@@ -1344,9 +1259,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     underlying operator still executes and hash-checks; ordering puts the
     entries without an r4 driver row first (never-checked, then r4-rotated,
     then new this round) as belt-and-braces against any future cap change.
-    q_stl_tier_1d (the unfused twin) left the registry: it is row-identical
-    to stl_tier_1d_fused by construction and pinned by a pytest equivalence
-    test instead of a second full STL run per gate."""
+    The unfused STL twin left the registry: the kernel's in-kernel gap-fill
+    is pinned equal to gapfill() by test_stl_kernel_matches_gapfill_and_local_stl
+    instead of a second full STL run per gate."""
     return {
         # -- never driver-checked before round 5 --------------------------
         "lttb_downsample": q_lttb_downsample,

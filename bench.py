@@ -19,8 +19,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 # + gapfill_linear; rollup_tiers = rollup_daily + rollup_weekly; text_profile
 # = all four text queries in ONE scan; dedup_exact += word_set; ann_topk now
 # unions brute+lsh+ivf; tier_route = month+week from ONE tier build;
-# stl_tier_1d (unfused twin) left the suite — the fused kernel is the
-# production path, the twin is pytest-pinned row-identical.
+# stl_tier_1d (unfused twin) left the suite and the registry — the fused
+# kernel is the production path, its in-kernel gap-fill pinned equal to
+# gapfill() by test_stl_kernel_matches_gapfill_and_local_stl.
 HEADLINE = [
     "bucketize_hourly",
     "gapfill",

@@ -68,39 +68,3 @@ def fingerprint(col: Column) -> Column:
     (md5 so the DuckDB oracle computes the identical digest)."""
     return F.md5(F.regexp_replace(F.lower(col), r"[^a-z0-9]", ""))
 
-
-def word_shingles(col: Column, k: int = 3) -> Column:
-    """Distinct word k-grams (space-joined) of the lowercased text.
-
-    NOTE: ``col`` should be a plain column reference to an already-
-    materialized words array or text column when called inside lambdas at
-    scale — Catalyst inlines the argument expression into every lambda
-    element, so passing a computed expression makes this O(words^2) per row.
-    Prefer ``shingle_select`` below."""
-    words = F.split(F.trim(F.lower(col)), r"\s+")
-    return _shingles_of_words(words, k)
-
-
-def _shingles_of_words(words: Column, k: int) -> Column:
-    n = F.size(words)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(0)))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(" ", *[F.element_at(words, (i + j).cast("int")) for j in range(k)]),
-    )
-    return F.array_distinct(grams)
-
-
-def shingle_select(df, text_col: str, id_col: str, k: int = 3):
-    """(id, shingles) for rows with at least k words, in two projections so
-    the split-words array is materialized ONCE per row before the shingle
-    lambda references it.
-
-    The short-doc filter runs on size(__words) BEFORE the shingle projection:
-    filtering on size(shingles) downstream makes Catalyst inline the whole
-    interpreted transform-lambda into the filter predicate and evaluate it
-    twice per row — measured 12x slower on the sf0.1 documents table."""
-    words = df.select(
-        F.col(id_col).alias("doc_id"), F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("__words")
-    ).filter(F.size("__words") >= k)
-    return words.select("doc_id", _shingles_of_words(F.col("__words"), k).alias("shingles"))

@@ -111,7 +111,6 @@ def last_run_start(*keys: np.ndarray) -> int:
 def compress_tier(
     tier: DataFrame,
     columns: list[str] | None = None,
-    partitions: int | None = None,
     chunk_points: int | None = 4096,
     presorted: bool = False,
     slab: str | None = None,
@@ -137,7 +136,7 @@ def compress_tier(
     columns = columns or [c for c in tier.columns if c not in ("url", "ts")]
     # one task per core: encoding is ~0.25 ms per series, so a Python task's
     # fixed start-up cost (CLAUDE.md) dominates any finer split
-    partitions = partitions or tier.sparkSession.sparkContext.defaultParallelism
+    cores = tier.sparkSession.sparkContext.defaultParallelism
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pending: pd.DataFrame | None = None
@@ -157,7 +156,7 @@ def compress_tier(
     if presorted:
         return tier.mapInPandas(fn, CHUNK_SCHEMA)
     return (
-        tier.repartition(partitions, "url")
+        tier.repartition(cores, "url")
         .sortWithinPartitions("url", "ts")
         .mapInPandas(fn, CHUNK_SCHEMA)
     )
@@ -224,7 +223,6 @@ def compact_chunks(
     chunks: DataFrame,
     chunk_points: int | None = 4096,
     slab: str | None = None,
-    partitions: int | None = None,
     carry_cols: list[str] | None = None,
 ) -> DataFrame:
     """Merge fragmented Gorilla chunks back into maximally-filled ones.
@@ -255,7 +253,7 @@ def compact_chunks(
 
     carry_cols = list(carry_cols or [])
     # one task per core, like compress_tier
-    partitions = partitions or chunks.sparkSession.sparkContext.defaultParallelism
+    cores = chunks.sparkSession.sparkContext.defaultParallelism
     out_cols = [f.name for f in CHUNK_SCHEMA.fields] + carry_cols
 
     keys = ["url", "column"]
@@ -299,7 +297,7 @@ def compact_chunks(
             yield _recode_block(pending, chunk_points, slab, carry_cols)
 
     recoded = (
-        todo.repartition(partitions, "url", "column")
+        todo.repartition(cores, "url", "column")
         .sortWithinPartitions("url", "column", "t0")
         .mapInPandas(fn, schema)
     )

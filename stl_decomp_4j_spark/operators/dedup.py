@@ -196,7 +196,6 @@ def dedup_minhash_lsh(
     bands: int = 32,
     rows_per_band: int = 2,
     threshold: float = 0.6,
-    eager_cache: bool = False,
     cache_handle: list | None = None,
     max_bucket: int | None = None,
 ) -> DataFrame:
@@ -212,11 +211,8 @@ def dedup_minhash_lsh(
     consumers); pass ``cache_handle=[]`` to receive the persisted DataFrame
     and ``unpersist()`` it after materializing the result — otherwise a
     long-lived session accumulates one cached table per call until executor
-    storage evicts it.  ``eager_cache=True`` additionally materializes the
-    cache up front (count()) so sibling stages never race-compute it; the
-    default is lazy — within one action the first consumer stage populates
-    the cache and the extra blocking job is skipped (measurably faster at
-    bench scale).
+    storage evicts it.  The persist is lazy: within one action the first
+    consumer stage populates the cache, with no extra blocking job.
     """
     from pyspark import StorageLevel
 
@@ -236,8 +232,6 @@ def dedup_minhash_lsh(
     )
     if cache_handle is not None:
         cache_handle.append(sets_)
-    if eager_cache:
-        sets_.count()
     signed = minhash_signatures_from_hashes(
         sets_.select("doc_id", F.explode("sh").alias("h")), num_perm
     )

@@ -82,7 +82,6 @@ def lttb(
     series: DataFrame,
     n_out: int,
     value_col: str = "value",
-    partitions: int | None = None,
 ) -> DataFrame:
     """Downsample each url's (ts, value) series to ``n_out`` points."""
     from stl_decomp_4j_spark.operators.stl_udf import pinned_grouped_apply
@@ -107,6 +106,4 @@ def lttb(
             }
         )
 
-    return pinned_grouped_apply(
-        series.select("url", "ts", value_col), fn, LTTB_SCHEMA, partitions=partitions
-    )
+    return pinned_grouped_apply(series.select("url", "ts", value_col), fn, LTTB_SCHEMA)

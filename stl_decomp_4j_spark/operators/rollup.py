@@ -60,13 +60,6 @@ def rollup_tier(tier: DataFrame, granularity: str) -> DataFrame:
     )
 
 
-def with_averages(tier: DataFrame) -> DataFrame:
-    out = tier
-    for c in COMPONENTS:
-        out = out.withColumn(f"avg_{c}", F.col(f"sum_{c}") / F.col("cnt"))
-    return out
-
-
 def percentile_rollup(
     points: DataFrame,
     granularity: str = "day",

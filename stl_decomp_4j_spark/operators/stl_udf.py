@@ -157,7 +157,6 @@ def pinned_grouped_apply(
     fn,
     schema,
     key: str = "url",
-    partitions: int | None = None,
 ) -> DataFrame:
     """groupBy(key).applyInPandas behind an explicit NUMBERED repartition pin.
 
@@ -167,10 +166,10 @@ def pinned_grouped_apply(
     scale trap, see CLAUDE.md).  repartition(n, key) compiles to
     REPARTITION_BY_NUM, which AQE never coalesces, and the groupBy reuses
     that hash partitioning so no extra shuffle is introduced.  One task per
-    core by default: a Python task's fixed start-up cost (CLAUDE.md)
+    core: a Python task's fixed start-up cost (~0.15 s of worker CPU)
     outweighs what a finer split gains on these stages."""
-    partitions = partitions or df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(partitions, key).groupBy(key).applyInPandas(fn, schema)
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(cores, key).groupBy(key).applyInPandas(fn, schema)
 
 
 def stl_decompose_sparse_df(
@@ -178,7 +177,6 @@ def stl_decompose_sparse_df(
     period: int,
     granularity: str = "hour",
     fill_value: float = 0.0,
-    partitions: int | None = None,
     **config_kwargs,
 ) -> DataFrame:
     """(url, ts, cnt) buckets -> decomposed dense grid
@@ -189,11 +187,11 @@ def stl_decompose_sparse_df(
     (see _decompose_url), so only observed rows cross the shuffle and the
     Arrow boundary.  The repartition is numbered (REPARTITION_BY_NUM), so
     AQE's byte-based coalescing cannot collapse the CPU-heavy stage; it
-    defaults to one task per core, like every Python stage."""
-    partitions = partitions or buckets.sparkSession.sparkContext.defaultParallelism
+    runs one task per core, like every Python stage."""
+    cores = buckets.sparkSession.sparkContext.defaultParallelism
     return (
         buckets.select("url", "ts", "cnt")
-        .repartition(partitions, "url")
+        .repartition(cores, "url")
         .sortWithinPartitions("url", "ts")
         .mapInArrow(
             make_sparse_stl_kernel(period, granularity, fill_value, **config_kwargs), STL_SCHEMA

@@ -1,6 +1,6 @@
 """CSV time-series source/sink parity with the reference's example drivers
-(ref: examples/StlPerfTest/StlPerfTest.java:116-177 — opencsv readers for
-co2/hourly and the 17-significant-digit CSV decomposition dump;
+(ref: examples/StlPerfTest/StlPerfTest.java:116-177 — the opencsv co2
+reader and the 17-significant-digit CSV decomposition dump;
 examples/StlDemoRestServer/StlDemoRestServer.java — JSON results shape)."""
 from __future__ import annotations
 
@@ -19,15 +19,6 @@ def read_co2_csv(spark: SparkSession, path: str) -> DataFrame:
             F.col("time_years").cast("double").alias("time_years"),
             F.col("interpolated").cast("double").alias("value"),
         )
-    )
-
-
-def read_hourly_csv(spark: SparkSession, path: str) -> DataFrame:
-    """fortran_benchmark/hourly_stl_test.csv: date,value (header) -> (idx, value)."""
-    df = spark.read.option("header", "true").csv(path)
-    value_col = df.columns[-1]
-    return df.select(F.col(value_col).cast("double").alias("value")).withColumn(
-        "idx", F.monotonically_increasing_id()
     )
 
 

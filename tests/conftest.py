@@ -1,5 +1,7 @@
+import io
 import os
 import sys
+from contextlib import redirect_stdout
 from pathlib import Path
 
 import pytest
@@ -15,3 +17,16 @@ def spark():
     spark = build_session(app_name="tests", shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def plan_of():
+    """df -> its formatted physical plan, the text plan checks assert on."""
+
+    def plan_of(df) -> str:
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        return buf.getvalue()
+
+    return plan_of

@@ -81,28 +81,23 @@ def test_dedup_corpus_stages(spark, corpus, empty_store):
 
 
 @pytest.mark.parametrize("mode", ["batch", "store"])
-def test_corpus_composition_plan(spark, corpus, empty_store, mode):
+def test_corpus_composition_plan(spark, plan_of, corpus, empty_store, mode):
     """The composed pass adds no Python anywhere (scalar, Arrow or
     grouped-map) and stitches its stages with doc_id anti-joins: snapshot +
     near-dup stitches + span strip's internal (doc_id, pos) anti-join = at
     least 3 LeftAnti joins."""
-    import io
-    from contextlib import redirect_stdout
-
     from stl_decomp_4j_spark.operators.corpus import dedup_corpus
 
-    df = dedup_corpus(
-        corpus,
-        snapshot_key="source",
-        strip_spans_k=5,
-        store=empty_store if mode == "store" else None,
+    plan = plan_of(
+        dedup_corpus(
+            corpus,
+            snapshot_key="source",
+            strip_spans_k=5,
+            store=empty_store if mode == "store" else None,
+        )
     )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "EvalPython" not in plan and "InPandas" not in plan
-    assert plan.count("LeftAnti") >= 3
+    assert "EvalPython" not in plan and "InPandas" not in plan, plan
+    assert plan.count("LeftAnti") >= 3, plan
 
 
 def test_dedup_corpus_stage_toggles(spark, corpus):

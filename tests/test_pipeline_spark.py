@@ -110,27 +110,22 @@ def test_stl_kernel_carries_url_runs_across_arrow_batches(spark, pages):
         spark.conf.set(key, old)
 
 
-def test_stl_kernel_plan(spark, pages):
+def test_stl_kernel_plan(spark, plan_of, pages):
     """The STL stage is one sorted Arrow map: a numbered url repartition
     (REPARTITION_BY_NUM, which AQE never coalesces) at one task per core,
     then a (url, ts) sort, then MapInArrow.  Exactly two exchanges: the
     bucketize shuffle carries partial-aggregated rows, the url repartition
     only the reduced buckets.  The gap-fill runs in the kernel, so there is
     no grid explode and no join."""
-    import io
     import re
-    from contextlib import redirect_stdout
 
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        stl_decompose_sparse_df(bucketize(pages), period=24, seasonal_width=35).explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_of(stl_decompose_sparse_df(bucketize(pages), period=24, seasonal_width=35))
     n = spark.sparkContext.defaultParallelism
-    assert ") MapInArrow" in plan and "FlatMapGroupsInPandas" not in plan
-    assert re.search(rf"hashpartitioning\(url#\d+, {n}\), REPARTITION_BY_NUM", plan)
-    assert re.search(r"Arguments: \[url#\d+ ASC NULLS FIRST, ts#\d+ ASC NULLS FIRST\]", plan)
-    assert plan.count(") Exchange") == 2  # node headers, not tree lines
-    assert "Generate" not in plan and "Join" not in plan
+    assert ") MapInArrow" in plan and "FlatMapGroupsInPandas" not in plan, plan
+    assert re.search(rf"hashpartitioning\(url#\d+, {n}\), REPARTITION_BY_NUM", plan), plan
+    assert re.search(r"Arguments: \[url#\d+ ASC NULLS FIRST, ts#\d+ ASC NULLS FIRST\]", plan), plan
+    assert plan.count(") Exchange") == 2, plan  # node headers, not tree lines
+    assert "Generate" not in plan and "Join" not in plan, plan
 
 
 def test_tiers_exact_vs_pandas(spark, pages):

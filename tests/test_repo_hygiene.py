@@ -1,13 +1,21 @@
-"""Guard: no test may read outside the repo (ROADMAP aim 3).  The upstream
-reference checkout is not part of the repo, so a test that names a path into
-it passes only on a machine that happens to have that checkout; its data
-belongs in tests/fixtures instead."""
+"""Repo hygiene guards (ROADMAP aims 2 and 3).
+
+* No test may read outside the repo.  The upstream reference checkout is not
+  part of the repo, so a test that names a path into it passes only on a
+  machine that happens to have that checkout; its data belongs in
+  tests/fixtures instead.
+* No dead code: every top-level function and class of the program files is
+  referred to by name from some ``.py`` file of the repo (tests and
+  perfbench count)."""
+import ast
 import re
 from pathlib import Path
 
 TESTS = Path(__file__).resolve().parent
+REPO = TESTS.parent
 # an absolute path into a `reference` checkout: /<dir>/reference/...
 REFERENCE_PATH = re.compile(r"(?<![\w.])/\w+/reference/")
+PROGRAM = ["stl_decomp_4j_spark", "jobs", "tools", "__spark_entry__.py", "bench.py"]
 
 
 def test_no_test_references_the_reference_checkout():
@@ -19,3 +27,36 @@ def test_no_test_references_the_reference_checkout():
         if REFERENCE_PATH.search(line)
     ]
     assert hits == []
+
+
+def _py_files(*roots):
+    for root in roots:
+        path = REPO / root
+        yield from [path] if path.is_file() else sorted(path.rglob("*.py"))
+
+
+def test_every_top_level_definition_is_referenced():
+    """A def or class nothing names is dead: delete it rather than keep a
+    second path alive.  References are AST ``Name``/``Attribute`` nodes and
+    import aliases, so a mention in a comment or string does not count;
+    ``main`` (the script entry point) is exempt."""
+    used = set()
+    for path in _py_files("."):
+        if any(part.startswith(".") for part in path.relative_to(REPO).parts):
+            continue  # .git, run state
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, ast.alias):
+                used.add(node.name.rsplit(".", 1)[-1])
+    dead = [
+        f"{path.relative_to(REPO)}:{node.lineno} {node.name}"
+        for path in _py_files(*PROGRAM)
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and node.name != "main"
+        and node.name not in used
+    ]
+    assert not dead, "\n".join(dead)

@@ -166,16 +166,6 @@ def ann_index(embeddings, tmp_path_factory):
     return paths
 
 
-def _plan(df) -> str:
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
 @pytest.mark.parametrize("kind", ["lsh", "ivf"])
 def test_indexed_ann_matches_batch_paths(spark, embeddings, ann_index, kind):
     """The persisted-index query path must return exactly the batch path's
@@ -191,16 +181,16 @@ def test_indexed_ann_matches_batch_paths(spark, embeddings, ann_index, kind):
 
 
 @pytest.mark.parametrize("kind", ["lsh", "ivf"])
-def test_ann_index_plan(spark, embeddings, ann_index, kind):
+def test_ann_index_plan(spark, plan_of, embeddings, ann_index, kind):
     """Indexed lookup plan: the scan prunes to the probe-cell partitions
     (PartitionFilters on the partition column) and exactly one Arrow pass
     scores the candidates — no full-table re-hash / re-assign."""
     q = [float(x) for x in embeddings.filter(F.col("vec_id") == 0).first()["embedding"]]
-    plan = _plan(ann_index_topk(spark, ann_index[kind], q, k=10))
-    assert "PartitionFilters" in plan
-    assert "cell" in plan.split("PartitionFilters", 1)[1][:200]
+    plan = plan_of(ann_index_topk(spark, ann_index[kind], q, k=10))
+    assert "PartitionFilters" in plan, plan
+    assert "cell" in plan.split("PartitionFilters", 1)[1][:200], plan
     # node headers (") ArrowEvalPython"), not tree lines
-    assert plan.count(") ArrowEvalPython") == 1
+    assert plan.count(") ArrowEvalPython") == 1, plan
 
 
 @pytest.mark.parametrize("kind", ["lsh", "ivf"])
