@@ -381,3 +381,102 @@ def test_pipeline_points_and_1h_sink_order(spark, pages, tmp_path):
         assert (t["ts"].diff().dt.total_seconds().to_numpy()[1:][same_url] > 0).all(), f
     chunks = spark.read.parquet(str(out / "gorilla_1h"))
     assert chunks.count() == chunks.select("url", "column", "slab").distinct().count()
+
+
+def test_pipeline_raises_on_mixed_text_digests(spark, pages, tmp_path):
+    """One url whose text differs between its crawls breaks the byte-identity
+    invariant, and run_pipeline says so."""
+    url0 = pages.select("url").orderBy("url").first()["url"]
+    mixed = pages.withColumn(
+        "text",
+        F.when((F.col("url") == url0) & (F.hour("warc_ts") % 2 == 0), F.concat("text", F.lit(" edited")))
+        .otherwise(F.col("text")),
+    )
+    with pytest.raises(AssertionError, match=r"text byte-identity invariant violated for 1 urls"):
+        run_pipeline(spark, mixed, str(tmp_path / "mixed"), PipelineConfig(n_buckets=2, compress=False))
+
+
+def _last_job_of(spark, group):
+    """Run one marker job in ``group``; its job id, once the status store
+    has recorded it (and so every job submitted before it)."""
+    import time
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    sc.parallelize([0], 1).count()
+    for _ in range(200):
+        ids = sc.statusTracker().getJobIdsForGroup(group)
+        if ids:
+            return max(ids)
+        time.sleep(0.05)
+    raise AssertionError(f"status store never recorded the {group} marker job")
+
+
+def test_pipeline_jobs_stay_in_callers_group(spark, pages, tmp_path):
+    """Every job run_pipeline starts, on its own thread or on its pool,
+    carries the caller's job group, so a trace can attribute it and
+    cancelJobGroup reaches it."""
+    import uuid
+
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex[:8]
+    try:
+        first = _last_job_of(spark, f"before-{tag}")
+        sc.setJobGroup(f"g-{tag}", "pipeline under test")
+        run_pipeline(spark, pages, str(tmp_path / "grouped"), PipelineConfig(n_buckets=2))
+        last = _last_job_of(spark, f"after-{tag}")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    in_group = set(sc.statusTracker().getJobIdsForGroup(f"g-{tag}"))
+    started = set(range(first + 1, last))
+    assert started, "run_pipeline started no job"
+    assert in_group == started, sorted(started - in_group)
+
+
+def test_background_encode_failure_leaves_bucket_unmarked(spark, pages, tmp_path, monkeypatch):
+    """A Gorilla encode that fails on the pool fails the call: the bucket
+    gets no done row, no job is left running, and a resumed run writes the
+    same six tables as a clean run."""
+    import json
+
+    import stl_decomp_4j_spark.pipeline as pipeline
+
+    real = pipeline.compress_tier
+    calls = []
+
+    def failing_1d(tier, **kw):
+        calls.append(kw)
+        chunks = real(tier, **kw)
+        if len(calls) % 3 == 2:  # a bucket encodes 1h, 1d, 1w in that order
+            chunks = chunks.withColumn(
+                "n", F.when(F.col("n") >= 0, F.raise_error(F.lit("injected 1d encode failure")))
+            )
+        return chunks
+
+    cfg = PipelineConfig(n_buckets=2)
+    out = tmp_path / "crashed"
+    monkeypatch.setattr(pipeline, "compress_tier", failing_1d)
+    with pytest.raises(Exception, match="injected 1d encode failure"):
+        run_pipeline(spark, pages, str(out), cfg)
+    monkeypatch.undo()
+
+    manifest = out / "manifest.jsonl"
+    rows = [json.loads(l) for l in manifest.read_text().splitlines()] if manifest.exists() else []
+    assert not [r for r in rows if r["bucket"] == 0 and r["status"] == "done"], rows
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+
+    resumed = run_pipeline(spark, pages, str(out), cfg, resume=True)
+    assert sorted(resumed.buckets_run) == [0, 1]
+    clean = tmp_path / "clean"
+    run_pipeline(spark, pages, str(clean), cfg)
+    keys = {"tier": ["url", "ts"], "gorilla": ["url", "column", "t0"]}
+    for kind in ("tier", "gorilla"):
+        for t in ("1h", "1d", "1w"):
+            a, b = (
+                spark.read.parquet(str(root / f"{kind}_{t}")).drop("run_id").toPandas()
+                .sort_values(keys[kind]).reset_index(drop=True)
+                for root in (out, clean)
+            )
+            assert len(a) > 0, (kind, t)
+            pd.testing.assert_frame_equal(a, b, obj=f"{kind}_{t}")
