@@ -618,13 +618,42 @@ def q_gorilla_compact(spark, sf_dir):
     return stats.join(counts, "url").select("url", "n_points", "n_chunks", "sum_value")
 
 
+def _per_url_series(series: DataFrame, schema, per_url) -> DataFrame:
+    """``per_url(ts, y)`` on each url's ts-ordered (ts, value) series, in one
+    sorted Arrow map over url runs (operators/runs.py).  ts is UTC
+    datetime64[us], y float64; ``per_url`` returns the columns of ``schema``
+    after url, one value per output row of that url."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from stl_decomp_4j_spark.operators.runs import map_runs
+
+    def fn(block: pa.RecordBatch, starts: np.ndarray) -> pa.RecordBatch:
+        ts = block.column("ts").cast(pa.int64()).to_numpy().astype("datetime64[us]")
+        y = block.column("value").to_numpy(zero_copy_only=False).astype(float)
+        ends = np.r_[starts[1:], block.num_rows]
+        outs = [per_url(ts[a:b], y[a:b]) for a, b in zip(starts, ends)]
+        rows = np.repeat(starts, [len(o[schema.names[1]]) for o in outs])
+        return pa.RecordBatch.from_arrays(
+            [
+                block.column("url").take(pa.array(rows)),
+                *(
+                    pa.array(np.concatenate([o[f.name] for o in outs]), type=to_arrow_type(f.dataType))
+                    for f in schema.fields[1:]
+                ),
+            ],
+            names=schema.names,
+        )
+
+    return map_runs(series.select("url", "ts", "value"), ["url"], ["ts"], fn, schema)
+
+
 def q_stl_fit_stats(spark, sf_dir):
-    import pandas as pd
     from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
     from stl_decomp_4j_spark.stl import decompose, stl_fit_stats
 
-    series = _events_gapfilled(spark, sf_dir)
     schema = StructType(
         [
             StructField("url", StringType()),
@@ -638,32 +667,19 @@ def q_stl_fit_stats(spark, sf_dir):
         ]
     )
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        from stl_decomp_4j_spark.plans.malloc import tune_malloc
+    def per_url(ts, y):
+        s = stl_fit_stats(decompose(y, 24, seasonal_width=35, robust=False))
+        return {
+            "data_mean": [round(s.data_mean, 6)],
+            "data_variance": [round(s.data_variance, 6)],
+            "trend_range": [round(s.trend_range, 6)],
+            "seasonal_variance": [round(s.seasonal_variance, 6)],
+            "residual_variance": [round(s.residual_variance, 6)],
+            "trendiness_z": [round(s.trendiness_z_score, 6)],
+            "seasonal_z": [round(s.seasonal_z_score, 6)],
+        }
 
-        tune_malloc()
-        pdf = pdf.sort_values("ts")
-        y = pdf["value"].to_numpy(dtype=float)
-        d = decompose(y, 24, seasonal_width=35, robust=False)
-        s = stl_fit_stats(d)
-        return pd.DataFrame(
-            [
-                {
-                    "url": pdf["url"].iloc[0],
-                    "data_mean": round(s.data_mean, 6),
-                    "data_variance": round(s.data_variance, 6),
-                    "trend_range": round(s.trend_range, 6),
-                    "seasonal_variance": round(s.seasonal_variance, 6),
-                    "residual_variance": round(s.residual_variance, 6),
-                    "trendiness_z": round(s.trendiness_z_score, 6),
-                    "seasonal_z": round(s.seasonal_z_score, 6),
-                }
-            ]
-        )
-
-    from stl_decomp_4j_spark.operators.stl_udf import pinned_grouped_apply
-
-    return pinned_grouped_apply(series, fn, schema)
+    return _per_url_series(_events_gapfilled(spark, sf_dir), schema, per_url)
 
 
 def q_stl_periodic(spark, sf_dir):
@@ -706,7 +722,6 @@ def q_stl_seasonal_smooth(spark, sf_dir):
     """A19: post-hoc quadratic loess smoothing of the seasonal component with
     endpoint restoration + residual recompute (ref Decomposition.smoothSeasonal,
     main/stl/SeasonalTrendLoess.java:686-735)."""
-    import pandas as pd
     from pyspark.sql.types import DoubleType, StringType, StructField, StructType, TimestampType
 
     from stl_decomp_4j_spark.stl import decompose
@@ -720,26 +735,12 @@ def q_stl_seasonal_smooth(spark, sf_dir):
         ]
     )
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        from stl_decomp_4j_spark.plans.malloc import tune_malloc
-
-        tune_malloc()
-        pdf = pdf.sort_values("ts")
-        y = pdf["value"].to_numpy(dtype=float)
+    def per_url(ts, y):
         d = decompose(y, 24, seasonal_width=35, robust=False)
         d.smooth_seasonal(15)
-        return pd.DataFrame(
-            {
-                "url": pdf["url"].to_numpy(),
-                "ts": pdf["ts"].to_numpy(),
-                "seasonal_smoothed": d.seasonal.round(6),
-                "residual": d.residual.round(6),
-            }
-        )
+        return {"ts": ts, "seasonal_smoothed": d.seasonal.round(6), "residual": d.residual.round(6)}
 
-    from stl_decomp_4j_spark.operators.stl_udf import pinned_grouped_apply
-
-    return _fmt_ts(pinned_grouped_apply(_events_gapfilled(spark, sf_dir), fn, schema))
+    return _fmt_ts(_per_url_series(_events_gapfilled(spark, sf_dir), schema, per_url))
 
 
 def q_stl_exogenous(spark, sf_dir):
@@ -764,30 +765,20 @@ def q_stl_exogenous(spark, sf_dir):
         ]
     )
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        from stl_decomp_4j_spark.plans.malloc import tune_malloc
-
-        tune_malloc()
-        pdf = pdf.sort_values("ts")
-        y = pdf["value"].to_numpy(dtype=float)
-        ts = pd.to_datetime(pdf["ts"])
-        weekend = (ts.dt.dayofweek >= 5).to_numpy(dtype=float)
-        daily = np.sin(2.0 * np.pi * ts.dt.hour.to_numpy(dtype=float) / 24.0)
+    def per_url(ts, y):
+        t = pd.DatetimeIndex(ts)
+        weekend = (t.dayofweek >= 5).astype(float)
+        daily = np.sin(2.0 * np.pi * t.hour.to_numpy(dtype=float) / 24.0)
         exog = np.vstack([weekend, daily])
         d = decompose(y, 24, exog=exog, seasonal_width=35, inner_iterations=2, outer_iterations=0)
-        return pd.DataFrame(
-            {
-                "url": pdf["url"].to_numpy(),
-                "ts": pdf["ts"].to_numpy(),
-                "trend": d.trend.round(6),
-                "seasonal": d.seasonal.round(6),
-                "residual": d.residual.round(6),
-            }
-        )
+        return {
+            "ts": ts,
+            "trend": d.trend.round(6),
+            "seasonal": d.seasonal.round(6),
+            "residual": d.residual.round(6),
+        }
 
-    from stl_decomp_4j_spark.operators.stl_udf import pinned_grouped_apply
-
-    return _fmt_ts(pinned_grouped_apply(_events_gapfilled(spark, sf_dir), fn, schema))
+    return _fmt_ts(_per_url_series(_events_gapfilled(spark, sf_dir), schema, per_url))
 
 
 def q_multimodal_features(spark, sf_dir):

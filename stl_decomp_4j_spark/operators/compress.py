@@ -9,12 +9,11 @@ never decodes outside the range.
 Scale shape: a grouped-map applyInPandas paid ~10 ms of per-group overhead
 (per-group pandas construction + sort) against ~0.25 ms of actual encoding
 per 1,441-pt series — at 24k urls that overhead WAS the compression phase.
-compress_tier instead repartitions by url (explicit count — AQE-exempt),
-sorts within partitions by (url, ts), and streams Arrow batches through
-mapInPandas: one Python call per ~10k rows, url boundaries found with
-searchsorted/flatnonzero, no per-group DataFrame machinery.  A url never
-spans partitions; a url spanning consecutive Arrow batches is carried over
-inside the iterator.
+compress_tier and compact_chunks' recode branch instead run on
+``runs.map_runs``: a numbered (AQE-exempt) repartition, a sort within
+partitions, and one Python call per Arrow batch of whole key runs — url
+runs found from dictionary codes, url and carry columns copied by Arrow
+``take``, no per-group DataFrame machinery.
 """
 from __future__ import annotations
 
@@ -22,7 +21,9 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -34,6 +35,7 @@ from pyspark.sql.types import (
 )
 
 from ..codec.gorilla import decode_series, encode_series
+from .runs import map_runs
 
 CHUNK_SCHEMA = StructType(
     [
@@ -46,66 +48,84 @@ CHUNK_SCHEMA = StructType(
     ]
 )
 
+_TS_TYPE = to_arrow_type(TimestampType())
+
 # calendar slabs a chunk can be aligned to (retention drops whole slabs)
 _SLAB_PERIOD = {"day": "D", "week": "W", "month": "M"}
 
 
-def _slab_ids(ts_col: pd.Series, slab: str) -> np.ndarray:
-    """Integer calendar-slab id per row (equal ids <=> same slab)."""
+def _slab_ids(ts_us: np.ndarray, slab: str) -> np.ndarray:
+    """Integer calendar-slab id per epoch-µs timestamp (equal ids <=> same
+    slab)."""
     try:
         period = _SLAB_PERIOD[slab]
     except KeyError:
         raise ValueError(f"slab must be one of {sorted(_SLAB_PERIOD)}, got {slab!r}") from None
-    return pd.PeriodIndex(ts_col, freq=period).asi8
+    return pd.PeriodIndex(ts_us.astype("datetime64[us]"), freq=period).asi8
+
+
+def _bounds(starts: np.ndarray, n: int, ts_us: np.ndarray, slab: str | None) -> np.ndarray:
+    """Chunk-group boundaries of a block: every key-run start, plus every
+    calendar-slab change when ``slab`` is set, plus the end ``n``."""
+    cut = np.zeros(n + 1, dtype=bool)
+    cut[starts] = True
+    cut[n] = True
+    if slab is not None:
+        sids = _slab_ids(ts_us, slab)
+        cut[1:n] |= sids[1:] != sids[:-1]
+    return np.flatnonzero(cut)
+
+
+def _chunk_batch(block: pa.RecordBatch, src, t0, t1, n, column, chunk, carry_cols=()):
+    """One CHUNK_SCHEMA (+ ``carry_cols``) batch.  ``src`` is each chunk's
+    source row in ``block``: url and the carry columns are copied from there
+    by take, whatever their type; t0/t1 are epoch µs."""
+    src = pa.array(src, type=pa.int64())
+    return pa.RecordBatch.from_arrays(
+        [
+            block.column("url").take(src),
+            pa.array(np.asarray(t0, dtype=np.int64), type=_TS_TYPE),
+            pa.array(np.asarray(t1, dtype=np.int64), type=_TS_TYPE),
+            pa.array(n, type=pa.int32()),
+            pa.array(column, type=pa.string()),
+            pa.array(chunk, type=pa.binary()),
+            *(block.column(c).take(src) for c in carry_cols),
+        ],
+        names=CHUNK_SCHEMA.names + list(carry_cols),
+    )
 
 
 def _encode_block(
-    pdf: pd.DataFrame, columns: list[str], chunk_points: int | None, slab: str | None = None
-) -> pd.DataFrame:
-    """Encode every complete url run in an already (url, ts)-sorted block,
-    splitting runs longer than ``chunk_points`` into time-slab chunks.
+    block: pa.RecordBatch,
+    starts: np.ndarray,
+    columns: list[str],
+    chunk_points: int | None,
+    slab: str | None = None,
+) -> pa.RecordBatch:
+    """Encode every url run of a (url, ts)-sorted block, splitting runs
+    longer than ``chunk_points`` into time-slab chunks.
 
     With ``slab`` set, runs are additionally cut at calendar-slab boundaries
     so every chunk lies wholly inside one slab — the retention path
     (operators/retention.py) then drops whole slab partitions on metadata
     alone, never splitting or rewriting a chunk."""
-    urls = pdf["url"].to_numpy()
-    ts_col = pdf["ts"]
-    ts_ms = ts_col.astype("datetime64[ms]").astype("int64").to_numpy()
-    vals = {c: pdf[c].to_numpy(dtype=float) for c in columns}
-    new_run = urls[1:] != urls[:-1]
-    if slab is not None:
-        sids = _slab_ids(ts_col, slab)
-        new_run = new_run | (sids[1:] != sids[:-1])
-    bounds = np.flatnonzero(np.r_[True, new_run, True])
-    out: dict[str, list] = {f.name: [] for f in CHUNK_SCHEMA.fields}
-    for i in range(len(bounds) - 1):
-        a, b = int(bounds[i]), int(bounds[i + 1])
+    ts_us = block.column("ts").cast(pa.int64()).to_numpy()
+    ts_ms = ts_us // 1000
+    vals = {c: block.column(c).to_numpy(zero_copy_only=False).astype(float) for c in columns}
+    bounds = _bounds(starts, block.num_rows, ts_us, slab)
+    out: dict[str, list] = {"src": [], "t0": [], "t1": [], "n": [], "column": [], "chunk": []}
+    for a, b in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
         step = chunk_points or (b - a)
         for s in range(a, b, step):
             e = min(s + step, b)
             for col in columns:
-                out["url"].append(urls[a])
-                out["t0"].append(ts_col.iloc[s])
-                out["t1"].append(ts_col.iloc[e - 1])
+                out["src"].append(a)
+                out["t0"].append(ts_us[s])
+                out["t1"].append(ts_us[e - 1])
                 out["n"].append(e - s)
                 out["column"].append(col)
                 out["chunk"].append(encode_series(ts_ms[s:e], vals[col][s:e]))
-    return pd.DataFrame(out)
-
-
-def last_run_start(*keys: np.ndarray) -> int:
-    """Start of the last run of equal key tuples in a non-empty batch.
-
-    The streaming map stages (compress_tier, compact_chunks, the STL kernel)
-    read key-sorted partitions whose batches arrive in order, so only a
-    batch's LAST run may continue into the next batch: rows [start:] are
-    held back and prepended to the next one."""
-    differs = np.zeros(len(keys[0]), dtype=bool)
-    for k in keys:
-        differs |= k != k[-1]
-    idx = np.flatnonzero(differs)
-    return int(idx[-1]) + 1 if len(idx) else 0
+    return _chunk_batch(block, **out)
 
 
 def compress_tier(
@@ -134,81 +154,51 @@ def compress_tier(
     slabs so retention can drop whole expired slabs without touching any
     chunk's bytes (see _encode_block)."""
     columns = columns or [c for c in tier.columns if c not in ("url", "ts")]
-    # one task per core: encoding is ~0.25 ms per series, so a Python task's
-    # fixed start-up cost (CLAUDE.md) dominates any finer split
-    cores = tier.sparkSession.sparkContext.defaultParallelism
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None and len(pending):
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            cut = last_run_start(pdf["url"].to_numpy())
-            pending = pdf.iloc[cut:]
-            ready = pdf.iloc[:cut]
-            if len(ready):
-                yield _encode_block(ready, columns, chunk_points, slab)
-        if pending is not None and len(pending):
-            yield _encode_block(pending, columns, chunk_points, slab)
+    def fn(block: pa.RecordBatch, starts: np.ndarray) -> pa.RecordBatch:
+        return _encode_block(block, starts, columns, chunk_points, slab)
 
-    if presorted:
-        return tier.mapInPandas(fn, CHUNK_SCHEMA)
-    return (
-        tier.repartition(cores, "url")
-        .sortWithinPartitions("url", "ts")
-        .mapInPandas(fn, CHUNK_SCHEMA)
-    )
+    return map_runs(tier, ["url"], ["ts"], fn, CHUNK_SCHEMA, presorted=presorted)
 
 
 def _recode_block(
-    pdf: pd.DataFrame,
+    block: pa.RecordBatch,
+    starts: np.ndarray,
     chunk_points: int | None,
     slab: str | None,
     carry_cols: list[str],
-) -> pd.DataFrame:
-    """Decode every (url, column[, slab]) run of chunks in an already
-    (url, column, t0)-sorted block, concatenate the points, and re-encode
-    into maximally-filled ``chunk_points`` chunks."""
-    urls = pdf["url"].to_numpy()
-    cols = pdf["column"].to_numpy()
-    new_run = (urls[1:] != urls[:-1]) | (cols[1:] != cols[:-1])
-    if slab is not None:
-        sids = _slab_ids(pdf["t0"], slab)
-        new_run = new_run | (sids[1:] != sids[:-1])
-    bounds = np.flatnonzero(np.r_[True, new_run, True])
-    out: dict[str, list] = {f.name: [] for f in CHUNK_SCHEMA.fields}
-    for c in carry_cols:
-        out[c] = []
-    blobs = pdf["chunk"]
-    for i in range(len(bounds) - 1):
-        a, b = int(bounds[i]), int(bounds[i + 1])
-        parts = [decode_series(bytes(blobs.iloc[j])) for j in range(a, b)]
+) -> pa.RecordBatch:
+    """Decode every (url, column[, slab]) run of chunks in a (url, column,
+    t0)-sorted block, concatenate the points, and re-encode into
+    maximally-filled ``chunk_points`` chunks."""
+    bounds = _bounds(starts, block.num_rows, block.column("t0").cast(pa.int64()).to_numpy(), slab)
+    blobs = block.column("chunk").to_pylist()
+    out: dict[str, list] = {"src": [], "t0": [], "t1": [], "n": [], "column": [], "chunk": []}
+    for a, b in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
+        col = block.column("column")[a].as_py()
+        parts = [decode_series(blobs[j]) for j in range(a, b)]
         ts = np.concatenate([p[0] for p in parts])
         vals = np.concatenate([p[1] for p in parts])
         if len(ts) > 1 and not np.all(np.diff(ts) > 0):
             raise ValueError(
-                f"overlapping or duplicate chunks for url={urls[a]!r} "
-                f"column={cols[a]!r}: timestamps not strictly increasing"
+                f"overlapping or duplicate chunks for url={block.column('url')[a].as_py()!r} "
+                f"column={col!r}: timestamps not strictly increasing"
             )
         n = len(ts)
         step = chunk_points or n
         for s in range(0, n, step):
             e = min(s + step, n)
-            out["url"].append(urls[a])
-            out["t0"].append(pd.Timestamp(int(ts[s]), unit="ms"))
-            out["t1"].append(pd.Timestamp(int(ts[e - 1]), unit="ms"))
+            out["src"].append(a)
+            out["t0"].append(ts[s] * 1000)
+            out["t1"].append(ts[e - 1] * 1000)
             out["n"].append(e - s)
-            out["column"].append(cols[a])
+            out["column"].append(col)
             out["chunk"].append(encode_series(ts[s:e], vals[s:e]))
-            for c in carry_cols:
-                out[c].append(pdf[c].iloc[a])
-    return pd.DataFrame(out)
+    return _chunk_batch(block, carry_cols=carry_cols, **out)
 
 
 def _slab_key(slab: str):
-    """JVM-side group key matching the kernel's pandas ``_slab_ids`` cut:
+    """JVM-side group key matching the kernel's ``_slab_ids`` cut:
     date_trunc month/week/day of a chunk's t0 (chunks are slab-aligned at
     encode time, so t0's slab IS the chunk's slab; Spark's 'week' and
     pandas period 'W' are both Monday-start)."""
@@ -217,6 +207,20 @@ def _slab_key(slab: str):
     if slab not in _SLAB_PERIOD:
         raise ValueError(f"slab must be one of {sorted(_SLAB_PERIOD)}, got {slab!r}")
     return F.date_trunc(slab, F.col("t0"))
+
+
+def _fragmented(chunk_points: int | None):
+    """Aggregate predicate over a chunk group: it is fragmented iff it holds
+    more chunks than the minimum, ceil(points / chunk_points) — so a
+    compacted group never is again (fixpoint).  None = one chunk per group."""
+    import pyspark.sql.functions as F
+
+    target = (
+        F.floor((F.sum("n") + F.lit(int(chunk_points) - 1)) / F.lit(int(chunk_points)))
+        if chunk_points
+        else F.lit(1)
+    )
+    return F.count(F.lit(1)) > target
 
 
 def compact_chunks(
@@ -234,15 +238,12 @@ def compact_chunks(
     read path must prune and the per-chunk decode overhead.
 
     Scale shape — touch only what is fragmented:
-      1. a metadata-only aggregation (no decode) counts chunks and points per
-         (url, column[, slab]) group; a group is fragmented iff its chunk
-         count exceeds ceil(points / chunk_points), the minimum possible —
-         so a second compaction pass is a no-op (fixpoint)
+      1. a metadata-only aggregation (no decode) finds the fragmented
+         (url, column[, slab]) groups (``_fragmented``)
       2. chunks of healthy groups PASS THROUGH byte-identical (no decode,
          no re-encode)
-      3. only fragmented groups are shuffled (numbered url+column
-         repartition — AQE-exempt), sorted, decoded, merged and re-encoded
-         through the same streaming mapInPandas pattern as compress_tier
+      3. only fragmented groups go through ``map_runs`` keyed on (url,
+         column): decoded, merged and re-encoded
 
     ``slab`` must match the store's encode-time slab so merged chunks never
     cross a calendar-slab boundary (retention stays metadata-only).
@@ -252,9 +253,7 @@ def compact_chunks(
     import pyspark.sql.functions as F
 
     carry_cols = list(carry_cols or [])
-    # one task per core, like compress_tier
-    cores = chunks.sparkSession.sparkContext.defaultParallelism
-    out_cols = [f.name for f in CHUNK_SCHEMA.fields] + carry_cols
+    out_cols = CHUNK_SCHEMA.names + carry_cols
 
     keys = ["url", "column"]
     work = chunks.select(*out_cols)
@@ -262,17 +261,10 @@ def compact_chunks(
         work = work.withColumn("_slab_key", _slab_key(slab))
         keys = keys + ["_slab_key"]
 
-    target = (
-        F.floor((F.sum("n") + F.lit(int(chunk_points) - 1)) / F.lit(int(chunk_points)))
-        if chunk_points
-        else F.lit(1)
-    )
     frag = (
         work.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_cnt"), target.alias("_target"))
-        .filter(F.col("_cnt") > F.col("_target"))
-        .select(*keys)
-        .withColumn("_frag", F.lit(True))
+        .agg(_fragmented(chunk_points).alias("_frag"))
+        .filter(F.col("_frag"))
     )
     tagged = work.join(frag, on=keys, how="left")
     keep = tagged.filter(F.col("_frag").isNull()).select(*out_cols)
@@ -281,27 +273,10 @@ def compact_chunks(
     carry_fields = {f.name: f for f in chunks.schema.fields}
     schema = StructType(list(CHUNK_SCHEMA.fields) + [carry_fields[c] for c in carry_cols])
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None and len(pending):
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            cut = last_run_start(pdf["url"].to_numpy(), pdf["column"].to_numpy())
-            pending = pdf.iloc[cut:]
-            ready = pdf.iloc[:cut]
-            if len(ready):
-                yield _recode_block(ready, chunk_points, slab, carry_cols)
-        if pending is not None and len(pending):
-            yield _recode_block(pending, chunk_points, slab, carry_cols)
+    def fn(block: pa.RecordBatch, starts: np.ndarray) -> pa.RecordBatch:
+        return _recode_block(block, starts, chunk_points, slab, carry_cols)
 
-    recoded = (
-        todo.repartition(cores, "url", "column")
-        .sortWithinPartitions("url", "column", "t0")
-        .mapInPandas(fn, schema)
-    )
-    return keep.unionByName(recoded)
+    return keep.unionByName(map_runs(todo, ["url", "column"], ["t0"], fn, schema))
 
 
 def decompress_chunks(chunks: DataFrame, decode_counter=None) -> DataFrame:
@@ -388,12 +363,27 @@ def read_range(
     return rows
 
 
+def _in_partitions(parts):
+    """``(bucket, slab) IN parts`` as one IN over a struct of the partition
+    columns: a partition-column-only predicate, so a scan prunes statically
+    (PartitionFilters) to exactly those partitions."""
+    import pyspark.sql.functions as F
+
+    return F.struct("bucket", "slab").isin([F.struct(F.lit(b), F.lit(s)) for b, s in parts])
+
+
+def _partition_counts(chunks: DataFrame) -> dict:
+    return {
+        (r["bucket"], r["slab"]): r["count"]
+        for r in chunks.groupBy("bucket", "slab").count().collect()
+    }
+
+
 def compact_store(
     spark,
     out_root: str,
     tiers: tuple[str, ...] = ("1h", "1d", "1w"),
     chunk_points: int = 4096,
-    or_chain_limit: int = 1000,
 ) -> dict[str, dict]:
     """Store-level compaction job: rewrite exactly the (bucket, slab)
     partitions of each Gorilla table that contain fragmented chunk groups,
@@ -426,59 +416,28 @@ def compact_store(
         if not fs.exists(path):
             continue
         df = spark.read.parquet(root)
-        target = F.floor((F.sum("n") + F.lit(chunk_points - 1)) / F.lit(chunk_points))
-        frag_parts = [
-            (r["bucket"], r["slab"])
-            for r in (
-                df.groupBy("bucket", "slab", "url", "column")
-                .agg(F.count(F.lit(1)).alias("_cnt"), target.alias("_target"))
-                .filter(F.col("_cnt") > F.col("_target"))
-                .select("bucket", "slab")
-                .distinct()
-                .collect()
-            )
-        ]
+        frag_parts = (
+            df.groupBy("bucket", "slab", "url", "column")
+            .agg(_fragmented(chunk_points).alias("_frag"))
+            .filter(F.col("_frag"))
+            .select("bucket", "slab")
+            .distinct()
+            .collect()
+        )
         if not frag_parts:
             summary[f"gorilla_{tier}"] = {"partitions": 0}
             continue
-        # small lists: explicit OR of partition-column equalities statically
-        # prunes the scan to the fragmented partitions (an isin over concat'd
-        # columns would not).  Past ~10^3 partitions the OR-chain blows up
-        # Catalyst (quadratic analysis + a megabyte predicate), so switch to
-        # a broadcast semi-join on the fragmented-partition list — same rows,
-        # runtime-filtered instead of statically pruned.
-        if len(frag_parts) <= or_chain_limit:
-            cond = None
-            for b, s in frag_parts:
-                c = (F.col("bucket") == b) & (F.col("slab") == s)
-                cond = c if cond is None else (cond | c)
+        in_frag = _in_partitions(frag_parts)
 
-            def _subset(d, cond=cond):
-                return d.filter(cond)
-        else:
-            frag_df = spark.createDataFrame(frag_parts, ["bucket", "slab"])
-
-            def _subset(d, frag_df=frag_df):
-                return d.join(F.broadcast(frag_df), ["bucket", "slab"], "left_semi")
-
-        subset = _subset(df)
-        before = {
-            (r["bucket"], r["slab"]): r["count"]
-            for r in subset.groupBy("bucket", "slab").count().collect()
-        }
+        subset = df.filter(in_frag)
+        before = _partition_counts(subset)
         compacted = compact_chunks(
             subset, chunk_points=chunk_points, slab=slab, carry_cols=["bucket", "slab"]
         ).withColumn("run_id", F.lit(run_id))
         write_table(
             compacted, root, partition_by=["bucket", "slab"], mode="overwrite_partitions"
         )
-        after = {
-            (r["bucket"], r["slab"]): r["count"]
-            for r in _subset(spark.read.parquet(root))
-            .groupBy("bucket", "slab")
-            .count()
-            .collect()
-        }
+        after = _partition_counts(spark.read.parquet(root).filter(in_frag))
         for (b, s), n_before in sorted(before.items()):
             manifest.mark(
                 run_id, int(b), "compaction",

@@ -11,18 +11,16 @@ the NEXT bucket's centroid — so spikes/outliers survive where averaging
 would erase them.
 
 Spark mapping: the selection is sequential per series (each pick depends on
-the previous one), so it runs per url in ONE grouped-map pandas UDF —
-routed through the same pinned-repartition discipline as the STL kernel
-(stl_udf.pinned_grouped_apply) — with the per-bucket area argmax fully
-NumPy-vectorized; the Python-level loop is over OUTPUT points only
-(n_out - 2 iterations regardless of input length).  Group state is one
-url's series — the same bounded-by-time-range guarantee the STL stage
-relies on, and orders of magnitude below Arrow batch limits.
+the previous one), so it runs per url inside one sorted Arrow map over url
+runs (``runs.map_runs``, the STL kernel's stage shape) with the per-bucket
+area argmax fully NumPy-vectorized; the Python-level loop is over OUTPUT
+points only (n_out - 2 iterations regardless of input length).  Group
+state is one url's series — the same bounded-by-time-range guarantee the
+STL stage relies on.
 """
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType,
@@ -84,26 +82,26 @@ def lttb(
     value_col: str = "value",
 ) -> DataFrame:
     """Downsample each url's (ts, value) series to ``n_out`` points."""
-    from stl_decomp_4j_spark.operators.stl_udf import pinned_grouped_apply
-    from stl_decomp_4j_spark.plans.malloc import tune_malloc
+    import pyarrow as pa
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        tune_malloc()
-        pdf = pdf.sort_values("ts")
+    from stl_decomp_4j_spark.operators.runs import map_runs
+
+    def fn(block: pa.RecordBatch, starts: np.ndarray) -> pa.RecordBatch:
+        micros = block.column("ts").cast(pa.int64()).to_numpy()
+        v = block.column(value_col).to_numpy(zero_copy_only=False).astype(np.float64)
+        ends = np.r_[starts[1:], block.num_rows]
         # RELATIVE micros: epoch-micros sums exceed 2^53 (centroid means
         # would round), relative offsets are exact integers in float64, so
         # every area comparison is reproducible bit-for-bit by any
         # implementation using the same coordinates
-        micros = pdf["ts"].to_numpy().astype("datetime64[us]").astype(np.int64)
-        t = (micros - micros[0]).astype(np.float64)
-        v = pdf[value_col].to_numpy(dtype=np.float64)
-        idx = lttb_select(t, v, n_out)
-        return pd.DataFrame(
-            {
-                "url": pdf["url"].iat[0],
-                "ts": pdf["ts"].to_numpy()[idx],
-                "value": v[idx],
-            }
+        rows = pa.array(np.concatenate([
+            a + lttb_select((micros[a:b] - micros[a]).astype(np.float64), v[a:b], n_out)
+            for a, b in zip(starts, ends)
+        ]))
+        return pa.RecordBatch.from_arrays(
+            [block.column("url").take(rows), block.column("ts").take(rows),
+             pa.array(v).take(rows)],
+            names=LTTB_SCHEMA.names,
         )
 
-    return pinned_grouped_apply(series.select("url", "ts", value_col), fn, LTTB_SCHEMA)
+    return map_runs(series.select("url", "ts", value_col), ["url"], ["ts"], fn, LTTB_SCHEMA)

@@ -13,17 +13,14 @@ the pipeline, the driver queries, the tools — goes through it via
 ``stl_decompose_sparse_df``; a caller holding an already dense grid passes
 it with the value column named ``cnt``.
 
-Stage shape: ``repartition(n, url).sortWithinPartitions(url, ts)
-.mapInArrow(kernel)``.  The numbered repartition keeps a url's series in one
-partition and pins the stage's parallelism against AQE; the sort makes each
-url a contiguous, time-ordered run that the kernel finds with NumPy on the
-url column.  There is no per-group pandas DataFrame in or out: one Arrow
-batch in, one Arrow batch out.  The output stays url-contiguous and
-ts-ordered, which the 1h tier's presorted Gorilla sink relies on.
+Stage shape: ``runs.map_runs`` keyed on url, ordered by ts — a numbered
+url repartition (AQE-exempt), a (url, ts) sort, and one ``mapInArrow`` pass
+that hands the kernel blocks of whole url runs.  There is no per-group
+pandas DataFrame in or out: one Arrow batch in, one Arrow batch out.  The
+output stays url-contiguous and ts-ordered, which the 1h tier's presorted
+Gorilla sink relies on.
 """
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -33,8 +30,8 @@ from pyspark.sql.types import DoubleType, StringType, StructField, StructType, T
 from ..plans.malloc import tune_malloc
 from ..stl.core import stl_decompose
 from ..stl.settings import build_stl_config
-from .compress import last_run_start
 from .gapfill import STEP_SECONDS, dense_grid
+from .runs import map_runs
 
 STL_SCHEMA = StructType(
     [
@@ -91,28 +88,19 @@ def make_sparse_stl_fn(period: int, granularity: str, fill_value: float, **confi
 
 
 def make_sparse_stl_kernel(period: int, granularity: str, fill_value: float, **config_kwargs):
-    """The per-url core as a ``mapInArrow`` kernel over (url, ts)-sorted
-    (url, ts, cnt) batches.
-
-    Url runs are found with NumPy on the batch's dictionary-encoded url
-    column.  Rows are sorted within the partition and batches arrive in
-    order, so only a batch's LAST url run may continue into the next batch:
-    it is held back (compress.last_run_start) and prepended to the next one
-    (a url spanning many batches is carried until its run ends).  Each input batch yields at most
-    one output batch holding every complete run's grid."""
+    """The per-url core as a ``map_runs`` function: one block of complete,
+    ts-ordered url runs of (url, ts, cnt) rows in, one RecordBatch holding
+    every run's decomposed grid out."""
     import pyarrow as pa
-    import pyarrow.compute as pc
     from pyspark.sql.pandas.types import to_arrow_type
 
     step = STEP_SECONDS[granularity]
     ts_type = to_arrow_type(TimestampType())
 
-    def url_codes(url) -> np.ndarray:
-        return pc.dictionary_encode(url, null_encoding="encode").indices.to_numpy()
-
-    def decompose_runs(url, codes, ts, cnt) -> pa.RecordBatch:
-        starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
-        ends = np.r_[starts[1:], len(codes)]
+    def decompose_runs(block: pa.RecordBatch, starts: np.ndarray) -> pa.RecordBatch:
+        ts = block.column("ts").cast(pa.int64()).to_numpy() // 1_000_000
+        cnt = block.column("cnt").to_numpy(zero_copy_only=False).astype(float)
+        ends = np.r_[starts[1:], block.num_rows]
         runs = [
             _decompose_url(ts[a:b], cnt[a:b], step, fill_value, period, config_kwargs)
             for a, b in zip(starts, ends)
@@ -120,56 +108,14 @@ def make_sparse_stl_kernel(period: int, granularity: str, fill_value: float, **c
         cols = [np.concatenate(c) for c in zip(*runs)]
         return pa.RecordBatch.from_arrays(
             [
-                url.take(pa.array(np.repeat(starts, [len(r[0]) for r in runs]))),
+                block.column("url").take(pa.array(np.repeat(starts, [len(r[0]) for r in runs]))),
                 pa.array(cols[0] * 1_000_000, type=ts_type),
                 *(pa.array(c, type=pa.float64()) for c in cols[1:]),
             ],
             names=STL_SCHEMA.names,
         )
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_malloc()  # once per worker process; no-op afterwards
-        url = ts = cnt = None
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            b_url = batch.column("url")
-            b_ts = batch.column("ts").cast(pa.int64()).to_numpy() // 1_000_000
-            b_cnt = batch.column("cnt").to_numpy(zero_copy_only=False).astype(float)
-            if url is None:
-                url, ts, cnt = b_url, b_ts, b_cnt
-            else:
-                url = pa.concat_arrays([url, b_url])
-                ts, cnt = np.concatenate([ts, b_ts]), np.concatenate([cnt, b_cnt])
-            codes = url_codes(url)
-            cut = last_run_start(codes)
-            if cut:
-                yield decompose_runs(url.slice(0, cut), codes[:cut], ts[:cut], cnt[:cut])
-                url, ts, cnt = url.slice(cut), ts[cut:], cnt[cut:]
-        if url is not None:
-            yield decompose_runs(url, url_codes(url), ts, cnt)
-
-    return kernel
-
-
-def pinned_grouped_apply(
-    df: DataFrame,
-    fn,
-    schema,
-    key: str = "url",
-) -> DataFrame:
-    """groupBy(key).applyInPandas behind an explicit NUMBERED repartition pin.
-
-    EVERY CPU-heavy grouped-map stage must go through here: AQE coalesces
-    shuffle partitions by BYTES, and an STL stage carries a few MB of data but
-    hours of CPU — without the pin, AQE collapses it to one partition (the #1
-    scale trap, see CLAUDE.md).  repartition(n, key) compiles to
-    REPARTITION_BY_NUM, which AQE never coalesces, and the groupBy reuses
-    that hash partitioning so no extra shuffle is introduced.  One task per
-    core: a Python task's fixed start-up cost (~0.15 s of worker CPU)
-    outweighs what a finer split gains on these stages."""
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(cores, key).groupBy(key).applyInPandas(fn, schema)
+    return decompose_runs
 
 
 def stl_decompose_sparse_df(
@@ -187,13 +133,11 @@ def stl_decompose_sparse_df(
     (see _decompose_url), so only observed rows cross the shuffle and the
     Arrow boundary.  The repartition is numbered (REPARTITION_BY_NUM), so
     AQE's byte-based coalescing cannot collapse the CPU-heavy stage; it
-    runs one task per core, like every Python stage."""
-    cores = buckets.sparkSession.sparkContext.defaultParallelism
-    return (
-        buckets.select("url", "ts", "cnt")
-        .repartition(cores, "url")
-        .sortWithinPartitions("url", "ts")
-        .mapInArrow(
-            make_sparse_stl_kernel(period, granularity, fill_value, **config_kwargs), STL_SCHEMA
-        )
+    runs one task per core, like every Python stage (see runs.map_runs)."""
+    return map_runs(
+        buckets.select("url", "ts", "cnt"),
+        ["url"],
+        ["ts"],
+        make_sparse_stl_kernel(period, granularity, fill_value, **config_kwargs),
+        STL_SCHEMA,
     )

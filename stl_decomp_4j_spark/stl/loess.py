@@ -62,53 +62,16 @@ def smooth_windows(
     Returns (ys, ok): rows with ok False had zero total weight and the
     caller must fall back to the raw value.
     """
-    R, L = vals.shape
+    L = vals.shape[1]
     xs = np.asarray(xs, dtype=np.float64)
     lefts = np.asarray(lefts, dtype=np.int64)
-    # The tricube/geometry block depends only on (xs, lefts, width, data_len)
-    # — NOT on the data or robustness weights — so across a robust
-    # decomposition (no+1 outer passes x identical smoother configs) it is
-    # recomputed with identical inputs dozens of times.  Memoize it per
-    # worker process; a cache hit replays the exact same float64 values, so
-    # bit-parity is untouched.
     key = (data_len, width, L, xs.tobytes(), lefts.tobytes())
     if ext_w is None:
         wc = _WEIGHT_CACHE.get((key, degree))
         if wc is not None:
             w_final, ok = wc
             return _seqsum(w_final * vals), ok
-    cached = _GEOM_CACHE.get(key)
-    if cached is None:
-        offs = np.arange(L, dtype=np.float64)
-        fidx = lefts[:, None].astype(np.float64) + offs[None, :]  # (R, L) grid coords
-        rights = lefts + L - 1
-
-        lam = np.maximum(xs - lefts, rights - xs)
-        if width > data_len:
-            lam = lam + (width - data_len) // 2
-
-        delta = np.abs(xs[:, None] - fidx)
-        lam_col = lam[:, None]
-        frac = np.divide(delta, lam_col, out=np.zeros_like(delta), where=lam_col > 0)
-        tri = 1.0 - frac * frac * frac
-        w_base = tri * tri * tri
-        np.copyto(w_base, 1.0, where=delta <= 0.001 * lam_col)
-        np.copyto(w_base, 0.0, where=delta > 0.999 * lam_col)
-        if len(_GEOM_CACHE) >= _GEOM_CACHE_MAX:
-            _GEOM_CACHE.pop(next(iter(_GEOM_CACHE)))
-        _GEOM_CACHE[key] = (w_base, lam, fidx)
-    else:
-        w_base, lam, fidx = cached
-    w = w_base.copy()
-
-    if ext_w is not None:
-        # external weights apply only inside the neighborhood; outside the
-        # weight is exactly 0 so an unconditional multiply is equivalent
-        w *= ext_w
-
-    total = _seqsum(w)
-    ok = total > 0.0
-    w /= np.where(ok, total, 1.0)[:, None]
+    w, ok, lam, fidx = _neighborhood(xs, lefts, width, data_len, L, ext_w)
 
     if degree != 0:
         linear_ok = lam > 0
@@ -154,38 +117,52 @@ def smooth_windows(
     return ys, ok
 
 
-def _neighborhood_only(
-    vals: np.ndarray,
-    xs: np.ndarray,
-    lefts: np.ndarray,
-    width: int,
-    data_len: int,
-    ext_w: np.ndarray | None,
-):
-    """Normalized tricube neighborhood weights (pre degree-update): returns
-    (w, ok, lam)."""
-    R, L = vals.shape
-    xs = np.asarray(xs, dtype=np.float64)
-    lefts = np.asarray(lefts, dtype=np.int64)
-    offs = np.arange(L, dtype=np.float64)
-    fidx = lefts[:, None].astype(np.float64) + offs[None, :]
-    rights = lefts + L - 1
-    lam = np.maximum(xs - lefts, rights - xs)
-    if width > data_len:
-        lam = lam + (width - data_len) // 2
-    delta = np.abs(xs[:, None] - fidx)
-    lam_col = lam[:, None]
-    frac = np.divide(delta, lam_col, out=np.zeros_like(delta), where=lam_col > 0)
-    tri = 1.0 - frac * frac * frac
-    w = tri * tri * tri
-    np.copyto(w, 1.0, where=delta <= 0.001 * lam_col)
-    np.copyto(w, 0.0, where=delta > 0.999 * lam_col)
+def _neighborhood(xs, lefts, width: int, data_len: int, L: int, ext_w):
+    """Normalized tricube neighborhood weights, before the degree update:
+    returns (w, ok, lam, fidx) for windows of L points starting at
+    ``lefts``, evaluated at ``xs``; rows with ok False have zero total
+    weight.
+
+    The tricube/geometry block depends only on (xs, lefts, width, data_len)
+    — NOT on the data or robustness weights — so across a robust
+    decomposition (no+1 outer passes x identical smoother configs) it is
+    recomputed with identical inputs dozens of times.  It is memoized per
+    worker process; a cache hit replays the exact same float64 values, so
+    bit-parity is untouched."""
+    key = (data_len, width, L, xs.tobytes(), lefts.tobytes())
+    cached = _GEOM_CACHE.get(key)
+    if cached is None:
+        offs = np.arange(L, dtype=np.float64)
+        fidx = lefts[:, None].astype(np.float64) + offs[None, :]  # (R, L) grid coords
+        rights = lefts + L - 1
+
+        lam = np.maximum(xs - lefts, rights - xs)
+        if width > data_len:
+            lam = lam + (width - data_len) // 2
+
+        delta = np.abs(xs[:, None] - fidx)
+        lam_col = lam[:, None]
+        frac = np.divide(delta, lam_col, out=np.zeros_like(delta), where=lam_col > 0)
+        tri = 1.0 - frac * frac * frac
+        w_base = tri * tri * tri
+        np.copyto(w_base, 1.0, where=delta <= 0.001 * lam_col)
+        np.copyto(w_base, 0.0, where=delta > 0.999 * lam_col)
+        if len(_GEOM_CACHE) >= _GEOM_CACHE_MAX:
+            _GEOM_CACHE.pop(next(iter(_GEOM_CACHE)))
+        _GEOM_CACHE[key] = (w_base, lam, fidx)
+    else:
+        w_base, lam, fidx = cached
+    w = w_base.copy()
+
     if ext_w is not None:
+        # external weights apply only inside the neighborhood; outside the
+        # weight is exactly 0 so an unconditional multiply is equivalent
         w *= ext_w
+
     total = _seqsum(w)
     ok = total > 0.0
     w /= np.where(ok, total, 1.0)[:, None]
-    return w, ok, lam
+    return w, ok, lam, fidx
 
 
 def _householder_qr_solve(A: np.ndarray, y: np.ndarray) -> np.ndarray:
@@ -305,7 +282,7 @@ def loess_smooth_exog(
     idx = lefts_all[:, None] + np.arange(window_len)[None, :]
     vals = data[idx]
     ext = external_weights[idx] if external_weights is not None else None
-    w, ok, lam = _neighborhood_only(vals, xs_all.astype(np.float64), lefts_all, width, n, ext)
+    w, ok, lam, _ = _neighborhood(xs_all.astype(np.float64), lefts_all, width, n, window_len, ext)
 
     ys = np.empty(len(xs_all))
     for r in range(len(xs_all)):
@@ -326,22 +303,6 @@ def loess_smooth_exog(
     return out
 
 
-def smooth_at_points(
-    data: np.ndarray,
-    xs: np.ndarray,
-    lefts: np.ndarray,
-    window_len: int,
-    width: int,
-    degree: int,
-    external_weights: np.ndarray | None = None,
-):
-    """Gather windows from one series and evaluate (compat wrapper)."""
-    lefts = np.asarray(lefts, dtype=np.int64)
-    idx = lefts[:, None] + np.arange(window_len)[None, :]
-    ext = external_weights[idx] if external_weights is not None else None
-    return smooth_windows(data[idx], xs, lefts, width, degree, len(data), ext)
-
-
 def smooth_one_point(
     data: np.ndarray,
     x: float,
@@ -353,14 +314,11 @@ def smooth_one_point(
 ):
     """Single-point LOESS evaluation/extrapolation; None when the window's
     total weight is zero (ref: LoessInterpolator.smoothOnePoint)."""
-    ys, ok = smooth_at_points(
-        data,
-        np.array([x], dtype=np.float64),
-        np.array([left], dtype=np.int64),
-        int(right) - int(left) + 1,
-        width,
-        degree,
-        external_weights,
+    lefts = np.array([left], dtype=np.int64)
+    idx = lefts[:, None] + np.arange(int(right) - int(left) + 1)[None, :]
+    ext = external_weights[idx] if external_weights is not None else None
+    ys, ok = smooth_windows(
+        data[idx], np.array([x], dtype=np.float64), lefts, width, degree, len(data), ext
     )
     return float(ys[0]) if ok[0] else None
 

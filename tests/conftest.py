@@ -1,7 +1,7 @@
 import io
 import os
 import sys
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 from pathlib import Path
 
 import pytest
@@ -30,3 +30,22 @@ def plan_of():
         return buf.getvalue()
 
     return plan_of
+
+
+@pytest.fixture
+def arrow_batch_rows(spark):
+    """``with arrow_batch_rows(n):`` runs a block at n-row Arrow batches, so
+    a small n makes every key run of a sorted Arrow map span several
+    batches (the carried-over last run is exercised on every batch)."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+    @contextmanager
+    def rows(n: int):
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(n))
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+
+    return rows

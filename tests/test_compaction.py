@@ -6,6 +6,7 @@ chunks never cross a calendar-slab boundary (retention stays metadata-only).
 import datetime as dt
 import json
 import math
+import re
 
 import numpy as np
 import pandas as pd
@@ -13,6 +14,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from stl_decomp_4j_spark.operators.compress import (
+    _in_partitions,
     compact_chunks,
     compact_store,
     compress_tier,
@@ -96,6 +98,23 @@ def test_compact_chunks_merges_passthrough_fixpoint(spark):
     pd.testing.assert_frame_equal(_decoded(flat), _decoded(frag))
 
 
+def test_sink_stages_carry_runs_across_arrow_batches(spark, arrow_batch_rows):
+    """compress_tier (url runs) and compact_chunks (url, column runs) hold a
+    batch's last run back for the next batch: at 7-row Arrow batches every
+    run spans several batches, and the chunk sets, payload bytes included,
+    must equal the default batch size's."""
+    series = _hourly_series(spark, dt.datetime(2025, 1, 1), hours=24 * 14, urls=list("abcde"))
+
+    def chunk_sets():
+        frag = compress_tier(series, columns=["value"], chunk_points=24, slab="month")
+        return _chunk_set(frag), _chunk_set(compact_chunks(frag, chunk_points=96, slab="month"))
+
+    frag, merged = chunk_sets()
+    assert (len(frag), len(merged)) == (5 * 14, 5 * math.ceil(336 / 96))
+    with arrow_batch_rows(7):
+        assert chunk_sets() == (frag, merged)
+
+
 def test_compact_chunks_rejects_overlapping_runs(spark):
     series = _hourly_series(spark, dt.datetime(2025, 3, 1), hours=48, urls=["a"])
     chunks = compress_tier(series, columns=["value"], chunk_points=8)
@@ -104,17 +123,30 @@ def test_compact_chunks_rejects_overlapping_runs(spark):
         compact_chunks(dup, chunk_points=4096).collect()
 
 
-@pytest.mark.parametrize("or_chain_limit", [1000, 0])
-def test_compact_store_end_to_end(spark, tmp_path, or_chain_limit):
+@pytest.fixture
+def in_set_threshold(spark, request):
+    """Runs a test at spark.sql.optimizer.inSetConversionThreshold = the
+    test's parameter, restored afterwards."""
+    key = "spark.sql.optimizer.inSetConversionThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(request.param))
+    try:
+        yield request.param
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("in_set_threshold", [1000, 0], indirect=True)
+def test_compact_store_end_to_end(spark, tmp_path, plan_of, in_set_threshold):
     """Pipeline store -> artificially fragmented gorilla_1d -> compact_store
     rewrites only fragmented partitions, preserves decoded bytes, records
     lineage, keeps slab alignment, and a second pass finds nothing.
 
-    Parametrized over both fragmented-subset strategies: the static OR-chain
-    (small lists) and the broadcast semi-join engaged past or_chain_limit
-    (or_chain_limit=0 forces it) — the scale path for stores with 10^3+
-    fragmented partitions, where a driver-built OR predicate would blow up
-    Catalyst."""
+    Parametrized over both forms Spark gives the struct-IN partition
+    predicate: a literal IN while the partition list is within
+    inSetConversionThreshold (1000), and the hash INSET it becomes past it
+    (0 forces it) — the form at stores with more than 10 fragmented
+    partitions under Spark's default threshold."""
     out = str(tmp_path / "rollup")
     pages = generate_pages(spark, n_urls=4, days=40, events_per_url=200)
     run_pipeline(spark, pages, out, PipelineConfig(n_buckets=2, compress=True))
@@ -140,11 +172,15 @@ def test_compact_store_end_to_end(spark, tmp_path, or_chain_limit):
                     mode="overwrite_partitions")
     frag_count = spark.read.parquet(root).count()
     assert frag_count > len(baseline_rows.groupby(["url", "column"]))
+    parts = spark.read.parquet(root).select("bucket", "slab").distinct().collect()
+    assert len(parts) >= 2
+    form = "INSET" if in_set_threshold == 0 else "IN ("
+    plan = plan_of(spark.read.parquet(root).filter(_in_partitions(parts)))
+    scan = r"PartitionFilters: \[struct\(bucket, bucket#\d+, slab, slab#\d+\) "
+    assert re.search(scan + re.escape(form), plan), plan
     pd.testing.assert_frame_equal(_decoded(spark.read.parquet(root)), baseline_rows)
 
-    summary = compact_store(
-        spark, out, tiers=("1d",), chunk_points=4096, or_chain_limit=or_chain_limit
-    )
+    summary = compact_store(spark, out, tiers=("1d",), chunk_points=4096)
     s = summary["gorilla_1d"]
     assert s["partitions"] > 0
     assert s["chunks_after"] < s["chunks_before"] == frag_count
@@ -184,3 +220,27 @@ def test_compact_store_end_to_end(spark, tmp_path, or_chain_limit):
         decompress_chunks(spark.read.parquet(root)).agg(F.min("ts_ms")).first()[0]
     )
     assert min_ms >= int(dt.datetime(2025, 2, 1).timestamp() * 1000)
+
+
+def test_compact_store_subset_scan_prunes_partitions(spark, tmp_path, plan_of):
+    """compact_store selects the fragmented (bucket, slab) partitions with
+    one struct IN over the partition columns: it lands in the scan's
+    PartitionFilters, so only those partitions' files are listed and read."""
+    chunks = compress_tier(
+        _hourly_series(spark, dt.datetime(2025, 1, 25), hours=24 * 14, urls=["a", "b"]),
+        columns=["value"], chunk_points=24, slab="month",
+    )
+    root = str(tmp_path / "gorilla")
+    write_table(
+        chunks.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(2)).cast("int"))
+        .withColumn("slab", F.date_format(F.date_trunc("month", "t0"), "yyyy-MM-dd")),
+        root, partition_by=["bucket", "slab"], mode="overwrite_partitions",
+    )
+    store = spark.read.parquet(root)
+    parts = sorted({(r["bucket"], r["slab"]) for r in store.select("bucket", "slab").collect()})
+    assert len(parts) >= 3
+    subset = store.filter(_in_partitions(parts[:1]))
+    plan = plan_of(subset)
+    assert re.search(r"PartitionFilters: \[struct\(bucket, bucket#\d+, slab, slab#\d+\) IN \(", plan), plan
+    assert ") Filter" not in plan, plan  # nothing left for a row filter
+    assert {(r["bucket"], r["slab"]) for r in subset.select("bucket", "slab").collect()} == set(parts[:1])

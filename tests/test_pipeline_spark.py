@@ -94,20 +94,15 @@ def test_stl_kernel_matches_gapfill_and_local_stl(spark, pages, granularity, per
             assert np.array_equal(sub[col].to_numpy(), w), (url, col)
 
 
-def test_stl_kernel_carries_url_runs_across_arrow_batches(spark, pages):
+def test_stl_kernel_carries_url_runs_across_arrow_batches(spark, pages, arrow_batch_rows):
     """With 7-row Arrow batches every url spans several batches, so the
     kernel's held-back last run is exercised on every batch: the output
     must still equal in-process decompose() bit for bit, with no url
     decomposed twice."""
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "7")
-    try:
+    with arrow_batch_rows(7):
         test_stl_kernel_matches_gapfill_and_local_stl(spark, pages, "hour", 24, 35, True)
         got = stl_decompose_sparse_df(bucketize(pages), period=24, seasonal_width=35)
         assert got.groupBy("url", "ts").count().filter(F.col("count") > 1).count() == 0
-    finally:
-        spark.conf.set(key, old)
 
 
 def test_stl_kernel_plan(spark, plan_of, pages):

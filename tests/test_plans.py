@@ -104,7 +104,7 @@ def test_stl_1d_tier_partial_aggregate(plan_of, decomposed):
 
 def test_gorilla_sink_batched_map_in_pandas(plan_of, filled):
     plan = plan_of(compress_tier(filled.select("url", "ts", "value"), columns=["value"]))
-    assert "MapInPandas" in plan, plan  # no grouped map
+    assert "MapInArrow" in plan, plan  # no grouped map
     assert "Sort" in plan and "Arguments: [url" in plan, plan  # sorted within url partitions
     assert "hashpartitioning(url" in plan, plan  # pinned url repartition
 
@@ -124,15 +124,18 @@ def test_gorilla_compaction_metadata_detect_passthrough_recode(plan_of, chunk_st
     chunks pass through with no Python, and only the recode branch crosses
     Arrow, fed by a numbered (AQE-exempt) repartition."""
     plan = plan_of(compact_chunks(chunk_store, chunk_points=4096))
-    assert plan.count(") MapInPandas") == 1 and "BatchEvalPython" not in plan, plan
+    assert plan.count(") MapInArrow") == 1 and "BatchEvalPython" not in plan, plan
     assert "REPARTITION_BY_NUM" in plan, plan
     assert "partial_count" in plan or "partial_sum" in plan, plan
 
 
-@pytest.mark.parametrize("query", ["q_stl_fit_stats", "q_stl_seasonal_smooth", "q_stl_exogenous"])
+@pytest.mark.parametrize(
+    "query", ["q_stl_fit_stats", "q_stl_seasonal_smooth", "q_stl_exogenous", "q_lttb_downsample"]
+)
 def test_registry_grouped_map_is_pinned(spark, plan_of, query):
     plan = plan_of(getattr(entry_mod, query)(spark, SF_DIR))
-    assert "REPARTITION_BY_NUM" in plan and "FlatMapGroupsInPandas" in plan, plan
+    assert "REPARTITION_BY_NUM" in plan and "MapInArrow" in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
 
 
 def test_forecast_broadcasts_state_onto_grid(plan_of, dec_stored):

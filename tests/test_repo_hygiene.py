@@ -6,7 +6,11 @@
   tests/fixtures instead.
 * No dead code: every top-level function and class of the program files is
   referred to by name from some ``.py`` file of the repo (tests and
-  perfbench count)."""
+  perfbench count).
+* One per-key Python stage shape: the program's per-series stages run on
+  ``operators/runs.map_runs``, so no grouped-map ``applyInPandas`` comes
+  back (the streaming operators' ``applyInPandasWithState`` is another
+  operator and stays)."""
 import ast
 import re
 from pathlib import Path
@@ -60,3 +64,19 @@ def test_every_top_level_definition_is_referenced():
         and node.name not in used
     ]
     assert not dead, "\n".join(dead)
+
+
+def test_no_grouped_map_apply_in_pandas():
+    files = [
+        p for p in _py_files("__spark_entry__.py", "stl_decomp_4j_spark")
+        if "streaming" not in p.relative_to(REPO).parts
+    ]
+    calls = [
+        f"{path.relative_to(REPO)}:{node.lineno}"
+        for path in files
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "applyInPandas"
+    ]
+    assert calls == [], "per-key Python stages go through operators/runs.map_runs"
