@@ -16,7 +16,10 @@ Every stage is one of the already-plan-audited operators; the composition
 adds only doc_id anti-joins (slim key tables) between stages.  Stage order
 matters at 100 TB: each stage only sees the previous stage's survivors, so
 the expensive shingle/band machinery never touches documents that exact or
-snapshot dedup already discarded.
+snapshot dedup already discarded.  The module has no near-dup primitive of
+its own: shingle sets, signatures, band rows, the Jaccard verify, the lag-1
+simhash window and the LSH geometry the store records all come from
+dedup.py.
 
 Incremental operation: ``build_fingerprint_store`` persists a corpus's
 fingerprints (never its text), ``dedup_corpus(store=path)`` additionally
@@ -40,47 +43,17 @@ from pyspark.sql import DataFrame, Window
 from ..plans.checkpoint import check_params, write_params
 from .components import connected_components
 from .dedup import (
+    GEOMETRY,
+    SHINGLE_K,
     band_rows,
+    lag1_hamming,
     lsh_candidate_pairs,
-    minhash_signatures_from_hashes,
-    shingle_hash_rows,
+    shingle_sets,
+    signatures,
     simhash,
     strip_duplicate_spans,
+    verified_pairs,
 )
-
-# MinHash-LSH geometry of the near-dup stage and of every fingerprint store
-# (recorded in the store's params.json; a store written with another
-# geometry is refused, its band hashes would silently match nothing)
-NUM_PERM, BANDS, ROWS_PER_BAND = 64, 32, 2
-_GEOMETRY = {"num_perm": NUM_PERM, "bands": BANDS, "rows_per_band": ROWS_PER_BAND}
-
-
-def _shingle_sets(docs: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
-    """(doc_id, sh: array<long>) — each document's xxhash64 k-gram hash set."""
-    return (
-        shingle_hash_rows(docs, text_col, id_col, k)
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("sh"))
-    )
-
-
-def _signatures(sets_: DataFrame) -> DataFrame:
-    return minhash_signatures_from_hashes(sets_.select("doc_id", F.explode("sh").alias("h")), NUM_PERM)
-
-
-def _verified(pairs: DataFrame, sets_a: DataFrame, sets_b: DataFrame, a: str, b: str, threshold: float) -> DataFrame:
-    """The (a, b) ``pairs`` whose hash sets have exact Jaccard >= threshold
-    (rounded to 6dp, as dedup_minhash_lsh).  Jaccard on int64 hashes equals
-    Jaccard on k-gram strings modulo 64-bit collisions, and the verify joins
-    ship 8 bytes per shingle instead of the string."""
-    inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
-    union = F.size(F.array_union("_sa", "_sb")).cast("double")
-    return (
-        pairs.join(sets_a.select(F.col("doc_id").alias(a), F.col("sh").alias("_sa")), a)
-        .join(sets_b.select(F.col("doc_id").alias(b), F.col("sh").alias("_sb")), b)
-        .filter(F.round(inter / union, 6) >= threshold)
-        .select(a, b)
-    )
 
 
 def _history_near_dups(sets_: DataFrame, store: str, max_bucket: int | None, threshold: float) -> DataFrame:
@@ -89,7 +62,7 @@ def _history_near_dups(sets_: DataFrame, store: str, max_bucket: int | None, thr
     lsh_candidate_pairs' skew valve counted over new + history members: a
     bucket past the cap emits no new-vs-history candidates."""
     spark = sets_.sparkSession
-    new_bands = band_rows(_signatures(sets_), BANDS, ROWS_PER_BAND)
+    new_bands = band_rows(signatures(sets_))
     hist_bands = spark.read.parquet(store + "/bands").select(F.col("doc_id").alias("_old_id"), "band", "bh")
     if max_bucket is not None:
         sizes = (
@@ -106,7 +79,7 @@ def _history_near_dups(sets_: DataFrame, store: str, max_bucket: int | None, thr
     )
     hist_sets = spark.read.parquet(store + "/shingles")
     return (
-        _verified(cands, sets_, hist_sets, "_new_id", "_old_id", threshold)
+        verified_pairs(cands, sets_, hist_sets, "_new_id", "_old_id", threshold)
         .select(F.col("_new_id").alias("doc_id"))
         .distinct()
     )
@@ -119,7 +92,7 @@ def dedup_corpus(
     snapshot_key: str | None = None,
     snapshot_max_hamming: int = 4,
     minhash_threshold: float | None = 0.8,
-    minhash_k: int = 3,
+    minhash_k: int = SHINGLE_K,
     max_bucket: int | None = None,
     strip_spans_k: int | None = None,
     store: str | None = None,
@@ -156,7 +129,7 @@ def dedup_corpus(
     spark = docs.sparkSession
     in_cols = list(docs.columns)
     if store is not None:
-        check_params(store, "fingerprint store", **_GEOMETRY, minhash_k=minhash_k, snapshot_key=snapshot_key)
+        check_params(store, "fingerprint store", **GEOMETRY, minhash_k=minhash_k, snapshot_key=snapshot_key)
 
     def history(table: str) -> DataFrame:
         return spark.read.parquet(f"{store}/{table}")
@@ -188,18 +161,12 @@ def dedup_corpus(
     # 2. temporal snapshot collapse: lag-1 simhash within key (one window
     # exchange, zero joins), seeded with history's last snapshot per key
     if snapshot_key is not None:
-        sh = simhash(out, text_col, id_col, carry_cols=(snapshot_key,)).select(
-            snapshot_key, "doc_id", "simhash", F.lit(False).alias("_hist")
-        )
+        sh = simhash(out, text_col, id_col, carry_cols=(snapshot_key,)).withColumn("_hist", F.lit(False))
         if store is not None:
-            sh = sh.unionByName(
-                history("snapshots").select(snapshot_key, "doc_id", "simhash", F.lit(True).alias("_hist"))
-            )
-        wk = Window.partitionBy(snapshot_key).orderBy("doc_id")
-        ham = F.bit_count(F.col("simhash").bitwiseXOR(F.lag("simhash").over(wk)))
+            sh = sh.unionByName(history("snapshots").withColumn("_hist", F.lit(True)))
         drop = (
-            sh.select("doc_id", "_hist", ham.alias("_ham"))
-            .filter(~F.col("_hist") & (F.col("_ham") <= snapshot_max_hamming))
+            lag1_hamming(sh, snapshot_key)
+            .filter(~F.col("_hist") & (F.col("hamming") <= snapshot_max_hamming))
             .select(F.col("doc_id").alias(id_col))
         )
         out = out.join(drop, id_col, "left_anti")
@@ -213,7 +180,7 @@ def dedup_corpus(
         # Without a cache_handle the caller could not unpersist them, so the
         # cache is released before returning (the result plan recomputes
         # them only for the lazy history verify)
-        sets_ = cached = _shingle_sets(out, text_col, id_col, minhash_k).persist(StorageLevel.MEMORY_AND_DISK)
+        sets_ = cached = shingle_sets(out, text_col, id_col, minhash_k).persist(StorageLevel.MEMORY_AND_DISK)
         if cache_handle is not None:
             cache_handle.append(cached)
         try:
@@ -221,9 +188,9 @@ def dedup_corpus(
                 drop = _history_near_dups(sets_, store, max_bucket, minhash_threshold)
                 out = note("after_neardup_hist", out.join(drop.withColumnRenamed("doc_id", id_col), id_col, "left_anti"))
                 sets_ = sets_.join(out.select(F.col(id_col).alias("doc_id")), "doc_id", "left_semi")
-            pairs = lsh_candidate_pairs(_signatures(sets_), BANDS, ROWS_PER_BAND, max_bucket=max_bucket)
+            pairs = lsh_candidate_pairs(signatures(sets_), max_bucket=max_bucket)
             drop = (
-                connected_components(_verified(pairs, sets_, sets_, "id_a", "id_b", minhash_threshold))
+                connected_components(verified_pairs(pairs, sets_, sets_, "id_a", "id_b", minhash_threshold))
                 .filter(F.col("node") != F.col("component"))
                 .select(F.col("node").alias(id_col))
             )
@@ -255,10 +222,10 @@ def _write_store(docs: DataFrame, path: str, text_col: str, id_col: str, params:
     ).write.mode(mode).parquet(path + "/digests")
     # the hash sets feed the shingles table and the band signatures; the
     # writer owns the cache and releases it before returning
-    sets_ = _shingle_sets(docs, text_col, id_col, params["minhash_k"]).persist(StorageLevel.MEMORY_AND_DISK)
+    sets_ = shingle_sets(docs, text_col, id_col, params["minhash_k"]).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         sets_.write.mode(mode).parquet(path + "/shingles")
-        band_rows(_signatures(sets_), BANDS, ROWS_PER_BAND).write.mode(mode).parquet(path + "/bands")
+        band_rows(signatures(sets_)).write.mode(mode).parquet(path + "/bands")
     finally:
         sets_.unpersist()
     key = params["snapshot_key"]
@@ -287,7 +254,7 @@ def build_fingerprint_store(
     text_col: str = "text",
     id_col: str = "doc_id",
     snapshot_key: str | None = "source",
-    minhash_k: int = 3,
+    minhash_k: int = SHINGLE_K,
 ) -> None:
     """Persist the fingerprint tables incremental dedup reads INSTEAD of the
     accumulated corpus — production pipelines dedup each new crawl against
@@ -306,7 +273,7 @@ def build_fingerprint_store(
     new-batch candidate generation; shingles is touched only for candidate
     docs (semi-join pruned), so a quiet batch reads almost none of it.
     """
-    params = {"minhash_k": minhash_k, **_GEOMETRY, "snapshot_key": snapshot_key}
+    params = {"minhash_k": minhash_k, **GEOMETRY, "snapshot_key": snapshot_key}
     _write_store(docs, path, text_col, id_col, params, "overwrite")
 
 
@@ -318,4 +285,4 @@ def extend_fingerprint_store(docs: DataFrame, path: str, text_col: str = "text",
     So build(A) then extend(B) leaves the same tables as build(A ∪ B), and
     the next batch's lag-1 seed matches a one-shot run.  Mirrors
     similarity.extend_ann_index."""
-    _write_store(docs, path, text_col, id_col, check_params(path, "fingerprint store", **_GEOMETRY), "append")
+    _write_store(docs, path, text_col, id_col, check_params(path, "fingerprint store", **GEOMETRY), "append")

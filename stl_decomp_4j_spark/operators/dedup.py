@@ -13,17 +13,33 @@ All variants are pure DataFrame ops (JVM-side expressions; no Python UDFs):
 - embedding:    random-hyperplane LSH buckets -> exact cosine verification
                 (see similarity.py for the cosine primitives).
 
+This module owns the near-duplicate chain every near-dup operator composes:
+``shingle_sets`` -> ``signatures`` -> ``band_rows`` / ``lsh_candidate_pairs``
+-> ``verified_pairs`` for MinHash (dedup_minhash_lsh, corpus.py's keep-one
+and its fingerprint store), and ``lag1_hamming`` for the lag-1 simhash
+window (snapshot_dedup, snapshot_churn, corpus.py's snapshot stage).
+
 Scale notes: the shuffles are (a) posexplode words -> per-doc window +
 hash-set aggregation (bounded by word count; ships single words, then 8-byte
 hashes), (b) band bucket self-join (AQE skew-join handles hot buckets),
 (c) candidate-pair join back to the int64 hash sets.  At 10^12 docs the band
 join is the hot spot — band count and rows-per-band trade recall against
-candidate volume; both are explicit knobs.
+candidate volume.  Both are module constants (``GEOMETRY``), because a
+persisted fingerprint store's band hashes only match those of the geometry
+they were written with; the store records it and refuses any other.
 """
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
+
+# MinHash-LSH geometry of every near-dup path and of every fingerprint store
+# (recorded in the store's params.json; a store written with another
+# geometry is refused, its band hashes would silently match nothing)
+NUM_PERM, BANDS, ROWS_PER_BAND = 64, 32, 2
+GEOMETRY = {"num_perm": NUM_PERM, "bands": BANDS, "rows_per_band": ROWS_PER_BAND}
+SHINGLE_K = 3  # word k-gram length of dedup_minhash_lsh (dedup_corpus: minhash_k)
+SIMHASH_BITS, SIMHASH_BLOCKS = 64, 4
 
 
 def _bit_lit(b: int):
@@ -81,8 +97,6 @@ def shingle_hash_rows(
     (measured 2.5-4x slower at sf0.1).  The window needs the same doc_id
     hash partitioning the downstream aggregations need anyway, and it ships
     single words, not k-word strings, across the shuffle."""
-    from pyspark.sql import Window
-
     words = (
         _spread(docs, id_col)
         .select(
@@ -107,25 +121,27 @@ def shingle_hash_rows(
     return grams.select(*out_cols, F.xxhash64(gram).alias("h"))
 
 
-def minhash_signatures_from_hashes(hashed: DataFrame, num_perm: int = 64) -> DataFrame:
-    """(doc_id, sig: array<long>) — sig[p] = min over shingle hashes of a
-    64-bit hash family.
+def shingle_sets(docs: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
+    """(doc_id, sh: array<long>) — each document's xxhash64 k-gram hash set:
+    the one table the signatures and both verify sides read."""
+    return shingle_hash_rows(docs, text_col, id_col, k).groupBy("doc_id").agg(F.collect_set("h").alias("sh"))
 
-    Shape matters at scale: the num_perm family members are cheap fixed-width
+
+def signatures(sets_: DataFrame) -> DataFrame:
+    """(doc_id, sig: array<long>) — sig[p] = min over a document's shingle
+    hashes of a 64-bit hash family, NUM_PERM members.
+
+    Shape matters at scale: the family members are cheap fixed-width
     re-hashes of the already-computed shingle hash, and the mins are a single
     codegen'd hash aggregate over the exploded shingles — Catalyst
     higher-order-function lambdas are interpreted per element and were ~20x
     slower here."""
-    aggs = [F.min(F.xxhash64(F.col("h"), F.lit(p))).alias(f"mh{p}") for p in range(num_perm)]
-    sigs = hashed.groupBy("doc_id").agg(*aggs)
-    return sigs.select("doc_id", F.array(*[f"mh{p}" for p in range(num_perm)]).alias("sig"))
+    aggs = [F.min(F.xxhash64(F.col("h"), F.lit(p))).alias(f"mh{p}") for p in range(NUM_PERM)]
+    sigs = sets_.select("doc_id", F.explode("sh").alias("h")).groupBy("doc_id").agg(*aggs)
+    return sigs.select("doc_id", F.array(*[f"mh{p}" for p in range(NUM_PERM)]).alias("sig"))
 
 
-def minhash_signatures(docs: DataFrame, num_perm: int = 64, k: int = 3) -> DataFrame:
-    return minhash_signatures_from_hashes(shingle_hash_rows(docs, k=k), num_perm)
-
-
-def band_rows(signed: DataFrame, bands: int = 32, rows_per_band: int = 2) -> DataFrame:
+def band_rows(signed: DataFrame) -> DataFrame:
     """(doc_id, band, bh) — one row per LSH band, bh = xxhash64 of that
     band's signature slice.  Shared by the batch self-join path
     (lsh_candidate_pairs) and the incremental path (corpus.py), which joins
@@ -138,21 +154,16 @@ def band_rows(signed: DataFrame, bands: int = 32, rows_per_band: int = 2) -> Dat
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        F.xxhash64(*[F.col("sig").getItem(b * rows_per_band + r) for r in range(rows_per_band)]).alias("bh"),
+                        F.xxhash64(*[F.col("sig").getItem(b * ROWS_PER_BAND + r) for r in range(ROWS_PER_BAND)]).alias("bh"),
                     )
-                    for b in range(bands)
+                    for b in range(BANDS)
                 ]
             )
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bh")
 
 
-def lsh_candidate_pairs(
-    signed: DataFrame,
-    bands: int = 32,
-    rows_per_band: int = 2,
-    max_bucket: int | None = None,
-) -> DataFrame:
+def lsh_candidate_pairs(signed: DataFrame, max_bucket: int | None = None) -> DataFrame:
     """Band the signatures and self-join on (band, band-hash).
 
     ``max_bucket`` is the adversarial-skew valve: a band bucket holding n
@@ -168,9 +179,7 @@ def lsh_candidate_pairs(
     dedup already collapses upstream.  Moderately hot buckets below the cap
     are AQE skew-join territory (the session enables skewJoin).  Default
     None preserves exhaustive semantics for oracle-checked runs."""
-    from pyspark.sql import Window
-
-    banded = band_rows(signed, bands, rows_per_band)
+    banded = band_rows(signed)
     if max_bucket is not None:
         w = Window.partitionBy("band", "bh")
         banded = (
@@ -187,25 +196,42 @@ def lsh_candidate_pairs(
     )
 
 
+def verified_pairs(pairs: DataFrame, sets_a: DataFrame, sets_b: DataFrame, a: str, b: str, threshold: float) -> DataFrame:
+    """(a, b, jaccard) — the (a, b) candidate ``pairs`` whose hash sets (a's
+    from ``sets_a``, b's from ``sets_b``) have exact Jaccard >= threshold,
+    rounded to 6dp.
+
+    Jaccard on int64 shingle hashes equals Jaccard on k-gram strings modulo
+    64-bit collisions (odds ~ shingles^2/2^64 per doc pair), and the verify
+    joins ship 8 bytes per shingle instead of the full k-gram string — the
+    dominant shuffle-bytes knob at scale."""
+    inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
+    union = F.size(F.array_union("_sa", "_sb")).cast("double")
+    return (
+        pairs.join(sets_a.select(F.col("doc_id").alias(a), F.col("sh").alias("_sa")), a)
+        .join(sets_b.select(F.col("doc_id").alias(b), F.col("sh").alias("_sb")), b)
+        .select(a, b, F.round(inter / union, 6).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
 def dedup_minhash_lsh(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
-    num_perm: int = 64,
-    bands: int = 32,
-    rows_per_band: int = 2,
     threshold: float = 0.6,
     cache_handle: list | None = None,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs with exact Jaccard >= threshold, candidates from
-    minhash LSH.  Output: (id_a, id_b, jaccard) with jaccard rounded to 6dp.
+    minhash LSH over word 3-grams.  Output: (id_a, id_b, jaccard) with
+    jaccard rounded to 6dp.
 
-    Miss probability per true pair at J: (1 - J^rows_per_band)^bands — with
-    the defaults (2x32) at J=0.6 that is ~6e-7.  ``max_bucket`` drops
-    degenerate band buckets before the self-join (see lsh_candidate_pairs)
-    — the disclosed skew valve for boilerplate-heavy corpora.
+    Miss probability per true pair at J: (1 - J^ROWS_PER_BAND)^BANDS — with
+    the module's 32 bands of 2 rows at J=0.6 that is ~6e-7.  ``max_bucket``
+    drops degenerate band buckets before the self-join (see
+    lsh_candidate_pairs) — the disclosed skew valve for boilerplate-heavy
+    corpora.
 
     The per-doc shingle-hash-set table is persisted (it feeds three
     consumers); pass ``cache_handle=[]`` to receive the persisted DataFrame
@@ -224,32 +250,11 @@ def dedup_minhash_lsh(
     # At cluster scale this is the persisted shingle/signature table a
     # production dedup pipeline keeps anyway — and it holds 8-byte hashes,
     # not k-gram strings.
-    sets_ = (
-        shingle_hash_rows(docs, text_col, id_col, k)
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    sets_ = shingle_sets(docs, text_col, id_col, SHINGLE_K).persist(StorageLevel.MEMORY_AND_DISK)
     if cache_handle is not None:
         cache_handle.append(sets_)
-    signed = minhash_signatures_from_hashes(
-        sets_.select("doc_id", F.explode("sh").alias("h")), num_perm
-    )
-    cands = lsh_candidate_pairs(signed, bands, rows_per_band, max_bucket=max_bucket)
-    # exact verify on int64 shingle-hash sets: Jaccard on hashes is identical
-    # to Jaccard on strings modulo 64-bit collisions (odds ~ shingles^2/2^64
-    # per doc pair), and the verify join ships 8 bytes per shingle instead of
-    # the full k-gram string — the dominant shuffle-bytes knob at scale.
-    pairs = (
-        cands.join(sets_.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sets_.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    return (
-        pairs.select("id_a", "id_b", F.round(inter / union, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    cands = lsh_candidate_pairs(signatures(sets_), max_bucket=max_bucket)
+    return verified_pairs(cands, sets_, sets_, "id_a", "id_b", threshold)
 
 
 def duplicate_spans(
@@ -279,8 +284,6 @@ def duplicate_spans(
     unrelated grams with odds ~ grams^2/2^64 — the same disclosed trade as
     the MinHash verify join.
     """
-    from pyspark.sql import Window
-
     grams = shingle_hash_rows(docs, text_col, id_col, k, with_pos=True)
     cross_doc = (
         grams.groupBy("h")
@@ -376,7 +379,6 @@ def simhash(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bits: int = 64,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """64-bit simhash: sign-aggregate the per-word xxhash64 bits.
@@ -399,10 +401,10 @@ def simhash(
     # The when/otherwise vote formulation generated ~3x slower codegen (bigger
     # compiled method + branchy inner loop) for identical fingerprints.
     one = F.lit(1).cast("long")
-    aggs = [F.sum(F.shiftright("h", b).bitwiseAND(one)).alias(f"o{b}") for b in range(bits)]
+    aggs = [F.sum(F.shiftright("h", b).bitwiseAND(one)).alias(f"o{b}") for b in range(SIMHASH_BITS)]
     votes = hashed.groupBy("doc_id", *carry_cols).agg(F.count("*").alias("n"), *aggs)
     sim = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         sim = sim.bitwiseOR(
             F.when(F.col(f"o{b}") * 2 > F.col("n"), _bit_lit(b)).otherwise(F.lit(0).cast("long"))
         )
@@ -410,13 +412,13 @@ def simhash(
 
 
 def simhash_near_pairs(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", max_hamming: int = 3, blocks: int = 4
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", max_hamming: int = 3
 ) -> DataFrame:
-    """Candidate pairs by block-banding the simhash (pigeonhole: hamming <=
-    blocks-1 guarantees one identical block), verified by exact popcount.
-    Output: (id_a, id_b, hamming)."""
+    """Candidate pairs by block-banding the simhash into SIMHASH_BLOCKS
+    blocks (pigeonhole: hamming <= blocks-1 guarantees one identical block),
+    verified by exact popcount.  Output: (id_a, id_b, hamming)."""
     sh = simhash(docs, text_col, id_col)
-    width = 64 // blocks
+    width = SIMHASH_BITS // SIMHASH_BLOCKS
     mask = (1 << width) - 1
     banded = sh.select(
         "doc_id",
@@ -428,7 +430,7 @@ def simhash_near_pairs(
                         F.lit(b).alias("block"),
                         F.shiftright("simhash", b * width).bitwiseAND(F.lit(mask).cast("long")).alias("key"),
                     )
-                    for b in range(blocks)
+                    for b in range(SIMHASH_BLOCKS)
                 ]
             )
         ).alias("bb"),
@@ -449,24 +451,18 @@ def simhash_near_pairs(
     return pairs.select("id_a", "id_b", hamming.alias("hamming")).filter(F.col("hamming") <= max_hamming)
 
 
-def _snapshot_lagged(
-    docs: DataFrame, text_col: str, id_col: str, key_col: str
-) -> DataFrame:
-    """(key, doc_id, prev_id, hamming) for every consecutive snapshot pair
-    within a key — shared kernel of snapshot_dedup / snapshot_churn."""
-    from pyspark.sql import Window
-
-    sh = simhash(docs, text_col, id_col, carry_cols=(key_col,))
+def lag1_hamming(sh: DataFrame, key_col: str) -> DataFrame:
+    """The lag-1 simhash window: ``sh`` holds (key_col, doc_id, simhash,
+    ...); one row out per snapshot with a predecessor in doc_id order
+    within its key: (key_col, doc_id, the other columns of ``sh``, prev_id,
+    hamming), hamming being the popcount of the two simhashes' xor.  One
+    window exchange (partitionBy key), zero joins."""
     w = Window.partitionBy(key_col).orderBy("doc_id")
-    lagged = sh.select(
-        F.col(key_col),
-        F.col("doc_id"),
-        F.col("simhash"),
-        F.lag("doc_id").over(w).alias("prev_id"),
-        F.lag("simhash").over(w).alias("prev_sh"),
+    carry = [c for c in sh.columns if c not in (key_col, "doc_id", "simhash")]
+    hamming = F.bit_count(F.col("simhash").bitwiseXOR(F.lag("simhash").over(w)))
+    return sh.select(
+        key_col, "doc_id", *carry, F.lag("doc_id").over(w).alias("prev_id"), hamming.alias("hamming")
     ).filter(F.col("prev_id").isNotNull())
-    hamming = F.bit_count(F.col("simhash").bitwiseXOR(F.col("prev_sh")))
-    return lagged.select(key_col, "doc_id", "prev_id", hamming.alias("hamming"))
 
 
 def snapshot_dedup(
@@ -502,7 +498,7 @@ def snapshot_dedup(
     slab first (boundary pairs lost at slab edges) — not done here because
     the window is O(1)-state streaming, not memory-bound.
     """
-    lagged = _snapshot_lagged(docs, text_col, id_col, key_col)
+    lagged = lag1_hamming(simhash(docs, text_col, id_col, carry_cols=(key_col,)), key_col)
     return lagged.filter(F.col("hamming") <= max_hamming)
 
 
@@ -519,7 +515,7 @@ def snapshot_churn(
     recrawl-scheduling policy (stable urls -> crawl less often).  Same
     single-exchange kernel as snapshot_dedup; the rollup reuses the window's
     key partitioning so the groupBy adds no shuffle."""
-    lagged = _snapshot_lagged(docs, text_col, id_col, key_col)
+    lagged = lag1_hamming(simhash(docs, text_col, id_col, carry_cols=(key_col,)), key_col)
     red = F.when(F.col("hamming") <= max_hamming, F.lit(1)).otherwise(F.lit(0)).cast("long")
     return lagged.groupBy(key_col).agg(
         F.count(F.lit(1)).alias("n_pairs"),

@@ -48,40 +48,34 @@ def dense_grid(ts, cnt, step: int, fill_value: float = 0.0, t0=None):
     return grid, y
 
 
-def gapfill(
-    buckets: DataFrame,
-    granularity: str = "hour",
-    fill_value: float = 0.0,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Dense (url, ts, value) grid; value = cnt where observed else fill.
+def _dense_join(buckets: DataFrame, granularity: str) -> DataFrame:
+    """Every url's dense [min ts, max ts] grid left-joined to its observed
+    buckets: (url, ts, cnt), cnt null where nothing was observed.
 
     The bounds table (one row per url) is explicitly repartitioned by url
     BEFORE the explode: the grid fan-out multiplies rows ~grid-length-fold,
     and AQE would otherwise coalesce the tiny bounds shuffle into one
     partition by byte size — serializing the fan-out, the join, and the
-    downstream CPU-heavy STL stage onto one core.  A user-specified
-    repartition count is exempt from AQE coalescing and is satisfied by the
-    grouped-map UDF's url clustering, so no further shuffle follows."""
-    interval = _INTERVALS[granularity]
-    spark = buckets.sparkSession
-    partitions = partitions or spark.sparkContext.defaultParallelism * 4
+    downstream stage onto one core.  A numbered repartition is exempt from
+    AQE coalescing."""
+    partitions = buckets.sparkSession.sparkContext.defaultParallelism * 4
     bounds = buckets.groupBy("url").agg(F.min("ts").alias("t0"), F.max("ts").alias("t1"))
     grid = bounds.repartition(partitions, "url").select(
-        "url", F.explode(F.sequence("t0", "t1", F.expr(interval))).alias("ts")
+        "url", F.explode(F.sequence("t0", "t1", F.expr(_INTERVALS[granularity]))).alias("ts")
     )
-    return grid.join(buckets, ["url", "ts"], "left").select(
+    return grid.join(buckets, ["url", "ts"], "left")
+
+
+def gapfill(buckets: DataFrame, granularity: str = "hour", fill_value: float = 0.0) -> DataFrame:
+    """Dense (url, ts, value) grid; value = cnt where observed else fill."""
+    return _dense_join(buckets, granularity).select(
         "url",
         "ts",
         F.coalesce(F.col("cnt").cast("double"), F.lit(float(fill_value))).alias("value"),
     )
 
 
-def gapfill_linear(
-    buckets: DataFrame,
-    granularity: str = "hour",
-    partitions: int | None = None,
-) -> DataFrame:
+def gapfill_linear(buckets: DataFrame, granularity: str = "hour") -> DataFrame:
     """Dense (url, ts, value) grid with LINEAR interpolation across gaps.
 
     zero-fill (``gapfill``) is right for crawl COUNTS ("no crawls observed
@@ -92,23 +86,14 @@ def gapfill_linear(
     observation of a url don't exist (the grid spans the url's own observed
     [min, max]), so every gap has both endpoints.
 
-    Plan shape: the same bounded sequence+explode grid as ``gapfill`` (the
-    repartition pin protects the fan-out from AQE byte-based coalescing),
-    then ONE window exchange: the backward last-observation carry and the
-    forward next-observation carry share (partitionBy url, orderBy ts), so
-    Catalyst evaluates both frames in a single sort — no second shuffle, no
-    self-join.  Interpolation itself is codegen arithmetic.
+    Plan shape: the same pinned sequence+explode grid and join as
+    ``gapfill``, then ONE window exchange: the backward last-observation
+    carry and the forward next-observation carry share (partitionBy url,
+    orderBy ts), so Catalyst evaluates both frames in a single sort — no
+    second shuffle, no self-join.  Interpolation itself is codegen
+    arithmetic.
     """
-    interval = _INTERVALS[granularity]
-    spark = buckets.sparkSession
-    partitions = partitions or spark.sparkContext.defaultParallelism * 4
-    bounds = buckets.groupBy("url").agg(F.min("ts").alias("t0"), F.max("ts").alias("t1"))
-    grid = bounds.repartition(partitions, "url").select(
-        "url", F.explode(F.sequence("t0", "t1", F.expr(interval))).alias("ts")
-    )
-    sparse = grid.join(buckets, ["url", "ts"], "left").select(
-        "url", "ts", F.col("cnt").cast("double").alias("_obs")
-    )
+    sparse = _dense_join(buckets, granularity).select("url", "ts", F.col("cnt").cast("double").alias("_obs"))
     back = (
         Window.partitionBy("url")
         .orderBy("ts")

@@ -19,7 +19,8 @@
   construction.  ``extend_ann_index`` appends a new batch via the STORED
   quantizer (per-crawl maintenance — never re-reads or rebuilds the index).
 - embedding near-dup pairs: all pairs with cosine >= threshold, candidates
-  from the same hyperplane LSH cells, exact-verified.
+  from the same hyperplane LSH cells, exact-verified by the pair-cosine UDF
+  the all-pairs baseline uses (each pair found carries the baseline's score).
 
 Scale shape: all vector math runs in Arrow-batched pandas UDFs (one
 float64 matmul / einsum per batch) — Catalyst higher-order-function lambdas
@@ -72,14 +73,6 @@ def pair_cosine_udf():
         return pd.Series(num / (np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)))
 
     return cos
-
-
-def norm_udf():
-    @F.pandas_udf("double")
-    def nrm(v: pd.Series) -> pd.Series:
-        return pd.Series(np.linalg.norm(_stack(v), axis=1))
-
-    return nrm
 
 
 def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -359,18 +352,19 @@ def ann_index_topk(spark, path: str, query: list[float], k: int = 10, probe: int
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    n_planes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """All pairs with cosine >= threshold; candidates restricted to pairs
-    whose LSH buckets are within Hamming distance 1 (same bucket or one
-    differing hyperplane sign — high recall at high thresholds),
-    exact-verified.  Output: (id_a, id_b, cos).
+    whose LSH buckets (the "lsh" kind's default hyperplane count) are within
+    Hamming distance 1 (same bucket or one differing hyperplane sign — high
+    recall at high thresholds), exact-verified with the same cosine as
+    ``all_pairs_cosine``.  Output: (id_a, id_b, cos).
 
     Implemented as probe-explode + bucket equi-join (each vector emitted
     under its bucket and all 1-bit neighbors, joined to anchors) — a
     shuffle-bounded equi-join, not an all-pairs filter."""
+    n_planes = _DEFAULTS["lsh"][0]
     sample = embeddings.limit(1).collect()
     dim = len(sample[0][vec_col]) if sample else 0
     base = _assign(embeddings, "lsh", _hyperplanes(dim, n_planes), id_col, vec_col)
@@ -388,26 +382,10 @@ def embedding_near_dup_pairs(
         .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
         .distinct()
     )
-    # precompute per-vector norms once — the exact-verify pass then only
-    # evaluates one batched dot product per candidate pair
-    nrm = norm_udf()
-    vecs = base.select("vec_id", "v", nrm(F.col("v")).alias("nrm"))
-    pairs = (
-        cands.join(
-            vecs.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")),
-            "id_a",
-        ).join(
-            vecs.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")),
-            "id_b",
-        )
-    )
-
-    @F.pandas_udf("double")
-    def pair_dot(va: pd.Series, vb: pd.Series) -> pd.Series:
-        return pd.Series(np.einsum("ij,ij->i", _stack(va), _stack(vb)))
-
-    cos = pair_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    cos = pair_cosine_udf()
     return (
-        pairs.select("id_a", "id_b", F.round(cos, 6).alias("cos"))
+        cands.join(base.select(F.col("vec_id").alias("id_a"), F.col("v").alias("_va")), "id_a")
+        .join(base.select(F.col("vec_id").alias("id_b"), F.col("v").alias("_vb")), "id_b")
+        .select("id_a", "id_b", F.round(cos(F.col("_va"), F.col("_vb")), 6).alias("cos"))
         .filter(F.col("cos") >= threshold)
     )

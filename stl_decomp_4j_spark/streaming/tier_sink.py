@@ -24,7 +24,7 @@ partition-aligned.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql.streaming import StreamingQuery
 
 def _tier_aggs():
@@ -68,21 +68,17 @@ def refresh_tier_partitions(
         .agg(*_tier_aggs())
         .withColumn("ts", F.col("day"))
     )
-    # persist before count+write: otherwise the buckets scan + aggregation
-    # run twice per micro-batch (once for the row count, once for the sink)
-    tier = tier.persist()
-    try:
-        n = tier.count()
-        (
-            tier.select("url", "ts", "sum_cnt", "min_cnt", "max_cnt", "n_buckets", "day")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("day")
-            .parquet(tier_path)
-        )
-    finally:
-        tier.unpersist()
-    return n
+    # the row count rides on the write job itself: no second scan + agg
+    rows = Observation("tier_refresh_rows")
+    (
+        tier.select("url", "ts", "sum_cnt", "min_cnt", "max_cnt", "n_buckets", "day")
+        .observe(rows, F.count(F.lit(1)).alias("n"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("day")
+        .parquet(tier_path)
+    )
+    return rows.get["n"]
 
 
 def start_tier_refresh_stream(

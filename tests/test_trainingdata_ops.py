@@ -315,6 +315,21 @@ def test_embedding_near_dup_pairs(spark, embeddings):
     assert (0, 50000) in pairs and (1, 50001) in pairs
 
 
+def test_embedding_near_dup_pairs_are_exact_baseline_pairs(spark, embeddings):
+    """Every LSH pair is an exact all-pairs pair, with the same cosine bit
+    for bit: both paths verify through the one pair-cosine UDF."""
+    from stl_decomp_4j_spark.operators.similarity import all_pairs_cosine
+
+    lsh = embedding_near_dup_pairs(embeddings, threshold=0.35).toPandas()
+    exact = all_pairs_cosine(embeddings, threshold=0.35).toPandas()
+    assert len(lsh) > 0 and len(exact) > 0
+    want = {(a, b): c for a, b, c in exact[["id_a", "id_b", "cos"]].itertuples(index=False)}
+    got = {(a, b): c for a, b, c in lsh[["id_a", "id_b", "cos"]].itertuples(index=False)}
+    assert got.keys() <= want.keys(), sorted(got.keys() - want.keys())[:10]
+    mismatched = [k for k, c in got.items() if np.float64(c).tobytes() != np.float64(want[k]).tobytes()]
+    assert not mismatched, mismatched[:10]
+
+
 def test_multimodal_plumbing(spark, docs):
     media = attach_media(docs)
     assert {f.name for f in media.schema.fields} == {"media_id", "kind", "payload", "mime", "n_bytes"}
