@@ -618,47 +618,10 @@ def q_gorilla_compact(spark, sf_dir):
     return stats.join(counts, "url").select("url", "n_points", "n_chunks", "sum_value")
 
 
-def _per_url_series(buckets: DataFrame, schema, per_url) -> DataFrame:
-    """``per_url(ts, y)`` on each url's gap-filled hourly series, in one
-    sorted Arrow map over the url runs of the (url, ts, cnt) ``buckets``
-    (operators/runs.py).  Each run is filled in the kernel with
-    ``gapfill.dense_grid``, the rule the STL kernel uses, so only observed
-    rows cross the shuffle.  ts is UTC datetime64[us], y float64;
-    ``per_url`` returns the columns of ``schema`` after url, one value per
-    output row of that url."""
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    from stl_decomp_4j_spark.operators.gapfill import STEP_SECONDS, dense_grid
-    from stl_decomp_4j_spark.operators.runs import map_runs
-
-    def fn(block: pa.RecordBatch, starts: np.ndarray) -> pa.RecordBatch:
-        ts = block.column("ts").cast(pa.int64()).to_numpy() // 1_000_000
-        cnt = block.column("cnt").to_numpy(zero_copy_only=False).astype(float)
-        ends = np.r_[starts[1:], block.num_rows]
-        outs = []
-        for a, b in zip(starts, ends):
-            grid, y = dense_grid(ts[a:b], cnt[a:b], STEP_SECONDS["hour"])
-            outs.append(per_url((grid * 1_000_000).astype("datetime64[us]"), y))
-        rows = np.repeat(starts, [len(o[schema.names[1]]) for o in outs])
-        return pa.RecordBatch.from_arrays(
-            [
-                block.column("url").take(pa.array(rows)),
-                *(
-                    pa.array(np.concatenate([o[f.name] for o in outs]), type=to_arrow_type(f.dataType))
-                    for f in schema.fields[1:]
-                ),
-            ],
-            names=schema.names,
-        )
-
-    return map_runs(buckets.select("url", "ts", "cnt"), ["url"], ["ts"], fn, schema)
-
-
 def q_stl_fit_stats(spark, sf_dir):
     from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
+    from stl_decomp_4j_spark.operators.stl_udf import map_filled_runs
     from stl_decomp_4j_spark.stl import decompose, stl_fit_stats
 
     schema = StructType(
@@ -686,7 +649,7 @@ def q_stl_fit_stats(spark, sf_dir):
             "seasonal_z": [round(s.seasonal_z_score, 6)],
         }
 
-    return _per_url_series(_events_hourly(spark, sf_dir), schema, per_url)
+    return map_filled_runs(_events_hourly(spark, sf_dir), schema, per_url)
 
 
 def q_stl_periodic(spark, sf_dir):
@@ -731,6 +694,7 @@ def q_stl_seasonal_smooth(spark, sf_dir):
     main/stl/SeasonalTrendLoess.java:686-735)."""
     from pyspark.sql.types import DoubleType, StringType, StructField, StructType, TimestampType
 
+    from stl_decomp_4j_spark.operators.stl_udf import map_filled_runs
     from stl_decomp_4j_spark.stl import decompose
 
     schema = StructType(
@@ -747,7 +711,7 @@ def q_stl_seasonal_smooth(spark, sf_dir):
         d.smooth_seasonal(15)
         return {"ts": ts, "seasonal_smoothed": d.seasonal.round(6), "residual": d.residual.round(6)}
 
-    return _fmt_ts(_per_url_series(_events_hourly(spark, sf_dir), schema, per_url))
+    return _fmt_ts(map_filled_runs(_events_hourly(spark, sf_dir), schema, per_url))
 
 
 def q_stl_exogenous(spark, sf_dir):
@@ -760,6 +724,7 @@ def q_stl_exogenous(spark, sf_dir):
     import pandas as pd
     from pyspark.sql.types import DoubleType, StringType, StructField, StructType, TimestampType
 
+    from stl_decomp_4j_spark.operators.stl_udf import map_filled_runs
     from stl_decomp_4j_spark.stl import decompose
 
     schema = StructType(
@@ -785,7 +750,7 @@ def q_stl_exogenous(spark, sf_dir):
             "residual": d.residual.round(6),
         }
 
-    return _fmt_ts(_per_url_series(_events_hourly(spark, sf_dir), schema, per_url))
+    return _fmt_ts(map_filled_runs(_events_hourly(spark, sf_dir), schema, per_url))
 
 
 def q_multimodal_features(spark, sf_dir):

@@ -27,24 +27,23 @@ STEP_SECONDS = {"hour": 3600, "day": 86400, "week": 604800}
 def dense_grid(ts, cnt, step: int, fill_value: float = 0.0, t0=None):
     """One url's gap-fill in NumPy: the in-process twin of ``gapfill``.
 
-    ``ts`` holds the url's bucket starts as int64 epoch seconds and ``cnt``
-    their observed values.  Returns ``(grid, y)``: the ``step``-spaced grid
-    from ``t0`` (default: the first bucket) to the last bucket, and y = cnt
-    where observed else ``fill_value``.  Buckets before ``t0`` are dropped.
-    A bucket off the grid raises instead of landing, by floor division, in
-    a wrong or shared slot."""
+    ``ts`` holds the url's bucket starts as int64 epoch times and ``cnt``
+    their observed values; ``step`` is in the unit of ``ts``.  Returns
+    ``(grid, y)``: the ``step``-spaced grid from ``t0`` (default: the first
+    bucket; never after it) to the last bucket, and y = cnt where observed
+    else ``fill_value``.  A bucket off the grid raises instead of landing,
+    by floor division, in a wrong or shared slot."""
     if t0 is None:
         t0 = ts.min()
     off = ts - t0
     if (off % step).any():
         raise ValueError(
-            f"bucket timestamps are not aligned to the {step}s grid "
-            f"(granularity mismatch between bucketize and the gap-fill step)"
+            "bucket timestamps are not aligned to the gap-fill grid "
+            "(granularity mismatch between bucketize and the gap-fill step)"
         )
     grid = np.arange(t0, ts.max() + 1, step)
     y = np.full(len(grid), float(fill_value))
-    keep = off >= 0
-    y[off[keep] // step] = cnt[keep]
+    y[off // step] = cnt
     return grid, y
 
 

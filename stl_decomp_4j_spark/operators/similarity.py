@@ -80,12 +80,11 @@ def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
 
     orderBy().limit(k) compiles to TakeOrderedAndProject (per-partition
     partial top-k, no full-data single-partition shuffle); the row_number
-    window then runs over at most k rows.  partitionBy(lit(0)) gives the
-    window an explicit (constant) partition spec — same semantics as a
-    global window, but without WindowExec's move-everything warning path.
+    window then runs over at most k rows, so WindowExec's no-partition
+    warning (everything in one partition) is harmless here.
     """
     top = scored.orderBy(F.col("cos").desc(), F.col("vec_id")).limit(k)
-    w = Window.partitionBy(F.lit(0)).orderBy(F.col("cos").desc(), F.col("vec_id"))
+    w = Window.orderBy(F.col("cos").desc(), F.col("vec_id"))
     return top.withColumn("rank", F.row_number().over(w))
 
 

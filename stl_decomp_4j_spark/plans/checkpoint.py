@@ -30,23 +30,9 @@ class Manifest:
         self.path.parent.mkdir(parents=True, exist_ok=True)
 
     def done_buckets(self, schema_version: int | None = None) -> set[int]:
-        """Buckets with a 'done' row.  When ``schema_version`` is given,
-        refuse to resume across a tier-schema upgrade: appending new-schema
-        partitions beside old-schema ones under the same table root would
-        yield a mixed-schema table that readers fail on or null-fill."""
-        done = set()
-        if self.path.exists():
-            for line in self.path.read_text().splitlines():
-                row = json.loads(line)
-                if row["status"] == "done":
-                    if schema_version is not None and row.get("schema_version", 1) != schema_version:
-                        raise RuntimeError(
-                            f"manifest {self.path} has completed buckets with tier schema "
-                            f"v{row.get('schema_version', 1)}, current engine writes "
-                            f"v{schema_version}; resume refused — use a fresh out_root"
-                        )
-                    done.add(row["bucket"])
-        return done
+        """Buckets with a 'done' row (schema-version-guarded like
+        ``last_done``)."""
+        return set(self.last_done(schema_version))
 
     def mark(self, run_id: str, bucket: int, status: str, **metrics) -> None:
         row = {"run_id": run_id, "bucket": bucket, "status": status, "ts": time.time(), **metrics}
@@ -54,16 +40,25 @@ class Manifest:
             f.write(json.dumps(row) + "\n")
 
     def last_done(self, schema_version: int | None = None) -> dict[int, dict]:
-        """Latest 'done' row per bucket (schema-version-guarded like
-        done_buckets) — incremental runs compare each bucket's recorded
-        ``data_max_ts`` against the input to decide what re-runs."""
-        self.done_buckets(schema_version)  # reuse the version guard
+        """Latest 'done' row per bucket — incremental runs compare each
+        bucket's recorded ``data_max_ts`` against the input to decide what
+        re-runs.  When ``schema_version`` is given, refuse to resume across
+        a tier-schema upgrade: appending new-schema partitions beside
+        old-schema ones under the same table root would yield a mixed-schema
+        table that readers fail on or null-fill."""
         rows: dict[int, dict] = {}
         if self.path.exists():
             for line in self.path.read_text().splitlines():
                 row = json.loads(line)
-                if row["status"] == "done":
-                    rows[row["bucket"]] = row
+                if row["status"] != "done":
+                    continue
+                if schema_version is not None and row.get("schema_version", 1) != schema_version:
+                    raise RuntimeError(
+                        f"manifest {self.path} has completed buckets with tier schema "
+                        f"v{row.get('schema_version', 1)}, current engine writes "
+                        f"v{schema_version}; resume refused — use a fresh out_root"
+                    )
+                rows[row["bucket"]] = row
         return rows
 
 

@@ -8,18 +8,21 @@ windows older than the watermark are finalized and appended to the buckets
 table, from which the periodic batch rollup (gap-fill -> STL -> tiers) runs
 incrementally per closed time range.
 
-This keeps custom stateful logic out of the stream: the only stateful op is
-the built-in windowed aggregation, so Spark owns all state management, and
-the numerically heavy STL stays in deterministic batch recomputation where
-exact parity is verifiable.
+Ingestion itself keeps custom state out of the stream: bucketing is the
+built-in windowed aggregation, so Spark owns its state, and the numerically
+heavy STL stays in deterministic batch recomputation where exact parity is
+verifiable.  The one custom stateful operator here, the streaming gap-fill
+(stream_gapfill_stateful), runs on streaming/keyed.py like its twins.
 """
 from __future__ import annotations
 
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     BinaryType,
+    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -28,6 +31,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.gapfill import dense_grid
+from .keyed import carry_by_key
 
 PAGES_SCHEMA = StructType(
     [
@@ -74,33 +78,19 @@ BUCKET_SCHEMA = StructType(
 
 
 def stream_gapfill_stateful(bucket_rows: DataFrame, step_seconds: int = 3600) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState): streaming gap-fill.
+    """Custom stateful operator: streaming gap-fill.
 
     Consumes finalized (url, ts, cnt) bucket rows (e.g. the append-mode
     output of stream_bucketize re-streamed from the buckets table) and emits
     the DENSE grid rows (url, ts, value) exactly once per grid slot per url:
     observed count where a bucket exists, 0.0 for the gaps — including gaps
-    that span micro-batches or restarts.  Per-url state is one int64 (the
-    last emitted grid slot), checkpointed by Spark; state size is O(urls),
-    independent of history length.
-
-    Late-data semantics: a bucket row at or behind the last emitted grid slot
-    arrives after its slot was already finalized (emitted as observed or as a
-    0.0 gap) — it is DROPPED, mirroring append-mode watermark finalization
-    upstream; re-emitting would duplicate the slot downstream.  Misaligned
-    timestamps (not on the step grid) raise instead of silently colliding
-    into floor-divided slots.  The grid itself is built by the same helper
-    as the batch STL kernel (operators/gapfill.py dense_grid).
-
-    This is the engine's arbitrary-stateful-streaming surface; the built-in
-    watermarked aggregation (stream_bucketize) stays the ingestion path and
-    the numerically heavy STL stays in deterministic batch (ingest module
-    docstring).
+    that span micro-batches or restarts.  Per-url state is the last emitted
+    grid slot (epoch µs).  A bucket at or behind it arrives after its slot
+    was finalized and is dropped (streaming/keyed.py); a misaligned one
+    raises instead of colliding into a floor-divided slot.  The grid is
+    built by the batch STL kernel's helper (operators/gapfill.py dense_grid).
     """
-    import pandas as pd
-
-    from pyspark.sql.types import DoubleType, LongType
-
+    step_us = step_seconds * 1_000_000
     out_schema = StructType(
         [
             StructField("url", StringType()),
@@ -108,34 +98,16 @@ def stream_gapfill_stateful(bucket_rows: DataFrame, step_seconds: int = 3600) ->
             StructField("value", DoubleType()),
         ]
     )
-    state_schema = StructType([StructField("last_slot", LongType())])
 
-    def fn(key, pdf_iter, state):
-        import numpy as np
-
-        url = key[0]
-        parts = [pdf for pdf in pdf_iter if len(pdf)]
-        if not parts:
-            return
-        pdf = pd.concat(parts)
-        ts = pdf["ts"].to_numpy().astype("datetime64[s]").astype(np.int64)
-        (last,) = state.get if state.exists else (None,)
-        t0 = ts.min() if last is None else last + step_seconds
-        t1 = ts.max()
-        if t1 < t0:  # stale replay entirely behind the state: emit nothing
-            return
-        # the grid resumes one slot after the state; late buckets behind it
-        # are dropped, misaligned ones raise (same rule as the batch kernel)
-        grid, vals = dense_grid(ts, pdf["cnt"].to_numpy(dtype=float), step_seconds, t0=t0)
-        state.update((int(t1),))
-        yield pd.DataFrame(
-            {"url": url, "ts": grid.astype("datetime64[s]"), "value": vals}
+    def step(url, ts, pdf, state):
+        # the grid resumes one slot after the state
+        t0 = ts[0] if state is None else state[0] + step_us
+        grid, vals = dense_grid(ts, pdf["cnt"].to_numpy(dtype=float), step_us, t0=t0)
+        return (ts[-1],), pd.DataFrame(
+            {"url": url, "ts": grid.astype("datetime64[us]"), "value": vals}
         )
 
-    return (
-        bucket_rows.groupBy("url")
-        .applyInPandasWithState(fn, out_schema, state_schema, "append", "NoTimeout")
-    )
+    return carry_by_key(bucket_rows, "url", "ts", ["last_us"], step, out_schema)
 
 
 def start_bucket_stream(

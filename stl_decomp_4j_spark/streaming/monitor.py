@@ -8,23 +8,20 @@ exactly once, as soon as the bucket closing the gap arrives.  Alerting-shaped
 output: a pipeline can sink it straight to a notification topic instead of
 re-scanning the bucket table every monitor pass.
 
-State (applyInPandasWithState) is one int64 per url — the last observed grid
-slot — identical in size and checkpoint semantics to the streaming gap-fill's
-state; history length never grows it.  Semantics mirror the batch operator
-bit-for-bit so the two are interchangeable (tested by feeding identical
-buckets through both):
+State, replay and restart rules are streaming/keyed.py's (state: the last
+observed grid slot).  Semantics mirror the batch operator bit-for-bit so the
+two are interchangeable (tested by feeding identical buckets through both):
 
 - leading absence is not a gap (the per-url grid starts at its first
   observed bucket, matching gap-fill's [min, max] convention);
-- a trailing/ongoing outage is NOT emitted until a bucket closes it —
-  append-mode finalization, same as every other streaming stage here;
-- bucket rows at or behind the state's last slot are stale replays and are
-  dropped (their gaps were already emitted exactly once);
+- a trailing/ongoing outage is NOT emitted until a bucket closes it;
 - misaligned timestamps raise loudly (the batch kernel's rule) instead of
   floor-dividing into wrong slots.
 """
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
@@ -33,6 +30,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from .keyed import carry_by_key
 
 OUTAGE_SCHEMA = StructType(
     [
@@ -55,50 +54,28 @@ def stream_outage_monitor(
     closing bucket and never again (per-url last-slot state survives
     restarts via the query checkpoint).
     """
-    import pandas as pd
+    step_us = step_seconds * 1_000_000
 
-    state_schema = StructType([StructField("last_slot", LongType())])
-
-    def fn(key, pdf_iter, state):
-        import numpy as np
-
-        url = key[0]
-        parts = [pdf for pdf in pdf_iter if len(pdf)]
-        if not parts:
-            return
-        pdf = pd.concat(parts).sort_values("ts")
-        ts = np.unique(pdf["ts"].to_numpy().astype("datetime64[s]").astype(np.int64))
-        (last,) = state.get if state.exists else (None,)
-        if last is not None:
-            ts = ts[ts > last]
-        if not len(ts):
-            return  # stale replay entirely behind the state
-        anchor = ts[0] if last is None else last
-        if ((ts - anchor) % step_seconds).any():
+    def step(url, ts, pdf, state):
+        # the state's last slot leads the sequence, so a gap spanning
+        # micro-batches / restarts is measured from the previous bucket
+        seq = np.unique(ts if state is None else np.r_[state[0], ts])
+        if ((seq - seq[0]) % step_us).any():
             raise ValueError(
                 f"bucket timestamps for url={url!r} are not aligned to the "
                 f"{step_seconds}s grid (granularity mismatch between the "
                 f"bucket stream and the monitor step)"
             )
-        # prepend the state's last slot so a gap spanning micro-batches /
-        # restarts is measured from the previously observed bucket
-        seq = ts if last is None else np.concatenate(([last], ts))
-        missing = np.diff(seq) // step_seconds - 1
+        missing = np.diff(seq) // step_us - 1
         hit = missing >= int(min_missing)
-        state.update((int(ts[-1]),))
-        if not hit.any():
-            return
-        prev = seq[:-1][hit]
-        nxt = seq[1:][hit]
-        yield pd.DataFrame(
+        prev, nxt = seq[:-1][hit], seq[1:][hit]
+        return (seq[-1],), pd.DataFrame(
             {
                 "url": url,
-                "gap_start": (prev + step_seconds).astype("datetime64[s]"),
-                "gap_end": (nxt - step_seconds).astype("datetime64[s]"),
+                "gap_start": (prev + step_us).astype("datetime64[us]"),
+                "gap_end": (nxt - step_us).astype("datetime64[us]"),
                 "missing": missing[hit],
             }
         )
 
-    return bucket_rows.groupBy("url").applyInPandasWithState(
-        fn, OUTAGE_SCHEMA, state_schema, "append", "NoTimeout"
-    )
+    return carry_by_key(bucket_rows, "url", "ts", ["last_us"], step, OUTAGE_SCHEMA)

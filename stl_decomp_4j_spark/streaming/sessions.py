@@ -11,21 +11,17 @@ matches the batch engine's integer session ids and its duplicate-instant
 collapse rule bit-for-bit, so stream output == batch output minus each url's
 trailing OPEN session (tested by feeding identical events through both).
 
-State (applyInPandasWithState) is four int64s per url — open-session id,
-start, last instant (microseconds), event count — constant regardless of
-history length, restart-safe via the query checkpoint.
-
-Semantics:
-- instants at or behind the state's last instant are stale replays and are
-  dropped (their sessions were already counted; duplicate instants that
-  should count must arrive in the same micro-batch, which holds for any
-  upstream that finalizes per-instant rows before appending them);
-- the trailing session is NOT emitted until a later event closes it —
-  append-mode finalization, same as every streaming stage here;
-- the gap rule is strict (> gap_s starts a new session), identical to batch.
+State, replay and restart rules are streaming/keyed.py's (state: last
+instant, open-session id, its start, its event count).  Duplicate instants
+that should count must arrive in the same micro-batch, which holds for any
+upstream that finalizes per-instant rows before appending them.  The
+trailing session is NOT emitted until a later event closes it; the gap rule
+is strict (> gap_s starts a new session), identical to batch.
 """
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType,
@@ -35,6 +31,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from .keyed import carry_by_key
 
 SESSION_SCHEMA = StructType(
     [
@@ -60,73 +58,32 @@ def stream_session_monitor(event_rows: DataFrame, gap_s: int = 7200) -> DataFram
     checkpoint).  ``session_id`` is 1-based per url in time order, matching
     the batch ``session_summary``.
     """
-    import pandas as pd
-
-    state_schema = StructType(
-        [
-            StructField("seq", LongType()),
-            StructField("start_us", LongType()),
-            StructField("last_us", LongType()),
-            StructField("n", LongType()),
-        ]
-    )
     gap_us = int(gap_s) * 1_000_000
 
-    def fn(key, pdf_iter, state):
-        import numpy as np
-
-        url = key[0]
-        parts = [pdf for pdf in pdf_iter if len(pdf)]
-        if not parts:
-            return
-        t_us = (
-            pd.concat(parts)["ts"]
-            .to_numpy()
-            .astype("datetime64[us]")
-            .astype(np.int64)
-        )
-        uniq, counts = np.unique(t_us, return_counts=True)
-        if state.exists:
-            seq, start, last, n = state.get
-            keep = uniq > last
-            uniq, counts = uniq[keep], counts[keep]
-        else:
-            seq, start, last, n = 0, None, None, 0
-        if not len(uniq):
-            return  # stale replay entirely behind the state
-        boundaries = np.empty(len(uniq), dtype=bool)
-        boundaries[0] = last is None or (uniq[0] - last) > gap_us
-        boundaries[1:] = np.diff(uniq) > gap_us
-        ids = np.cumsum(boundaries)  # 0 = continuation of the carried session
-        seg = (
-            pd.DataFrame({"id": ids, "t": uniq, "c": counts})
-            .groupby("id", sort=True)
-            .agg(t0=("t", "min"), t1=("t", "max"), gn=("c", "sum"))
-        )
-        closed = []
-        for gid, row in seg.iterrows():
-            if gid == 0:  # extend the carried open session
-                last, n = int(row.t1), n + int(row.gn)
-                continue
-            if start is not None:  # close the current open session
-                closed.append((seq, start, last, n))
-            seq += 1
-            start, last, n = int(row.t0), int(row.t1), int(row.gn)
-        state.update((int(seq), int(start), int(last), int(n)))
-        if not closed:
-            return
-        sid, s0, s1, sn = (np.array(x) for x in zip(*closed))
-        yield pd.DataFrame(
+    def step(url, ts, pdf, state):
+        t, c = np.unique(ts, return_counts=True)
+        heads = np.r_[0, np.flatnonzero(np.diff(t) > gap_us) + 1]
+        t0, t1, n = t[heads], t[np.r_[heads[1:], len(t)] - 1], np.add.reduceat(c, heads)
+        first_id = 1
+        if state is not None:
+            last, first_id, start, count = state
+            if t[0] - last > gap_us:  # the open session is closed
+                t0, t1, n = np.r_[start, t0], np.r_[last, t1], np.r_[count, n]
+            else:  # the first segment extends the open session
+                t0[0], n[0] = start, n[0] + count
+        ids = first_id + np.arange(len(t0))
+        # every session but the last is closed; the last stays open
+        return (t1[-1], ids[-1], t0[-1], n[-1]), pd.DataFrame(
             {
                 "url": url,
-                "session_id": sid,
-                "start_ts": s0.astype("datetime64[us]"),
-                "end_ts": s1.astype("datetime64[us]"),
-                "n_events": sn,
-                "duration_s": (s1 - s0) / 1e6,
+                "session_id": ids[:-1],
+                "start_ts": t0[:-1].astype("datetime64[us]"),
+                "end_ts": t1[:-1].astype("datetime64[us]"),
+                "n_events": n[:-1],
+                "duration_s": (t1[:-1] - t0[:-1]) / 1e6,
             }
         )
 
-    return event_rows.groupBy("url").applyInPandasWithState(
-        fn, SESSION_SCHEMA, state_schema, "append", "NoTimeout"
+    return carry_by_key(
+        event_rows, "url", "ts", ["last_us", "seq", "start_us", "n"], step, SESSION_SCHEMA
     )

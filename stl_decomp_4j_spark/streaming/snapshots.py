@@ -16,17 +16,18 @@ fingerprint per document with the same codegen expressions before this stage
 — and at 100 TB you want the fingerprint persisted alongside the document
 anyway (it is the dedup index).
 
-State (applyInPandasWithState) is two int64s per source — last seen doc_id +
-its simhash — constant regardless of history length, restart-safe via the
-query checkpoint.  Rows at or behind the state's doc_id are stale replays and
-are dropped (same convention as streaming/sessions.py): their verdicts were
-already emitted, and append-mode finalization means a verdict is final the
-moment it is emitted.
+State, replay and restart rules are streaming/keyed.py's (state: the last
+seen doc_id and its simhash).
 """
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from ..codec.gorilla import _popcount64
+from .keyed import carry_by_key
 
 SNAPSHOT_IN_SCHEMA = StructType(
     [
@@ -52,43 +53,18 @@ def stream_snapshot_dedup(rows: DataFrame, max_hamming: int = 4) -> DataFrame:
     Append-mode: one output row per redundant snapshot, emitted exactly once.
     ref semantics: operators/dedup.py snapshot_dedup (batch lag-1 window).
     """
-    import numpy as np
-    import pandas as pd
 
-    from ..codec.gorilla import _popcount64
-
-    state_schema = StructType(
-        [StructField("last_id", LongType()), StructField("last_sh", LongType())]
-    )
-
-    def fn(key, pdf_iter, state):
-        source = key[0]
-        parts = [p for p in pdf_iter if len(p)]
-        if not parts:
-            return
-        pdf = pd.concat(parts).sort_values("doc_id")
-        ids = pdf["doc_id"].to_numpy(np.int64)
+    def step(source, ids, pdf, state):
         shs = pdf["simhash"].to_numpy(np.int64)
-        if state.exists:
-            last_id, last_sh = state.get
-            keep = ids > last_id
-            ids, shs = ids[keep], shs[keep]
-            if not len(ids):
-                return  # stale replay entirely behind the state
-            prev_ids = np.concatenate(([last_id], ids[:-1]))
-            prev_shs = np.concatenate(([last_sh], shs[:-1]))
-            valid = np.ones(len(ids), dtype=bool)
-        else:
-            prev_ids = np.concatenate((ids[:1], ids[:-1]))
-            prev_shs = np.concatenate((shs[:1], shs[:-1]))
-            valid = np.ones(len(ids), dtype=bool)
-            valid[0] = False  # the key's first-ever snapshot has no predecessor
-        state.update((int(ids[-1]), int(shs[-1])))
-        ham = _popcount64(np.bitwise_xor(shs, prev_shs).view(np.uint64)).astype(np.int64)
-        mask = valid & (ham <= max_hamming)
-        if not mask.any():
-            return
-        yield pd.DataFrame(
+        last_id, last_sh = (ids[0], shs[0]) if state is None else state
+        prev_ids = np.r_[last_id, ids[:-1]]
+        ham = _popcount64(
+            np.bitwise_xor(shs, np.r_[last_sh, shs[:-1]]).view(np.uint64)
+        ).astype(np.int64)
+        mask = ham <= max_hamming
+        if state is None:
+            mask[0] = False  # a key's first-ever snapshot has no predecessor
+        return (ids[-1], shs[-1]), pd.DataFrame(
             {
                 "source": source,
                 "doc_id": ids[mask],
@@ -97,6 +73,6 @@ def stream_snapshot_dedup(rows: DataFrame, max_hamming: int = 4) -> DataFrame:
             }
         )
 
-    return rows.groupBy("source").applyInPandasWithState(
-        fn, SNAPSHOT_OUT_SCHEMA, state_schema, "append", "NoTimeout"
+    return carry_by_key(
+        rows, "source", "doc_id", ["last_id", "last_sh"], step, SNAPSHOT_OUT_SCHEMA
     )

@@ -7,10 +7,10 @@
 * No dead code: every top-level function and class of the program files is
   referred to by name from some ``.py`` file of the repo (tests and
   perfbench count).
-* One per-key Python stage shape: the program's per-series stages run on
-  ``operators/runs.map_runs``, so no grouped-map ``applyInPandas`` comes
-  back (the streaming operators' ``applyInPandasWithState`` is another
-  operator and stays)."""
+* One per-key Python loop per kind of stage: the program's batch
+  per-series stages run on ``operators/runs.map_runs``, so no grouped-map
+  ``applyInPandas`` comes back, and its stateful streams run on
+  ``streaming/keyed.carry_by_key``, the only ``applyInPandasWithState``."""
 import ast
 import re
 from pathlib import Path
@@ -67,16 +67,19 @@ def test_every_top_level_definition_is_referenced():
 
 
 def test_no_grouped_map_apply_in_pandas():
-    files = [
-        p for p in _py_files("__spark_entry__.py", "stl_decomp_4j_spark")
-        if "streaming" not in p.relative_to(REPO).parts
-    ]
+    keyed = REPO / "stl_decomp_4j_spark" / "streaming" / "keyed.py"
     calls = [
-        f"{path.relative_to(REPO)}:{node.lineno}"
-        for path in files
+        f"{path.relative_to(REPO)}:{node.lineno} {node.func.attr}"
+        for path in _py_files("__spark_entry__.py", "stl_decomp_4j_spark")
         for node in ast.walk(ast.parse(path.read_text()))
         if isinstance(node, ast.Call)
         and isinstance(node.func, ast.Attribute)
-        and node.func.attr == "applyInPandas"
+        and (
+            node.func.attr == "applyInPandas"
+            or (node.func.attr == "applyInPandasWithState" and path != keyed)
+        )
     ]
-    assert calls == [], "per-key Python stages go through operators/runs.map_runs"
+    assert calls == [], (
+        "per-key Python stages go through operators/runs.map_runs (batch) "
+        "or streaming/keyed.carry_by_key (stateful streams)"
+    )

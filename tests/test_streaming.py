@@ -57,8 +57,9 @@ def test_stream_bucketize_matches_batch(spark, tmp_path):
 
 def test_stream_gapfill_stateful_across_restarts(spark, tmp_path):
     """applyInPandasWithState gap-fill: dense grid emitted exactly once per
-    (url, hour), gaps filled with 0 — including gaps spanning micro-batches
-    and a query RESTART (state restored from the checkpoint)."""
+    (url, hour), gaps filled with 0 — including gaps spanning micro-batches,
+    a query RESTART (state restored from the checkpoint) and a replay of
+    already-emitted buckets."""
     import datetime as dt
 
     import pyspark.sql.functions as F
@@ -94,12 +95,19 @@ def test_stream_gapfill_stateful_across_restarts(spark, tmp_path):
     # batch 2 (after a full restart): hours 7,8 for u1 -> 5,6 must be gap rows
     spark.createDataFrame(rows([(7, 4), (8, 1)]), BUCKET_SCHEMA).write.mode("append").parquet(src)
     run_once()
+    # batch 3 (a replay): already-emitted buckets of both urls, a stale
+    # off-grid u1 bucket (dropped like any row behind the state, before the
+    # alignment check) and one new u1 bucket at hour 11 -> 9, 10 are gaps
+    replay = rows([(4, 7), (8, 1), (11, 6)]) + rows([(2, 3)], url="u2")
+    replay.append(("u1", t0 + dt.timedelta(hours=3, minutes=30), 9))
+    spark.createDataFrame(replay, BUCKET_SCHEMA).write.mode("append").parquet(src)
+    run_once()
 
     got = spark.read.parquet(out).toPandas()
     u1 = got[got["url"] == "u1"].sort_values("ts")
     hours = [(ts - t0).total_seconds() / 3600 for ts in u1["ts"]]
-    assert hours == [0, 1, 2, 3, 4, 5, 6, 7, 8]  # dense, exactly once
-    assert list(u1["value"]) == [5.0, 2.0, 0.0, 0.0, 7.0, 0.0, 0.0, 4.0, 1.0]
+    assert hours == list(range(12))  # dense, exactly once
+    assert list(u1["value"]) == [5.0, 2.0, 0.0, 0.0, 7.0, 0.0, 0.0, 4.0, 1.0, 0.0, 0.0, 6.0]
     u2 = got[got["url"] == "u2"].sort_values("ts")
     assert list(u2["value"]) == [1.0, 0.0, 3.0]
 
