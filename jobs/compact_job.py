@@ -10,7 +10,7 @@ rewrites) back into maximally-filled chunks.  Detection is metadata-only;
 only (bucket, slab) partitions that actually contain fragmented groups are
 rewritten (idempotent partition overwrite), and every rewrite gets a lineage
 row.  A second pass is a no-op — each group is packed to its minimum chunk
-count.  The slab granularity comes from the store's own manifest, so merged
+count.  The slab granularity comes from the store's own params.json, so merged
 chunks never cross a calendar-slab boundary and metadata-only retention
 keeps working.
 """

@@ -9,8 +9,8 @@
 Drops wholly-expired (bucket, slab) partitions from the tier and Gorilla
 tables (metadata-only — no rows read, no chunks rewritten) and records every
 drop in the lineage manifest.  Negative keep = keep forever (default for
-tiers not passed).  The slab granularity comes from the store's manifest;
---slab merely asserts it.
+tiers not passed).  The slab granularity comes from the store's own
+params.json; a root without one is refused.
 """
 from __future__ import annotations
 
@@ -26,11 +26,6 @@ def main() -> None:
     ap.add_argument("--keep-1d", type=int, default=-1)
     ap.add_argument("--keep-1w", type=int, default=-1)
     ap.add_argument("--now", default=None, help="ISO timestamp for the cutoff clock (default: wall clock)")
-    ap.add_argument(
-        "--slab", default=None, choices=["day", "week", "month"],
-        help="assert the store's slab granularity (it is read from the store's "
-        "manifest; a mismatch fails loudly)",
-    )
     args = ap.parse_args()
 
     from stl_decomp_4j_spark.operators.retention import apply_retention
@@ -39,7 +34,7 @@ def main() -> None:
     now = dt.datetime.fromisoformat(args.now) if args.now else dt.datetime.now()
     policy = {"1h": args.keep_1h, "1d": args.keep_1d, "1w": args.keep_1w}
     spark = build_session(app_name="stl-retention")
-    dropped = apply_retention(spark, args.output, policy, now=now, slab=args.slab)
+    dropped = apply_retention(spark, args.output, policy, now=now)
     print(json.dumps({
         "now": now.isoformat(),
         "policy": policy,

@@ -6,12 +6,15 @@
         --input /path/to/pages_parquet_or_iceberg_table \
         --output /path/to/rollup_root \
         [--period 24] [--seasonal-width 35] [--robust] \
-        [--buckets 64] [--resume] [--incremental] [--granularity hour]
+        [--buckets 64] [--incremental] [--granularity hour]
 
 Reads the (url, warc_ts, html, text, lang) pages table, derives per-url
-crawl-activity series, gap-fills, STL-decomposes, writes 1h/1d/1w Gorilla-
-compressed retention tiers with per-bucket lineage + metrics, and resumes
-from the manifest when --resume is passed.
+crawl-activity series, gap-fills, STL-decomposes, and writes 1h/1d/1w
+Gorilla-compressed retention tiers with per-bucket lineage + metrics.  The
+first run on --output records its parameters in <output>/params.json; a
+later run with any other parameter fails before any work (use a fresh
+--output for a new config).  --incremental re-runs only the buckets that
+are not done or whose data advanced, so it also finishes a crashed run.
 """
 from __future__ import annotations
 
@@ -28,12 +31,12 @@ def main() -> None:
     ap.add_argument("--seasonal-width", type=int, default=35)
     ap.add_argument("--robust", action="store_true")
     ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--resume", action="store_true")
     ap.add_argument(
         "--incremental",
         action="store_true",
-        help="re-run only buckets whose max(warc_ts) advanced past their last "
-        "done manifest row (streaming-append -> periodic-batch refresh)",
+        help="re-run only buckets with no done manifest row or whose "
+        "max(warc_ts) advanced past it (crash recovery, and streaming-append "
+        "-> periodic-batch refresh)",
     )
     ap.add_argument("--granularity", default="hour", choices=["hour", "day", "week"])
     ap.add_argument("--no-compress", action="store_true")
@@ -56,9 +59,7 @@ def main() -> None:
         n_buckets=args.buckets,
         compress=not args.no_compress,
     )
-    result = run_pipeline(
-        spark, pages, args.output, cfg, resume=args.resume, incremental=args.incremental
-    )
+    result = run_pipeline(spark, pages, args.output, cfg, incremental=args.incremental)
     print(
         json.dumps(
             {

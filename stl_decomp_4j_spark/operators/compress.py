@@ -407,16 +407,17 @@ def compact_store(
     rewritten partition gets a lineage row (status='compaction') with
     before/after chunk counts.
 
-    The slab granularity is read from the store's manifest (see
-    store_slab_granularity) — merged chunks never cross a slab boundary, so
-    metadata-only retention keeps working on compacted stores."""
+    The slab granularity is read from the store's params.json (a root
+    without one raises ValueError) — merged chunks never cross a slab
+    boundary, so metadata-only retention keeps working on compacted
+    stores."""
     import pyspark.sql.functions as F
 
-    from ..plans.checkpoint import Manifest, new_run_id
+    from ..plans.checkpoint import Manifest, check_params, new_run_id
     from ..sources.catalog import write_table
-    from .retention import _hadoop_fs, store_slab_granularity
+    from .retention import _hadoop_fs
 
-    slab = store_slab_granularity(out_root)
+    slab = check_params(out_root, "tier store")["slab"]
     manifest = Manifest(out_root)
     run_id = new_run_id()
     summary: dict[str, dict] = {}

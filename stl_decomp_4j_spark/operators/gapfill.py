@@ -65,12 +65,12 @@ def _dense_join(buckets: DataFrame, granularity: str) -> DataFrame:
     return grid.join(buckets, ["url", "ts"], "left")
 
 
-def gapfill(buckets: DataFrame, granularity: str = "hour", fill_value: float = 0.0) -> DataFrame:
-    """Dense (url, ts, value) grid; value = cnt where observed else fill."""
+def gapfill(buckets: DataFrame, granularity: str = "hour") -> DataFrame:
+    """Dense (url, ts, value) grid; value = cnt where observed else 0."""
     return _dense_join(buckets, granularity).select(
         "url",
         "ts",
-        F.coalesce(F.col("cnt").cast("double"), F.lit(float(fill_value))).alias("value"),
+        F.coalesce(F.col("cnt").cast("double"), F.lit(0.0)).alias("value"),
     )
 
 

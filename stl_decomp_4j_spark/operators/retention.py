@@ -17,11 +17,12 @@ Semantics (TimescaleDB drop_chunks-style):
     January slab but aggregates data through Feb 4), so retention never
     removes data younger than the cutoff and may keep up to one slab plus
     one bucket longer (documented over-retention, never under-retention)
-  - retention composes with resume/incremental runs: the manifest's done
-    rows and data high-water marks are untouched, so an incremental refresh
-    skips unchanged buckets and does NOT resurrect dropped slabs; a full
-    non-resume recompute regenerates them from raw data (by design — raw
-    retains everything)
+  - retention composes with incremental runs: the manifest's done rows and
+    data high-water marks are untouched, so an incremental refresh skips
+    unchanged buckets and does NOT resurrect dropped slabs; a full
+    recompute regenerates them from raw data (by design — raw retains
+    everything)
+  - the slab granularity is the store's own, read from its params.json
   - every drop is recorded in the manifest (status='retention') for lineage
 """
 from __future__ import annotations
@@ -31,7 +32,7 @@ import urllib.parse
 
 from pyspark.sql import SparkSession
 
-from ..plans.checkpoint import Manifest, new_run_id
+from ..plans.checkpoint import Manifest, check_params, new_run_id
 
 TIERS = ("1h", "1d", "1w")
 
@@ -88,41 +89,11 @@ def expired_slab_dirs(
     return out
 
 
-def store_slab_granularity(out_root: str) -> str:
-    """The calendar-slab granularity a store was written with, read from its
-    own manifest (every done row records it).  Maintenance jobs (retention,
-    compaction) MUST use this instead of trusting a caller flag: a mismatched
-    flag would silently mis-compute slab boundaries — an under-retention /
-    cross-slab-chunk footgun."""
-    recorded = {
-        row.get("slab_granularity")
-        for row in Manifest(out_root).last_done().values()
-        if "slab_granularity" in row
-    }
-    if len(recorded) > 1:
-        raise RuntimeError(
-            f"store {out_root} has mixed slab granularities: {sorted(map(str, recorded))}"
-        )
-    if not recorded:
-        raise RuntimeError(
-            f"store {out_root} has no recorded slab granularity (pre-slab layout?); "
-            "slab-aware maintenance needs a (bucket, slab)-partitioned store"
-        )
-    store_slab = next(iter(recorded))
-    if store_slab is None:
-        raise RuntimeError(
-            f"store {out_root} was written with slab=None (no slab partition level); "
-            "slab-aware maintenance is not supported on it"
-        )
-    return store_slab
-
-
 def apply_retention(
     spark: SparkSession,
     out_root: str,
     policy: dict[str, int],
     now: dt.datetime,
-    slab: str | None = None,
 ) -> dict[str, list[str]]:
     """Drop expired slab partitions per tier.
 
@@ -130,22 +101,16 @@ def apply_retention(
     from the policy (or mapped to a negative value) are kept forever.
     Returns {table: [dropped 'bucket=N/slab=V', ...]}.
 
-    The slab granularity is read from the store's own manifest (the pipeline
-    records it per done row); passing ``slab`` only asserts it matches.
-    Trusting a caller flag instead would be an under-retention footgun: a
-    'day' flag against a month-slabbed store computes month-long slabs as
-    ending a day after they start, dropping data weeks younger than the
-    cutoff."""
+    The slab granularity is read from the store's own params.json (the
+    pipeline records its config there); a root without one raises
+    ValueError.  There is no caller flag for it: a 'day' flag against a
+    month-slabbed store would compute month-long slabs as ending a day after
+    they start, dropping data weeks younger than the cutoff."""
     unknown = set(policy) - set(TIERS)
     if unknown:
         raise ValueError(f"unknown tiers in retention policy: {sorted(unknown)}")
+    slab = check_params(out_root, "tier store")["slab"]
     manifest = Manifest(out_root)
-    store_slab = store_slab_granularity(out_root)
-    if slab is not None and slab != store_slab:
-        raise ValueError(
-            f"requested slab granularity {slab!r} does not match the store's {store_slab!r}"
-        )
-    slab = store_slab
     run_id = new_run_id()
     dropped: dict[str, list[str]] = {}
     for tier_name in TIERS:

@@ -95,23 +95,19 @@ def ohlc_rollup(
 ) -> DataFrame:
     """Open-high-low-close per (url, bucket) — TimescaleDB ``ohlc()`` /
     ``candlestick_agg``: open/close are the earliest/latest sample's value
-    (``min_by``/``max_by`` on the timestamp — deterministic when instants are
-    unique; collapse duplicates upstream), high/low are plain max/min.
+    (deterministic when instants are unique; collapse duplicates upstream),
+    high/low are plain max/min.
 
-    One partial+final hash aggregate: min_by/max_by carry (ts, value) pairs
-    through the partial phase, so there is no window, no sort, no join.
+    Each sample is a one-sample candle (open = high = low = close = value,
+    cnt = 1) rolled up by ``ohlc_from_tier``: one partial+final hash
+    aggregate, no window, no sort, no join.
     """
-    b = points.withColumn("_b", F.date_trunc(granularity, ts_col))
-    out = b.groupBy("url", "_b").agg(
-        F.min_by(value_col, ts_col).alias("open"),
-        F.max(value_col).alias("high"),
-        F.min(value_col).alias("low"),
-        F.max_by(value_col, ts_col).alias("close"),
-        F.count(F.lit(1)).alias("cnt"),
+    v = F.col(value_col)
+    candles = points.select(
+        "url", ts_col, *(v.alias(c) for c in ("open", "high", "low", "close")),
+        F.lit(1).cast("long").alias("cnt"),
     )
-    return out.withColumnRenamed("_b", ts_col).select(
-        "url", ts_col, "open", "high", "low", "close", "cnt"
-    )
+    return ohlc_from_tier(candles, granularity, ts_col)
 
 
 def ohlc_from_tier(

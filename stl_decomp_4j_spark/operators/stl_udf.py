@@ -92,13 +92,12 @@ def map_filled_runs(
     schema: StructType,
     per_url,
     granularity: str = "hour",
-    fill_value: float = 0.0,
 ) -> DataFrame:
     """``per_url(ts, y)`` on each url's gap-filled series, in one sorted
     Arrow map over the url runs of the (url, ts, cnt) ``buckets``
     (runs.map_runs).  Each run is filled in the kernel by
     ``gapfill.dense_grid`` — per-url [min ts, max ts], observed cnt else
-    ``fill_value``, the distributed ``gapfill()`` grid — so only observed
+    0, the distributed ``gapfill()`` grid — so only observed
     rows cross the shuffle and the Arrow boundary.  ``ts`` is UTC
     datetime64[us], ``y`` float64; ``per_url`` returns the columns of
     ``schema`` after url, one value per output row of that url."""
@@ -110,7 +109,7 @@ def map_filled_runs(
         cnt = block.column("cnt").to_numpy(zero_copy_only=False).astype(float)
         outs = []
         for a, b in zip(starts, np.r_[starts[1:], block.num_rows]):
-            grid, y = dense_grid(ts[a:b], cnt[a:b], step, fill_value)
+            grid, y = dense_grid(ts[a:b], cnt[a:b], step)
             outs.append(per_url(grid.astype("datetime64[us]"), y))
         rows = np.repeat(starts, [len(o[schema.names[1]]) for o in outs])
         return pa.RecordBatch.from_arrays(
@@ -131,7 +130,6 @@ def stl_decompose_sparse_df(
     buckets: DataFrame,
     period: int,
     granularity: str = "hour",
-    fill_value: float = 0.0,
     **config_kwargs,
 ) -> DataFrame:
     """(url, ts, cnt) buckets -> decomposed dense grid
@@ -144,5 +142,5 @@ def stl_decompose_sparse_df(
     the CPU-heavy stage; it runs one task per core, like every Python stage
     (see runs.map_runs)."""
     return map_filled_runs(
-        buckets, STL_SCHEMA, _stl_per_url(period, config_kwargs), granularity, fill_value
+        buckets, STL_SCHEMA, _stl_per_url(period, config_kwargs), granularity
     )

@@ -1,6 +1,8 @@
 """The north-rule pipeline: pages -> bucketize -> gap-fill + STL ->
-1h/1d/1w retention tiers -> Gorilla-compressed sink, with checkpoint/resume,
-per-bucket lineage + metrics, and the per-url text byte-identity invariant.
+1h/1d/1w retention tiers -> Gorilla-compressed sink, with incremental
+refresh, per-bucket lineage + metrics, and the per-url text byte-identity
+invariant.  The store describes itself: ``<out_root>/params.json`` records
+the config and tier schema version, and every later call checks it.
 
 Physical shape (SURVEY.md §3.4): Iceberg/parquet scan (column-pruned to
 url+warc_ts) -> hash agg bucketize (partial+final) -> numbered url
@@ -31,7 +33,8 @@ from __future__ import annotations
 
 import time
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
+from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -41,15 +44,15 @@ from .operators.bucketize import bucketize
 from .operators.compress import compress_tier
 from .operators.rollup import hourly_tier, rollup_tier
 from .operators.stl_udf import stl_decompose_sparse_df
-from .plans.checkpoint import Manifest, new_run_id
+from .plans.checkpoint import Manifest, check_params, new_run_id, write_params
 from .sources.catalog import write_table
 from .sources.pages import text_digests
 
 
 # bump when the persisted tier/gorilla table schema changes (v2 = compact 1h
 # tier; v3 = calendar-slab partition level for metadata-only retention); the
-# manifest records it so --resume across an upgrade fails loudly instead of
-# appending mixed-schema partitions under one table root
+# store's params.json records it so a run across an upgrade fails loudly
+# instead of appending mixed-schema partitions under one table root
 TIER_SCHEMA_VERSION = 3
 
 # threads for the jobs off the dependent chain: the largest number of them in
@@ -66,11 +69,10 @@ class PipelineConfig:
     granularity: str = "hour"
     n_buckets: int = 8
     compress: bool = True
-    # calendar slab for the second partition level (bucket, slab): Gorilla
-    # chunks are slab-aligned and retention (operators/retention.py) drops
-    # whole expired slabs on metadata alone.  None = single-level bucket
-    # partitioning, no slab-bounded chunks, no retention support.
-    slab: str | None = "month"
+    # calendar slab ('day', 'week' or 'month') for the second partition
+    # level (bucket, slab): Gorilla chunks are slab-aligned and retention
+    # (operators/retention.py) drops whole expired slabs on metadata alone
+    slab: str = "month"
 
 
 @dataclass
@@ -102,33 +104,44 @@ def run_pipeline(
     pages: DataFrame,
     out_root: str,
     cfg: PipelineConfig | None = None,
-    resume: bool = False,
     incremental: bool = False,
 ) -> PipelineResult:
     """Full pipeline with bucket-sliced checkpointing.
 
     Buckets are url-hash slices; each is decomposed and written independently
-    so a failed run resumes from the first incomplete bucket.  Output
-    partitions are (bucket, ...) so rewrites are idempotent.
+    and marked done in the manifest.  Output partitions are (bucket, slab) so
+    rewrites are idempotent.
 
-    ``resume=True`` skips buckets with a 'done' manifest row (crash
-    recovery).  ``incremental=True`` is the streaming-append → periodic-batch
-    mode: a bucket is skipped only if its data high-water mark
-    (``max(warc_ts)``, recorded in every done row as ``data_max_ts``) has not
-    advanced since its last completed run — freshly-appended data re-runs
-    exactly the buckets it touched and rewrites their partitions
-    idempotently.  The high-water mark detects appends (the ingest path);
-    backfills of strictly-older rows need a plain full run.
+    The first call on ``out_root`` records the config and
+    ``TIER_SCHEMA_VERSION`` in its ``params.json``; every later call raises
+    ValueError before any Spark work unless its parameters match (a full
+    run overwrites only the partitions it writes, and an incremental one
+    skips buckets, so any other config would leave stale or mixed
+    partitions).  A new config needs a fresh ``out_root``.
+
+    ``incremental=True`` skips a bucket only if its data high-water mark
+    (``max(warc_ts)``, recorded in every done row as ``data_max_ts``) has
+    not advanced since its last completed run: a re-run on the same input
+    after a crash runs exactly the buckets left unmarked, and
+    freshly-appended data re-runs exactly the buckets it touched and
+    rewrites their partitions idempotently.  The high-water mark detects
+    appends (the ingest path); backfills of strictly-older rows need a plain
+    full run.
 
     Jobs that feed nothing downstream run on a pool owned by this call (see
     the module docstring).  A bucket is marked done only after all of its
     Gorilla writes have finished; a failure in any of them propagates out
-    of this call and leaves the bucket unmarked, so ``resume=True`` re-runs
-    it.
+    of this call and leaves the bucket unmarked, so an incremental re-run
+    runs it again.
     """
     cfg = cfg or PipelineConfig()
     t_start = time.time()
+    params = {**asdict(cfg), "schema_version": TIER_SCHEMA_VERSION}
     manifest = Manifest(out_root)
+    if manifest.path.exists() or (Path(out_root) / "params.json").exists():
+        check_params(out_root, "tier store", **params)
+    else:
+        write_params(out_root, params)
     run_id = new_run_id()
 
     result = PipelineResult(run_id=run_id)
@@ -136,11 +149,9 @@ def run_pipeline(
     pages_b = pages.withColumn("bucket", bucket_col)
     # second partition level for retention: slab = calendar slab of the
     # row (tier) / of the slab-aligned chunk's start (gorilla)
-    part_cols = ["bucket"] + (["slab"] if cfg.slab else [])
+    part_cols = ["bucket", "slab"]
 
     def _with_slab(df, ts_col):
-        if not cfg.slab:
-            return df
         return df.withColumn(
             "slab", F.date_format(F.date_trunc(cfg.slab, ts_col), "yyyy-MM-dd")
         )
@@ -159,20 +170,15 @@ def run_pipeline(
         # not advance without touching their output.
         high_water = submit(_data_max_ts, pages_b)
 
+        done = set()
         if incremental:
             data_max_ts = high_water.result()  # it decides which buckets run
-            prior = manifest.last_done(schema_version=TIER_SCHEMA_VERSION)
-            done = set()
-            for b, row in prior.items():
-                if "data_max_ts" not in row:
-                    continue  # legacy row with no recorded mark: re-run to learn it
+            for b, row in manifest.last_done().items():
                 rec, cur = row["data_max_ts"], data_max_ts.get(b)
                 # skip if the mark is unchanged — including a bucket that was
                 # recorded empty (mark None) and is still empty
                 if cur == rec or (cur is not None and rec is not None and cur <= rec):
                     done.add(b)
-        else:
-            done = manifest.done_buckets(schema_version=TIER_SCHEMA_VERSION) if resume else set()
 
         # the byte-identity invariant: every url maps to exactly one text
         # digest.  Scoped to the buckets this run will actually process, so an
@@ -253,10 +259,6 @@ def run_pipeline(
                 points_per_sec=(n_points / wall if wall > 0 else 0.0),
                 schema_version=TIER_SCHEMA_VERSION,
                 data_max_ts=high_water.result().get(bucket),
-                # the store is self-describing: retention reads the slab
-                # granularity from here instead of trusting a caller flag (a
-                # mismatched flag would silently mis-compute slab ends)
-                slab_granularity=cfg.slab,
             )
             result.buckets_run.append(bucket)
 

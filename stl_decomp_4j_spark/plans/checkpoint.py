@@ -1,16 +1,19 @@
-"""Checkpoint/resume manifest for the rollup pipeline.
+"""Checkpoint manifest and store parameters for the persisted stores.
 
-Work is sliced into url-hash buckets (``pmod(xxhash64(url), n_buckets)``).
-Each completed bucket appends a manifest row (run_id, bucket, status, rows,
-wall seconds); a resumed run plans only buckets without a 'done' row and
-rewrites their output partitions idempotently (dynamic partition overwrite /
-Iceberg overwritePartitions).  Lineage: every output row carries run_id and
-bucket.
+Rollup work is sliced into url-hash buckets (``pmod(xxhash64(url),
+n_buckets)``).  Each completed bucket appends a manifest row (run_id,
+bucket, status, rows, wall seconds, data high-water mark); an incremental
+run re-plans only buckets whose data advanced past their last 'done' row
+and rewrites their output partitions idempotently (dynamic partition
+overwrite / Iceberg overwritePartitions).  Lineage: every output row
+carries run_id and bucket.
 
-The persisted stores that are not bucket-sliced (the dedup fingerprint store,
-the ANN index) describe themselves with a ``params.json`` at their root:
-``write_params`` records it at build, ``check_params`` validates it on every
-later read or extend.
+Every persisted store describes itself with a ``params.json`` at its root:
+the tier/Gorilla rollup store (the pipeline config and tier schema version,
+read back by retention and compaction for the slab granularity), the dedup
+fingerprint store and the ANN index.  ``write_params`` records it when the
+store is created, ``check_params`` validates it on every later write, read
+or extend.
 """
 from __future__ import annotations
 
@@ -29,11 +32,6 @@ class Manifest:
         self.path = Path(root) / "manifest.jsonl"
         self.path.parent.mkdir(parents=True, exist_ok=True)
 
-    def done_buckets(self, schema_version: int | None = None) -> set[int]:
-        """Buckets with a 'done' row (schema-version-guarded like
-        ``last_done``)."""
-        return set(self.last_done(schema_version))
-
     def mark(self, run_id: str, bucket: int, status: str, **metrics) -> None:
         row = {"run_id": run_id, "bucket": bucket, "status": status, "ts": time.time(), **metrics}
         with open(self.path, "a") as f:
@@ -42,7 +40,7 @@ class Manifest:
     def last_done(self, schema_version: int | None = None) -> dict[int, dict]:
         """Latest 'done' row per bucket — incremental runs compare each
         bucket's recorded ``data_max_ts`` against the input to decide what
-        re-runs.  When ``schema_version`` is given, refuse to resume across
+        re-runs.  When ``schema_version`` is given, refuse to read across
         a tier-schema upgrade: appending new-schema partitions beside
         old-schema ones under the same table root would yield a mixed-schema
         table that readers fail on or null-fill."""
@@ -56,7 +54,7 @@ class Manifest:
                     raise RuntimeError(
                         f"manifest {self.path} has completed buckets with tier schema "
                         f"v{row.get('schema_version', 1)}, current engine writes "
-                        f"v{schema_version}; resume refused — use a fresh out_root"
+                        f"v{schema_version}; use a fresh out_root"
                     )
                 rows[row["bucket"]] = row
         return rows

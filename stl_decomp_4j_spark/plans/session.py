@@ -28,15 +28,18 @@ def build_session(
 ) -> SparkSession:
     tune_malloc()
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
-    cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cores}]"
+    cores = os.environ.get("SPARK_GRAFT_CPUS")
+    master = master or (cores and f"local[{cores}]")
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
     )
+    b = SparkSession.builder.appName(app_name)
+    if master:
+        # a builder master overrides spark-submit's --master; with neither
+        # set, Spark's own default applies (--master, else local[*])
+        b = b.master(master)
     b = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         # AQE partition coalescing stays ON session-wide (relational queries
         # want it at scale).  It decides by shuffle BYTES, the wrong signal

@@ -222,6 +222,62 @@ def test_compact_store_end_to_end(spark, tmp_path, plan_of, in_set_threshold):
     assert min_ms >= int(dt.datetime(2025, 2, 1).timestamp() * 1000)
 
 
+def test_week_slab_store_end_to_end(spark, tmp_path):
+    """A slab='week' store: every tier and Gorilla partition is a Monday
+    week slab, compact_store keeps merged chunks inside their week, and
+    retention drops whole expired weeks — both read 'week' from the store's
+    params.json (a month reading would merge and keep across weeks)."""
+    from stl_decomp_4j_spark.operators.retention import apply_retention
+
+    out = str(tmp_path / "rollup")
+    pages = generate_pages(spark, n_urls=4, days=21, events_per_url=200)
+    run_pipeline(spark, pages, out, PipelineConfig(n_buckets=2, slab="week"))
+
+    def slabs(table):
+        df = spark.read.parquet(f"{out}/{table}")
+        return {r[0] for r in df.select(F.col("slab").cast("string")).distinct().collect()}
+
+    weeks = {"2024-12-30", "2025-01-06", "2025-01-13", "2025-01-20"}
+    assert all(dt.date.fromisoformat(w).weekday() == 0 for w in weeks)  # Mondays
+    assert slabs("tier_1h") == slabs("gorilla_1h") == weeks
+    for t in ("1d", "1w"):
+        assert slabs(f"tier_{t}") <= weeks and slabs(f"gorilla_{t}") <= weeks
+
+    # fragment the 1h store: re-encode every bucket at chunk_points=24
+    root = f"{out}/gorilla_1h"
+    baseline = _decoded(spark.read.parquet(root))
+    t1h = spark.read.parquet(f"{out}/tier_1h")
+    buckets = sorted(r[0] for r in t1h.select("bucket").distinct().collect())
+    for b in buckets:
+        mat = t1h.filter(F.col("bucket") == b).select("url", "ts", "value", "trend", "seasonal", "residual")
+        ch = (
+            compress_tier(mat, chunk_points=24, slab="week")
+            .withColumn("run_id", F.lit("fragtest"))
+            .withColumn("bucket", F.lit(int(b)))
+            .withColumn("slab", F.date_format(F.date_trunc("week", "t0"), "yyyy-MM-dd"))
+        )
+        write_table(ch, root, partition_by=["bucket", "slab"], mode="overwrite_partitions")
+    frag = spark.read.parquet(root).count()
+
+    s = compact_store(spark, out, tiers=("1h",), chunk_points=4096)["gorilla_1h"]
+    after = spark.read.parquet(root)
+    assert after.count() == s["chunks_after"] < s["chunks_before"] == frag
+    pd.testing.assert_frame_equal(_decoded(after), baseline)
+    def week_of(c):
+        return F.date_format(F.date_trunc("week", c), "yyyy-MM-dd")
+
+    slab = F.col("slab").cast("string")
+    assert after.filter((week_of("t0") != slab) | (week_of("t1") != slab)).count() == 0
+
+    # keep 7 days of 1h at Jan 20: cutoff Jan 12 23:00, so only the week of
+    # Dec 30 (ends Jan 6) is wholly expired; the week of Jan 6 ends after it
+    dropped = apply_retention(spark, out, {"1h": 7}, now=dt.datetime(2025, 1, 20))
+    want = sorted(f"bucket={b}/slab=2024-12-30" for b in buckets)
+    assert sorted(dropped["tier_1h"]) == sorted(dropped["gorilla_1h"]) == want
+    assert slabs("tier_1h") == slabs("gorilla_1h") == weeks - {"2024-12-30"}
+    assert spark.read.parquet(f"{out}/tier_1h").agg(F.min("ts")).first()[0] >= dt.datetime(2025, 1, 6)
+
+
 def test_compact_store_subset_scan_prunes_partitions(spark, tmp_path, plan_of):
     """compact_store selects the fragmented (bucket, slab) partitions with
     one struct IN over the partition columns: it lands in the scan's

@@ -240,7 +240,7 @@ def test_full_pipeline_with_resume(spark, pages, tmp_path):
 
     # resume: everything done -> nothing re-runs, outputs unchanged
     before = spark.read.parquet(f"{out}/tier_1d").toPandas().sort_values(["url", "ts"]).reset_index(drop=True)
-    res2 = run_pipeline(spark, pages, out, cfg, resume=True)
+    res2 = run_pipeline(spark, pages, out, cfg, incremental=True)
     assert res2.buckets_run == [] and len(res2.buckets_skipped) == 4
     after = spark.read.parquet(f"{out}/tier_1d").toPandas().sort_values(["url", "ts"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(
@@ -251,7 +251,7 @@ def test_full_pipeline_with_resume(spark, pages, tmp_path):
     manifest = tmp_path / "rollup" / "manifest.jsonl"
     lines = [l for l in manifest.read_text().splitlines() if '"bucket": 0' not in l and '"bucket": 1' not in l]
     manifest.write_text("\n".join(lines) + "\n")
-    res3 = run_pipeline(spark, pages, out, cfg, resume=True)
+    res3 = run_pipeline(spark, pages, out, cfg, incremental=True)
     assert sorted(res3.buckets_run) == [0, 1]
     assert sorted(res3.buckets_skipped) == [2, 3]
     final = spark.read.parquet(f"{out}/tier_1d").toPandas().sort_values(["url", "ts"]).reset_index(drop=True)
@@ -344,6 +344,42 @@ def test_incremental_recompute_only_touched_buckets(spark, pages, tmp_path):
     assert marks[target_bucket] == int(
         pages2.filter(F.col("url") == url0).agg(F.max(F.unix_timestamp("warc_ts"))).first()[0]
     )
+
+
+def test_store_refuses_other_params_and_unrecorded_roots(spark, pages, tmp_path):
+    """The store records its config in params.json.  A re-run with any other
+    layout or STL parameter, full or incremental, raises before writing, so
+    no stale partition of the old layout sits beside new ones; a root whose
+    params.json is missing is refused by every store call."""
+    import datetime as dt
+    import re
+    from dataclasses import replace
+
+    from stl_decomp_4j_spark.operators.compress import compact_store
+    from stl_decomp_4j_spark.operators.retention import apply_retention
+
+    out = str(tmp_path / "rollup")
+    cfg = PipelineConfig(n_buckets=2)
+    run_pipeline(spark, pages, out, cfg)
+    t1h = spark.read.parquet(f"{out}/tier_1h")
+    n_rows = t1h.count()
+    assert n_rows == t1h.select("url", "ts").distinct().count() > 0
+
+    for changed in (dict(n_buckets=1), dict(slab="week"), dict(robust=True)):
+        for incremental in (False, True):
+            with pytest.raises(ValueError, match=f"tier store {re.escape(out)} .*mismatch on {next(iter(changed))}"):
+                run_pipeline(spark, pages, out, replace(cfg, **changed), incremental=incremental)
+    t1h = spark.read.parquet(f"{out}/tier_1h")
+    assert t1h.count() == t1h.select("url", "ts").distinct().count() == n_rows
+
+    (tmp_path / "rollup" / "params.json").unlink()
+    for call in (
+        lambda: run_pipeline(spark, pages, out, cfg, incremental=True),
+        lambda: apply_retention(spark, out, {"1h": 1}, now=dt.datetime(2026, 1, 1)),
+        lambda: compact_store(spark, out),
+    ):
+        with pytest.raises(ValueError, match="tier store .* has no params.json"):
+            call()
 
 
 def test_pipeline_points_and_1h_sink_order(spark, pages, tmp_path):
@@ -461,7 +497,7 @@ def test_background_encode_failure_leaves_bucket_unmarked(spark, pages, tmp_path
     assert not [r for r in rows if r["bucket"] == 0 and r["status"] == "done"], rows
     assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
 
-    resumed = run_pipeline(spark, pages, str(out), cfg, resume=True)
+    resumed = run_pipeline(spark, pages, str(out), cfg, incremental=True)
     assert sorted(resumed.buckets_run) == [0, 1]
     clean = tmp_path / "clean"
     run_pipeline(spark, pages, str(clean), cfg)

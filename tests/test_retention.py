@@ -152,12 +152,6 @@ def test_pipeline_retention_end_to_end(spark, tmp_path):
     with pytest.raises(ValueError, match="unknown tiers"):
         apply_retention(spark, out, {"2h": 10}, now=now)
 
-    # the slab granularity is read from the store's manifest; asserting a
-    # different one fails loudly (a trusted flag would under-retain: 'day'
-    # slab-ends on a month-slabbed store expire whole months early)
-    with pytest.raises(ValueError, match="does not match the store's"):
-        apply_retention(spark, out, {"1h": 43}, now=now, slab="day")
-
-    # a store with no manifest (or pre-slab layout) is refused
-    with pytest.raises(RuntimeError, match="no recorded slab granularity"):
+    # a root with no store (no params.json to read the slab from) is refused
+    with pytest.raises(ValueError, match="has no params.json"):
         apply_retention(spark, str(tmp_path / "nostore"), {"1h": 1}, now=now)

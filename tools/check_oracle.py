@@ -54,7 +54,7 @@ def main():
     import __spark_entry__ as entry_mod
     from stl_decomp_4j_spark.plans.session import build_session
 
-    spark = build_session(app_name="oracle-check", shuffle_partitions=8, master="local[8]")
+    spark = build_session(app_name="oracle-check", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")

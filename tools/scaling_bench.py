@@ -143,7 +143,7 @@ def main() -> None:
 import sys; sys.path.insert(0, {str(REPO)!r})
 from stl_decomp_4j_spark.plans.session import build_session
 from stl_decomp_4j_spark.sources.pages import generate_pages
-spark = build_session(app_name="gen", master="local[32]")
+spark = build_session(app_name="gen")
 generate_pages(spark, n_urls={args.urls}, days={args.days}, events_per_url={args.events_per_url},
                hot_url_count=max(2, {args.urls}//100), hot_multiplier=16,
                partitions=128).write.mode("overwrite").parquet({pages_path!r})
