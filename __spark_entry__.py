@@ -37,6 +37,14 @@ def _events_gapfilled(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gapfill(_events_hourly(spark, sf_dir), granularity="hour")
 
 
+def _events_decomposed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The hourly events through the period-24, seasonal-width-35
+    non-robust STL that every decomposition-fed query reads."""
+    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
+
+    return stl_decompose_sparse_df(_events_hourly(spark, sf_dir), period=24, seasonal_width=35)
+
+
 def _fmt_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df.withColumn(col, F.date_format(F.col(col), TS_FMT))
 
@@ -498,11 +506,7 @@ def q_corpus_clean(spark, sf_dir):
 
 
 def q_stl_decompose_events(spark, sf_dir):
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
-
-    out = stl_decompose_sparse_df(
-        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False
-    )
+    out = _events_decomposed(spark, sf_dir)
     return _fmt_ts(out).select(
         "url",
         "ts",
@@ -527,7 +531,7 @@ def q_gorilla_roundtrip(spark, sf_dir):
     from stl_decomp_4j_spark.operators.compress import compress_tier, decompress_chunks
 
     series = _events_gapfilled(spark, sf_dir)
-    chunks = compress_tier(series.select("url", "ts", "value"), columns=["value"])
+    chunks = compress_tier(series.select("url", "ts", "value"))
     back = decompress_chunks(chunks)
     return back.select(
         "url",
@@ -542,36 +546,23 @@ def q_gorilla_range_read(spark, sf_dir):
     (url, time) predicate are pruned on metadata and never decoded.  The
     oracle is the plain-SQL filter of the gap-filled series; they match iff
     pruning loses nothing and decode is lossless."""
-    import datetime as dt
+    import tempfile
 
-    from stl_decomp_4j_spark.operators.compress import compress_tier, read_range
-
-    series = _events_gapfilled(spark, sf_dir)
-    chunks = compress_tier(series.select("url", "ts", "value"), columns=["value"], chunk_points=168)
-    url0 = series.select("url").orderBy("url").first()["url"]
-    t0 = series.agg(F.min("ts").alias("t0")).collect()[0]["t0"]
-    ts_min = t0 + dt.timedelta(days=10)
-    ts_max = t0 + dt.timedelta(days=15)
-    out = read_range(chunks, urls=[url0], ts_min=ts_min, ts_max=ts_max)
-    return out.select(
-        "url",
-        F.date_format(F.timestamp_millis(F.col("ts_ms")), TS_FMT).alias("ts"),
-        "value",
-    )
+    store = tempfile.mkdtemp(prefix="gorilla_store_")
+    return gorilla_range_read_from_store(spark, store, *gorilla_range_read_setup(spark, sf_dir, store))
 
 
 def gorilla_range_read_setup(spark, sf_dir, store_dir):
-    """Bench helper (not a driver query): materialize the chunk store that
-    q_gorilla_range_read builds inline, so bench.py can time store-build
-    (setup, once) separately from the pruned read (the number that matters
-    — a store is written once and range-read many times).  Returns the probe
-    (url, ts_min, ts_max)."""
+    """Bench helper: materialize q_gorilla_range_read's chunk store, so
+    bench.py can time store-build (setup, once) separately from the pruned
+    read (the number that matters — a store is written once and range-read
+    many times).  Returns the probe (url, ts_min, ts_max)."""
     import datetime as dt
 
     from stl_decomp_4j_spark.operators.compress import compress_tier
 
     series = _events_gapfilled(spark, sf_dir)
-    chunks = compress_tier(series.select("url", "ts", "value"), columns=["value"], chunk_points=168)
+    chunks = compress_tier(series.select("url", "ts", "value"), chunk_points=168)
     chunks.write.mode("overwrite").parquet(store_dir)
     url0 = series.select("url").orderBy("url").first()["url"]
     t0 = series.agg(F.min("ts").alias("t0")).collect()[0]["t0"]
@@ -608,7 +599,7 @@ def q_gorilla_compact(spark, sf_dir):
     )
 
     series = _events_gapfilled(spark, sf_dir)
-    frag = compress_tier(series.select("url", "ts", "value"), columns=["value"], chunk_points=24)
+    frag = compress_tier(series.select("url", "ts", "value"), chunk_points=24)
     merged = compact_chunks(frag, chunk_points=96)
     stats = decompress_chunks(merged).groupBy("url").agg(
         F.count(F.lit(1)).alias("n_points"),
@@ -780,12 +771,8 @@ def q_multimodal_resize(spark, sf_dir):
 
 def _stl_tiers(spark, sf_dir):
     from stl_decomp_4j_spark.operators.rollup import build_tiers
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
-    decomposed = stl_decompose_sparse_df(
-        _events_hourly(spark, sf_dir), period=24, seasonal_width=35
-    )
-    return build_tiers(decomposed)
+    return build_tiers(_events_decomposed(spark, sf_dir))
 
 
 def _round_tier(out):
@@ -800,11 +787,8 @@ def q_stl_anomalies(spark, sf_dir):
     url's residual stddev.  The oracle recomputes scale + z + filter in SQL
     over the Java-reference fixture's residuals."""
     from stl_decomp_4j_spark.operators.anomaly import residual_anomalies
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
-    decomposed = stl_decompose_sparse_df(
-        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False
-    )
+    decomposed = _events_decomposed(spark, sf_dir)
     out = residual_anomalies(decomposed, k=2.5, sigma="std")
     return _fmt_ts(out).select(
         "url",
@@ -821,11 +805,8 @@ def q_stl_forecast(spark, sf_dir):
     window = one period).  The oracle recomputes the identical deterministic
     rule in SQL over the Java-reference fixture's trend/seasonal columns."""
     from stl_decomp_4j_spark.operators.forecast import stl_forecast
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
-    decomposed = stl_decompose_sparse_df(
-        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False
-    )
+    decomposed = _events_decomposed(spark, sf_dir)
     out = stl_forecast(decomposed, period=24, horizon=48, trend_window=24)
     return _fmt_ts(out).select(
         "url",
@@ -911,11 +892,8 @@ def q_stl_strength(spark, sf_dir):
     recomputes the variance-ratio formulas in SQL over the Java-reference
     fixture's trend/seasonal/residual columns."""
     from stl_decomp_4j_spark.operators.diagnostics import seasonal_strength
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
-    decomposed = stl_decompose_sparse_df(
-        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False
-    )
+    decomposed = _events_decomposed(spark, sf_dir)
     out = seasonal_strength(decomposed)
     return out.select(
         "url",
@@ -932,11 +910,8 @@ def q_stl_changepoints(spark, sf_dir):
     oracle recomputes moments + ordered cumsum + argmax in SQL over the
     Java-reference fixture's residuals."""
     from stl_decomp_4j_spark.operators.diagnostics import cusum_changepoints
-    from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
-    decomposed = stl_decompose_sparse_df(
-        _events_hourly(spark, sf_dir), period=24, seasonal_width=35, robust=False
-    )
+    decomposed = _events_decomposed(spark, sf_dir)
     out = cusum_changepoints(decomposed, k=3.0)
     return _fmt_ts(out).select(
         "url",

@@ -78,18 +78,20 @@ def main() -> None:
 
     pre_existing = SparkSession.getActiveSession()
     spark = pre_existing or build_session(app_name="stl-ann-index")
-    cols = {"id_col": args.id_col, "vec_col": args.vec_col}
 
+    if args.build or args.extend:
+        # the index operators read the engine's (vec_id, embedding) columns
+        emb = spark.read.parquet(args.input).select(
+            F.col(args.id_col).alias("vec_id"), F.col(args.vec_col).alias("embedding")
+        )
     if args.build:
-        emb = spark.read.parquet(args.input)
         n_cells = {"lsh": args.n_planes, "ivf": args.n_clusters}
         for kind in kinds:
-            build_ann_index(emb, paths[kind], kind, n_cells[kind], **cols)
+            build_ann_index(emb, paths[kind], kind, n_cells[kind])
         print(json.dumps({"index": args.index, "built": kinds}))
     elif args.extend:
-        emb = spark.read.parquet(args.input)
         for kind in kinds:
-            extend_ann_index(emb, paths[kind], **cols)
+            extend_ann_index(emb, paths[kind])
         print(json.dumps({"index": args.index, "extended": kinds}))
     else:
         if args.vector is not None:

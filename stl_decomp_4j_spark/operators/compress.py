@@ -99,7 +99,7 @@ def _encode_block(
     block: pa.RecordBatch,
     starts: np.ndarray,
     columns: list[str],
-    chunk_points: int | None,
+    chunk_points: int,
     slab: str | None = None,
 ) -> pa.RecordBatch:
     """Encode every url run of a (url, ts)-sorted block, splitting runs
@@ -115,9 +115,8 @@ def _encode_block(
     bounds = _bounds(starts, block.num_rows, ts_us, slab)
     out: dict[str, list] = {"src": [], "t0": [], "t1": [], "n": [], "column": [], "chunk": []}
     for a, b in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
-        step = chunk_points or (b - a)
-        for s in range(a, b, step):
-            e = min(s + step, b)
+        for s in range(a, b, chunk_points):
+            e = min(s + chunk_points, b)
             for col in columns:
                 out["src"].append(a)
                 out["t0"].append(ts_us[s])
@@ -130,15 +129,17 @@ def _encode_block(
 
 def compress_tier(
     tier: DataFrame,
-    columns: list[str] | None = None,
-    chunk_points: int | None = 4096,
+    chunk_points: int = 4096,
     presorted: bool = False,
     slab: str | None = None,
 ) -> DataFrame:
-    """``chunk_points`` bounds points per chunk (default 4096): bounded decode
+    """Encode every column of ``tier`` other than (url, ts) as per-url
+    Gorilla chunks.
+
+    ``chunk_points`` bounds points per chunk (default 4096): bounded decode
     memory, and time-slab chunk boundaries so a range read can prune WITHIN a
     url's history — at 100x the 1h table spans years and a dashboard reads
-    days.  None = one chunk per url (unbounded).
+    days.
 
     ``presorted=True`` skips the repartition+sort: valid when the input
     already has each url's rows contiguous and time-ordered within every
@@ -153,7 +154,7 @@ def compress_tier(
     ``slab`` ('day'/'week'/'month') additionally aligns chunks to calendar
     slabs so retention can drop whole expired slabs without touching any
     chunk's bytes (see _encode_block)."""
-    columns = columns or [c for c in tier.columns if c not in ("url", "ts")]
+    columns = [c for c in tier.columns if c not in ("url", "ts")]
 
     def fn(block: pa.RecordBatch, starts: np.ndarray) -> pa.RecordBatch:
         return _encode_block(block, starts, columns, chunk_points, slab)
@@ -164,7 +165,7 @@ def compress_tier(
 def _recode_block(
     block: pa.RecordBatch,
     starts: np.ndarray,
-    chunk_points: int | None,
+    chunk_points: int,
     slab: str | None,
     carry_cols: list[str],
 ) -> pa.RecordBatch:
@@ -185,9 +186,8 @@ def _recode_block(
                 f"column={col!r}: timestamps not strictly increasing"
             )
         n = len(ts)
-        step = chunk_points or n
-        for s in range(0, n, step):
-            e = min(s + step, n)
+        for s in range(0, n, chunk_points):
+            e = min(s + chunk_points, n)
             out["src"].append(a)
             out["t0"].append(ts[s] * 1000)
             out["t1"].append(ts[e - 1] * 1000)
@@ -209,23 +209,19 @@ def _slab_key(slab: str):
     return F.date_trunc(slab, F.col("t0"))
 
 
-def _fragmented(chunk_points: int | None):
+def _fragmented(chunk_points: int):
     """Aggregate predicate over a chunk group: it is fragmented iff it holds
     more chunks than the minimum, ceil(points / chunk_points) — so a
-    compacted group never is again (fixpoint).  None = one chunk per group."""
+    compacted group never is again (fixpoint)."""
     import pyspark.sql.functions as F
 
-    target = (
-        F.floor((F.sum("n") + F.lit(int(chunk_points) - 1)) / F.lit(int(chunk_points)))
-        if chunk_points
-        else F.lit(1)
-    )
+    target = F.floor((F.sum("n") + F.lit(int(chunk_points) - 1)) / F.lit(int(chunk_points)))
     return F.count(F.lit(1)) > target
 
 
 def compact_chunks(
     chunks: DataFrame,
-    chunk_points: int | None = 4096,
+    chunk_points: int = 4096,
     slab: str | None = None,
     carry_cols: list[str] | None = None,
 ) -> DataFrame:

@@ -50,26 +50,26 @@ def _bit_lit(b: int):
     return F.lit(v).cast("long")
 
 
-def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
     """Group by exact content digest; keep the lowest id as canonical."""
     return (
-        docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("fp"))
+        docs.select("doc_id", F.md5("text").alias("fp"))
         .groupBy("fp")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_docs"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_docs"))
         .filter(F.col("n_docs") > 1)
     )
 
 
-def dedup_word_set(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def dedup_word_set(docs: DataFrame) -> DataFrame:
     """Near-dup by identical (sorted, distinct) word set — order/duplication
     insensitive canonicalization."""
     sig = F.md5(
-        F.array_join(F.array_sort(F.array_distinct(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"))), " ")
+        F.array_join(F.array_sort(F.array_distinct(F.split(F.trim(F.lower(F.col("text"))), r"\s+"))), " ")
     )
     return (
-        docs.select(F.col(id_col), sig.alias("sig"))
+        docs.select("doc_id", sig.alias("sig"))
         .groupBy("sig")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_docs"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_docs"))
         .filter(F.col("n_docs") > 1)
     )
 
@@ -217,8 +217,6 @@ def verified_pairs(pairs: DataFrame, sets_a: DataFrame, sets_b: DataFrame, a: st
 
 def dedup_minhash_lsh(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.6,
     cache_handle: list | None = None,
     max_bucket: int | None = None,
@@ -250,7 +248,7 @@ def dedup_minhash_lsh(
     # At cluster scale this is the persisted shingle/signature table a
     # production dedup pipeline keeps anyway — and it holds 8-byte hashes,
     # not k-gram strings.
-    sets_ = shingle_sets(docs, text_col, id_col, SHINGLE_K).persist(StorageLevel.MEMORY_AND_DISK)
+    sets_ = shingle_sets(docs, "text", "doc_id", SHINGLE_K).persist(StorageLevel.MEMORY_AND_DISK)
     if cache_handle is not None:
         cache_handle.append(sets_)
     cands = lsh_candidate_pairs(signatures(sets_), max_bucket=max_bucket)
@@ -411,13 +409,11 @@ def simhash(
     return votes.select("doc_id", *carry_cols, sim.alias("simhash"))
 
 
-def simhash_near_pairs(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", max_hamming: int = 3
-) -> DataFrame:
+def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Candidate pairs by block-banding the simhash into SIMHASH_BLOCKS
     blocks (pigeonhole: hamming <= blocks-1 guarantees one identical block),
     verified by exact popcount.  Output: (id_a, id_b, hamming)."""
-    sh = simhash(docs, text_col, id_col)
+    sh = simhash(docs)
     width = SIMHASH_BITS // SIMHASH_BLOCKS
     mask = (1 << width) - 1
     banded = sh.select(
@@ -465,17 +461,12 @@ def lag1_hamming(sh: DataFrame, key_col: str) -> DataFrame:
     ).filter(F.col("prev_id").isNotNull())
 
 
-def snapshot_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    key_col: str = "source",
-    max_hamming: int = 4,
-) -> DataFrame:
-    """Temporal (crawl-snapshot) dedup: within each key (url / source / feed),
-    a snapshot whose simhash is within ``max_hamming`` bits of its IMMEDIATE
-    predecessor in id order is a redundant re-crawl.  Output one row per
-    redundant snapshot: (key, doc_id, prev_id, hamming).
+def snapshot_dedup(docs: DataFrame, max_hamming: int = 4) -> DataFrame:
+    """Temporal (crawl-snapshot) dedup: within each ``source`` (the url or
+    feed a document was crawled from), a snapshot whose simhash is within
+    ``max_hamming`` bits of its IMMEDIATE predecessor in id order is a
+    redundant re-crawl.  Output one row per redundant snapshot: (source,
+    doc_id, prev_id, hamming).
 
     This is the linear-time temporal companion to ``simhash_near_pairs``:
     recrawl corpora are dominated by unchanged-page re-fetches, and comparing
@@ -498,26 +489,20 @@ def snapshot_dedup(
     slab first (boundary pairs lost at slab edges) — not done here because
     the window is O(1)-state streaming, not memory-bound.
     """
-    lagged = lag1_hamming(simhash(docs, text_col, id_col, carry_cols=(key_col,)), key_col)
+    lagged = lag1_hamming(simhash(docs, carry_cols=("source",)), "source")
     return lagged.filter(F.col("hamming") <= max_hamming)
 
 
-def snapshot_churn(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    key_col: str = "source",
-    max_hamming: int = 4,
-) -> DataFrame:
-    """Per-key content-churn summary over consecutive snapshots: how many
+def snapshot_churn(docs: DataFrame, max_hamming: int = 4) -> DataFrame:
+    """Per-source content-churn summary over consecutive snapshots: how many
     snapshot transitions exist, how many are redundant re-crawls (hamming <=
     max_hamming), the redundancy ratio, and the mean bit-churn.  Feeds
     recrawl-scheduling policy (stable urls -> crawl less often).  Same
     single-exchange kernel as snapshot_dedup; the rollup reuses the window's
     key partitioning so the groupBy adds no shuffle."""
-    lagged = lag1_hamming(simhash(docs, text_col, id_col, carry_cols=(key_col,)), key_col)
+    lagged = lag1_hamming(simhash(docs, carry_cols=("source",)), "source")
     red = F.when(F.col("hamming") <= max_hamming, F.lit(1)).otherwise(F.lit(0)).cast("long")
-    return lagged.groupBy(key_col).agg(
+    return lagged.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.sum(red).alias("n_redundant"),
         F.round(F.sum(red).cast("double") / F.count(F.lit(1)), 6).alias("redundant_ratio"),

@@ -76,11 +76,7 @@ def lttb_select(t: np.ndarray, v: np.ndarray, n_out: int) -> np.ndarray:
     return sel
 
 
-def lttb(
-    series: DataFrame,
-    n_out: int,
-    value_col: str = "value",
-) -> DataFrame:
+def lttb(series: DataFrame, n_out: int) -> DataFrame:
     """Downsample each url's (ts, value) series to ``n_out`` points."""
     import pyarrow as pa
 
@@ -88,7 +84,7 @@ def lttb(
 
     def fn(block: pa.RecordBatch, starts: np.ndarray) -> pa.RecordBatch:
         micros = block.column("ts").cast(pa.int64()).to_numpy()
-        v = block.column(value_col).to_numpy(zero_copy_only=False).astype(np.float64)
+        v = block.column("value").to_numpy(zero_copy_only=False).astype(np.float64)
         ends = np.r_[starts[1:], block.num_rows]
         # RELATIVE micros: epoch-micros sums exceed 2^53 (centroid means
         # would round), relative offsets are exact integers in float64, so
@@ -104,4 +100,4 @@ def lttb(
             names=LTTB_SCHEMA.names,
         )
 
-    return map_runs(series.select("url", "ts", value_col), ["url"], ["ts"], fn, LTTB_SCHEMA)
+    return map_runs(series.select("url", "ts", "value"), ["url"], ["ts"], fn, LTTB_SCHEMA)

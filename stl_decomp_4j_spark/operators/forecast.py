@@ -34,19 +34,22 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 from pyspark.storagelevel import StorageLevel
 
+from .gapfill import STEP_SECONDS
+
+STEP_S = STEP_SECONDS["hour"]
+
 
 def stl_forecast(
     decomposed: DataFrame,
     period: int,
     horizon: int,
     trend_window: int | None = None,
-    step_seconds: int = 3600,
     cache_handle: list | None = None,
 ) -> DataFrame:
     """Forecast ``horizon`` future steps per url from a decomposed series.
 
-    ``decomposed`` needs (url, ts, trend, seasonal) on a dense ``step_seconds``
-    grid (the shape every STL operator here emits).  Returns one row per
+    ``decomposed`` needs (url, ts, trend, seasonal) on a dense hourly grid
+    (the shape every STL operator here emits).  Returns one row per
     (url, k): url, ts (future), k, trend_fc, seasonal_fc, forecast.
 
     A url whose series is shorter than one full period only gets forecasts
@@ -71,7 +74,7 @@ def stl_forecast(
 
     tail_span = max(w, period)
     age = (
-        (F.unix_timestamp("t_last") - F.unix_timestamp("ts")) / F.lit(step_seconds)
+        (F.unix_timestamp("t_last") - F.unix_timestamp("ts")) / F.lit(STEP_S)
     ).cast("long")
     tail = (
         decomposed.select("url", "ts", "trend", "seasonal")
@@ -126,7 +129,7 @@ def stl_forecast(
         .withColumn(
             "ts",
             F.timestamp_seconds(
-                F.unix_timestamp("t_last") + F.col("k").cast("long") * F.lit(step_seconds)
+                F.unix_timestamp("t_last") + F.col("k").cast("long") * F.lit(STEP_S)
             ),
         )
         .withColumn(

@@ -52,17 +52,17 @@ FEATURES_SCHEMA = StructType(
 )
 
 
-def attach_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def attach_media(docs: DataFrame) -> DataFrame:
     """Deterministically derive a fake binary media column from doc content
     (the payload is opaque to the engine; only the plumbing is real)."""
     kinds = F.array(F.lit("image"), F.lit("audio"), F.lit("video"))
-    kind = F.element_at(kinds, (F.abs(F.xxhash64(F.col(id_col))) % 3 + 1).cast("int"))
+    kind = F.element_at(kinds, (F.abs(F.xxhash64(F.col("doc_id"))) % 3 + 1).cast("int"))
     return docs.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         kind.alias("kind"),
-        F.encode(F.substring(F.col(text_col), 1, 64), "utf-8").alias("payload"),
+        F.encode(F.substring(F.col("text"), 1, 64), "utf-8").alias("payload"),
         F.concat(F.lit("application/x-fake-"), kind).alias("mime"),
-        F.length(F.encode(F.substring(F.col(text_col), 1, 64), "utf-8")).cast("long").alias("n_bytes"),
+        F.length(F.encode(F.substring(F.col("text"), 1, 64), "utf-8")).cast("long").alias("n_bytes"),
     )
 
 

@@ -45,36 +45,33 @@ from pyspark.sql import DataFrame, Window
 def asof_join(
     probes: DataFrame,
     data: DataFrame,
-    on: str = "url",
-    ts_col: str = "ts",
-    value_cols: list[str] | None = None,
     tolerance_s: int | None = None,
 ) -> DataFrame:
     """Left as-of join: every probe row, matched to the latest ``data`` row
-    with ``data.ts <= probe.ts`` on the same key (inclusive), or NULLs when
-    no data precedes the probe (or the match is older than ``tolerance_s``).
+    with ``data.ts <= probe.ts`` on the same ``url`` (inclusive), or NULLs
+    when no data precedes the probe (or the match is older than
+    ``tolerance_s``).
 
-    Output: probe (key, ts) + one column per ``value_cols`` + ``matched_ts``
+    Output: probe (url, ts) + every other ``data`` column + ``matched_ts``
     + ``staleness_s`` (seconds since the matched row; NULL when unmatched).
     """
-    if value_cols is None:
-        value_cols = [c for c in data.columns if c not in (on, ts_col)]
+    value_cols = [c for c in data.columns if c not in ("url", "ts")]
 
     packed = F.struct(
-        F.col(ts_col).alias("_ts"), *[F.col(c).alias(c) for c in value_cols]
+        F.col("ts").alias("_ts"), *[F.col(c).alias(c) for c in value_cols]
     )
     d = data.select(
-        F.col(on), F.col(ts_col), packed.alias("_row"), F.lit(0).alias("_p")
+        F.col("url"), F.col("ts"), packed.alias("_row"), F.lit(0).alias("_p")
     )
     p = probes.select(
-        F.col(on),
-        F.col(ts_col),
+        F.col("url"),
+        F.col("ts"),
         F.lit(None).cast(d.schema["_row"].dataType).alias("_row"),
         F.lit(1).alias("_p"),
     )
     w = (
-        Window.partitionBy(on)
-        .orderBy(ts_col, "_p")
+        Window.partitionBy("url")
+        .orderBy("ts", "_p")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     matched = (
@@ -82,15 +79,15 @@ def asof_join(
         .withColumn("_m", F.last("_row", ignorenulls=True).over(w))
         .filter(F.col("_p") == 1)
     )
-    stale = F.unix_timestamp(ts_col) - F.unix_timestamp(F.col("_m._ts"))
+    stale = F.unix_timestamp("ts") - F.unix_timestamp(F.col("_m._ts"))
     if tolerance_s is not None:
         matched = matched.withColumn(
             "_m", F.when(stale <= F.lit(int(tolerance_s)), F.col("_m"))
         )
-        stale = F.unix_timestamp(ts_col) - F.unix_timestamp(F.col("_m._ts"))
+        stale = F.unix_timestamp("ts") - F.unix_timestamp(F.col("_m._ts"))
     return matched.select(
-        on,
-        ts_col,
+        "url",
+        "ts",
         *[F.col(f"_m.{c}").alias(c) for c in value_cols],
         F.col("_m._ts").alias("matched_ts"),
         stale.alias("staleness_s"),
@@ -100,11 +97,8 @@ def asof_join(
 def time_weighted_avg(
     points: DataFrame,
     granularity: str = "day",
-    on: str = "url",
-    ts_col: str = "ts",
-    value_col: str = "value",
 ) -> DataFrame:
-    """Per (key, bucket) time-weighted average of an irregular series.
+    """Per (url, bucket) time-weighted average of a (url, ts, value) series.
 
     Each observation is LOCF-weighted: value v_i counts for (t_{i+1} - t_i)
     seconds, the last observation of a bucket for 0 (it opens no segment
@@ -113,16 +107,16 @@ def time_weighted_avg(
     value.  Exact duplicates of (key, ts) are collapsed by mean first, so the
     lead() window is deterministic.
 
-    Returns (key, ts=bucket-start, twa, n_points, span_s).
+    Returns (url, ts=bucket-start, twa, n_points, span_s).
     """
     dedup = points.groupBy(
-        F.col(on), F.col(ts_col).alias("_t")
-    ).agg(F.avg(value_col).alias("_v"), F.count(F.lit(1)).alias("_n"))
+        F.col("url"), F.col("ts").alias("_t")
+    ).agg(F.avg("value").alias("_v"), F.count(F.lit(1)).alias("_n"))
     # the bucket is materialized as a COLUMN (not repeated as an expression)
     # so the final aggregate's required distribution matches the window's
     # output partitioning attribute-for-attribute and needs no new exchange
     dedup = dedup.withColumn("_b", F.date_trunc(granularity, "_t"))
-    w = Window.partitionBy(F.col(on), F.col("_b")).orderBy("_t")
+    w = Window.partitionBy(F.col("url"), F.col("_b")).orderBy("_t")
     # timestamp->double epoch keeps sub-second precision (micros/1e6, the
     # same value DuckDB's epoch() computes — unix_timestamp would truncate).
     # The hop through "timestamp" makes TIMESTAMP_NTZ parquet columns castable
@@ -135,7 +129,7 @@ def time_weighted_avg(
     )
     span = _epoch(F.max("_t")) - _epoch(F.min("_t"))
     return (
-        seg.groupBy(F.col(on), F.col("_b").alias(ts_col))
+        seg.groupBy(F.col("url"), F.col("_b").alias("ts"))
         .agg(
             F.sum(F.col("_v") * F.col("_dt")).alias("_wsum"),
             span.alias("_span"),
@@ -143,8 +137,8 @@ def time_weighted_avg(
             F.min_by("_v", "_t").alias("_v1"),  # deterministic: min-ts row's mean
         )
         .select(
-            on,
-            ts_col,
+            "url",
+            "ts",
             F.when(F.col("_span") > 0, F.col("_wsum") / F.col("_span"))
             .otherwise(F.col("_v1"))
             .alias("twa"),
@@ -157,13 +151,10 @@ def time_weighted_avg(
 def counter_rate(
     points: DataFrame,
     granularity: str = "day",
-    on: str = "url",
-    ts_col: str = "ts",
-    value_col: str = "value",
 ) -> DataFrame:
-    """Per-(key, bucket) increase and per-second rate of a monotonic counter
-    with reset detection — PromQL ``increase()``/``rate()``, TimescaleDB
-    ``counter_agg`` → ``delta()``/``rate()``.
+    """Per-(url, bucket) increase and per-second rate of a (url, ts, value)
+    monotonic counter with reset detection — PromQL ``increase()``/``rate()``,
+    TimescaleDB ``counter_agg`` → ``delta()``/``rate()``.
 
     A sample that DROPS below its predecessor marks a counter reset (process
     restart).  The standard adjustment assumes the counter restarted from
@@ -193,10 +184,10 @@ def counter_rate(
     satisfied by the key partitioning, so the window exchange is the only
     shuffle after the collapse.  All codegen; no joins, no Python.
     """
-    dedup = points.groupBy(F.col(on), F.col(ts_col).alias("_t")).agg(
-        F.max(value_col).alias("_v")
+    dedup = points.groupBy(F.col("url"), F.col("ts").alias("_t")).agg(
+        F.max("value").alias("_v")
     )
-    w = Window.partitionBy(on).orderBy("_t")
+    w = Window.partitionBy("url").orderBy("_t")
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     prev = F.lag("_v").over(w)
     # first row per key: prev is NULL -> comparison NULL -> not a reset
@@ -214,7 +205,7 @@ def counter_rate(
 
     span = _epoch(F.max("_t")) - _epoch(F.min("_t"))
     return (
-        seg.groupBy(F.col(on), F.col("_b").alias(ts_col))
+        seg.groupBy(F.col("url"), F.col("_b").alias("ts"))
         .agg(
             (F.max_by("_adj", "_t") - F.min_by("_adj", "_t")).alias("delta"),
             span.alias("_span"),
@@ -222,8 +213,8 @@ def counter_rate(
             F.count(F.lit(1)).alias("n_points"),
         )
         .select(
-            on,
-            ts_col,
+            "url",
+            "ts",
             "delta",
             F.when(F.col("_span") > 0, F.col("delta") / F.col("_span")).alias(
                 "rate_per_s"

@@ -14,6 +14,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 COMPONENTS = ["value", "trend", "seasonal", "residual"]
+PERCENTILES = (0.5, 0.95, 0.99)  # percentile_rollup: columns p50, p95, p99
 
 
 def hourly_tier(decomposed: DataFrame) -> DataFrame:
@@ -63,8 +64,6 @@ def rollup_tier(tier: DataFrame, granularity: str) -> DataFrame:
 def percentile_rollup(
     points: DataFrame,
     granularity: str = "day",
-    percentiles: tuple[float, ...] = (0.5, 0.95, 0.99),
-    value_col: str = "value",
 ) -> DataFrame:
     """Exact interpolated percentiles per (url, bucket) — the latency-style
     rollup sums/counts can't derive.
@@ -79,8 +78,8 @@ def percentile_rollup(
     aggregate, no window, no Python.
     """
     aggs = [
-        F.percentile(value_col, F.lit(p)).alias(f"p{str(p)[2:].ljust(2, '0')}")
-        for p in percentiles
+        F.percentile("value", F.lit(p)).alias(f"p{str(p)[2:].ljust(2, '0')}")
+        for p in PERCENTILES
     ]
     return points.groupBy(
         "url", F.date_trunc(granularity, "ts").alias("ts")
@@ -90,8 +89,6 @@ def percentile_rollup(
 def ohlc_rollup(
     points: DataFrame,
     granularity: str = "day",
-    value_col: str = "value",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Open-high-low-close per (url, bucket) — TimescaleDB ``ohlc()`` /
     ``candlestick_agg``: open/close are the earliest/latest sample's value
@@ -102,18 +99,17 @@ def ohlc_rollup(
     cnt = 1) rolled up by ``ohlc_from_tier``: one partial+final hash
     aggregate, no window, no sort, no join.
     """
-    v = F.col(value_col)
+    v = F.col("value")
     candles = points.select(
-        "url", ts_col, *(v.alias(c) for c in ("open", "high", "low", "close")),
+        "url", "ts", *(v.alias(c) for c in ("open", "high", "low", "close")),
         F.lit(1).cast("long").alias("cnt"),
     )
-    return ohlc_from_tier(candles, granularity, ts_col)
+    return ohlc_from_tier(candles, granularity)
 
 
 def ohlc_from_tier(
     ohlc_tier: DataFrame,
     granularity: str = "week",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Derive a coarser OHLC tier from a finer one — exactly, never touching
     raw data (the continuous-aggregate property the sum/min/max tiers rely
@@ -126,24 +122,22 @@ def ohlc_from_tier(
     themselves the boundary samples of a disjoint, totally-ordered time
     slice (`ohlc_weekly` oracle proves tier-from-tier == from-raw).
     """
-    b = ohlc_tier.withColumn("_b", F.date_trunc(granularity, ts_col))
+    b = ohlc_tier.withColumn("_b", F.date_trunc(granularity, "ts"))
     out = b.groupBy("url", "_b").agg(
-        F.min_by("open", ts_col).alias("open"),
+        F.min_by("open", "ts").alias("open"),
         F.max("high").alias("high"),
         F.min("low").alias("low"),
-        F.max_by("close", ts_col).alias("close"),
+        F.max_by("close", "ts").alias("close"),
         F.sum("cnt").alias("cnt"),
     )
-    return out.withColumnRenamed("_b", ts_col).select(
-        "url", ts_col, "open", "high", "low", "close", "cnt"
+    return out.withColumnRenamed("_b", "ts").select(
+        "url", "ts", "open", "high", "low", "close", "cnt"
     )
 
 
 def stats_rollup(
     points: DataFrame,
     granularity: str = "day",
-    value_col: str = "value",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Per-(url, bucket) descriptive + linear-trend statistics — TimescaleDB
     ``stats_agg`` (two-variable form): mean and sample-stddev of the value
@@ -163,12 +157,12 @@ def stats_rollup(
 
     One partial+final hash aggregate; no window, no Python.
     """
-    b = points.withColumn("_b", F.date_trunc(granularity, ts_col))
+    b = points.withColumn("_b", F.date_trunc(granularity, "ts"))
     # TIMESTAMP_NTZ-safe epoch hop (UTC session; keeps sub-second precision)
-    x = F.col(ts_col).cast("timestamp").cast("double") - F.col("_b").cast(
+    x = F.col("ts").cast("timestamp").cast("double") - F.col("_b").cast(
         "timestamp"
     ).cast("double")
-    y = F.col(value_col).cast("double")
+    y = F.col("value").cast("double")
     b = b.withColumn("_x", x).withColumn("_y", y)
     g = b.groupBy("url", "_b").agg(
         F.count(F.lit(1)).alias("n"),
@@ -186,7 +180,7 @@ def stats_rollup(
     var_samp = (F.col("_syy") - F.col("_sy") * F.col("_sy") / n) / (n - 1)
     return g.select(
         "url",
-        F.col("_b").alias(ts_col),
+        F.col("_b").alias("ts"),
         (F.col("_sy") / n).alias("avg_value"),
         F.when(F.col("n") > 1, F.sqrt(F.greatest(var_samp, F.lit(0.0)))).alias(
             "stddev_value"
@@ -208,8 +202,6 @@ def histogram_rollup(
     hi: float,
     bins: int = 10,
     granularity: str = "day",
-    value_col: str = "value",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Fixed-edge histogram per (url, bucket) — the heatmap/distribution
     rollup (TimescaleDB/Grafana heatmap panels; Prometheus classic-histogram
@@ -229,10 +221,10 @@ def histogram_rollup(
     if bins < 1 or not hi > lo:
         raise ValueError(f"need hi > lo and bins >= 1, got [{lo}, {hi}) x {bins}")
     w = (float(hi) - float(lo)) / int(bins)
-    b = points.withColumn("_b", F.date_trunc(granularity, ts_col))
+    b = points.withColumn("_b", F.date_trunc(granularity, "ts"))
     bin_col = F.least(
         F.greatest(
-            F.floor((F.col(value_col).cast("double") - F.lit(float(lo))) / F.lit(w)),
+            F.floor((F.col("value").cast("double") - F.lit(float(lo))) / F.lit(w)),
             F.lit(0).cast("long"),
         ),
         F.lit(int(bins) - 1).cast("long"),
@@ -244,7 +236,7 @@ def histogram_rollup(
     )
     return out.select(
         "url",
-        F.col("_b").alias(ts_col),
+        F.col("_b").alias("ts"),
         F.col("_bin").alias("bin"),
         (F.lit(float(lo)) + F.col("_bin") * F.lit(w)).alias("bin_lo"),
         (F.lit(float(lo)) + (F.col("_bin") + 1) * F.lit(w)).alias("bin_hi"),
@@ -256,11 +248,9 @@ def top_k_keys(
     points: DataFrame,
     k: int = 3,
     granularity: str = "day",
-    ts_col: str = "ts",
-    key_col: str = "url",
 ) -> DataFrame:
-    """Exact per-bucket heavy hitters: the top-``k`` keys of each time bucket
-    by row count, with a deterministic total order (count desc, then key asc
+    """Exact per-bucket heavy hitters: the top-``k`` urls of each time bucket
+    by row count, with a deterministic total order (count desc, then url asc
     — so any engine produces identical ranks).
 
     Exact, not a sketch: the per-bucket candidate set is the DISTINCT keys,
@@ -268,17 +258,17 @@ def top_k_keys(
     window sees it — the window's input is |keys x buckets| rows, not raw
     events, so a billion-event day with 10^6 urls ranks 10^6 reduced rows.
 
-    Returns (ts, rank, key, cnt); one hash aggregate + one window.
+    Returns (ts, rank, url, cnt); one hash aggregate + one window.
     """
-    b = points.withColumn("_b", F.date_trunc(granularity, ts_col))
-    counts = b.groupBy("_b", key_col).agg(F.count(F.lit(1)).alias("cnt"))
+    b = points.withColumn("_b", F.date_trunc(granularity, "ts"))
+    counts = b.groupBy("_b", "url").agg(F.count(F.lit(1)).alias("cnt"))
     from pyspark.sql import Window as _W
 
-    w = _W.partitionBy("_b").orderBy(F.col("cnt").desc(), F.col(key_col).asc())
+    w = _W.partitionBy("_b").orderBy(F.col("cnt").desc(), F.col("url").asc())
     return (
         counts.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= int(k))
-        .select(F.col("_b").alias(ts_col), "rank", key_col, "cnt")
+        .select(F.col("_b").alias("ts"), "rank", "url", "cnt")
     )
 
 

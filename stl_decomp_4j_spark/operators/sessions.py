@@ -32,21 +32,20 @@ from pyspark.sql import DataFrame, Window
 def session_summary(
     events: DataFrame,
     gap_s: int = 7200,
-    on: str = "url",
-    ts_col: str = "ts",
 ) -> DataFrame:
-    """One row per (key, session): ``session_id`` (1-based, in time order),
-    ``start_ts``/``end_ts`` (first/last instant), ``n_events`` (raw rows,
-    duplicates included), ``duration_s``.
+    """One row per (url, session) of a (url, ts) event table:
+    ``session_id`` (1-based, in time order), ``start_ts``/``end_ts``
+    (first/last instant), ``n_events`` (raw rows, duplicates included),
+    ``duration_s``.
 
     A session ends when the next distinct instant is more than ``gap_s``
     seconds after the previous one (strict >, so a grid-step spacing equal to
     ``gap_s`` stays inside the session).
     """
-    d = events.groupBy(F.col(on), F.col(ts_col).alias("_t")).agg(
+    d = events.groupBy(F.col("url"), F.col("ts").alias("_t")).agg(
         F.count(F.lit(1)).alias("_n")
     )
-    w = Window.partitionBy(on).orderBy("_t")
+    w = Window.partitionBy("url").orderBy("_t")
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
     def _epoch(c):
@@ -59,12 +58,12 @@ def session_summary(
     )
     s = d.withColumn("_sid", F.sum(flag).over(run))
     return (
-        s.groupBy(F.col(on), F.col("_sid").alias("session_id"))
+        s.groupBy(F.col("url"), F.col("_sid").alias("session_id"))
         .agg(
             F.min("_t").alias("start_ts"),
             F.max("_t").alias("end_ts"),
             F.sum("_n").alias("n_events"),
             (_epoch(F.max("_t")) - _epoch(F.min("_t"))).alias("duration_s"),
         )
-        .select(on, "session_id", "start_ts", "end_ts", "n_events", "duration_s")
+        .select("url", "session_id", "start_ts", "end_ts", "n_events", "duration_s")
     )

@@ -1,4 +1,4 @@
-"""Similarity search over an embedding column (array<float>).
+"""Similarity search over an embeddings table (vec_id, embedding: array<float>).
 
 - brute-force cosine top-k: exact baseline; the query vector is closed over
   (broadcast with the serialized UDF), scores computed as one NumPy matmul
@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Window
 from ..plans.checkpoint import check_params, write_params
 
 SEED = 7  # hyperplane RNG and k-means initialisation
+KMEANS_ITERS = 10  # Lloyd iterations of the IVF quantizer
 TRAIN_SAMPLE = 4096  # IVF k-means trains on the first rows in id order
 _DEFAULTS = {"lsh": (8, 1), "ivf": (16, 4)}  # kind -> (n_cells, probe)
 
@@ -92,24 +93,17 @@ def brute_force_topk(
     embeddings: DataFrame,
     query: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k by cosine against one query vector.  Output:
     (vec_id, cos, rank) with deterministic (cos desc, vec_id) ordering."""
     cos = cosine_vs_query_udf(query)
-    scored = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.round(cos(F.col(vec_col)), 6).alias("cos"),
-    )
+    scored = embeddings.select("vec_id", F.round(cos(F.col("embedding")), 6).alias("cos"))
     return _ranked_topk(scored, k)
 
 
 def all_pairs_cosine(
     embeddings: DataFrame,
     threshold: float = 0.5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_rows: int = 50_000,
 ) -> DataFrame:
     """Exact all-pairs cosine pairs >= threshold — a cartesian product,
@@ -126,8 +120,8 @@ def all_pairs_cosine(
             f" > max_rows={max_rows}; use the LSH path (embedding_near_dup_pairs)"
             " at scale, or pass a larger max_rows explicitly."
         )
-    a = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    b = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
+    a = embeddings.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"))
+    b = embeddings.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"))
     cos = pair_cosine_udf()
     return (
         a.crossJoin(b)
@@ -147,14 +141,15 @@ def _hyperplanes(dim: int, n_planes: int) -> np.ndarray:
     return np.random.default_rng(SEED).standard_normal((n_planes, dim))
 
 
-def kmeans_centroids(mat: np.ndarray, k: int, iters: int = 10, seed: int = SEED) -> np.ndarray:
-    """Deterministic Lloyd k-means (NumPy, fixed seed/iterations) for the IVF
-    coarse quantizer.  Runs on a bounded driver-side TRAINING SAMPLE only —
-    the full table is never collected; assignment is distributed."""
-    rng = np.random.default_rng(seed)
+def kmeans_centroids(mat: np.ndarray, k: int) -> np.ndarray:
+    """Deterministic Lloyd k-means (NumPy, seed ``SEED``, ``KMEANS_ITERS``
+    iterations) for the IVF coarse quantizer.  Runs on a bounded driver-side
+    TRAINING SAMPLE only — the full table is never collected; assignment is
+    distributed."""
+    rng = np.random.default_rng(SEED)
     mat = np.asarray(mat, dtype=np.float64)
     cent = mat[rng.choice(len(mat), size=min(k, len(mat)), replace=False)].copy()
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         d = ((mat[:, None, :] - cent[None, :, :]) ** 2).sum(-1)
         assign = d.argmin(1)
         for j in range(len(cent)):
@@ -164,9 +159,7 @@ def kmeans_centroids(mat: np.ndarray, k: int, iters: int = 10, seed: int = SEED)
     return cent
 
 
-def _quantizer(
-    embeddings: DataFrame, kind: str, n_cells: int | None, dim: int, id_col: str, vec_col: str
-) -> np.ndarray:
+def _quantizer(embeddings: DataFrame, kind: str, n_cells: int | None, dim: int) -> np.ndarray:
     """The plane matrix (LSH) or the centroids (IVF), one row per plane /
     cell; ``n_cells`` None takes the kind's default.  IVF trains on a
     bounded driver-side sample; the full table is never collected."""
@@ -174,8 +167,8 @@ def _quantizer(
     n_cells = n_cells or default_cells
     if kind == "lsh":
         return _hyperplanes(dim, n_cells)
-    sample = embeddings.select(vec_col).orderBy(id_col).limit(TRAIN_SAMPLE).collect()
-    return kmeans_centroids(np.array([list(map(float, r[vec_col])) for r in sample]), n_cells)
+    sample = embeddings.select("embedding").orderBy("vec_id").limit(TRAIN_SAMPLE).collect()
+    return kmeans_centroids(np.array([list(map(float, r["embedding"])) for r in sample]), n_cells)
 
 
 def _cell_udf(kind: str, mat: np.ndarray):
@@ -229,12 +222,12 @@ def _probes(kind: str, mat: np.ndarray, q: np.ndarray, probe: int) -> list[int]:
     return [int(c) for c in np.argsort(((mat - q) ** 2).sum(1))[:probe]]
 
 
-def _assign(embeddings: DataFrame, kind: str, mat: np.ndarray, id_col: str, vec_col: str) -> DataFrame:
+def _assign(embeddings: DataFrame, kind: str, mat: np.ndarray) -> DataFrame:
     """(vec_id, v, cell): every vector with its cell under ``mat``."""
     return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        _cell_udf(kind, mat)(F.col(vec_col)).alias("cell"),
+        "vec_id",
+        F.col("embedding").alias("v"),
+        _cell_udf(kind, mat)(F.col("embedding")).alias("cell"),
     )
 
 
@@ -255,8 +248,6 @@ def ann_topk(
     k: int = 10,
     n_cells: int | None = None,
     probe: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k in one batch pass: quantize (``n_cells`` hyperplanes
     for "lsh", ``n_cells`` k-means centroids for "ivf"), assign every vector
@@ -264,13 +255,13 @@ def ann_topk(
     recall knob: Hamming radius (LSH, default 1) or number of nearest
     clusters (IVF, default 4); ``n_cells`` defaults to 8 planes / 16
     clusters.  Output: (vec_id, cos, rank)."""
-    mat = _quantizer(embeddings, kind, n_cells, len(query), id_col, vec_col)
-    cells = _assign(embeddings, kind, mat, id_col, vec_col)
+    mat = _quantizer(embeddings, kind, n_cells, len(query))
+    cells = _assign(embeddings, kind, mat)
     return _probe_topk(cells, kind, mat, query, k, _defaults(kind)[1] if probe is None else probe)
 
 
-def _write_vectors(embeddings: DataFrame, path: str, kind: str, mat: np.ndarray, id_col: str, vec_col: str, mode: str) -> None:
-    _assign(embeddings, kind, mat, id_col, vec_col).write.mode(mode).partitionBy("cell").parquet(path + "/vectors")
+def _write_vectors(embeddings: DataFrame, path: str, kind: str, mat: np.ndarray, mode: str) -> None:
+    _assign(embeddings, kind, mat).write.mode(mode).partitionBy("cell").parquet(path + "/vectors")
 
 
 def _open_index(spark, path: str) -> tuple[dict, np.ndarray]:
@@ -285,8 +276,6 @@ def build_ann_index(
     path: str,
     kind: str,
     n_cells: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """Materialize a serving ANN index at ``path``:
 
@@ -300,12 +289,12 @@ def build_ann_index(
     no per-query UDF pass over the table.  Same move as the Gorilla chunk
     store's metadata-pruned range read.  Raises ValueError on an empty
     input, before anything is written."""
-    first = embeddings.select(vec_col).first()
+    first = embeddings.select("embedding").first()
     if first is None:
         raise ValueError(f"build_ann_index: empty input, nothing to index at {path}")
-    dim = len(first[vec_col])
-    mat = _quantizer(embeddings, kind, n_cells, dim, id_col, vec_col)
-    _write_vectors(embeddings, path, kind, mat, id_col, vec_col, "overwrite")
+    dim = len(first["embedding"])
+    mat = _quantizer(embeddings, kind, n_cells, dim)
+    _write_vectors(embeddings, path, kind, mat, "overwrite")
     rows = [(i, [float(x) for x in r]) for i, r in enumerate(mat)]
     embeddings.sparkSession.createDataFrame(rows, "i int, row array<double>").coalesce(1).write.mode(
         "overwrite"
@@ -313,12 +302,7 @@ def build_ann_index(
     write_params(path, {"kind": kind, "n_cells": len(mat), "dim": dim})
 
 
-def extend_ann_index(
-    new_embeddings: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
+def extend_ann_index(new_embeddings: DataFrame, path: str) -> None:
     """Append a new batch to a ``build_ann_index`` store WITHOUT rebuilding:
     the STORED quantizer assigns the new vectors, which append to their cell
     partitions.  The cells stay those of a from-scratch build with the same
@@ -327,10 +311,10 @@ def extend_ann_index(
     written, if the store has no params.json or a new vector's length is
     not the index's dim."""
     params, mat = _open_index(new_embeddings.sparkSession, path)
-    bad = new_embeddings.filter(F.size(vec_col) != params["dim"]).select(F.size(vec_col)).first()
+    bad = new_embeddings.filter(F.size("embedding") != params["dim"]).select(F.size("embedding")).first()
     if bad is not None:
         raise ValueError(f"ANN index {path} holds dim-{params['dim']} vectors; a new vector has length {bad[0]}")
-    _write_vectors(new_embeddings, path, params["kind"], mat, id_col, vec_col, "append")
+    _write_vectors(new_embeddings, path, params["kind"], mat, "append")
 
 
 def ann_index_topk(spark, path: str, query: list[float], k: int = 10, probe: int | None = None) -> DataFrame:
@@ -351,8 +335,6 @@ def ann_index_topk(spark, path: str, query: list[float], k: int = 10, probe: int
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """All pairs with cosine >= threshold; candidates restricted to pairs
     whose LSH buckets (the "lsh" kind's default hyperplane count) are within
@@ -365,8 +347,8 @@ def embedding_near_dup_pairs(
     shuffle-bounded equi-join, not an all-pairs filter."""
     n_planes = _DEFAULTS["lsh"][0]
     sample = embeddings.limit(1).collect()
-    dim = len(sample[0][vec_col]) if sample else 0
-    base = _assign(embeddings, "lsh", _hyperplanes(dim, n_planes), id_col, vec_col)
+    dim = len(sample[0]["embedding"]) if sample else 0
+    base = _assign(embeddings, "lsh", _hyperplanes(dim, n_planes))
     probed = base.select(
         "vec_id",
         F.explode(

@@ -12,16 +12,17 @@ from __future__ import annotations
 import ctypes
 
 _M_MMAP_THRESHOLD = -3
+_THRESHOLD = 1 << 30  # allocations below 1 GB come from the heap
 _done = False
 
 
-def tune_malloc(threshold: int = 1 << 30) -> bool:
+def tune_malloc() -> bool:
     global _done
     if _done:
         return True
     try:
         libc = ctypes.CDLL("libc.so.6", use_errno=True)
-        libc.mallopt(_M_MMAP_THRESHOLD, threshold)
+        libc.mallopt(_M_MMAP_THRESHOLD, _THRESHOLD)
         _done = True
         return True
     except Exception:

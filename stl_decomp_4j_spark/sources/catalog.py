@@ -46,9 +46,3 @@ def write_table(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    if _iceberg_available(spark) and not path.startswith(("/", "file:", "s3:", "hdfs:")):
-        return spark.read.table(path)
-    return spark.read.parquet(path)

@@ -18,6 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 LANGS = ["en", "de", "fr", "es"]
+BASE_TS = "2025-01-01 00:00:00"  # the first instant of the crawl window
 
 
 def generate_pages(
@@ -27,7 +28,6 @@ def generate_pages(
     events_per_url: int = 200,
     hot_url_count: int = 2,
     hot_multiplier: int = 64,
-    base_ts: str = "2025-01-01 00:00:00",
     partitions: int | None = None,
 ) -> DataFrame:
     total = n_urls * events_per_url + hot_url_count * events_per_url * (hot_multiplier - 1)
@@ -45,7 +45,7 @@ def generate_pages(
 
     df = ids.select(
         F.format_string("https://site%04d.example/p%05d", (url_idx % 97).cast("int"), url_idx.cast("int")).alias("url"),
-        (F.to_timestamp(F.lit(base_ts)) + F.make_dt_interval(secs=ts_off.cast("double"))).alias("warc_ts"),
+        (F.to_timestamp(F.lit(BASE_TS)) + F.make_dt_interval(secs=ts_off.cast("double"))).alias("warc_ts"),
     )
     text = F.format_string("extracted text of %s", F.col("url"))
     return df.select(

@@ -32,13 +32,13 @@ def write_decomposition_csv(decomposition, path: str) -> None:
             f.write(f"{d:.17E}, {s:.17E}, {t:.17E}, {r:.17E}\n")
 
 
-def decomposition_to_json(decomposition, times=None) -> str:
+def decomposition_to_json(decomposition) -> str:
     """StlResults JSON shape: {time[], value[], seasonal[], trend[],
-    residual[], weight[]} (ref: StlDemoRestServer/StlResults.java:8-15)."""
-    n = len(decomposition.data)
+    residual[], weight[]} (ref: StlDemoRestServer/StlResults.java:8-15);
+    ``time`` is the sample index."""
     return json.dumps(
         {
-            "time": list(times) if times is not None else list(range(n)),
+            "time": list(range(len(decomposition.data))),
             "value": list(decomposition.data),
             "seasonal": list(decomposition.seasonal),
             "trend": list(decomposition.trend),

@@ -30,7 +30,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..operators.gapfill import dense_grid
+from ..operators.gapfill import STEP_SECONDS, dense_grid
 from .keyed import carry_by_key
 
 PAGES_SCHEMA = StructType(
@@ -55,14 +55,13 @@ def read_pages_stream(spark: SparkSession, input_path: str) -> DataFrame:
 def stream_bucketize(
     pages_stream: DataFrame,
     watermark: str = "2 hours",
-    window: str = "1 hour",
 ) -> DataFrame:
     """Watermarked hourly bucket counts; append-mode emits each (url, hour)
     exactly once, when the watermark passes the window end."""
     return (
         pages_stream.select("url", "warc_ts")
         .withWatermark("warc_ts", watermark)
-        .groupBy("url", F.window("warc_ts", window).alias("w"))
+        .groupBy("url", F.window("warc_ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select("url", F.col("w.start").alias("ts"), "cnt")
     )
@@ -77,10 +76,10 @@ BUCKET_SCHEMA = StructType(
 )
 
 
-def stream_gapfill_stateful(bucket_rows: DataFrame, step_seconds: int = 3600) -> DataFrame:
+def stream_gapfill_stateful(bucket_rows: DataFrame) -> DataFrame:
     """Custom stateful operator: streaming gap-fill.
 
-    Consumes finalized (url, ts, cnt) bucket rows (e.g. the append-mode
+    Consumes finalized hourly (url, ts, cnt) bucket rows (e.g. the append-mode
     output of stream_bucketize re-streamed from the buckets table) and emits
     the DENSE grid rows (url, ts, value) exactly once per grid slot per url:
     observed count where a bucket exists, 0.0 for the gaps — including gaps
@@ -90,7 +89,7 @@ def stream_gapfill_stateful(bucket_rows: DataFrame, step_seconds: int = 3600) ->
     raises instead of colliding into a floor-divided slot.  The grid is
     built by the batch STL kernel's helper (operators/gapfill.py dense_grid).
     """
-    step_us = step_seconds * 1_000_000
+    step_us = STEP_SECONDS["hour"] * 1_000_000
     out_schema = StructType(
         [
             StructField("url", StringType()),
@@ -115,15 +114,13 @@ def start_bucket_stream(
     out_path: str,
     checkpoint: str,
     watermark: str = "2 hours",
-    available_now: bool = True,
 ) -> StreamingQuery:
-    buckets = stream_bucketize(pages_stream, watermark=watermark)
-    writer = (
-        buckets.writeStream.outputMode("append")
+    return (
+        stream_bucketize(pages_stream, watermark=watermark)
+        .writeStream.outputMode("append")
         .format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

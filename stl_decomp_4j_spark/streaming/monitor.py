@@ -31,6 +31,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..operators.gapfill import STEP_SECONDS
 from .keyed import carry_by_key
 
 OUTAGE_SCHEMA = StructType(
@@ -43,10 +44,8 @@ OUTAGE_SCHEMA = StructType(
 )
 
 
-def stream_outage_monitor(
-    bucket_rows: DataFrame, step_seconds: int = 3600, min_missing: int = 1
-) -> DataFrame:
-    """Stateful streaming gap detector over finalized bucket rows.
+def stream_outage_monitor(bucket_rows: DataFrame, min_missing: int = 1) -> DataFrame:
+    """Stateful streaming gap detector over finalized hourly bucket rows.
 
     Returns an append-mode stream of (url, gap_start, gap_end, missing):
     one row per completed run of >= min_missing empty grid slots between two
@@ -54,7 +53,8 @@ def stream_outage_monitor(
     closing bucket and never again (per-url last-slot state survives
     restarts via the query checkpoint).
     """
-    step_us = step_seconds * 1_000_000
+    step_s = STEP_SECONDS["hour"]
+    step_us = step_s * 1_000_000
 
     def step(url, ts, pdf, state):
         # the state's last slot leads the sequence, so a gap spanning
@@ -63,7 +63,7 @@ def stream_outage_monitor(
         if ((seq - seq[0]) % step_us).any():
             raise ValueError(
                 f"bucket timestamps for url={url!r} are not aligned to the "
-                f"{step_seconds}s grid (granularity mismatch between the "
+                f"{step_s}s grid (granularity mismatch between the "
                 f"bucket stream and the monitor step)"
             )
         missing = np.diff(seq) // step_us - 1

@@ -42,24 +42,21 @@ def refresh_tier_partitions(
     buckets_path: str,
     tier_path: str,
     touched_days: list,
-    granularity: str = "day",
 ) -> int:
     """Re-aggregate exactly ``touched_days`` from the buckets table and
     dynamic-partition-overwrite them in the tier table.  Pure function of
     the buckets table — safe to re-run.  Returns rows written."""
     if not touched_days:
         return 0
-    widths = {"hour": "INTERVAL 1 HOUR", "day": "INTERVAL 1 DAY", "week": "INTERVAL 7 DAYS"}
-    width = widths[granularity]
     lo, hi = min(touched_days), max(touched_days)
-    day = F.date_trunc(granularity, "ts")
+    day = F.date_trunc("day", "ts")
     buckets = (
         spark.read.parquet(buckets_path)
         # raw-ts range prune reaches the parquet scan (lo/hi are day floors,
         # so ts>=lo <=> day>=lo); the day-expression isin narrows sparse sets
         .filter(
             (F.col("ts") >= F.lit(lo))
-            & (F.col("ts") < F.lit(hi) + F.expr(width))
+            & (F.col("ts") < F.lit(hi) + F.expr("INTERVAL 1 DAY"))
         )
         .filter(day.isin(touched_days))
     )
@@ -86,10 +83,9 @@ def start_tier_refresh_stream(
     buckets_path: str,
     tier_path: str,
     checkpoint: str,
-    granularity: str = "day",
 ) -> StreamingQuery:
     """foreachBatch sink: for every micro-batch of finalized bucket rows,
-    refresh the coarse-tier partitions the batch touches.
+    refresh the day-tier partitions the batch touches.
 
     ``bucket_stream`` must be the SAME finalized rows that land in
     ``buckets_path`` (e.g. a second read of stream_bucketize's output, or
@@ -101,12 +97,10 @@ def start_tier_refresh_stream(
         days = [
             r["d"]
             for r in batch_df.select(
-                F.date_trunc(granularity, "ts").alias("d")
+                F.date_trunc("day", "ts").alias("d")
             ).distinct().collect()
         ]
-        refresh_tier_partitions(
-            batch_df.sparkSession, buckets_path, tier_path, days, granularity
-        )
+        refresh_tier_partitions(batch_df.sparkSession, buckets_path, tier_path, days)
 
     return (
         bucket_stream.writeStream.foreachBatch(_refresh)

@@ -57,11 +57,11 @@ def test_compact_chunks_merges_passthrough_fixpoint(spark):
     start = dt.datetime(2025, 1, 25)
     frag = compress_tier(
         _hourly_series(spark, start, hours=24 * 14, urls=["a", "b"]),
-        columns=["value"], chunk_points=24, slab="month",
+        chunk_points=24, slab="month",
     )
     healthy = compress_tier(
         _hourly_series(spark, start, hours=24 * 14, urls=["c"]),
-        columns=["value"], chunk_points=96, slab="month",
+        chunk_points=96, slab="month",
     )
     inp = frag.unionByName(healthy)
     before_rows = _decoded(inp)
@@ -106,7 +106,7 @@ def test_sink_stages_carry_runs_across_arrow_batches(spark, arrow_batch_rows):
     series = _hourly_series(spark, dt.datetime(2025, 1, 1), hours=24 * 14, urls=list("abcde"))
 
     def chunk_sets():
-        frag = compress_tier(series, columns=["value"], chunk_points=24, slab="month")
+        frag = compress_tier(series, chunk_points=24, slab="month")
         return _chunk_set(frag), _chunk_set(compact_chunks(frag, chunk_points=96, slab="month"))
 
     frag, merged = chunk_sets()
@@ -117,7 +117,7 @@ def test_sink_stages_carry_runs_across_arrow_batches(spark, arrow_batch_rows):
 
 def test_compact_chunks_rejects_overlapping_runs(spark):
     series = _hourly_series(spark, dt.datetime(2025, 3, 1), hours=48, urls=["a"])
-    chunks = compress_tier(series, columns=["value"], chunk_points=8)
+    chunks = compress_tier(series, chunk_points=8)
     dup = chunks.unionByName(chunks)  # same time range twice -> not mergeable
     with pytest.raises(Exception, match="not strictly increasing"):
         compact_chunks(dup, chunk_points=4096).collect()
@@ -284,7 +284,7 @@ def test_compact_store_subset_scan_prunes_partitions(spark, tmp_path, plan_of):
     PartitionFilters, so only those partitions' files are listed and read."""
     chunks = compress_tier(
         _hourly_series(spark, dt.datetime(2025, 1, 25), hours=24 * 14, urls=["a", "b"]),
-        columns=["value"], chunk_points=24, slab="month",
+        chunk_points=24, slab="month",
     )
     root = str(tmp_path / "gorilla")
     write_table(

@@ -185,7 +185,7 @@ def test_pruned_range_read_decodes_only_needed_chunks(spark, pages):
 
     series = gapfill(bucketize(pages)).select("url", "ts", "value")
     # small slabs so each url has many time chunks to prune between
-    chunks = compress_tier(series, columns=["value"], chunk_points=48)
+    chunks = compress_tier(series, chunk_points=48)
     chunks.cache().count()
     bounds = series.agg(F.min("ts").alias("t0"), F.max("ts").alias("t1")).collect()[0]
     url0 = series.select("url").orderBy("url").first()["url"]

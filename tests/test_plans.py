@@ -63,7 +63,7 @@ def dec_stored(spark, work, decomposed):
 @pytest.fixture(scope="module")
 def chunk_store(spark, work, filled):
     path = str(work / "chunks")
-    compress_tier(filled.select("url", "ts", "value"), columns=["value"], chunk_points=168).write.parquet(path)
+    compress_tier(filled.select("url", "ts", "value"), chunk_points=168).write.parquet(path)
     return spark.read.parquet(path)
 
 
@@ -103,7 +103,7 @@ def test_stl_1d_tier_partial_aggregate(plan_of, decomposed):
 
 
 def test_gorilla_sink_batched_map_in_pandas(plan_of, filled):
-    plan = plan_of(compress_tier(filled.select("url", "ts", "value"), columns=["value"]))
+    plan = plan_of(compress_tier(filled.select("url", "ts", "value")))
     assert "MapInArrow" in plan, plan  # no grouped map
     assert "Sort" in plan and "Arguments: [url" in plan, plan  # sorted within url partitions
     assert "hashpartitioning(url" in plan, plan  # pinned url repartition

@@ -42,7 +42,7 @@ def test_slab_aligned_chunks_roundtrip(spark):
     and the decoded rows are identical to the unaligned layout's."""
     start = dt.datetime(2025, 1, 20)
     series = _hourly_series(spark, start, hours=24 * 22)  # Jan 20 -> Feb 11
-    aligned = compress_tier(series, columns=["value"], chunk_points=100, slab="month")
+    aligned = compress_tier(series, chunk_points=100, slab="month")
     chunks = aligned.collect()
     assert len(chunks) > 4
     months = set()
@@ -57,7 +57,7 @@ def test_slab_aligned_chunks_roundtrip(spark):
             .sort_values(["url", "ts_ms"]).reset_index(drop=True)
         )
 
-    plain = compress_tier(series, columns=["value"], chunk_points=100)
+    plain = compress_tier(series, chunk_points=100)
     pd.testing.assert_frame_equal(rows(aligned), rows(plain))
 
 
