@@ -8,7 +8,10 @@ oracle_sql(): DuckDB ANSI-SQL twin per SQL-expressible query; non-SQL ops
 """
 from __future__ import annotations
 
+import atexit
+import shutil
 import sys
+import tempfile
 from collections.abc import Callable
 from pathlib import Path
 
@@ -43,6 +46,14 @@ def _events_decomposed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stl_decomp_4j_spark.operators.stl_udf import stl_decompose_sparse_df
 
     return stl_decompose_sparse_df(_events_hourly(spark, sf_dir), period=24, seasonal_width=35)
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh temp directory removed when the interpreter exits: a
+    returned DataFrame reads its store lazily, so nothing earlier may."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def _fmt_ts(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -546,9 +557,7 @@ def q_gorilla_range_read(spark, sf_dir):
     (url, time) predicate are pruned on metadata and never decoded.  The
     oracle is the plain-SQL filter of the gap-filled series; they match iff
     pruning loses nothing and decode is lossless."""
-    import tempfile
-
-    store = tempfile.mkdtemp(prefix="gorilla_store_")
+    store = _scratch_dir("gorilla_store_")
     return gorilla_range_read_from_store(spark, store, *gorilla_range_read_setup(spark, sf_dir, store))
 
 
@@ -1057,9 +1066,7 @@ def q_ann_indexed(spark, sf_dir):
     LSH bucket / IVF cluster, then looked up via partition-pruned reads —
     results identical to the batch q_ann paths (same planes / centroids), so
     the same DuckDB recomputation oracles apply."""
-    import tempfile
-
-    idx_dir = tempfile.mkdtemp(prefix="ann_index_")
+    idx_dir = _scratch_dir("ann_index_")
     q = ann_index_setup(spark, sf_dir, idx_dir)
     return ann_indexed_from_store(spark, idx_dir, q)
 
@@ -1126,14 +1133,12 @@ def q_corpus_clean_incremental(spark, sf_dir):
     verify, then new-vs-new keep-one.  The oracle chains old+new tables in
     DuckDB (history ids sort before new ids, so the shared inverted gram
     index splits pairs into cross and in-batch by id alone)."""
-    import tempfile
-
     from stl_decomp_4j_spark.operators.corpus import build_fingerprint_store, dedup_corpus
 
     docs = spark.read.parquet(_t(sf_dir, "documents"))
     lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
     split = (int(lo) + int(hi)) // 2
-    store = tempfile.mkdtemp(prefix="fpstore_")
+    store = _scratch_dir("fpstore_")
     build_fingerprint_store(docs.filter(F.col("doc_id") <= split), store, snapshot_key="source")
     return dedup_corpus(
         docs.filter(F.col("doc_id") > split),
@@ -1152,15 +1157,13 @@ def q_snapshot_stream(spark, sf_dir):
     trigger, checkpointed exactly-once parquet sink) consumes them, and the
     sink is read back.  The oracle is the BATCH snapshot_dedup SQL — stream
     output must equal the batch lag-1 window."""
-    import tempfile
-
     from stl_decomp_4j_spark.operators.dedup import simhash
     from stl_decomp_4j_spark.streaming.snapshots import (
         SNAPSHOT_IN_SCHEMA,
         stream_snapshot_dedup,
     )
 
-    work = tempfile.mkdtemp(prefix="snapstream_")
+    work = _scratch_dir("snapstream_")
     docs = spark.read.parquet(_t(sf_dir, "documents"))
     rows = simhash(docs, carry_cols=("source",)).select("source", "doc_id", "simhash")
     rows.write.mode("overwrite").parquet(work + "/in")

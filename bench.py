@@ -75,9 +75,7 @@ def main() -> None:
     # — materialize it up front (timed + disclosed separately) so the
     # headline entry measures the metadata-pruned read, which is what a
     # serving path pays per query.
-    import tempfile
-
-    store_dir = tempfile.mkdtemp(prefix="bench_gorilla_store_")
+    store_dir = entry_mod._scratch_dir("bench_gorilla_store_")
     t0 = time.time()
     probe = entry_mod.gorilla_range_read_setup(spark, sf_dir, store_dir)
     setup_queries = {"gorilla_range_read_setup": round(time.time() - t0, 3)}
@@ -87,7 +85,7 @@ def main() -> None:
 
     # ann_indexed: index build is write-once setup (same split as the
     # gorilla store) — the headline row times the partition-pruned lookups.
-    idx_dir = tempfile.mkdtemp(prefix="bench_ann_index_")
+    idx_dir = entry_mod._scratch_dir("bench_ann_index_")
     t0 = time.time()
     qvec = entry_mod.ann_index_setup(spark, sf_dir, idx_dir)
     setup_queries["ann_index_setup"] = round(time.time() - t0, 3)

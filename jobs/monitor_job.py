@@ -46,6 +46,7 @@ def main() -> int:
     from stl_decomp_4j_spark.operators.audit import tier_consistency
     from stl_decomp_4j_spark.operators.bucketize import bucketize
     from stl_decomp_4j_spark.operators.diagnostics import outage_summary
+    from stl_decomp_4j_spark.operators.rollup import TIERS
     from stl_decomp_4j_spark.plans.checkpoint import Manifest, new_run_id
     from stl_decomp_4j_spark.plans.session import build_session
 
@@ -58,16 +59,14 @@ def main() -> int:
     manifest = Manifest(args.output)
     run_id = new_run_id()
 
-    tiers = {
-        name: spark.read.parquet(f"{args.output}/tier_{name}") for name in ("1h", "1d", "1w")
-    }
+    tiers = {name: spark.read.parquet(f"{args.output}/tier_{name}") for name in TIERS}
     summary: dict[str, object] = {"run_id": run_id, "output": args.output}
 
     # 1. cross-tier audits — both derivations the pipeline itself performs
     audit_counts = {}
     report_frames = []
-    for coarse, fine, gran in (("1d", "1h", "day"), ("1w", "1d", "week")):
-        mism = tier_consistency(tiers[coarse], tiers[fine], gran, tol=args.tol)
+    for fine, coarse in zip(TIERS, list(TIERS)[1:]):
+        mism = tier_consistency(tiers[coarse], tiers[fine], TIERS[coarse], tol=args.tol)
         n = mism.count()
         audit_counts[f"{fine}->{coarse}"] = n
         if n and args.report:

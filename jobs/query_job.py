@@ -79,9 +79,11 @@ def serve_query(
 
 
 def main() -> None:
+    from stl_decomp_4j_spark.operators.rollup import TIERS
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--store", required=True, help="rollup_job.py --output root")
-    ap.add_argument("--tier", default="1h", choices=["1h", "1d", "1w"])
+    ap.add_argument("--tier", default="1h", choices=list(TIERS))
     ap.add_argument(
         "--granularity", default=None,
         help="serve a rollup at this granularity (hour/day/week/month/quarter/year) "

@@ -7,10 +7,11 @@
         [--now 2026-08-17T00:00:00]
 
 Drops wholly-expired (bucket, slab) partitions from the tier and Gorilla
-tables (metadata-only — no rows read, no chunks rewritten) and records every
-drop in the lineage manifest.  Negative keep = keep forever (default for
-tiers not passed).  The slab granularity comes from the store's own
-params.json; a root without one is refused.
+tables (metadata-only — no rows read, no chunks rewritten, no Spark session:
+a directory listing and deletes) and records every drop in the lineage
+manifest.  Negative keep = keep forever (default for tiers not passed).  The
+slab granularity comes from the store's own params.json; a root without one
+is refused.
 """
 from __future__ import annotations
 
@@ -20,28 +21,27 @@ import json
 
 
 def main() -> None:
+    from stl_decomp_4j_spark.operators.rollup import TIERS
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--output", required=True)
-    ap.add_argument("--keep-1h", type=int, default=-1, help="days of 1h tier to keep (-1 = forever)")
-    ap.add_argument("--keep-1d", type=int, default=-1)
-    ap.add_argument("--keep-1w", type=int, default=-1)
+    for tier in TIERS:
+        ap.add_argument(f"--keep-{tier}", type=int, default=-1,
+                        help=f"days of {tier} tier to keep (-1 = forever)")
     ap.add_argument("--now", default=None, help="ISO timestamp for the cutoff clock (default: wall clock)")
     args = ap.parse_args()
 
     from stl_decomp_4j_spark.operators.retention import apply_retention
-    from stl_decomp_4j_spark.plans.session import build_session
 
     now = dt.datetime.fromisoformat(args.now) if args.now else dt.datetime.now()
-    policy = {"1h": args.keep_1h, "1d": args.keep_1d, "1w": args.keep_1w}
-    spark = build_session(app_name="stl-retention")
-    dropped = apply_retention(spark, args.output, policy, now=now)
+    policy = {tier: getattr(args, f"keep_{tier}") for tier in TIERS}
+    dropped = apply_retention(args.output, policy, now=now)
     print(json.dumps({
         "now": now.isoformat(),
         "policy": policy,
         "dropped_partitions": sum(len(v) for v in dropped.values()),
         "dropped": dropped,
     }))
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -2,9 +2,12 @@
 inverse for reads/verification.
 
 Chunks are per url per column stream, split into time slabs of at most
-``chunk_points`` points, so a reader prunes to the url+time-range it needs
+``CHUNK_POINTS`` points, so a reader prunes to the url+time-range it needs
 on (url, t0, t1, column) metadata alone (prune_chunks / read_range) and
-never decodes outside the range.
+never decodes outside the range.  In the store, a chunk never crosses a
+calendar slab (retention.slab_start): the slab start is a run key of the
+encode and of compaction, so a run — and every chunk cut from it — lies in
+one slab.
 
 Scale shape: a grouped-map applyInPandas paid ~10 ms of per-group overhead
 (per-group pandas construction + sort) against ~0.25 ms of actual encoding
@@ -18,6 +21,7 @@ runs found from dictionary codes, url and carry columns copied by Arrow
 from __future__ import annotations
 
 from collections.abc import Iterator
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -35,7 +39,13 @@ from pyspark.sql.types import (
 )
 
 from ..codec.gorilla import decode_series, encode_series
+from .retention import slab_start
+from .rollup import TIERS
 from .runs import map_runs
+
+# most points per chunk: bounded decode memory, and chunk boundaries a range
+# read can prune on within a url's history
+CHUNK_POINTS = 4096
 
 CHUNK_SCHEMA = StructType(
     [
@@ -50,30 +60,13 @@ CHUNK_SCHEMA = StructType(
 
 _TS_TYPE = to_arrow_type(TimestampType())
 
-# calendar slabs a chunk can be aligned to (retention drops whole slabs)
-_SLAB_PERIOD = {"day": "D", "week": "W", "month": "M"}
 
-
-def _slab_ids(ts_us: np.ndarray, slab: str) -> np.ndarray:
-    """Integer calendar-slab id per epoch-µs timestamp (equal ids <=> same
-    slab)."""
-    try:
-        period = _SLAB_PERIOD[slab]
-    except KeyError:
-        raise ValueError(f"slab must be one of {sorted(_SLAB_PERIOD)}, got {slab!r}") from None
-    return pd.PeriodIndex(ts_us.astype("datetime64[us]"), freq=period).asi8
-
-
-def _bounds(starts: np.ndarray, n: int, ts_us: np.ndarray, slab: str | None) -> np.ndarray:
-    """Chunk-group boundaries of a block: every key-run start, plus every
-    calendar-slab change when ``slab`` is set, plus the end ``n``."""
-    cut = np.zeros(n + 1, dtype=bool)
-    cut[starts] = True
-    cut[n] = True
-    if slab is not None:
-        sids = _slab_ids(ts_us, slab)
-        cut[1:n] |= sids[1:] != sids[:-1]
-    return np.flatnonzero(cut)
+def _slab_keyed(df: DataFrame, keys: list[str], ts_col: str, slab: str | None):
+    """``df`` and its run keys, plus the calendar slab start of ``ts_col`` as
+    a last key when ``slab`` is set, so no run crosses a slab."""
+    if slab is None:
+        return df, keys
+    return df.withColumn("_slab", slab_start(slab, ts_col)), [*keys, "_slab"]
 
 
 def _chunk_batch(block: pa.RecordBatch, src, t0, t1, n, column, chunk, carry_cols=()):
@@ -100,19 +93,13 @@ def _encode_block(
     starts: np.ndarray,
     columns: list[str],
     chunk_points: int,
-    slab: str | None = None,
 ) -> pa.RecordBatch:
-    """Encode every url run of a (url, ts)-sorted block, splitting runs
-    longer than ``chunk_points`` into time-slab chunks.
-
-    With ``slab`` set, runs are additionally cut at calendar-slab boundaries
-    so every chunk lies wholly inside one slab — the retention path
-    (operators/retention.py) then drops whole slab partitions on metadata
-    alone, never splitting or rewriting a chunk."""
+    """Encode every run of a (keys, ts)-sorted block, splitting runs longer
+    than ``chunk_points`` into time-slab chunks."""
     ts_us = block.column("ts").cast(pa.int64()).to_numpy()
     ts_ms = ts_us // 1000
     vals = {c: block.column(c).to_numpy(zero_copy_only=False).astype(float) for c in columns}
-    bounds = _bounds(starts, block.num_rows, ts_us, slab)
+    bounds = np.append(starts, block.num_rows)
     out: dict[str, list] = {"src": [], "t0": [], "t1": [], "n": [], "column": [], "chunk": []}
     for a, b in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
         for s in range(a, b, chunk_points):
@@ -129,17 +116,16 @@ def _encode_block(
 
 def compress_tier(
     tier: DataFrame,
-    chunk_points: int = 4096,
+    chunk_points: int = CHUNK_POINTS,
     presorted: bool = False,
     slab: str | None = None,
 ) -> DataFrame:
     """Encode every column of ``tier`` other than (url, ts) as per-url
     Gorilla chunks.
 
-    ``chunk_points`` bounds points per chunk (default 4096): bounded decode
-    memory, and time-slab chunk boundaries so a range read can prune WITHIN a
-    url's history — at 100x the 1h table spans years and a dashboard reads
-    days.
+    ``chunk_points`` bounds points per chunk: bounded decode memory, and
+    time-slab chunk boundaries so a range read can prune WITHIN a url's
+    history — at 100x the 1h table spans years and a dashboard reads days.
 
     ``presorted=True`` skips the repartition+sort: valid when the input
     already has each url's rows contiguous and time-ordered within every
@@ -151,28 +137,28 @@ def compress_tier(
     chunk at the boundary; correctness never depends on the ordering (any
     ordering round-trips), only the chunk count/compression ratio does.
 
-    ``slab`` ('day'/'week'/'month') additionally aligns chunks to calendar
-    slabs so retention can drop whole expired slabs without touching any
-    chunk's bytes (see _encode_block)."""
+    ``slab`` ('day'/'week'/'month') makes the slab start a second run key,
+    so every chunk lies in one calendar slab and retention drops whole
+    expired slabs without touching any chunk's bytes."""
     columns = [c for c in tier.columns if c not in ("url", "ts")]
+    tier, keys = _slab_keyed(tier, ["url"], "ts", slab)
 
     def fn(block: pa.RecordBatch, starts: np.ndarray) -> pa.RecordBatch:
-        return _encode_block(block, starts, columns, chunk_points, slab)
+        return _encode_block(block, starts, columns, chunk_points)
 
-    return map_runs(tier, ["url"], ["ts"], fn, CHUNK_SCHEMA, presorted=presorted)
+    return map_runs(tier, keys, ["ts"], fn, CHUNK_SCHEMA, presorted=presorted)
 
 
 def _recode_block(
     block: pa.RecordBatch,
     starts: np.ndarray,
     chunk_points: int,
-    slab: str | None,
     carry_cols: list[str],
 ) -> pa.RecordBatch:
     """Decode every (url, column[, slab]) run of chunks in a (url, column,
     t0)-sorted block, concatenate the points, and re-encode into
     maximally-filled ``chunk_points`` chunks."""
-    bounds = _bounds(starts, block.num_rows, block.column("t0").cast(pa.int64()).to_numpy(), slab)
+    bounds = np.append(starts, block.num_rows)
     blobs = block.column("chunk").to_pylist()
     out: dict[str, list] = {"src": [], "t0": [], "t1": [], "n": [], "column": [], "chunk": []}
     for a, b in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
@@ -197,18 +183,6 @@ def _recode_block(
     return _chunk_batch(block, carry_cols=carry_cols, **out)
 
 
-def _slab_key(slab: str):
-    """JVM-side group key matching the kernel's ``_slab_ids`` cut:
-    date_trunc month/week/day of a chunk's t0 (chunks are slab-aligned at
-    encode time, so t0's slab IS the chunk's slab; Spark's 'week' and
-    pandas period 'W' are both Monday-start)."""
-    import pyspark.sql.functions as F
-
-    if slab not in _SLAB_PERIOD:
-        raise ValueError(f"slab must be one of {sorted(_SLAB_PERIOD)}, got {slab!r}")
-    return F.date_trunc(slab, F.col("t0"))
-
-
 def _fragmented(chunk_points: int):
     """Aggregate predicate over a chunk group: it is fragmented iff it holds
     more chunks than the minimum, ceil(points / chunk_points) — so a
@@ -221,7 +195,7 @@ def _fragmented(chunk_points: int):
 
 def compact_chunks(
     chunks: DataFrame,
-    chunk_points: int = 4096,
+    chunk_points: int = CHUNK_POINTS,
     slab: str | None = None,
     carry_cols: list[str] | None = None,
 ) -> DataFrame:
@@ -238,11 +212,12 @@ def compact_chunks(
          (url, column[, slab]) groups (``_fragmented``)
       2. chunks of healthy groups PASS THROUGH byte-identical (no decode,
          no re-encode)
-      3. only fragmented groups go through ``map_runs`` keyed on (url,
-         column): decoded, merged and re-encoded
+      3. only fragmented groups go through ``map_runs`` keyed on the same
+         (url, column[, slab]) groups: decoded, merged and re-encoded
 
-    ``slab`` must match the store's encode-time slab so merged chunks never
-    cross a calendar-slab boundary (retention stays metadata-only).
+    ``slab`` must match the store's encode-time slab: the slab start of a
+    chunk's t0 is then a group key, and merged chunks never cross a
+    calendar-slab boundary (retention stays metadata-only).
     ``carry_cols``: extra columns constant within each group (e.g. the
     store's bucket/slab partition values) copied onto re-encoded rows.
     """
@@ -251,12 +226,7 @@ def compact_chunks(
     carry_cols = list(carry_cols or [])
     out_cols = CHUNK_SCHEMA.names + carry_cols
 
-    keys = ["url", "column"]
-    work = chunks.select(*out_cols)
-    if slab is not None:
-        work = work.withColumn("_slab_key", _slab_key(slab))
-        keys = keys + ["_slab_key"]
-
+    work, keys = _slab_keyed(chunks.select(*out_cols), ["url", "column"], "t0", slab)
     frag = (
         work.groupBy(*keys)
         .agg(_fragmented(chunk_points).alias("_frag"))
@@ -264,15 +234,15 @@ def compact_chunks(
     )
     tagged = work.join(frag, on=keys, how="left")
     keep = tagged.filter(F.col("_frag").isNull()).select(*out_cols)
-    todo = tagged.filter(F.col("_frag").isNotNull()).select(*out_cols)
+    todo = tagged.filter(F.col("_frag").isNotNull()).select(*out_cols, *keys[2:])
 
     carry_fields = {f.name: f for f in chunks.schema.fields}
     schema = StructType(list(CHUNK_SCHEMA.fields) + [carry_fields[c] for c in carry_cols])
 
     def fn(block: pa.RecordBatch, starts: np.ndarray) -> pa.RecordBatch:
-        return _recode_block(block, starts, chunk_points, slab, carry_cols)
+        return _recode_block(block, starts, chunk_points, carry_cols)
 
-    return keep.unionByName(map_runs(todo, ["url", "column"], ["t0"], fn, schema))
+    return keep.unionByName(map_runs(todo, keys, ["t0"], fn, schema))
 
 
 def decompress_chunks(chunks: DataFrame, decode_counter=None) -> DataFrame:
@@ -385,11 +355,27 @@ def _partition_counts(chunks: DataFrame) -> dict:
     }
 
 
+def _fragmented_partitions(chunks: DataFrame) -> dict:
+    """(bucket, slab) -> chunk count, for every partition holding a
+    fragmented (url, column) group: one two-level metadata aggregate (count
+    and flag each group, then sum and OR them per partition)."""
+    import pyspark.sql.functions as F
+
+    parts = (
+        chunks.groupBy("bucket", "slab", "url", "column")
+        .agg(F.count(F.lit(1)).alias("n"), _fragmented(CHUNK_POINTS).alias("frag"))
+        .groupBy("bucket", "slab")
+        .agg(F.sum("n").alias("n"), F.bool_or("frag").alias("frag"))
+        .filter(F.col("frag"))
+        .collect()
+    )
+    return {(r["bucket"], r["slab"]): r["n"] for r in parts}
+
+
 def compact_store(
     spark,
     out_root: str,
-    tiers: tuple[str, ...] = ("1h", "1d", "1w"),
-    chunk_points: int = 4096,
+    tiers: tuple[str, ...] = tuple(TIERS),
 ) -> dict[str, dict]:
     """Store-level compaction job: rewrite exactly the (bucket, slab)
     partitions of each Gorilla table that contain fragmented chunk groups,
@@ -399,9 +385,9 @@ def compact_store(
     table — no chunk decoded); rewrites go through the idempotent
     partition-overwrite sink the pipeline itself uses, so a crashed
     compaction re-run is safe, and a second pass finds nothing to do
-    (compact_chunks packs each group to its minimum chunk count).  Every
-    rewritten partition gets a lineage row (status='compaction') with
-    before/after chunk counts.
+    (compact_chunks packs each group into the fewest chunks of at most
+    ``CHUNK_POINTS`` points).  Every rewritten partition gets a lineage row
+    (status='compaction') with before/after chunk counts.
 
     The slab granularity is read from the store's params.json (a root
     without one raises ValueError) — merged chunks never cross a slab
@@ -411,7 +397,6 @@ def compact_store(
 
     from ..plans.checkpoint import Manifest, check_params, new_run_id
     from ..sources.catalog import write_table
-    from .retention import _hadoop_fs
 
     slab = check_params(out_root, "tier store")["slab"]
     manifest = Manifest(out_root)
@@ -419,27 +404,16 @@ def compact_store(
     summary: dict[str, dict] = {}
     for tier in tiers:
         root = f"{out_root}/gorilla_{tier}"
-        fs, path, _ = _hadoop_fs(spark, root)
-        if not fs.exists(path):
+        if not Path(root).exists():
             continue
         df = spark.read.parquet(root)
-        frag_parts = (
-            df.groupBy("bucket", "slab", "url", "column")
-            .agg(_fragmented(chunk_points).alias("_frag"))
-            .filter(F.col("_frag"))
-            .select("bucket", "slab")
-            .distinct()
-            .collect()
-        )
-        if not frag_parts:
+        before = _fragmented_partitions(df)
+        if not before:
             summary[f"gorilla_{tier}"] = {"partitions": 0}
             continue
-        in_frag = _in_partitions(frag_parts)
-
-        subset = df.filter(in_frag)
-        before = _partition_counts(subset)
+        in_frag = _in_partitions(before)
         compacted = compact_chunks(
-            subset, chunk_points=chunk_points, slab=slab, carry_cols=["bucket", "slab"]
+            df.filter(in_frag), slab=slab, carry_cols=["bucket", "slab"]
         ).withColumn("run_id", F.lit(run_id))
         write_table(
             compacted, root, partition_by=["bucket", "slab"], mode="overwrite_partitions"
@@ -452,7 +426,7 @@ def compact_store(
                 chunks_before=int(n_before), chunks_after=int(after.get((b, s), 0)),
             )
         summary[f"gorilla_{tier}"] = {
-            "partitions": len(frag_parts),
+            "partitions": len(before),
             "chunks_before": int(sum(before.values())),
             "chunks_after": int(sum(after.values())),
         }

@@ -20,7 +20,6 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-_INTERVALS = {"hour": "interval 1 hour", "day": "interval 1 day", "week": "interval 7 days"}
 STEP_SECONDS = {"hour": 3600, "day": 86400, "week": 604800}
 
 
@@ -59,8 +58,9 @@ def _dense_join(buckets: DataFrame, granularity: str) -> DataFrame:
     AQE coalescing."""
     partitions = buckets.sparkSession.sparkContext.defaultParallelism * 4
     bounds = buckets.groupBy("url").agg(F.min("ts").alias("t0"), F.max("ts").alias("t1"))
+    step = F.expr(f"interval {STEP_SECONDS[granularity]} seconds")
     grid = bounds.repartition(partitions, "url").select(
-        "url", F.explode(F.sequence("t0", "t1", F.expr(_INTERVALS[granularity]))).alias("ts")
+        "url", F.explode(F.sequence("t0", "t1", step)).alias("ts")
     )
     return grid.join(buckets, ["url", "ts"], "left")
 

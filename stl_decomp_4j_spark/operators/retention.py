@@ -1,14 +1,14 @@
-"""Retention expiry: drop whole expired calendar-slab partitions.
+"""The store's calendar slab (``slab_start``/``slab_end``) and retention
+expiry: drop whole expired calendar-slab partitions.
 
 The pipeline partitions every tier and Gorilla table by (bucket, slab) where
-slab is the calendar slab (default month) containing the row — and Gorilla
-chunks are slab-aligned at encode time (compress.py _encode_block), so a
-slab directory can never contain bytes younger than the slab's end.  Expiry
-is therefore a pure metadata operation: list slab directories, delete the
-ones that END on or before the cutoff.  No row is read, no chunk is decoded
-or rewritten — the only cost at 10^12-doc scale is a directory listing (on
-Iceberg this is dropPartition metadata commits; on parquet a filesystem
-delete — same semantics, which is the catalog.py fallback contract).
+slab is ``slab_start`` (default month) of the row — and Gorilla chunks are
+cut at the same slab starts (compress.py), so a slab directory can never
+contain bytes younger than the slab's end.  Expiry is therefore a pure
+metadata operation: list slab directories, delete the ones that END on or
+before the cutoff.  No row is read, no chunk is decoded or rewritten — the
+only cost is a directory listing.  The store root is a local directory,
+read and written with the same file API as its manifest and params.json.
 
 Semantics (TimescaleDB drop_chunks-style):
   - a slab is dropped only when WHOLLY expired: slab_end + tier bucket
@@ -28,21 +28,26 @@ Semantics (TimescaleDB drop_chunks-style):
 from __future__ import annotations
 
 import datetime as dt
+import shutil
 import urllib.parse
+from pathlib import Path
 
-from pyspark.sql import SparkSession
+import pyspark.sql.functions as F
 
 from ..plans.checkpoint import Manifest, check_params, new_run_id
+from .gapfill import STEP_SECONDS
+from .rollup import TIERS
 
-TIERS = ("1h", "1d", "1w")
+SLABS = ("day", "week", "month")
 
-# widest span a single tier row/chunk can extend past its slab boundary:
-# one tier bucket (rows are slabbed by bucket START timestamp)
-TIER_BUCKET_WIDTH = {
-    "1h": dt.timedelta(hours=1),
-    "1d": dt.timedelta(days=1),
-    "1w": dt.timedelta(days=7),
-}
+
+def slab_start(slab: str, col):
+    """Start of the calendar slab holding each value of timestamp ``col``:
+    the store's one slab rule (partition values, Gorilla chunk cuts,
+    compaction groups).  Spark's 'week' starts on Monday."""
+    if slab not in SLABS:
+        raise ValueError(f"slab must be one of {list(SLABS)}, got {slab!r}")
+    return F.date_trunc(slab, col)
 
 
 def slab_end(start: dt.datetime, slab: str) -> dt.datetime:
@@ -54,50 +59,34 @@ def slab_end(start: dt.datetime, slab: str) -> dt.datetime:
     if slab == "month":
         nxt = start.year * 12 + (start.month - 1) + 1
         return start.replace(year=nxt // 12, month=nxt % 12 + 1, day=1)
-    raise ValueError(f"slab must be 'day', 'week' or 'month', got {slab!r}")
-
-
-def _hadoop_fs(spark: SparkSession, root: str):
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(root)
-    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path, jvm
+    raise ValueError(f"slab must be one of {list(SLABS)}, got {slab!r}")
 
 
 def expired_slab_dirs(
-    spark: SparkSession, table_root: str, cutoff: dt.datetime, slab: str = "month"
-) -> list[tuple[int, str, object]]:
-    """(bucket, slab_value, hadoop_path) for every wholly-expired slab
-    partition under ``table_root`` (layout bucket=N/slab=YYYY-MM-DD).
-    Directory listing only — no data is read."""
-    fs, root, jvm = _hadoop_fs(spark, table_root)
-    if not fs.exists(root):
-        return []
+    table_root: str, cutoff: dt.datetime, slab: str = "month"
+) -> list[tuple[int, str, Path]]:
+    """(bucket, slab_value, path) for every wholly-expired slab partition
+    under ``table_root`` (layout bucket=N/slab=YYYY-MM-DD), in (bucket,
+    slab) order.  Directory listing only — no data is read."""
     out = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("bucket=")):
+    for path in Path(table_root).glob("bucket=*/slab=*"):
+        if not path.is_dir():
             continue
-        bucket = int(name[len("bucket="):])
-        for st2 in fs.listStatus(st.getPath()):
-            sname = st2.getPath().getName()
-            if not (st2.isDirectory() and sname.startswith("slab=")):
-                continue
-            value = urllib.parse.unquote(sname[len("slab="):])
-            start = dt.datetime.strptime(value, "%Y-%m-%d")
-            if slab_end(start, slab) <= cutoff:
-                out.append((bucket, value, st2.getPath()))
-    return out
+        value = urllib.parse.unquote(path.name[len("slab="):])
+        start = dt.datetime.strptime(value, "%Y-%m-%d")
+        if slab_end(start, slab) <= cutoff:
+            out.append((int(path.parent.name[len("bucket="):]), value, path))
+    return sorted(out)
 
 
 def apply_retention(
-    spark: SparkSession,
     out_root: str,
     policy: dict[str, int],
     now: dt.datetime,
 ) -> dict[str, list[str]]:
     """Drop expired slab partitions per tier.
 
-    ``policy`` maps tier name ('1h'/'1d'/'1w') to keep-days; tiers absent
+    ``policy`` maps tier name (a ``TIERS`` key) to keep-days; tiers absent
     from the policy (or mapped to a negative value) are kept forever.
     Returns {table: [dropped 'bucket=N/slab=V', ...]}.
 
@@ -113,18 +102,16 @@ def apply_retention(
     manifest = Manifest(out_root)
     run_id = new_run_id()
     dropped: dict[str, list[str]] = {}
-    for tier_name in TIERS:
+    for tier_name, grain in TIERS.items():
         keep = policy.get(tier_name)
         if keep is None or keep < 0:
             continue
         # bucket-width grace: only slabs whose LAST bucket's coverage has
         # wholly expired are dropped (see module docstring)
-        cutoff = now - dt.timedelta(days=keep) - TIER_BUCKET_WIDTH[tier_name]
+        cutoff = now - dt.timedelta(days=keep, seconds=STEP_SECONDS[grain])
         for table in (f"tier_{tier_name}", f"gorilla_{tier_name}"):
-            root = f"{out_root}/{table}"
-            for bucket, value, hpath in expired_slab_dirs(spark, root, cutoff, slab):
-                fs, _, _ = _hadoop_fs(spark, root)
-                fs.delete(hpath, True)
+            for bucket, value, path in expired_slab_dirs(f"{out_root}/{table}", cutoff, slab):
+                shutil.rmtree(path)
                 dropped.setdefault(table, []).append(f"bucket={bucket}/slab={value}")
                 manifest.mark(
                     run_id, bucket, "retention",

@@ -14,6 +14,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 COMPONENTS = ["value", "trend", "seasonal", "residual"]
+# the store's retention tiers, finest first, and the grain each one's rows
+# bucket: every module that names a tier reads this table
+TIERS = {"1h": "hour", "1d": "day", "1w": "week"}
 PERCENTILES = (0.5, 0.95, 0.99)  # percentile_rollup: columns p50, p95, p99
 
 
@@ -273,8 +276,11 @@ def top_k_keys(
 
 
 def build_tiers(decomposed: DataFrame) -> dict[str, DataFrame]:
-    """1h -> 1d -> 1w continuous aggregates."""
-    t1h = hourly_tier(decomposed)
-    t1d = rollup_tier(t1h, "day")
-    t1w = rollup_tier(t1d, "week")
-    return {"1h": t1h, "1d": t1d, "1w": t1w}
+    """The ``TIERS`` chain of continuous aggregates, each from the previous."""
+    tiers: dict[str, DataFrame] = {}
+    tier = hourly_tier(decomposed)
+    for name, grain in TIERS.items():
+        if tiers:
+            tier = rollup_tier(tier, grain)
+        tiers[name] = tier
+    return tiers

@@ -26,17 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from .rollup import rollup_tier
+from .rollup import TIERS, rollup_tier
 
-# coarsest tier whose buckets nest exactly inside each requested granularity
-_ROUTE = {
-    "hour": "1h",
-    "day": "1d",
-    "week": "1w",
-    "month": "1d",
-    "quarter": "1d",
-    "year": "1d",
-}
+# coarsest tier whose buckets nest exactly inside each requested granularity:
+# each tier serves its own grain, and the calendar grains that weeks straddle
+# are served from days
+_ROUTE = {grain: name for name, grain in TIERS.items()}
+_ROUTE.update(dict.fromkeys(("month", "quarter", "year"), _ROUTE["day"]))
 
 
 def route_tier(granularity: str) -> str:

@@ -42,7 +42,8 @@ from pyspark.util import inheritable_thread_target
 
 from .operators.bucketize import bucketize
 from .operators.compress import compress_tier
-from .operators.rollup import hourly_tier, rollup_tier
+from .operators.retention import slab_start
+from .operators.rollup import COMPONENTS, TIERS, hourly_tier, rollup_tier
 from .operators.stl_udf import stl_decompose_sparse_df
 from .plans.checkpoint import Manifest, check_params, new_run_id, write_params
 from .sources.catalog import write_table
@@ -69,9 +70,9 @@ class PipelineConfig:
     granularity: str = "hour"
     n_buckets: int = 8
     compress: bool = True
-    # calendar slab ('day', 'week' or 'month') for the second partition
-    # level (bucket, slab): Gorilla chunks are slab-aligned and retention
-    # (operators/retention.py) drops whole expired slabs on metadata alone
+    # calendar slab ('day', 'week' or 'month', retention.slab_start) for the
+    # second partition level (bucket, slab): Gorilla chunks are slab-aligned
+    # and retention drops whole expired slabs on metadata alone
     slab: str = "month"
 
 
@@ -117,7 +118,9 @@ def run_pipeline(
     ValueError before any Spark work unless its parameters match (a full
     run overwrites only the partitions it writes, and an incremental one
     skips buckets, so any other config would leave stale or mixed
-    partitions).  A new config needs a fresh ``out_root``.
+    partitions).  A new config needs a fresh ``out_root``.  A slab that
+    ``slab_start`` does not know raises ValueError before anything is
+    written.
 
     ``incremental=True`` skips a bucket only if its data high-water mark
     (``max(warc_ts)``, recorded in every done row as ``data_max_ts``) has
@@ -136,6 +139,7 @@ def run_pipeline(
     """
     cfg = cfg or PipelineConfig()
     t_start = time.time()
+    slab_start(cfg.slab, "ts")  # refuse an unknown slab before the first write
     params = {**asdict(cfg), "schema_version": TIER_SCHEMA_VERSION}
     manifest = Manifest(out_root)
     if manifest.path.exists() or (Path(out_root) / "params.json").exists():
@@ -152,9 +156,7 @@ def run_pipeline(
     part_cols = ["bucket", "slab"]
 
     def _with_slab(df, ts_col):
-        return df.withColumn(
-            "slab", F.date_format(F.date_trunc(cfg.slab, ts_col), "yyyy-MM-dd")
-        )
+        return df.withColumn("slab", F.date_format(slab_start(cfg.slab, ts_col), "yyyy-MM-dd"))
 
     # no job outlives the call: leaving the block waits for every submitted job
     with ThreadPoolExecutor(_POOL_SIZE, thread_name_prefix="pipeline") as pool:
@@ -203,9 +205,11 @@ def run_pipeline(
             # and coarser tiers read the already-reduced previous tier (the
             # continuous-aggregate pattern; recomputing the chain per tier
             # tripled the dominant UDF cost)
-            tier_df = hourly_tier(decompose_pages(slice_pages, cfg))
+            tier_df, materialized = hourly_tier(decompose_pages(slice_pages, cfg)), None
             n_points, encodes = 0, []
-            for tier_name, next_granularity in (("1h", "day"), ("1d", "week"), ("1w", None)):
+            for tier_name, grain in TIERS.items():
+                if materialized is not None:
+                    tier_df = rollup_tier(materialized, grain)
                 root = f"{out_root}/tier_{tier_name}"
                 out = _with_slab(
                     tier_df.withColumn("run_id", F.lit(run_id)).withColumn("bucket", F.lit(bucket)),
@@ -228,8 +232,7 @@ def run_pipeline(
                     .drop("run_id", "bucket", "slab")
                 )
                 if cfg.compress:
-                    comps = ["value", "trend", "seasonal", "residual"]
-                    comp_cols = comps if tier_name == "1h" else [f"sum_{c}" for c in comps]
+                    comp_cols = COMPONENTS if tier_name == "1h" else [f"sum_{c}" for c in COMPONENTS]
                     # the 1h tier's parquet comes straight from the url-hash-
                     # partitioned STL stage (urls contiguous, grid-ordered), so
                     # its compression needs no repartition+sort — the sink's
@@ -245,8 +248,6 @@ def run_pipeline(
                         write_table, _with_slab(chunks, "t0"), f"{out_root}/gorilla_{tier_name}",
                         part_cols, "overwrite_partitions",
                     ))
-                if next_granularity:
-                    tier_df = rollup_tier(materialized, next_granularity)
             for encode in encodes:
                 encode.result()  # re-raises a failed encode: the bucket stays unmarked
             wall = time.time() - t0
@@ -264,7 +265,7 @@ def run_pipeline(
 
         counts = {
             t: submit(_count_rows, spark, f"{out_root}/tier_{t}", schemas.get(t))
-            for t in ("1h", "1d", "1w")
+            for t in TIERS
         }
         high_water.result()  # a failed scan raises even when no bucket ran
         bad = digest_check.result() if digest_check else 0

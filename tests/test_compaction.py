@@ -98,19 +98,25 @@ def test_compact_chunks_merges_passthrough_fixpoint(spark):
     pd.testing.assert_frame_equal(_decoded(flat), _decoded(frag))
 
 
-def test_sink_stages_carry_runs_across_arrow_batches(spark, arrow_batch_rows):
-    """compress_tier (url runs) and compact_chunks (url, column runs) hold a
-    batch's last run back for the next batch: at 7-row Arrow batches every
-    run spans several batches, and the chunk sets, payload bytes included,
-    must equal the default batch size's."""
+# slab -> points of 14 hourly days from Wed 2025-01-01 in each of its slabs
+SLAB_POINTS = {"month": [336], "week": [120, 168, 48], "day": [24] * 14}
+
+
+@pytest.mark.parametrize("slab", list(SLAB_POINTS))
+def test_sink_stages_carry_runs_across_arrow_batches(spark, arrow_batch_rows, slab):
+    """compress_tier ((url, slab) runs) and compact_chunks ((url, column,
+    slab) runs) hold a batch's last run back for the next batch: at 7-row
+    Arrow batches every run spans several batches, and the chunk sets,
+    payload bytes included, must equal the default batch size's."""
     series = _hourly_series(spark, dt.datetime(2025, 1, 1), hours=24 * 14, urls=list("abcde"))
 
     def chunk_sets():
-        frag = compress_tier(series, chunk_points=24, slab="month")
-        return _chunk_set(frag), _chunk_set(compact_chunks(frag, chunk_points=96, slab="month"))
+        frag = compress_tier(series, chunk_points=24, slab=slab)
+        return _chunk_set(frag), _chunk_set(compact_chunks(frag, chunk_points=96, slab=slab))
 
     frag, merged = chunk_sets()
-    assert (len(frag), len(merged)) == (5 * 14, 5 * math.ceil(336 / 96))
+    merged_per_url = sum(math.ceil(n / 96) for n in SLAB_POINTS[slab])
+    assert (len(frag), len(merged)) == (5 * 14, 5 * merged_per_url)
     with arrow_batch_rows(7):
         assert chunk_sets() == (frag, merged)
 
@@ -180,7 +186,7 @@ def test_compact_store_end_to_end(spark, tmp_path, plan_of, in_set_threshold):
     assert re.search(scan + re.escape(form), plan), plan
     pd.testing.assert_frame_equal(_decoded(spark.read.parquet(root)), baseline_rows)
 
-    summary = compact_store(spark, out, tiers=("1d",), chunk_points=4096)
+    summary = compact_store(spark, out, tiers=("1d",))
     s = summary["gorilla_1d"]
     assert s["partitions"] > 0
     assert s["chunks_after"] < s["chunks_before"] == frag_count
@@ -207,14 +213,14 @@ def test_compact_store_end_to_end(spark, tmp_path, plan_of, in_set_threshold):
     assert all(r["chunks_after"] <= r["chunks_before"] for r in comp)
 
     # fixpoint: nothing left to compact anywhere in the store
-    again = compact_store(spark, out, tiers=("1h", "1d", "1w"), chunk_points=4096)
+    again = compact_store(spark, out, tiers=("1h", "1d", "1w"))
     assert again["gorilla_1d"] == {"partitions": 0}
 
     # retention still works on the compacted store (slab metadata intact):
     # manifest-recorded granularity is month, January is droppable
     from stl_decomp_4j_spark.operators.retention import apply_retention
 
-    dropped = apply_retention(spark, out, {"1d": 8}, now=dt.datetime(2025, 2, 10))
+    dropped = apply_retention(out, {"1d": 8}, now=dt.datetime(2025, 2, 10))
     assert "gorilla_1d" in dropped
     min_ms = (
         decompress_chunks(spark.read.parquet(root)).agg(F.min("ts_ms")).first()[0]
@@ -259,7 +265,7 @@ def test_week_slab_store_end_to_end(spark, tmp_path):
         write_table(ch, root, partition_by=["bucket", "slab"], mode="overwrite_partitions")
     frag = spark.read.parquet(root).count()
 
-    s = compact_store(spark, out, tiers=("1h",), chunk_points=4096)["gorilla_1h"]
+    s = compact_store(spark, out, tiers=("1h",))["gorilla_1h"]
     after = spark.read.parquet(root)
     assert after.count() == s["chunks_after"] < s["chunks_before"] == frag
     pd.testing.assert_frame_equal(_decoded(after), baseline)
@@ -271,7 +277,7 @@ def test_week_slab_store_end_to_end(spark, tmp_path):
 
     # keep 7 days of 1h at Jan 20: cutoff Jan 12 23:00, so only the week of
     # Dec 30 (ends Jan 6) is wholly expired; the week of Jan 6 ends after it
-    dropped = apply_retention(spark, out, {"1h": 7}, now=dt.datetime(2025, 1, 20))
+    dropped = apply_retention(out, {"1h": 7}, now=dt.datetime(2025, 1, 20))
     want = sorted(f"bucket={b}/slab=2024-12-30" for b in buckets)
     assert sorted(dropped["tier_1h"]) == sorted(dropped["gorilla_1h"]) == want
     assert slabs("tier_1h") == slabs("gorilla_1h") == weeks - {"2024-12-30"}

@@ -375,11 +375,23 @@ def test_store_refuses_other_params_and_unrecorded_roots(spark, pages, tmp_path)
     (tmp_path / "rollup" / "params.json").unlink()
     for call in (
         lambda: run_pipeline(spark, pages, out, cfg, incremental=True),
-        lambda: apply_retention(spark, out, {"1h": 1}, now=dt.datetime(2026, 1, 1)),
+        lambda: apply_retention(out, {"1h": 1}, now=dt.datetime(2026, 1, 1)),
         lambda: compact_store(spark, out),
     ):
         with pytest.raises(ValueError, match="tier store .* has no params.json"):
             call()
+
+
+def test_store_refuses_unknown_slab_before_writing(spark, pages, tmp_path):
+    """A slab the store's slab rule does not know, whether Spark's
+    date_trunc knows it ('year') or not ('fortnight'), is refused before
+    params.json or any table is written."""
+    for slab in ("year", "fortnight"):
+        out = tmp_path / slab
+        with pytest.raises(ValueError, match="slab must be one of"):
+            run_pipeline(spark, pages, str(out), PipelineConfig(n_buckets=2, slab=slab))
+        assert not (out / "params.json").exists()
+        assert not list(out.glob("tier_*")) and not list(out.glob("gorilla_*"))
 
 
 def test_pipeline_points_and_1h_sink_order(spark, pages, tmp_path):

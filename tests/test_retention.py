@@ -61,17 +61,17 @@ def test_slab_aligned_chunks_roundtrip(spark):
     pd.testing.assert_frame_equal(rows(aligned), rows(plain))
 
 
-def test_expired_slab_dirs_grace(spark, tmp_path):
+def test_expired_slab_dirs_grace(tmp_path):
     root = tmp_path / "tier_x"
     for slab in ("2025-01-01", "2025-02-01", "2025-03-01"):
         (root / "bucket=0" / f"slab={slab}").mkdir(parents=True)
     # cutoff exactly at Feb 1: January (ends Feb 1) is wholly expired,
     # February is not
-    got = expired_slab_dirs(spark, str(root), dt.datetime(2025, 2, 1), "month")
+    got = expired_slab_dirs(str(root), dt.datetime(2025, 2, 1), "month")
     assert [(b, v) for b, v, _ in got] == [(0, "2025-01-01")]
     # one microsecond earlier: nothing is wholly expired
     got = expired_slab_dirs(
-        spark, str(root), dt.datetime(2025, 1, 31, 23, 59, 59, 999999), "month"
+        str(root), dt.datetime(2025, 1, 31, 23, 59, 59, 999999), "month"
     )
     assert got == []
 
@@ -109,7 +109,7 @@ def test_pipeline_retention_end_to_end(spark, tmp_path):
     # keep ~44 days of 1h: now = Mar 17, cutoff Feb 1 (+1h grace) -> only
     # the January slab is wholly expired
     now = dt.datetime(2025, 3, 17)
-    dropped = apply_retention(spark, out, {"1h": 43}, now=now)
+    dropped = apply_retention(out, {"1h": 43}, now=now)
     assert sorted(dropped) == ["gorilla_1h", "tier_1h"]
     assert sorted(dropped["tier_1h"]) == [
         "bucket=0/slab=2025-01-01", "bucket=1/slab=2025-01-01"
@@ -150,8 +150,8 @@ def test_pipeline_retention_end_to_end(spark, tmp_path):
 
     # unknown tier in the policy fails loudly
     with pytest.raises(ValueError, match="unknown tiers"):
-        apply_retention(spark, out, {"2h": 10}, now=now)
+        apply_retention(out, {"2h": 10}, now=now)
 
     # a root with no store (no params.json to read the slab from) is refused
     with pytest.raises(ValueError, match="has no params.json"):
-        apply_retention(spark, str(tmp_path / "nostore"), {"1h": 1}, now=now)
+        apply_retention(str(tmp_path / "nostore"), {"1h": 1}, now=now)
