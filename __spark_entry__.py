@@ -874,9 +874,8 @@ def q_tier_audit(spark, sf_dir):
     """Cross-tier consistency audit with an injected corruption: the stored
     1d tier's sum_trend is shifted +10 for url='error', then audited against
     re-aggregation of the 1h tier.  The audit must report exactly those
-    buckets (and nothing else — the float tolerance absorbs double-sum
-    merge-order noise).  Oracle recomputes the daily rollup + corruption +
-    diff in SQL over the Java-reference fixture."""
+    buckets and nothing else.  Oracle recomputes the daily rollup +
+    corruption + diff in SQL over the Java-reference fixture."""
     from stl_decomp_4j_spark.operators.audit import tier_consistency
 
     tiers = _stl_tiers(spark, sf_dir)
@@ -886,7 +885,7 @@ def q_tier_audit(spark, sf_dir):
             F.col("sum_trend")
         ),
     )
-    out = tier_consistency(stored, tiers["1h"], "day", tol=1e-6)
+    out = tier_consistency(stored, tiers["1h"], "day")
     return _fmt_ts(out).select(
         "url",
         "ts",

@@ -3,13 +3,14 @@
 
     spark-submit --py-files dist/stl_decomp_4j_spark.zip jobs/monitor_job.py \
         --output /path/to/rollup_root [--input /path/to/pages] \
-        [--tol 1e-6] [--anomaly-k 3.0] [--report]
+        [--anomaly-k 3.0] [--report]
 
 One maintenance pass over a rollup store produced by jobs/rollup_job.py,
 combining the three monitoring operators:
 
-  1. cross-tier consistency audit (operators/audit.py): 1d vs re-aggregated
-     1h, 1w vs re-aggregated 1d — a silent backfill/partial-failure detector;
+  1. exact cross-tier consistency audit (operators/audit.py): 1d vs
+     re-aggregated 1h, 1w vs re-aggregated 1d — a silent
+     backfill/partial-failure detector;
   2. residual anomaly detection (operators/anomaly.py) on the 1h tier's
      residual column (the compact 1h tier IS the decomposed grid);
   3. crawl-outage detection (operators/diagnostics.py) on the raw pages
@@ -19,9 +20,10 @@ combining the three monitoring operators:
 Everything is codegen aggregates/windows over already-reduced tiers; the
 only big-table scan is the optional outage pass over pages (column-pruned
 to url+warc_ts).  Exit code 1 if any audit mismatch is found, so the job
-can gate a pipeline in an orchestrator.  Findings land in the manifest as
-status='monitor' lineage rows; --report additionally writes the mismatch
-rows to {output}/monitor_report as parquet.
+can gate a pipeline in an orchestrator; a store of another tier schema
+version (sums in another order) raises before Spark starts.  Findings land
+in the manifest as status='monitor' lineage rows; --report additionally
+writes the mismatch rows to {output}/monitor_report as parquet.
 """
 from __future__ import annotations
 
@@ -34,7 +36,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--output", required=True, help="rollup store root (from rollup_job)")
     ap.add_argument("--input", default=None, help="pages parquet for outage detection")
-    ap.add_argument("--tol", type=float, default=1e-6)
     ap.add_argument("--anomaly-k", type=float, default=3.0)
     ap.add_argument("--min-missing", type=int, default=1)
     ap.add_argument("--report", action="store_true", help="write mismatch rows to parquet")
@@ -47,11 +48,13 @@ def main() -> int:
     from stl_decomp_4j_spark.operators.bucketize import bucketize
     from stl_decomp_4j_spark.operators.diagnostics import outage_summary
     from stl_decomp_4j_spark.operators.rollup import TIERS
-    from stl_decomp_4j_spark.plans.checkpoint import Manifest, new_run_id
+    from stl_decomp_4j_spark.pipeline import TIER_SCHEMA_VERSION
+    from stl_decomp_4j_spark.plans.checkpoint import Manifest, check_params, new_run_id
     from stl_decomp_4j_spark.plans.session import build_session
 
     from pyspark.sql import SparkSession
 
+    check_params(args.output, "tier store", schema_version=TIER_SCHEMA_VERSION)
     # reuse an already-active session (test harness / notebook); only stop
     # what this job itself started
     pre_existing = SparkSession.getActiveSession()
@@ -66,7 +69,7 @@ def main() -> int:
     audit_counts = {}
     report_frames = []
     for fine, coarse in zip(TIERS, list(TIERS)[1:]):
-        mism = tier_consistency(tiers[coarse], tiers[fine], TIERS[coarse], tol=args.tol)
+        mism = tier_consistency(tiers[coarse], tiers[fine], TIERS[coarse])
         n = mism.count()
         audit_counts[f"{fine}->{coarse}"] = n
         if n and args.report:

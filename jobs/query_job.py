@@ -14,6 +14,7 @@ it, writes the decoded (url, ts_ms, column, value) rows to parquet.
 
 With --granularity, answers a tier-routed continuous-aggregate read instead
 (e.g. --granularity month serves from the 1d tier; see operators/serve.py).
+Either read refuses a --store with no params.json (not a tier store).
 """
 from __future__ import annotations
 
@@ -34,7 +35,9 @@ def run_query(
     output: str | None = None,
 ) -> dict:
     from stl_decomp_4j_spark.operators.compress import prune_chunks, read_range
+    from stl_decomp_4j_spark.plans.checkpoint import check_params
 
+    check_params(store, "tier store")
     chunks = spark.read.parquet(f"{store}/gorilla_{tier}")
     pruned = prune_chunks(chunks, urls, ts_min, ts_max, columns)
     rows = read_range(chunks, urls, ts_min, ts_max, columns)
@@ -66,7 +69,9 @@ def serve_query(
     url/ts filters, re-aggregate.  Answers a dashboard month query from the
     1d tier without touching the 1h store."""
     from stl_decomp_4j_spark.operators.serve import route_tier, serve_rollup
+    from stl_decomp_4j_spark.plans.checkpoint import check_params
 
+    check_params(store, "tier store")
     name = route_tier(granularity)
     tier = spark.read.parquet(f"{store}/tier_{name}").drop("run_id", "bucket", "slab")
     rows = serve_rollup({name: tier}, granularity, urls, ts_min, ts_max)

@@ -6,7 +6,7 @@
         --input /path/to/pages_parquet_or_iceberg_table \
         --output /path/to/rollup_root \
         [--period 24] [--seasonal-width 35] [--robust] \
-        [--buckets 64] [--incremental] [--granularity hour]
+        [--buckets 64] [--incremental]
 
 Reads the (url, warc_ts, html, text, lang) pages table, derives per-url
 crawl-activity series, gap-fills, STL-decomposes, and writes 1h/1d/1w
@@ -38,7 +38,6 @@ def main() -> None:
         "max(warc_ts) advanced past it (crash recovery, and streaming-append "
         "-> periodic-batch refresh)",
     )
-    ap.add_argument("--granularity", default="hour", choices=["hour", "day", "week"])
     ap.add_argument("--no-compress", action="store_true")
     args = ap.parse_args()
 
@@ -55,7 +54,6 @@ def main() -> None:
         period=args.period,
         seasonal_width=args.seasonal_width,
         robust=args.robust,
-        granularity=args.granularity,
         n_buckets=args.buckets,
         compress=not args.no_compress,
     )

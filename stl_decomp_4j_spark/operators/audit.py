@@ -16,9 +16,9 @@ the metric unpivot is a codegen Generate (stack), and the mismatch filter drops
 everything healthy — so the audit's output is tiny and its cost is one
 rollup pass, independent of how many coarse buckets exist.
 
-Float note: two executions of the same double-sum can differ in merge order
-by O(1e-13); ``tol`` (absolute) absorbs that.  Exact-integer columns (cnt)
-are compared exactly regardless of tol.
+Every metric is compared exactly: ``rollup_tier`` sums each group in ts
+order, so the recompute adds the same doubles in the same order as the
+rollup that wrote the stored tier, whatever the files either side reads.
 """
 from __future__ import annotations
 
@@ -28,17 +28,12 @@ from pyspark.sql import DataFrame
 from .rollup import rollup_tier
 
 
-def tier_consistency(
-    stored_coarse: DataFrame,
-    fine: DataFrame,
-    granularity: str,
-    tol: float = 1e-6,
-) -> DataFrame:
+def tier_consistency(stored_coarse: DataFrame, fine: DataFrame, granularity: str) -> DataFrame:
     """Audit ``stored_coarse`` against re-aggregation of ``fine``.
 
     Returns (url, ts, metric, stored, recomputed): one row per metric value
-    that differs by more than ``tol`` — including buckets present on only
-    one side (the other side's value is null).  Empty result == consistent.
+    that differs — including buckets present on only one side (the other
+    side's value is null).  Empty result == consistent.
     """
     recomputed = rollup_tier(fine, granularity)
     metrics = [c for c in recomputed.columns if c not in ("url", "ts")]
@@ -60,8 +55,4 @@ def tier_consistency(
         "ts",
         f"stack({len(metrics)}, {stack_args}) AS (metric, stored, recomputed)",
     )
-    one_sided = F.col("stored").isNull() != F.col("recomputed").isNull()
-    # cnt is an exact count — any difference is a real inconsistency
-    eff_tol = F.when(F.col("metric") == "cnt", F.lit(0.0)).otherwise(F.lit(float(tol)))
-    drifted = F.abs(F.col("stored") - F.col("recomputed")) > eff_tol
-    return unpivoted.filter(one_sided | drifted)
+    return unpivoted.filter(~F.col("stored").eqNullSafe(F.col("recomputed")))

@@ -130,27 +130,16 @@ def detect_outages(
 
 
 def outage_summary(buckets: DataFrame, granularity: str = "hour") -> DataFrame:
-    """Per-url outage rollup: (url, n_gaps, missing_total, max_missing,
-    worst_gap_start) — one row per url even when the series is gapless
-    (zeros / null), so the monitoring query never goes silent.  Integer
-    arithmetic end-to-end: engine-exact, no float tolerance needed.
+    """Per-url outage rollup of ``detect_outages``: (url, n_gaps,
+    missing_total, max_missing, worst_gap_start) — one row per url even when
+    the series is gapless (zeros / null), so the monitoring query never goes
+    silent.  Integer arithmetic end-to-end: engine-exact, no float tolerance
+    needed.
 
     worst_gap_start = start of the EARLIEST longest gap (ties broken by
     time, deterministically).
     """
-    step = STEP_SECONDS[granularity]
-    w = Window.partitionBy("url").orderBy("ts")
-    lagged = buckets.withColumn("_prev", F.lag("ts").over(w))
-    missing = ((F.col("ts").cast("long") - F.col("_prev").cast("long")) / step - 1).cast("long")
-    per_bucket = lagged.select(
-        "url",
-        (F.col("_prev") + F.expr(f"interval {step} seconds")).alias("gap_start"),
-        F.when(F.col("_prev").isNull(), F.lit(None).cast("long")).otherwise(missing).alias(
-            "missing"
-        ),
-    )
-    gaps = per_bucket.filter(F.col("missing") >= 1)
-    agg = gaps.groupBy("url").agg(
+    agg = detect_outages(buckets, granularity).groupBy("url").agg(
         F.count(F.lit(1)).alias("n_gaps"),
         F.sum("missing").alias("missing_total"),
         F.max("missing").alias("max_missing"),

@@ -3,7 +3,10 @@
 Tier N+1 is derived from tier N, never from raw data: sums and counts are
 associative, so day-from-hour and week-from-day aggregation is exact AND
 cheap (each tier's shuffle input is the previous tier's already-reduced
-output — the 1w rollup reads ~1/24th of what the 1d rollup read).
+output — the 1w rollup reads ~1/24th of what the 1d rollup read).  Double
+sums are associative only up to rounding, so ``rollup_tier``, which every
+tier derivation calls, sums each group in ts order: a tier is a function of
+its input rows, and a stored tier equals its re-derivation exactly.
 
 Averages are stored as sum/cnt-derived columns so re-aggregation stays
 exact; min/max compose trivially.
@@ -39,14 +42,17 @@ def rollup_tier(tier: DataFrame, granularity: str) -> DataFrame:
     sum/min/max all derive) or the full sum_/min_/max_ schema of coarser
     tiers; output is always the full schema.  A frame carrying BOTH layouts
     is ambiguous (which columns are authoritative?) and is rejected rather
-    than silently aggregating the wrong ones."""
-    has_compact = COMPONENTS[0] in tier.columns
-    has_full = f"sum_{COMPONENTS[0]}" in tier.columns
-    if has_compact and has_full:
+    than silently aggregating the wrong ones.
+
+    The url shuffle and (url, ts) sort put each group in one partition, in
+    ts order, so its sums do not depend on how the input was split.  Spark
+    keeps a sort under a double ``sum``, and the partial and final aggregate
+    run in the sorted stage (``test_plans.py`` pins this plan)."""
+    compact = COMPONENTS[0] in tier.columns
+    if compact and f"sum_{COMPONENTS[0]}" in tier.columns:
         raise ValueError(
             f"ambiguous tier schema: both '{COMPONENTS[0]}' and 'sum_{COMPONENTS[0]}' present"
         )
-    compact = has_compact
     aggs = []
     for c in COMPONENTS:
         src_sum, src_min, src_max = (
@@ -59,7 +65,8 @@ def rollup_tier(tier: DataFrame, granularity: str) -> DataFrame:
         ]
     aggs.append(F.sum("cnt").alias("cnt"))
     return (
-        tier.groupBy("url", F.date_trunc(granularity, "ts").alias("ts"))
+        tier.repartition("url").sortWithinPartitions("url", "ts")
+        .groupBy("url", F.date_trunc(granularity, "ts").alias("ts"))
         .agg(*aggs)
     )
 

@@ -35,6 +35,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass, field
 from pathlib import Path
+from typing import ClassVar
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -50,11 +51,10 @@ from .sources.catalog import write_table
 from .sources.pages import text_digests
 
 
-# bump when the persisted tier/gorilla table schema changes (v2 = compact 1h
-# tier; v3 = calendar-slab partition level for metadata-only retention); the
-# store's params.json records it so a run across an upgrade fails loudly
-# instead of appending mixed-schema partitions under one table root
-TIER_SCHEMA_VERSION = 3
+# bump when the persisted tier/gorilla tables change (v2 = compact 1h tier;
+# v3 = calendar-slab partition level; v4 = tier sums in ts order); params.json
+# records it so a run across an upgrade fails instead of mixing partitions
+TIER_SCHEMA_VERSION = 4
 
 # threads for the jobs off the dependent chain: the largest number of them in
 # flight at once (a bucket's three Gorilla writes beside the digest check, or
@@ -64,10 +64,11 @@ _POOL_SIZE = 4
 
 @dataclass
 class PipelineConfig:
+    # the pipeline decomposes at the 1h tier's grain: not a setting
+    granularity: ClassVar[str] = TIERS["1h"]
     period: int = 24
     seasonal_width: int = 35
     robust: bool = False
-    granularity: str = "hour"
     n_buckets: int = 8
     compress: bool = True
     # calendar slab ('day', 'week' or 'month', retention.slab_start) for the

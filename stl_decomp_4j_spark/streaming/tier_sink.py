@@ -20,6 +20,10 @@ parquet ts column) and aggregates only those partitions; a steady stream
 touching the live day re-aggregates <= 24 hourly rows per url per batch.
 The day partition column makes both the pruning and the overwrite
 partition-aligned.
+
+``_tier_aggs`` is not ``rollup.rollup_tier``: it rolls up raw bucket counts
+(sum/min/max of the long ``cnt``, plus ``n_buckets``) at day grain, not STL
+components, and long sums are exact in any order.
 """
 from __future__ import annotations
 

@@ -76,7 +76,7 @@ def test_cnt_is_compared_exactly(tiers):
             (F.col("url") == "a") & (F.col("ts") == F.lit(T0)), F.col("cnt") + 1
         ).otherwise(F.col("cnt")),
     )
-    out = tier_consistency(bad, t1h, "day", tol=10.0).collect()
+    out = tier_consistency(bad, t1h, "day").collect()
     assert [(r.url, r.metric) for r in out] == [("a", "cnt")]
 
 

@@ -513,13 +513,101 @@ def test_background_encode_failure_leaves_bucket_unmarked(spark, pages, tmp_path
     assert sorted(resumed.buckets_run) == [0, 1]
     clean = tmp_path / "clean"
     run_pipeline(spark, pages, str(clean), cfg)
+    _assert_same_store(spark, out, clean)
+
+
+def _assert_same_store(spark, a_root, b_root):
+    """The six tables of two stores hold the same rows, ``run_id`` aside:
+    every tier value and every Gorilla chunk's bytes are equal."""
     keys = {"tier": ["url", "ts"], "gorilla": ["url", "column", "t0"]}
     for kind in ("tier", "gorilla"):
         for t in ("1h", "1d", "1w"):
             a, b = (
                 spark.read.parquet(str(root / f"{kind}_{t}")).drop("run_id").toPandas()
                 .sort_values(keys[kind]).reset_index(drop=True)
-                for root in (out, clean)
+                for root in (a_root, b_root)
             )
             assert len(a) > 0, (kind, t)
-            pd.testing.assert_frame_equal(a, b, obj=f"{kind}_{t}")
+            pd.testing.assert_frame_equal(a, b, check_exact=True, obj=f"{kind}_{t}")
+
+
+@pytest.fixture(scope="module")
+def pages_60x30(spark, tmp_path_factory):
+    """60 urls over 30 days, written once: large enough that a 4-bucket
+    day-slab store has weeks whose daily rows arrive from several files."""
+    path = str(tmp_path_factory.mktemp("pages_60x30") / "pages")
+    generate_pages(spark, n_urls=60, days=30).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize("slab", ["day", "week", "month"])
+def test_store_is_independent_of_input_split(spark, pages_60x30, tmp_path, slab):
+    """The same pages read as one split or as eight give the same six
+    tables: every tier sum runs in ts order, whatever the files and
+    splits that deliver its rows."""
+    cfg = PipelineConfig(n_buckets=4, slab=slab)
+    for n in (1, 8):
+        run_pipeline(spark, pages_60x30.repartition(n), str(tmp_path / f"split{n}"), cfg)
+    _assert_same_store(spark, tmp_path / "split1", tmp_path / "split8")
+
+
+def test_store_is_independent_of_run_history(spark, pages_60x30, tmp_path):
+    """A full run over A and B equals a full run over A followed by an
+    incremental run over A and B, where B extends the last days of one
+    bucket's urls: the incremental run rewrites that bucket, and the
+    buckets it skips already hold what a full run writes."""
+    cfg = PipelineConfig(n_buckets=4, slab="day")
+    cut = pages_60x30.agg(F.max("warc_ts") - F.expr("INTERVAL 5 DAYS")).first()[0]
+    in_b = (F.pmod(F.xxhash64("url"), F.lit(cfg.n_buckets)) == 0) & (F.col("warc_ts") >= F.lit(cut))
+    run_pipeline(spark, pages_60x30.filter(~in_b), str(tmp_path / "history"), cfg)
+    res = run_pipeline(spark, pages_60x30, str(tmp_path / "history"), cfg, incremental=True)
+    assert res.buckets_run == [0]
+    run_pipeline(spark, pages_60x30, str(tmp_path / "full"), cfg)
+    _assert_same_store(spark, tmp_path / "history", tmp_path / "full")
+
+
+def test_v3_store_is_refused(spark, pages, tmp_path, monkeypatch):
+    """A store recorded at tier schema v3 summed its 1w rows in another
+    order: the pipeline refuses to extend it, and the monitor job refuses
+    to audit it, before any Spark work."""
+    import json
+    from dataclasses import asdict
+
+    import jobs.monitor_job as mj
+
+    out = tmp_path / "v3"
+    out.mkdir()
+    (out / "params.json").write_text(json.dumps({**asdict(PipelineConfig()), "granularity": "hour", "schema_version": 3}))
+    with pytest.raises(ValueError, match="mismatch on schema_version"):
+        run_pipeline(spark, pages, str(out), PipelineConfig(), incremental=True)
+    monkeypatch.setattr("sys.argv", ["monitor_job.py", "--output", str(out)])
+    with pytest.raises(ValueError, match="mismatch on schema_version"):
+        mj.main()
+
+
+def test_pipeline_grain_is_the_1h_tier_grain():
+    """The grain the pipeline decomposes at is not a setting: the 1h tier
+    holds hourly rows, whatever the config."""
+    assert PipelineConfig.granularity == "hour"
+    with pytest.raises(TypeError):
+        PipelineConfig(granularity="day")
+
+
+def test_query_job_reads_only_tier_stores(spark, pages, tmp_path):
+    """Both query_job reads refuse a directory that holds tier and Gorilla
+    tables but no params.json, as every other store call does."""
+    import shutil
+
+    from jobs.query_job import run_query, serve_query
+
+    store = tmp_path / "rollup"
+    run_pipeline(spark, pages, str(store), PipelineConfig(n_buckets=1))
+    copied = tmp_path / "copied"
+    for table in ("tier_1d", "gorilla_1h"):
+        shutil.copytree(store / table, copied / table)
+    for call in (
+        lambda: run_query(spark, str(copied), tier="1h"),
+        lambda: serve_query(spark, str(copied), "month"),
+    ):
+        with pytest.raises(ValueError, match="tier store .* has no params.json"):
+            call()

@@ -12,6 +12,7 @@ and corpus-composition plans are gated next to their operators
 (``test_stl_kernel_plan``, ``test_ann_index_plan``,
 ``test_corpus_composition_plan``)."""
 import datetime as dt
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -98,8 +99,18 @@ def test_bucketize_partial_final_hash_aggregate(plan_of, buckets):
 
 
 def test_stl_1d_tier_partial_aggregate(plan_of, decomposed):
+    """The 1d rollup's partial and final hash aggregate sit on a sort by
+    (url, ts) with no exchange between them: every group is summed in ts
+    order, whatever the input split (rollup_tier's one summation order)."""
     plan = plan_of(build_tiers(decomposed)["1d"])
     assert "partial_" in plan, plan
+    tree = re.findall(r"([A-Za-z]+) \((\d+)\)$", plan.split("\n\n")[0], re.M)
+    names = [name for name, _ in tree if name != "Project"]
+    assert names[1:4] == ["HashAggregate", "HashAggregate", "Sort"], plan
+    sort_id = next(i for name, i in tree if name == "Sort")
+    assert re.search(
+        rf"\({sort_id}\) Sort\n.*\nArguments: \[url#\d+ ASC NULLS FIRST, ts#\d+ ASC NULLS FIRST\]", plan
+    ), plan
 
 
 def test_gorilla_sink_batched_map_in_pandas(plan_of, filled):
